@@ -7,24 +7,35 @@ a prefix construction — without a storage boundary each reference
 re-runs the data-scale upstream (Spark plans are trees). The tables are
 bounded at any data scale, but a long-lived session that invokes the
 operators repeatedly would accumulate cached blocks that only go away
-on session GC (round-4 advisory). Callers own the cleanup: batch
-runners (``bench.py``, the test suite) call :func:`release_all` between
-queries; notebook users can call it whenever a pipeline's results have
-been materialized.
+on session GC. Callers own the cleanup: batch runners (``bench.py``,
+the test suite) call :func:`release_all` between queries; notebook
+users can call it whenever a pipeline's results have been
+materialized.
 
 The registry holds STRONG references: a registered frame's blocks
 stay pinned until :func:`release_all` runs (dropping your own handles
 is not enough). Long-lived sessions must call it; batch runners do so
 between queries.
+
+:func:`collect_if_small` is the one place that decides whether a bounded
+input is small enough to hand to a driver kernel, and how it gets there.
 """
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
+if TYPE_CHECKING:
+    import pyarrow as pa
+
 _LIVE: list[DataFrame] = []
 _CUT: list[DataFrame] = []
+#: Test hook: when True, :func:`collect_if_small` never collects, so every
+#: gated operator takes its distributed side on any input size.
+_FORCE_DISTRIBUTED = False
 
 
 def keep(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
@@ -76,3 +87,23 @@ def cut(df: DataFrame) -> DataFrame:
     df = df.localCheckpoint(eager=False)
     _CUT.append(df)
     return df
+
+
+def collect_if_small(df: DataFrame, max_rows: int) -> tuple[DataFrame, pa.Table | None]:
+    """The one driver gate: returns ``(cut_df, table)`` where ``cut_df``
+    is ``df`` behind a :func:`cut` and ``table`` is its rows as a pyarrow
+    Table when there are at most ``max_rows`` of them, else ``None``.
+
+    The probe is ``limit(max_rows + 1).toArrow()`` over the cut, so the
+    upstream plan executes exactly once whichever side the caller takes:
+    the probe materializes the checkpoint, and a distributed caller
+    continues from ``cut_df`` without re-running anything above it. At
+    most ``max_rows + 1`` rows ever reach the driver — the bound holds at
+    any input scale. Arrow keeps int64/float64 bits and NULLs exact, so a
+    driver kernel sees the same values the distributed plan would.
+    """
+    df = cut(df)
+    if _FORCE_DISTRIBUTED:
+        return df, None
+    tbl = df.limit(max_rows + 1).toArrow()
+    return df, (tbl if tbl.num_rows <= max_rows else None)

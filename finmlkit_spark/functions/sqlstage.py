@@ -39,38 +39,3 @@ def sql_stage(sql: str, **frames: DataFrame) -> DataFrame:
     spark = next(iter(frames.values())).sparkSession
     return spark.sql(sql, **frames)
 
-
-def exclusive_prefix_sql(key: str, sums: dict[str, str], group: int) -> str:
-    """The two-level exclusive-prefix (``functions.prefix``, sums-only,
-    ``group=g`` mode) as a SQL text block over a ``{src}`` parameter —
-    for embedding into a larger :func:`sql_stage` without per-op
-    analysis cost. Same arithmetic as ``prefix.exclusive_prefix``:
-    in-group bounded window + per-group totals through a broadcast
-    triangular join, ``coalesce(group_offset, 0) + coalesce(in_group,
-    0)`` combine. Returns the full SELECT producing ``(key, *sums)``.
-    """
-    win_cols = ", ".join(
-        f"sum({c}) OVER (PARTITION BY _pg ORDER BY {key} "
-        f"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS _in_{out}"
-        for out, c in sums.items()
-    )
-    gt_cols = ", ".join(f"sum({c}) AS _gt_{out}" for out, c in sums.items())
-    go_cols = ", ".join(f"sum(b._gt_{out}) AS _go_{out}" for out in sums)
-    out_cols = ", ".join(
-        f"coalesce(_go_{out}, 0) + coalesce(_in_{out}, 0) AS {out}" for out in sums
-    )
-    return f"""
-WITH _ep_win AS (
-  SELECT {key}, floor({key} / {group}) AS _pg, {win_cols}
-  FROM {{src}}
-),
-_ep_gt AS (
-  SELECT floor({key} / {group}) AS _pg, {gt_cols} FROM {{src}} GROUP BY 1
-),
-_ep_goff AS (
-  SELECT /*+ BROADCAST(b) */ a._pg, {go_cols}
-  FROM _ep_gt a LEFT JOIN _ep_gt b ON b._pg < a._pg GROUP BY a._pg
-)
-SELECT /*+ BROADCAST(_ep_goff) */ _ep_win.{key}, {out_cols}
-FROM _ep_win LEFT JOIN _ep_goff ON _ep_win._pg = _ep_goff._pg
-"""

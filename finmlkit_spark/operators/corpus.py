@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import cache
 from .text import STOPWORDS, tokens
 
 
@@ -681,10 +682,10 @@ def bigram_logprob(
     ).select(F.col("doc").alias(id_col), "n_bigrams", "mean_logprob", "perplexity")
 
 
-#: bpe_train mode=auto crossover: below this vocab size the merge loop
-#: runs driver-side on the collected (word, count) table — the k-scalar
-#: state pattern (each iteration's state is ONE merge pair); above it
-#: the vocab stays a DataFrame and each iteration is one tiny top-1 job.
+#: bpe_train's driver gate: at or below this many distinct words the
+#: merge loop runs driver-side on the collected (word, count) table;
+#: above it the vocab stays a DataFrame and each iteration is one tiny
+#: top-1 job.
 _BPE_DRIVER_MAX_VOCAB = 100_000
 
 #: symbol separator inside the word state string — U+001F (unit
@@ -713,7 +714,6 @@ def bpe_train(
     n_merges: int = 10,
     text_col: str = "text",
     id_col: str = "doc_id",
-    mode: str = "auto",
 ) -> DataFrame:
     """BPE tokenizer training (Sennrich et al. 2016) — the merge-table
     half of the tokenizer-prep story (:func:`vocab_topk` builds the
@@ -739,33 +739,29 @@ def bpe_train(
 
     BPE trains on the WORD-COUNT table, not the corpus: the corpus
     crosses the plan once (token explode + count), after which every
-    iteration touches ≤ |vocab| rows. ``mode="driver"`` (auto below
-    ``_BPE_DRIVER_MAX_VOCAB``) collects the vocab once and runs the
-    loop in Python — per-iteration state is one merge pair, the
-    sanctioned k-scalar pattern, same bits by construction (pinned by
-    test). ``mode="distributed"`` keeps the vocab as a DataFrame; each
-    iteration is one |vocab|-row pair-count aggregate plus a 1-row
-    ``limit(1).collect()`` — no corpus-scale work after the first
-    pass."""
+    iteration touches ≤ |vocab| rows.
+
+    Driver gate (:func:`cache.collect_if_small`): a vocab of at most
+    ``_BPE_DRIVER_MAX_VOCAB`` words is collected and the loop runs in
+    Python — per-iteration state is one merge pair. A larger vocab stays
+    a DataFrame; each iteration is one |vocab|-row pair-count aggregate
+    plus a 1-row ``limit(1).collect()``. The corpus executes exactly
+    once either way, and both sides emit the same merge table (pinned
+    by test)."""
     from .text import tokens
 
-    if mode not in ("auto", "driver", "distributed"):
-        raise ValueError(f"mode must be auto|driver|distributed, got {mode}")
     e = docs.select(F.explode(tokens(text_col)).alias("token")).where(
         (F.col("token") != "") & ~F.col("token").contains(_BPE_SEP)
     )
-    vocab = e.groupBy("token").agg(F.count("*").cast("long").alias("cnt"))
+    vocab, tbl = cache.collect_if_small(
+        e.groupBy("token").agg(F.count("*").cast("long").alias("cnt")),
+        _BPE_DRIVER_MAX_VOCAB,
+    )
     spark = docs.sparkSession
     out_schema = "merge_rank long, lhs string, rhs string, pair_count long"
 
-    if mode == "auto":
-        # materialize the |vocab|-row table ONCE so the gate's count and
-        # the chosen mode's collect/iterations never rescan the corpus
-        vocab = vocab.localCheckpoint()
-        mode = "driver" if vocab.count() <= _BPE_DRIVER_MAX_VOCAB else "distributed"
-
-    if mode == "driver":
-        rows = [(r["token"], int(r["cnt"])) for r in vocab.collect()]
+    if tbl is not None:
+        rows = list(zip(tbl["token"].to_pylist(), tbl["cnt"].to_pylist()))
         states = {w: _BPE_SEP.join(w) for w, _ in rows}
         merges = []
         for rank in range(n_merges):
@@ -789,10 +785,8 @@ def bpe_train(
                 states[w] = acc[1:]
         return spark.createDataFrame(merges, out_schema)
 
+    # the per-iteration replace chain re-reads the cut vocab, not the corpus
     state = vocab.select("token", "cnt", F.array_join(F.split("token", ""), _BPE_SEP).alias("st"))
-    # one materialization of the |vocab|-row table; the per-iteration
-    # replace chain then re-reads this, not the corpus
-    state = state.localCheckpoint(eager=False)
     merges = []
     for rank in range(n_merges):
         sy = F.split("st", _BPE_SEP)

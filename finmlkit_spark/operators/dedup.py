@@ -725,16 +725,12 @@ def read_simhash_edges(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-#: dedup_clusters' edge-count crossover: at or below this many near-dup
-#: pairs the edge list is collected once (LIMIT-probed — one execution
-#: of the pair chain) and union-find runs on the driver, replanting the
-#: (node, cluster) map as a LocalTableScan. 2M edges ≈ 32 MB collected.
-#: Near-dup EDGES are output-scale (the pairs a human would review),
-#: orders of magnitude below corpus scale — but above the gate the
-#: distributed min-label loop runs unchanged, so the 100 TB path never
-#: touches the driver.
+#: dedup_clusters' driver gate: at or below this many near-dup pairs the
+#: edge list (two int64 columns, ≈ 32 MB at the bound) is collected and
+#: union-find runs on the driver. Near-dup edges are output-scale (the
+#: pairs a human would review), so the gate fires at most data scales;
+#: above it the distributed min-label loop never touches the driver.
 CC_DRIVER_MAX_EDGES = 2_000_000
-_FORCE_CC_STATE: str | None = None  # test hook: "driver"/"distributed"
 
 
 def dedup_clusters(
@@ -742,80 +738,50 @@ def dedup_clusters(
     docs: DataFrame | None = None,
     id_col: str = "doc_id",
     max_iter: int = 30,
-    state: str = "auto",
 ) -> DataFrame:
     """Connected components over near-dup pairs -> (doc_id, cluster_id),
     cluster_id = min doc id in the component. The last mile of fuzzy
     dedup: pair lists become keep/drop decisions only once transitively
     connected docs share one cluster.
 
-    ``state="auto"`` (default): probe the pair chain ONCE with a
-    ``LIMIT CC_DRIVER_MAX_EDGES+1`` collect — if every edge fits, a
-    driver union-find labels the components in microseconds (exact
-    integer min-per-component, bit-identical to the distributed
-    fixpoint — pinned by test) and the result replants as a JVM
-    LocalTableScan; otherwise fall through to the distributed loop.
-    The iterative path pays per-round localCheckpoint planning + a
-    convergence count (~1.5 s at sf0.1 regardless of data size), which
-    is the right price only when the edge list exceeds the driver.
+    Driver gate (:func:`cache.collect_if_small`): at most
+    ``CC_DRIVER_MAX_EDGES`` edges, integer ids and no NULL id — a driver
+    union-find labels the components and the map replants as a
+    LocalTableScan. Either side executes the pair chain exactly once,
+    and both return the same rows and schema (exact integer
+    min-per-component; pinned by test).
 
-    Distributed path: Pregel-style min-label propagation — each
+    Distributed side: Pregel-style min-label propagation — each
     iteration every node takes the min of its own label and its
     neighbors' labels (one join + one groupBy per iteration, lineage
     cut with localCheckpoint). Converges in component-diameter
     iterations; near-dup components are dense and shallow in practice
     (diameter ~ a few). At extreme diameters the large-star/small-star
     variant halves rounds to O(log n) — same join/agg shape
-    (``dedup_clusters_star``), kept crossover-free as the pure at-scale
+    (``dedup_clusters_star``), kept gate-free as the pure at-scale
     form.
 
     ``docs`` given -> singleton docs are included with cluster_id = own
     id (the full corpus mapping a keep-one-per-cluster filter needs).
     """
-    st = _FORCE_CC_STATE or state
-    if st not in ("auto", "driver", "distributed"):
-        raise ValueError(
-            f"dedup_clusters: unknown state {st!r} "
-            "(expected 'auto', 'driver' or 'distributed')"
-        )
     _int_dts = ("tinyint", "smallint", "int", "bigint")
     dts = dict(pairs.dtypes)
-    int_ids = dts["doc_a"] in _int_dts and dts["doc_b"] in _int_dts
-    if st == "driver" and not int_ids:
-        raise ValueError(
-            "dedup_clusters: the driver union-find supports integer doc "
-            "ids only — use state='distributed' for other id types"
-        )
-    if st in ("auto", "driver") and int_ids:
-        # Arrow probe, not collect(): 2M edges land as two int64 buffers
-        # (~32 MB) instead of ~2M Row objects (hundreds of MB transient
-        # Python heap). The union-find itself is a Python loop — µs at
-        # typical near-dup volumes, ~seconds right at the gate, still at
-        # or below the distributed loop's fixed per-round cost.
-        tbl = (
-            pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-            .limit(CC_DRIVER_MAX_EDGES + 1)
-            .toArrow()
-        )
-        no_nulls = (
-            tbl.column("a").null_count == 0 and tbl.column("b").null_count == 0
-        )
-        if tbl.num_rows <= CC_DRIVER_MAX_EDGES and no_nulls:
-            # emit the SAME column type the distributed path would:
-            # its edges union(a,b)/(b,a) widens to the wider of the two
-            # input int types, so the crossover never flips the schema
-            common_dt = max(dts["doc_a"], dts["doc_b"], key=_int_dts.index)
-            comp = _cc_driver(pairs.sparkSession, tbl, id_col, common_dt)
-            return _cc_with_singletons(comp, docs, id_col)
-        if st == "driver":
-            raise ValueError(
-                "dedup_clusters: state='driver' but the edge list exceeds "
-                f"CC_DRIVER_MAX_EDGES={CC_DRIVER_MAX_EDGES} or contains "
-                "NULL ids"
-            )
-        # fall through: the pair chain re-executes in the loop below —
-        # the price of a wrong probe, paid only above the gate
-    e = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+    e, tbl = cache.collect_if_small(
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
+        CC_DRIVER_MAX_EDGES,
+    )
+    if (
+        tbl is not None
+        and dts["doc_a"] in _int_dts
+        and dts["doc_b"] in _int_dts
+        and tbl["a"].null_count == 0
+        and tbl["b"].null_count == 0
+    ):
+        # emit the SAME column type the distributed side does: its
+        # union(a,b)/(b,a) widens to the wider of the two int types
+        common_dt = max(dts["doc_a"], dts["doc_b"], key=_int_dts.index)
+        comp = _cc_driver(pairs.sparkSession, tbl, id_col, common_dt)
+        return _cc_with_singletons(comp, docs, id_col)
     # eager=False: the convergence-probe count is the materializing
     # action; unchecked iterations chain into the next job (same cut)
     edges = cache.cut(e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))))
@@ -869,14 +835,14 @@ def _cc_with_singletons(
 
 
 def _cc_driver(spark, tbl, id_col: str, out_dt: str = "bigint") -> DataFrame:
-    """Driver union-find for :func:`dedup_clusters`' small-edge path:
+    """Driver union-find for :func:`dedup_clusters`' gated side:
     path-halving find + union by attachment, then min doc id per root —
     identical by definition to the distributed min-label fixpoint
     (cluster_id = min id in the component; exact integers — the caller
     guards the id dtype). ``tbl``: a pyarrow table of (a, b) edges;
     ``out_dt``: the Spark int dtype both output columns are emitted as
-    (the caller passes the distributed path's union-widened type so the
-    crossover is schema-invisible)."""
+    (the distributed side's union-widened type, so the gate is
+    schema-invisible)."""
     import pyarrow as pa
 
     _pa_int = {

@@ -262,24 +262,12 @@ def average_uniqueness(spans: DataFrame, trades_c: DataFrame, bucket_ns: int | N
     )
 
 
-#: span_sweep's small-table crossover: with a caller-provided event
-#: count at or below this, the bounded (2·events + chunks)-row sweep
-#: summary is collected and re-planted as a LocalRelation instead of
-#: localCheckpoint-cut — identical rows either way (an IEEE double
-#: survives the collect/re-upload round-trip exactly), but the driver
-#: carry skips the cut's physical-planning pass (~0.5 s at sf0.1) and
-#: makes the twice-referenced pivot input a free local leaf. 200k events
-#: ≈ 400k narrow rows ≈ 25 MB on the driver; beyond (or when the caller
-#: can't bound the event count) the cut path keeps everything
-#: cluster-side.
-SWEEP_DRIVER_MAX_EVENTS = 200_000
-#: Hard backstop on the driver-carry collect: est_events is a CALLER
-#: claim, so the Arrow fetch probes with LIMIT(bound + 1) and falls
-#: through to the cluster-side cut path when the summary exceeds it
-#: (2 rows per event + 1 per time chunk; the ×3 slack admits up to
-#: one chunk-head row per event before falling through).
-SWEEP_DRIVER_MAX_ROWS = 3 * SWEEP_DRIVER_MAX_EVENTS
-_FORCE_SWEEP_SMALL_STATE: str | None = None  # test hook: "driver"/"cut"
+#: span_sweep's driver gate: at or below this many rows (2 per event +
+#: 1 per time-chunk head, ≈ 40 MB of narrow rows at the bound) the sweep
+#: summary is collected and the pivot runs in numpy; above it the summary
+#: stays cluster-side behind a lineage cut. Both sides return
+#: bit-identical rows.
+SWEEP_DRIVER_MAX_ROWS = 600_000
 
 
 def span_sweep(
@@ -287,7 +275,6 @@ def span_sweep(
     trades: DataFrame,
     val_col: str | None = None,
     chunk_ns: int = 3_600_000_000_000,
-    est_events: int | None = None,
 ) -> DataFrame:
     """Per-event (Σ val/c, trade count) over each span in ONE sweep of
     the trade stream — the fused core behind
@@ -326,6 +313,13 @@ def span_sweep(
        read their offset + in-chunk running value, and a per-event
        pivot of the two markers emits the quotient.
 
+    Driver gate (:func:`cache.collect_if_small`): a summary of at most
+    ``SWEEP_DRIVER_MAX_ROWS`` rows is pivoted in numpy
+    (:func:`_sweep_pivot_driver`) and replanted as a LocalTableScan;
+    a larger one is pivoted in SQL over its lineage cut. The sweep
+    executes exactly once either way, and the two pivots return
+    bit-identical rows (pinned by test).
+
     Scale: the trade stream crosses the wire ONCE (the chunk exchange);
     the range-join form (`average_uniqueness`) shuffles it twice more
     and materializes |span|·|events|-bounded join rows. Float posture:
@@ -337,30 +331,24 @@ def span_sweep(
     ck = int(chunk_ns)
     val_expr = val_col if val_col is not None else "1.0"
     # -- (1) + (2): one server-parsed SQL stage (a single JVM analysis
-    # pass — the op-chained form of this stage cost ~0.9 s of pure
-    # driver-side eager analysis per build at sf0.1, SCALE.md item 10).
-    # Concurrency offsets come from the SPANS table alone (start/end
-    # deltas per time chunk over a dense explode(sequence) axis,
-    # cumulated by ONE ordered window over the k-row axis — a
-    # SinglePartition exchange, deliberately: k is the TIME-CHUNK count
-    # (~9k/year hourly), bounded at any data scale, i.e. the sanctioned
-    # k-row-aggregate class — O(k log k) beats both the O(k²) flat
-    # triangular join and the two-level group machinery's extra
-    # aggregate+join stages (round-7: the removed CTEs were ~40% of
-    # this stage's physical-planning cost, paid per build by cut);
-    # the
-    # spans frame is referenced exactly TWICE (the ±1 marker pairs come
-    # from one lateral-view expansion per consumer, not per-delta UNION
-    # branches — round-7 A/B: 4 refs → 2 cut sweep build 1.66 → 1.14 s
-    # at sf0.1) and callers pass it through a storage boundary, so each
+    # pass; the op-chained form cost ~0.9 s of eager driver-side
+    # analysis per build at sf0.1, SCALE.md item 10). Concurrency
+    # offsets come from the SPANS table alone (start/end deltas per
+    # time chunk over a dense explode(sequence) axis, cumulated by ONE
+    # ordered window over the k-row axis — a SinglePartition exchange,
+    # deliberately: k is the TIME-CHUNK count (~9k/year hourly),
+    # bounded at any data scale — O(k log k) beats both the O(k²)
+    # triangular join and the two-level group machinery). The spans
+    # frame is referenced exactly TWICE (the ±1 marker pairs come from
+    # one lateral-view expansion per consumer, not per-delta UNION
+    # branches) and callers pass it through a storage boundary, so each
     # reference is a cheap bounded re-scan, never a data-scale
-    # recompute. Then ONE exchange+sort of
-    # (trades ∪ markers) by time chunk feeds the in-chunk running
-    # Σdelta / row number, the broadcast offset join (c = exact
-    # integer), and a second window pass in the SAME partitioning/order
-    # (no new exchange): in-chunk running S and N plus full-frame
-    # per-chunk S/N totals. Null _val → null term → skipped by SUM
-    # (SQL semantics).
+    # recompute. Then ONE exchange+sort of (trades ∪ markers) by time
+    # chunk feeds the in-chunk running Σdelta / row number, the
+    # broadcast offset join (c = exact integer), and a second window
+    # pass in the SAME partitioning/order (no new exchange): in-chunk
+    # running S and N plus full-frame per-chunk S/N totals. Null _val →
+    # null term → skipped by SUM (SQL semantics).
     small_sql = f"""
 WITH per_ck AS (
   SELECT floor(ts_ns / {ck}) AS _ck, sum(_delta) AS _dt FROM (
@@ -428,37 +416,15 @@ SELECT event_id, event_ts_ns, _is_start, _prio, _rn, _ck,
        _s_in, _n_in, _s_tot, _n_tot
 FROM w2 WHERE _prio = 0 OR _rn = 1
 """
-    # storage boundary (tracked registry): both the cross-chunk offset
-    # build and the marker probe below read it, and without a boundary
-    # each reference would re-run the whole sweep (plans are trees —
-    # parameter references inline, no automatic reuse). Bounded at any
-    # scale: 2 rows per event + 1 per time chunk. Two boundary forms
-    # behind the SWEEP_DRIVER_MAX_EVENTS crossover:
-    # - driver carry (small inputs, caller-bounded): execute the sweep
-    #   now, collect the bounded summary, re-plant as a LocalRelation —
-    #   the pivot's two references read a free local leaf and the
-    #   cut's physical-planning pass disappears (round-8 A/B: build
-    #   0.75 → 0.23 s at sf0.1, bit-identical rows);
-    # - cache.cut (unbounded / unknown): cluster-side LogicalRDD
-    #   truncation — the SCALE.md item-12 A/B measured cut(spans)+
-    #   cut(small) as the best cluster posture on this tree — cut
-    #   truncates the analyzed plan so the pivot/probe stages re-analyze
-    #   a leaf, which beats keep's repeated deep-subtree analysis
-    #   despite cut's up-front planning pass.
-    small_df = sql_stage(small_sql, spans=spans, trades=trades)
-    state = _FORCE_SWEEP_SMALL_STATE or (
-        "driver"
-        if est_events is not None and est_events <= SWEEP_DRIVER_MAX_EVENTS
-        else "cut"
+    # storage boundary: the pivot reads the summary twice (chunk heads
+    # and markers), and without one each reference would re-run the
+    # whole sweep (plans are trees — no automatic reuse). The cut also
+    # truncates the analyzed plan, so the pivot re-analyzes a leaf.
+    small, tbl = cache.collect_if_small(
+        sql_stage(small_sql, spans=spans, trades=trades), SWEEP_DRIVER_MAX_ROWS
     )
-    if state == "driver":
-        out = _sweep_pivot_driver(small_df)
-        if out is not None:
-            return out
-        # probe bound exceeded — the caller's est_events undercounted;
-        # fall through to the cluster-side cut path (re-executes the
-        # sweep once, acceptable on this contract-violation-only path)
-    small = cache.cut(small_df)
+    if tbl is not None:
+        return _sweep_pivot_driver(spans.sparkSession, tbl)
     # -- (3) small-table machinery (2|events| + k rows): cross-chunk S/N
     # offsets via the same ordered-window prefix over the k-row
     # chunk-head table, markers read offset + in-chunk running value,
@@ -490,16 +456,12 @@ FROM marks GROUP BY event_id, event_ts_ns
     return sql_stage(piv_sql, small=small)
 
 
-def _sweep_pivot_driver(small_df: DataFrame) -> DataFrame | None:
-    """Driver-carried stage (3) of :func:`span_sweep` for
-    caller-bounded event counts: execute the sweep summary (one Arrow
-    fetch of the bounded 2·events + chunks rows, LIMIT-probed against
-    :data:`SWEEP_DRIVER_MAX_ROWS` — returns ``None`` when the caller's
-    ``est_events`` under-counted so :func:`span_sweep` can fall through
-    to the cluster-side cut path), run the chunk-head
-    prefix + marker pivot in numpy with the SAME IEEE op sequence as
-    the SQL form, and re-plant the per-event result as a JVM
-    LocalTableScan. Bit-identity with the SQL pivot (pinned by test):
+def _sweep_pivot_driver(spark, tbl) -> DataFrame:
+    """Driver side of :func:`span_sweep`'s stage (3): the chunk-head
+    prefix + marker pivot over the collected summary ``tbl`` (a pyarrow
+    table), in numpy with the SAME IEEE op sequence as the SQL pivot,
+    replanted as a JVM LocalTableScan. Bit-identity with the SQL pivot
+    (pinned by test):
 
     - cross-chunk offsets: the SQL ``sum() OVER (ORDER BY _ck ROWS
       UNBOUNDED PRECEDING TO 1 PRECEDING)`` is a sequential running
@@ -511,18 +473,14 @@ def _sweep_pivot_driver(small_df: DataFrame) -> DataFrame | None:
       end − start over the event's two marker rows.
 
     Why not plant the small table and keep the SQL pivot: even over a
-    LocalTableScan the pivot costs 2-3 AQE jobs ≈ 0.5 s of pure
-    scheduling on this host (per-job constants, SCALE.md); the numpy
-    pivot is <1 ms at bounded sizes and the final local re-plant is one
-    job at action time. Arrow preserves int64/float64 bits and NULLs
-    exactly in both directions."""
+    LocalTableScan the pivot costs 2-3 AQE jobs of pure scheduling; the
+    numpy pivot is <1 ms at bounded sizes and the final local re-plant
+    is one job at action time. Arrow preserves int64/float64 bits and
+    NULLs exactly in both directions."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    tbl = small_df.limit(SWEEP_DRIVER_MAX_ROWS + 1).toArrow()
-    if tbl.num_rows > SWEEP_DRIVER_MAX_ROWS:
-        return None
     # filter BEFORE to_numpy: the full table has NULL event ids on
     # chunk-head trade rows, and pyarrow converts nullable int64 to
     # float64 (lossy above 2^53 — event_ts_ns is ~1.6e18)
@@ -576,19 +534,18 @@ def _sweep_pivot_driver(small_df: DataFrame) -> DataFrame | None:
             "n_span": pa.array(val_n[ends] - val_n[starts], type=pa.int64()),
         }
     )
-    return small_df.sparkSession.createDataFrame(out)
+    return spark.createDataFrame(out)
 
 
 def average_uniqueness_sweep(
     spans: DataFrame,
     trades: DataFrame,
     chunk_ns: int = 3_600_000_000_000,
-    est_events: int | None = None,
 ) -> DataFrame:
     """Per-event mean(1/c) via :func:`span_sweep` (reference
     ``weights.py:7-49``) — identical output to ``average_uniqueness``
     (differential-tested), one exchange of the trade stream."""
-    s = span_sweep(spans, trades, val_col=None, chunk_ns=chunk_ns, est_events=est_events)
+    s = span_sweep(spans, trades, val_col=None, chunk_ns=chunk_ns)
     return s.where(F.col("n_span") > 0).select(
         "event_id",
         "event_ts_ns",
@@ -601,14 +558,13 @@ def return_attribution_sweep(
     trades_r: DataFrame,
     normalize: bool = False,
     chunk_ns: int = 3_600_000_000_000,
-    est_events: int | None = None,
 ) -> DataFrame:
     """Per-event |Σ r/c| via :func:`span_sweep` (reference
     ``weights.py:52-103``) — identical output to ``return_attribution``
     without materializing the interval join; ``trades_r``:
     ``(ts_ns, r)`` with r the per-trade log return (null on the first
     trade, skipped like SQL SUM)."""
-    s = span_sweep(spans, trades_r, val_col="r", chunk_ns=chunk_ns, est_events=est_events)
+    s = span_sweep(spans, trades_r, val_col="r", chunk_ns=chunk_ns)
     out = s.where(F.col("n_span") > 0).select(
         "event_id", "event_ts_ns", F.abs(F.col("s_span")).alias("attribution")
     )

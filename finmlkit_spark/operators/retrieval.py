@@ -183,26 +183,25 @@ def bm25_topk(
     )
 
 
-#: pagerank's edge-count crossover, the ``dedup_clusters`` driver gate
-#: (``dedup.CC_DRIVER_MAX_EDGES``) applied to the rank fixpoint: at or
-#: below this many near-dup pairs the edge list is collected once
-#: (LIMIT-probed — one execution of the pair chain) and the 5-round
-#: integer recurrence runs vectorized on the driver (bit-identical by
-#: construction — every step is int64 floor-div on non-negative values,
-#: so partial-sum order never mattered to begin with), replanting as a
-#: LocalTableScan. Above the gate the distributed loop runs unchanged —
-#: the 100 TB path never touches the driver. 2M edges ≈ 32 MB collected.
+#: pagerank's driver gate (the ``dedup.CC_DRIVER_MAX_EDGES`` bound
+#: applied to the rank fixpoint): at or below this many pairs the edge
+#: list (≈ 32 MB at the bound) is collected and the integer recurrence
+#: runs vectorized on the driver; above it the distributed loop never
+#: touches the driver.
 PR_DRIVER_MAX_EDGES = 2_000_000
-_FORCE_PR_STATE: str | None = None  # test hook: "driver"/"distributed"
+#: Largest accepted ``unit``: every intermediate of the recurrence
+#: (``unit·15``, ``85·Σcontrib`` with Σcontrib ≤ unit) stays below
+#: 2^63 on both sides of the gate.
+PR_MAX_UNIT = 10**15
 
 _INT_DTS = ("tinyint", "smallint", "int", "bigint")
 
 
 def _pagerank_driver(spark, tbl, iters: int, unit: int, out_dt: str) -> DataFrame:
     """Driver replica of :func:`pagerank`'s integer fixpoint for the
-    small-edge path. ``tbl``: a pyarrow table of (a, b) pairs; ``out_dt``
-    the Spark int dtype of the id column (the distributed path's
-    union-widened type, so the crossover is schema-invisible).
+    gated side. ``tbl``: a pyarrow table of (src, dst) pairs; ``out_dt``
+    the Spark int dtype of the id column (the distributed side's
+    union-widened type, so the gate is schema-invisible).
 
     Exactness: the distributed rounds are int64 ``DIV`` on non-negative
     operands throughout (contribution ``r DIV deg``, update
@@ -219,8 +218,8 @@ def _pagerank_driver(spark, tbl, iters: int, unit: int, out_dt: str) -> DataFram
         "bigint": pa.int64(),
     }
     out_type = _pa_int[out_dt]
-    a = tbl.column("a").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    b = tbl.column("b").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+    a = tbl.column("src").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+    b = tbl.column("dst").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     if len(a) == 0:
         empty = pa.table(
             {"id": pa.array([], type=out_type), "rank_fp": pa.array([], type=pa.int64())}
@@ -257,7 +256,6 @@ def pagerank(
     a_col: str = "id_a",
     b_col: str = "id_b",
     unit: int = PR_UNIT,
-    state: str = "auto",
 ) -> DataFrame:
     """Fixed-point PageRank (damping 0.85, ``iters`` synchronous
     rounds) over an undirected pair graph — centrality for picking the
@@ -277,9 +275,8 @@ def pagerank(
     DESTINATION node's degree attached by one window pass, so the
     upstream candidate build (LSH join) is not re-run per iteration
     and each round is exactly one broadcast-able hash join (rank
-    table keyed by node) plus one integer-sum groupBy — the old
-    per-round deg re-join is gone (r13 optimization: 3 plan
-    nodes/round → 2, ~10 fewer AQE stage jobs per 5-iter run). The
+    table keyed by node) plus one integer-sum groupBy (the degree
+    rides along with the rank, so no per-round degree re-join). The
     boundary is ``cache.cut`` (localCheckpoint), NOT ``cache.keep``
     (persist), deliberately — measured 21 → 14 exec jobs / warm exec
     −40 % over keep, checksum bit-identical. The mechanism is plan
@@ -299,57 +296,37 @@ def pagerank(
     the rank table was measured and REJECTED: ``localCheckpoint`` on
     an AQE plan materializes its shuffle stages eagerly, serializing
     every round into the driver-side build — 5.5 s vs 3.0 s at
-    sf0.1.)
-    Isolated nodes are not ranked
-    (every node in a pair has degree ≥ 1, so every node receives
-    messages each round — no dangling-mass term).
+    sf0.1.) Isolated nodes are not ranked (every node in a pair has
+    degree ≥ 1, so every node receives messages each round — no
+    dangling-mass term).
 
-    ``state="auto"`` (default, r14): probe the pair chain ONCE with a
-    ``LIMIT PR_DRIVER_MAX_EDGES+1`` Arrow collect — if every edge fits,
-    the whole fixpoint runs vectorized on the driver (bit-identical —
-    see :func:`_pagerank_driver`) and replants as a LocalTableScan,
-    skipping all ``iters`` join+agg rounds; otherwise fall through to
-    the distributed loop below (the probe's cost is one execution of
-    the pair chain, the ``dedup_clusters`` crossover discipline).
+    Driver gate (:func:`cache.collect_if_small`): at most
+    ``PR_DRIVER_MAX_EDGES`` pairs, integer ids and no NULL id — the
+    whole fixpoint runs vectorized on the driver (see :func:`_pagerank_driver`)
+    and replants as a LocalTableScan, skipping all ``iters`` join+agg
+    rounds. Either side executes the pair chain exactly once and
+    returns the same bits and schema (pinned by test). ``unit`` must
+    satisfy 0 < unit ≤ ``PR_MAX_UNIT`` so neither side can overflow
+    int64; anything else raises ``ValueError``.
     """
-    st = _FORCE_PR_STATE or state
-    if st not in ("auto", "driver", "distributed"):
-        raise ValueError(
-            f"pagerank: unknown state {st!r} "
-            "(expected 'auto', 'driver' or 'distributed')"
-        )
+    if not 0 < unit <= PR_MAX_UNIT:
+        raise ValueError(f"pagerank: unit must be in (0, {PR_MAX_UNIT}], got {unit}")
     dts = dict(pairs.dtypes)
-    int_ids = dts[a_col] in _INT_DTS and dts[b_col] in _INT_DTS
-    if st == "driver" and not int_ids:
-        raise ValueError(
-            "pagerank: the driver fixpoint supports integer ids only — "
-            "use state='distributed' for other id types"
-        )
-    if st in ("auto", "driver") and int_ids:
-        tbl = (
-            pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-            .limit(PR_DRIVER_MAX_EDGES + 1)
-            .toArrow()
-        )
-        no_nulls = (
-            tbl.column("a").null_count == 0 and tbl.column("b").null_count == 0
-        )
-        if tbl.num_rows <= PR_DRIVER_MAX_EDGES and no_nulls:
-            # the distributed union widens src/dst to the wider input
-            # int type; emit the same so the crossover never flips schema
-            common_dt = max(dts[a_col], dts[b_col], key=_INT_DTS.index)
-            return _pagerank_driver(
-                pairs.sparkSession, tbl, iters, unit, common_dt
-            )
-        if st == "driver":
-            raise ValueError(
-                "pagerank: state='driver' but the edge list exceeds "
-                f"PR_DRIVER_MAX_EDGES={PR_DRIVER_MAX_EDGES} or contains "
-                "NULL ids"
-            )
-        # fall through: the pair chain re-executes in the loop below —
-        # the price of a wrong probe, paid only above the gate
-    e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    e, tbl = cache.collect_if_small(
+        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")),
+        PR_DRIVER_MAX_EDGES,
+    )
+    if (
+        tbl is not None
+        and dts[a_col] in _INT_DTS
+        and dts[b_col] in _INT_DTS
+        and tbl["src"].null_count == 0
+        and tbl["dst"].null_count == 0
+    ):
+        # the distributed union widens src/dst to the wider input int
+        # type; emit the same so the gate never flips schema
+        common_dt = max(dts[a_col], dts[b_col], key=_INT_DTS.index)
+        return _pagerank_driver(pairs.sparkSession, tbl, iters, unit, common_dt)
     und = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # one exchange by dst attaches the receiving node's degree to
     # every edge; the cut truncates the plan so each round re-analyzes

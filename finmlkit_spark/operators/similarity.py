@@ -2327,7 +2327,10 @@ def embedding_outliers(
     )
 
 
-_FORCE_DIVERSE_MODE: str | None = None  # test hook: "onebatch" | "perpass"
+#: diverse_sample's driver gate, in bytes of float64 vector payload: at
+#: or below it the (id, vector) table is collected and the greedy steps
+#: run in numpy.
+DIVERSE_DRIVER_MAX_BYTES = 64 << 20
 
 
 def diverse_sample(
@@ -2335,8 +2338,6 @@ def diverse_sample(
     k: int = 8,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    n_rows: int | None = None,
-    onebatch_bytes_cap: int = 64 << 20,
 ) -> DataFrame:
     """Greedy k-center (Gonzalez) max-min selection: start from the
     lowest id, then repeatedly select the vector FARTHEST (cosine
@@ -2347,27 +2348,19 @@ def diverse_sample(
     vector's distance to the prior set at selection time (0 for the
     seed).
 
-    Scale shape — two execution modes, bit-identical results (pinned by
-    ``test_diverse_sample_modes_bit_identical``):
+    Driver gate (:func:`cache.collect_if_small`): a one-row ``limit(1)``
+    probe reads the vector width ``dim``; a table of at most
+    ``DIVERSE_DRIVER_MAX_BYTES // (8·dim)`` rows crosses to the driver
+    once and the k greedy steps run in numpy — one Spark job instead of
+    k. A larger table stays behind its lineage cut and takes k map-only
+    ``mapInPandas`` argmax jobs (the kmeans driver-mode posture): every
+    partition emits at most ONE (min_dist, id, vector) candidate and
+    the driver folds ≤P partials, so only k·P tiny rows ever leave the
+    executors. Past the width probe the projection executes exactly
+    once either way, and the two sides return byte-identical rows
+    (pinned by test).
 
-    - ``onebatch`` (below ``onebatch_bytes_cap``, default 64 MB of
-      vectors, footer-count-gated via ``n_rows`` — the suite passes the
-      parquet footer count, unhinted calls run one narrow count job):
-      the (id, vector) projection crosses to the driver ONCE and the k
-      greedy steps run in numpy — one Spark job total instead of k,
-      which at bench scale (2k vectors) removes ~0.25 s of per-pass
-      job+Arrow latency × k. The collect is explicitly bounded by the
-      byte cap — never data-scale.
-    - ``perpass`` (the 100 TB path): k map-only ``mapInPandas`` argmax
-      jobs over the lineage-cut narrow frame (the kmeans driver-mode
-      posture) — every partition emits at most ONE (min_dist, id,
-      vector) candidate and the driver folds ≤P partials, so only k·P
-      tiny rows ever leave the executors. The round-11 form expressed
-      the ≤k cosine folds as interpreted HOFs — the Σi fold work, not
-      the scans, dominated at 3.1-3.6 s; the Arrow kernel computes the
-      same folds as numpy row-batch cumsums.
-
-    Determinism (both modes): dots are SEQUENTIAL left-to-right sums
+    Determinism (both sides): dots are SEQUENTIAL left-to-right sums
     (``(V*s).cumsum(axis=1)[:,-1]`` — the :func:`cosine_batch`
     discipline, bit-identical to the engines' list folds), the min over
     the selected set folds in selection order (``np.minimum`` — exact,
@@ -2393,26 +2386,21 @@ def diverse_sample(
 
     id_type = dict(emb_df.dtypes)[id_col]
     proj = emb_df.select(F.col(id_col).alias("id"), as_double(emb_col).alias("v"))
-    first = proj.orderBy("id").limit(1).collect()
+    head = proj.select(F.size("v").alias("d")).limit(1).collect()
     spark = emb_df.sparkSession
     out_schema = f"sel_order long, {id_col} {id_type}, min_dist double"
-    if not first:
+    if not head:
         return proj.select(
             F.lit(0).cast("long").alias("sel_order"),
             F.col("id").alias(id_col),
             F.lit(0.0).alias("min_dist"),
         ).where(F.lit(False))
-    dim = len(first[0]["v"])
-    mode = _FORCE_DIVERSE_MODE
-    if mode is None:
-        if n_rows is None:
-            n_rows = proj.select("id").count()
-        mode = "onebatch" if n_rows * dim * 8 <= onebatch_bytes_cap else "perpass"
+    max_rows = DIVERSE_DRIVER_MAX_BYTES // (8 * max(head[0]["d"], 1))
+    e, tbl = cache.collect_if_small(proj, max_rows)
 
-    if mode == "onebatch":
-        pdf = proj.toPandas()
-        ids = pdf["id"].to_numpy()
-        V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+    if tbl is not None:
+        ids = tbl["id"].to_numpy(zero_copy_only=False)
+        V = np.stack(tbl["v"].to_numpy(zero_copy_only=False)).astype(np.float64)
         vn = np.sqrt((V * V).cumsum(axis=1)[:, -1])
         cur = int(np.argmin(ids))
         taken = np.zeros(len(ids), dtype=bool)
@@ -2432,7 +2420,7 @@ def diverse_sample(
             out_rows.append((step, _py(ids[cur]), float(md[cur])))
         return spark.createDataFrame(out_rows, out_schema)
 
-    e = cache.cut(proj)
+    first = e.orderBy("id").limit(1).collect()
     sel_ids = [first[0]["id"]]
     sel_vecs = [np.asarray(first[0]["v"], dtype=np.float64)]
     out_rows = [(1, sel_ids[0], 0.0)]

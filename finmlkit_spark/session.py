@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for the local[32] test harness.
+"""SparkSession factory for local runs: ``local[$SPARK_GRAFT_CPUS]``,
+defaulting to every core of the machine.
 
 On a real cluster these configs come from spark-submit; the session
 here mirrors what the driver uses so tests and bench agree.
@@ -12,7 +13,7 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "finmlkit_spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -183,8 +183,7 @@ def _trades_spans(spark: SparkSession, sf_dir: str):
     spans = cache.cut(
         _labels(spark, sf_dir).select("event_id", "event_ts_ns", "touch_ts_ns")
     )
-    n = spans.count()  # materializes the checkpoint; feeds the sweeps'
-    # small-table crossover and makes every later memo hit plan-free
+    n = spans.count()  # materializes the checkpoint: memo hits are plan-free
     while len(_SPANS_MEMO) > 8:  # a session touches a handful of sf dirs
         _SPANS_MEMO.pop(next(iter(_SPANS_MEMO)))
     _SPANS_MEMO[key] = (spans, n)
@@ -313,8 +312,8 @@ def avg_uniqueness_sweep(spark, sf_dir):
     materialize. The 100 TB path; the range-join form above has lower
     fixed constants at bench scale (crossover measured in SCALE.md).
     Differential-tested bit-identical to ``avg_uniqueness``."""
-    tr, spans, n = _trades_spans(spark, sf_dir)
-    return L.average_uniqueness_sweep(spans, tr, chunk_ns=HOUR_NS, est_events=n)
+    tr, spans, _n = _trades_spans(spark, sf_dir)
+    return L.average_uniqueness_sweep(spans, tr, chunk_ns=HOUR_NS)
 
 
 @query(
@@ -370,13 +369,13 @@ def return_attribution_sweep_q(spark, sf_dir):
     window — bit-identical either way)."""
     from ..operators import preprocess as P
 
-    tr, spans, n = _trades_spans(spark, sf_dir)
+    tr, spans, _n = _trades_spans(spark, sf_dir)
     d, w = P.chunked_side_frame(tr)
     r = F.log(
         F.col("price") / F.coalesce(F.lag("price").over(w), F.col("_prev_last_p"))
     )
     tr_r = d.select("ts_ns", r.alias("r"))
-    return L.return_attribution_sweep(spans, tr_r, chunk_ns=HOUR_NS, est_events=n)
+    return L.return_attribution_sweep(spans, tr_r, chunk_ns=HOUR_NS)
 
 
 @query(

@@ -2937,15 +2937,11 @@ d{i} AS (SELECT d.id, d.v, least(d.md, 1.0 - {cos('d.v', 's.v')}) AS md
 def diverse_sample_q(spark, sf_dir):
     """Greedy k-center (Gonzalez) max-min diversity selection: 8
     maximally spread exemplars by cosine distance — the coreset /
-    diverse-subset curation primitive. Footer-count-gated (round 12):
-    below the byte cap the projection crosses to the driver once and
-    the k greedy steps run in numpy (ONE job); above it, k map-only
-    Arrow argmax passes over the lineage-cut frame — bit-identical by
-    the A/B mode test."""
-    from .pipeline_suite import _parquet_num_rows
-
-    n = _parquet_num_rows(f"{sf_dir}/embeddings.parquet")
-    return SIM.diverse_sample(_embs(spark, sf_dir), k=8, n_rows=n)
+    diverse-subset curation primitive. Below the driver gate's byte
+    bound the projection crosses to the driver once and the k greedy
+    steps run in numpy; above it, k map-only Arrow argmax passes over
+    the lineage-cut frame — byte-identical by the side A/B test."""
+    return SIM.diverse_sample(_embs(spark, sf_dir), k=8)
 
 
 def _wordpiece_oracle_sql(vocab_size: int = 48, max_len: int = 4) -> str:

@@ -27,3 +27,39 @@ def duck():
     from check import duck_con
 
     return duck_con(SF_ORACLE)
+
+
+
+@pytest.fixture
+def gate_sides(monkeypatch):
+    """``run(fn) -> (driver, distributed)``: calls ``fn`` twice, first
+    in auto (asserting every ``cache.collect_if_small`` call took the
+    driver side), then with the forced-distributed hook on (asserting
+    the gate was hit and collected nothing). ``fn`` must build AND
+    collect the operator's output."""
+    from finmlkit_spark import cache
+
+    real = cache.collect_if_small
+    sides = []
+
+    def spy(df, max_rows):
+        out = real(df, max_rows)
+        sides.append(out[1] is not None)
+        return out
+
+    monkeypatch.setattr(cache, "collect_if_small", spy)
+
+    def run(fn):
+        sides.clear()
+        drv = fn()
+        assert sides and all(sides), "auto did not take the driver side"
+        sides.clear()
+        monkeypatch.setattr(cache, "_FORCE_DISTRIBUTED", True)
+        try:
+            dist = fn()
+        finally:
+            monkeypatch.setattr(cache, "_FORCE_DISTRIBUTED", False)
+        assert sides and not any(sides), "the forced run collected"
+        return drv, dist
+
+    return run

@@ -315,11 +315,11 @@ def test_gopher_repetition_hand_computed(spark):
     assert out[3]["top_2gram_share"] == 0.0
 
 
-def test_bpe_train_hand_computed_and_modes(spark):
+def test_bpe_train_hand_computed_and_modes(spark, gate_sides):
     """BPE merges on a hand-checkable corpus: 'aaab aaab ab' — pair
     counts round 1: (a,a)=4, (a,b)=3 -> merge (a,a); round 2 over
     {aa,a,b / aa,a,b / a,b}: (aa,a)=2, (a,b)=3 -> merge (a,b); round 3:
-    (aa,ab)=2 wins. Driver and distributed modes must agree
+    (aa,ab)=2 wins. The driver and distributed sides must agree
     byte-for-byte; ties break to the smallest (lhs, rhs)."""
     from finmlkit_spark.operators import corpus as CP
 
@@ -327,29 +327,28 @@ def test_bpe_train_hand_computed_and_modes(spark):
         [(0, "aaab aaab ab")], "doc_id long, text string"
     )
     exp = [(0, "a", "a", 4), (1, "a", "b", 3), (2, "aa", "ab", 2)]
-    for mode in ("driver", "distributed"):
-        got = sorted(
-            map(tuple, CP.bpe_train(docs, n_merges=3, mode=mode).collect())
-        )
-        assert got == exp, (mode, got)
+    drv, dist = gate_sides(
+        lambda: sorted(map(tuple, CP.bpe_train(docs, n_merges=3).collect()))
+    )
+    assert drv == dist == exp, (drv, dist)
 
     # dry corpus: fewer merges exist than requested -> early stop
     tiny = spark.createDataFrame([(0, "ab")], "doc_id long, text string")
-    out = CP.bpe_train(tiny, n_merges=5, mode="driver").collect()
-    assert [tuple(r) for r in out] == [(0, "a", "b", 1)]
+    drv, dist = gate_sides(lambda: [tuple(r) for r in CP.bpe_train(tiny, n_merges=5).collect()])
     # after merging 'ab' the word is one symbol: no pairs remain
-    assert len(out) == 1
+    assert drv == dist == [(0, "a", "b", 1)]
 
 
-def test_bpe_train_modes_identical_on_real_docs(spark):
-    """Mode A/B on the sf0.001 documents table: the driver-carried loop
+def test_bpe_train_modes_identical_on_real_docs(spark, gate_sides):
+    """Side A/B on the sf0.001 documents table: the driver-carried loop
     and the distributed per-iteration top-1 job must produce the same
     merge table (same splits, same tie-breaks, same replace)."""
     from finmlkit_spark.operators import corpus as CP
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = sorted(map(tuple, CP.bpe_train(docs, n_merges=6, mode="driver").collect()))
-    b = sorted(map(tuple, CP.bpe_train(docs, n_merges=6, mode="distributed").collect()))
+    a, b = gate_sides(
+        lambda: sorted(map(tuple, CP.bpe_train(docs, n_merges=6).collect()))
+    )
     assert a == b and len(a) == 6
 
 
@@ -372,7 +371,7 @@ def test_bpe_apply_reproduces_trainer_state(spark):
     assert out0["n_bpe_tokens"] == len("aaab") + len("aaab") + len("ab")
 
 
-def test_bpe_merge_is_symbol_aligned(spark):
+def test_bpe_merge_is_symbol_aligned(spark, gate_sides):
     """Regression for the substring-replace bug: on 'ab ab bc bc abc',
     round 0 merges (a,b) — word 'abc' becomes [ab, c]. Round 1 merges
     (b,c) with count 2 (the two 'bc' words ONLY: 'abc' has no (b,c)
@@ -385,11 +384,10 @@ def test_bpe_merge_is_symbol_aligned(spark):
         [(0, "ab ab bc bc abc")], "doc_id long, text string"
     )
     exp = [(0, "a", "b", 3), (1, "b", "c", 2), (2, "ab", "c", 1)]
-    for mode in ("driver", "distributed"):
-        got = sorted(
-            map(tuple, CP.bpe_train(docs, n_merges=3, mode=mode).collect())
-        )
-        assert got == exp, (mode, got)
+    drv, dist = gate_sides(
+        lambda: sorted(map(tuple, CP.bpe_train(docs, n_merges=3).collect()))
+    )
+    assert drv == dist == exp, (drv, dist)
     seg = CP.bpe_apply(docs, [(l, r) for _, l, r, _ in exp]).collect()[0]
     # ab, ab, bc, bc, abc -> one symbol each
     assert seg["n_bpe_tokens"] == 5

@@ -796,27 +796,24 @@ def test_ann_sq8_route_auto_counts_when_unhinted(spark):
     assert key(auto) == key(full)
 
 
-def test_diverse_sample_modes_bit_identical(spark):
-    """Round-12 crossover: the onebatch (driver-numpy, one job) and
-    perpass (distributed Arrow argmax) modes must yield byte-identical
-    rows — same seeds, same sequential-fold cosines, same tie rules."""
+def test_diverse_sample_modes_bit_identical(spark, gate_sides):
+    """diverse_sample's driver gate (numpy greedy steps over the
+    collected table) and its distributed side (per-pass Arrow argmax)
+    must yield byte-identical rows — same seeds, same sequential-fold
+    cosines, same tie rules."""
     import struct
 
     from finmlkit_spark.operators import similarity as SIM
 
     embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    got = {}
-    for mode in ("onebatch", "perpass"):
-        SIM._FORCE_DIVERSE_MODE = mode
-        try:
-            got[mode] = sorted(
-                (r["sel_order"], r["vec_id"], struct.pack("<d", r["min_dist"]))
-                for r in SIM.diverse_sample(embs, k=6).collect()
-            )
-        finally:
-            SIM._FORCE_DIVERSE_MODE = None
-    assert got["onebatch"] == got["perpass"]
-    assert len(got["onebatch"]) == 6
+    drv, dist = gate_sides(
+        lambda: sorted(
+            (r["sel_order"], r["vec_id"], struct.pack("<d", r["min_dist"]))
+            for r in SIM.diverse_sample(embs, k=6).collect()
+        )
+    )
+    assert drv == dist
+    assert len(drv) == 6
 
 
 def test_embedding_outliers_finds_injected_outlier(spark):
@@ -852,13 +849,12 @@ def test_embedding_outliers_z2_cap(spark):
     assert out[0]["score"] <= 2 * 1e6 + 1  # capped per element
 
 
-def test_diverse_sample_string_ids_both_modes(spark):
-    """Round 13 (r12 advisory): the output schema is parameterized on
-    the id column's dtype, so non-numeric ids must actually work — the
-    r12 form crashed on str ids (.item() on object dtype; unary minus
-    in the tie-breaks). String ids must select the same VECTORS as the
-    long-id run (ids map 1:1, zero-padded so lexicographic == numeric
-    order) in both execution modes, byte-identical distances."""
+def test_diverse_sample_string_ids_both_modes(spark, gate_sides):
+    """The output schema is parameterized on the id column's dtype, so
+    non-numeric ids must actually work. String ids must select the same
+    VECTORS as the long-id run (ids map 1:1, zero-padded so
+    lexicographic == numeric order) on both sides of the driver gate,
+    byte-identical distances."""
     import struct
 
     from finmlkit_spark.operators import similarity as SIM
@@ -872,13 +868,10 @@ def test_diverse_sample_string_ids_both_modes(spark):
         (r["sel_order"], "doc-%06d" % r["vec_id"], struct.pack("<d", r["min_dist"]))
         for r in SIM.diverse_sample(embs, k=5).collect()
     )
-    for mode in ("onebatch", "perpass"):
-        SIM._FORCE_DIVERSE_MODE = mode
-        try:
-            got = sorted(
-                (r["sel_order"], r["vec_id"], struct.pack("<d", r["min_dist"]))
-                for r in SIM.diverse_sample(sembs, k=5).collect()
-            )
-        finally:
-            SIM._FORCE_DIVERSE_MODE = None
-        assert got == base, mode
+    drv, dist = gate_sides(
+        lambda: sorted(
+            (r["sel_order"], r["vec_id"], struct.pack("<d", r["min_dist"]))
+            for r in SIM.diverse_sample(sembs, k=5).collect()
+        )
+    )
+    assert drv == dist == base

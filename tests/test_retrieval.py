@@ -126,51 +126,67 @@ def test_pagerank_disjoint_pairs_uniform(spark):
     assert len(set(got.values())) == 1  # symmetric graph -> equal ranks
 
 
-def test_pagerank_driver_distributed_parity(spark):
-    # the r14 driver gate must be bit-identical to the distributed
-    # fixpoint on a messy graph: duplicate edges (weight by repetition),
-    # a self-loop, skewed degrees, int ids far apart
+def test_pagerank_driver_distributed_parity(spark, gate_sides):
+    # the driver gate must be bit-identical to the distributed fixpoint
+    # on a messy graph: duplicate edges (weight by repetition), a
+    # self-loop, skewed degrees, int ids far apart
     import random
 
     rng = random.Random(14)
     edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(300)]
     edges += [(7, 7), (0, 59), (0, 59), (1_000_003, 2)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    out = {}
-    for st in ("driver", "distributed"):
-        RT._FORCE_PR_STATE = st
-        try:
-            out[st] = {r["id"]: r["rank_fp"] for r in RT.pagerank(df).collect()}
-        finally:
-            RT._FORCE_PR_STATE = None
-    assert out["driver"] == out["distributed"]
-    assert out["driver"] == _pagerank_reference(edges)
+    drv, dist = gate_sides(
+        lambda: {r["id"]: r["rank_fp"] for r in RT.pagerank(df).collect()}
+    )
+    assert drv == dist
+    assert drv == _pagerank_reference(edges)
 
 
-def test_pagerank_driver_gate_schema_and_empty(spark):
-    # crossover is schema-invisible: int inputs widen to the wider type
-    # on both paths; an empty edge list returns an empty, well-typed frame
+def test_pagerank_driver_gate_schema_and_empty(spark, gate_sides):
+    # the gate is schema-invisible: int inputs widen to the wider type
+    # on both sides; an empty edge list returns an empty, well-typed frame
+    def run(df):
+        got = RT.pagerank(df)
+        return got.schema.simpleString(), sorted(map(tuple, got.collect()))
+
     df = spark.createDataFrame([(1, 2)], "id_a int, id_b bigint")
-    out = {}
-    for st in ("driver", "distributed"):
-        RT._FORCE_PR_STATE = st
-        try:
-            got = RT.pagerank(df)
-            out[st] = (got.schema.simpleString(), sorted(map(tuple, got.collect())))
-        finally:
-            RT._FORCE_PR_STATE = None
-    assert out["driver"] == out["distributed"]
+    drv, dist = gate_sides(lambda: run(df))
+    assert drv == dist
     empty = spark.createDataFrame([], "id_a long, id_b long")
-    RT._FORCE_PR_STATE = "driver"
-    try:
-        got = RT.pagerank(empty)
-        assert got.collect() == []
-        assert [f.dataType.simpleString() for f in got.schema.fields] == [
-            "bigint",
-            "bigint",
-        ]
-    finally:
-        RT._FORCE_PR_STATE = None
+    drv, dist = gate_sides(lambda: run(empty))
+    assert drv == dist
+    assert drv == ("struct<id:bigint,rank_fp:bigint>", [])
+
+
+def test_pagerank_unit_bounds_both_sides(spark, gate_sides, monkeypatch):
+    # 0 < unit <= PR_MAX_UNIT keeps every intermediate inside int64: both
+    # sides agree at the edge value and reject the same values outside it
+    from finmlkit_spark import cache
+
+    pairs = [(1, 2), (2, 3)]
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    drv, dist = gate_sides(
+        lambda: {r["id"]: r["rank_fp"] for r in RT.pagerank(df, unit=RT.PR_MAX_UNIT).collect()}
+    )
+    assert drv == dist == _pagerank_reference(pairs, unit=RT.PR_MAX_UNIT)
+    for forced in (False, True):
+        monkeypatch.setattr(cache, "_FORCE_DISTRIBUTED", forced)
+        for bad in (0, -1, RT.PR_MAX_UNIT + 1, 2**62):
+            with pytest.raises(ValueError, match="unit"):
+                RT.pagerank(df, unit=bad)
+
+
+def test_pagerank_string_ids_take_distributed_side(spark):
+    # string ids fail the driver fixpoint's dtype check: the operator
+    # continues from the gate's cut with the same integer recurrence
+    from pyspark.sql import functions as F
+
+    pairs = [(1, 2), (2, 3), (3, 1), (3, 4)]
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    sdf = df.select(*(F.format_string("n%d", c).alias(c) for c in ("id_a", "id_b")))
+    got = {r["id"]: r["rank_fp"] for r in RT.pagerank(sdf).collect()}
+    assert got == {"n%d" % k: v for k, v in _pagerank_reference(pairs).items()}
 
 
 def test_bm25_plan_is_take_ordered(spark):

@@ -429,10 +429,10 @@ def test_dup_span_ranges_random_vs_brute(spark):
     assert got == expected
 
 
-def test_dedup_clusters_driver_and_distributed_bit_identical(spark):
-    """Round-8: dedup_clusters' edge-count crossover (driver union-find
-    below CC_DRIVER_MAX_EDGES vs the distributed min-label fixpoint)
-    must produce the identical (doc_id, cluster_id) map — exact integer
+def test_dedup_clusters_driver_and_distributed_bit_identical(spark, gate_sides):
+    """dedup_clusters' driver gate (union-find on the collected edges)
+    and its distributed side (the min-label fixpoint) must produce the
+    identical (doc_id, cluster_id) map — exact integer
     min-per-component either way. Covers random graphs AND a deep chain."""
     import random
 
@@ -442,7 +442,7 @@ def test_dedup_clusters_driver_and_distributed_bit_identical(spark):
     edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
     edges = [(a, b) for a, b in edges if a != b]
     # chain short enough for min-label to converge inside max_iter —
-    # deeper chains are exactly what the driver path and the star form
+    # deeper chains are exactly what the driver side and the star form
     # fix (asserted below)
     chain = [(1000 + i, 1000 + i + 1) for i in range(20)]
     pairs = spark.createDataFrame(
@@ -450,19 +450,15 @@ def test_dedup_clusters_driver_and_distributed_bit_identical(spark):
         "doc_a long, doc_b long",
     )
     docs = spark.range(0, 1100).select(F.col("id").alias("doc_id"))
-    out = {}
-    for st in ("driver", "distributed"):
-        D._FORCE_CC_STATE = st
-        try:
-            out[st] = {
-                r["doc_id"]: r["cluster_id"]
-                for r in D.dedup_clusters(pairs, docs).collect()
-            }
-        finally:
-            D._FORCE_CC_STATE = None
-    assert out["driver"] == out["distributed"]
-    assert len(out["driver"]) == 1100
-    assert out["driver"][1015] == 1000
+    drv, dist = gate_sides(
+        lambda: {
+            r["doc_id"]: r["cluster_id"]
+            for r in D.dedup_clusters(pairs, docs).collect()
+        }
+    )
+    assert drv == dist
+    assert len(drv) == 1100
+    assert drv[1015] == 1000
 
     # deep chain: min-label propagation cannot converge in max_iter
     # rounds (1 hop/round) — the driver union-find must match the
@@ -470,16 +466,26 @@ def test_dedup_clusters_driver_and_distributed_bit_identical(spark):
     deep = spark.createDataFrame(
         [(2000 + i, 2000 + i + 1) for i in range(120)], "doc_a long, doc_b long"
     )
-    D._FORCE_CC_STATE = "driver"
-    try:
-        got = {r["doc_id"]: r["cluster_id"] for r in D.dedup_clusters(deep).collect()}
-    finally:
-        D._FORCE_CC_STATE = None
+    got = {r["doc_id"]: r["cluster_id"] for r in D.dedup_clusters(deep).collect()}
     star = {
         r["doc_id"]: r["cluster_id"] for r in D.dedup_clusters_star(deep).collect()
     }
     assert got == star
     assert got[2120] == 2000
+
+
+def test_dedup_clusters_string_ids_take_distributed_side(spark):
+    """String ids fail the driver union-find's dtype check: the operator
+    continues from the gate's cut and labels the same components as the
+    integer-id run."""
+    from finmlkit_spark.operators import dedup as D
+
+    ints = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long")
+    strs = ints.select(*(F.format_string("d%03d", c).alias(c) for c in ("doc_a", "doc_b")))
+    got_i = {r["doc_id"]: r["cluster_id"] for r in D.dedup_clusters(ints).collect()}
+    got_s = {r["doc_id"]: r["cluster_id"] for r in D.dedup_clusters(strs).collect()}
+    assert got_i == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
+    assert got_s == {"d%03d" % k: "d%03d" % v for k, v in got_i.items()}
 
 
 def test_cc_driver_union_find_property(spark):

@@ -30,3 +30,29 @@ def test_query_matches_oracle(name, spark, duck):
     odf = duck.execute(suite.ORACLES[name]).fetchdf()
     errs = compare(name, sdf, odf)
     assert not errs, f"{name}: {errs}"
+
+
+#: queries whose operators sit behind ``cache.collect_if_small``; sf0.001
+#: inputs are small, so the test above covers their driver side
+GATED = [
+    "avg_uniqueness_sweep",
+    "bpe_segment",
+    "bpe_train",
+    "dedup_clusters",
+    "dedup_keep_best",
+    "diverse_sample",
+    "dup_graph_pagerank",
+    "keep_central",
+    "return_attribution_sweep",
+]
+
+
+@pytest.mark.parametrize("name", GATED)
+def test_gated_query_matches_oracle_forced_distributed(name, spark, duck, monkeypatch):
+    from finmlkit_spark import cache
+
+    monkeypatch.setattr(cache, "_FORCE_DISTRIBUTED", True)
+    sdf = suite.QUERIES[name](spark, SF_ORACLE).toPandas()
+    odf = duck.execute(suite.ORACLES[name]).fetchdf()
+    errs = compare(name, sdf, odf)
+    assert not errs, f"{name}: {errs}"

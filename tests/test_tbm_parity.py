@@ -327,36 +327,31 @@ def test_span_sweep_matches_bruteforce_numpy(spark):
             assert abs(s_got - s_exp) <= 1e-9 * max(1.0, abs(s_exp)), (seed, k)
 
 
-def test_span_sweep_driver_and_cut_states_bit_identical(spark):
-    """Round-8: span_sweep's small-table crossover (driver-carried numpy
-    pivot vs the cluster-side cut + SQL pivot) must agree BIT-FOR-BIT —
-    the numpy path replays the SQL's sequential prefix fold (np.cumsum)
-    and per-marker add, so any divergence is a determinism bug."""
+def test_span_sweep_driver_and_cut_states_bit_identical(spark, gate_sides):
+    """span_sweep's driver gate (numpy pivot over the collected summary)
+    and its distributed side (SQL pivot over the cut) must agree
+    BIT-FOR-BIT — the numpy pivot replays the SQL's sequential prefix
+    fold (np.cumsum) and per-marker add, so any divergence is a
+    determinism bug."""
     from finmlkit_spark.operators import labels as L
     from finmlkit_spark.suite import labels_suite as LS
 
-    tr, spans, n = LS._trades_spans(spark, "/root/testdata/sf0.001")
-    out = {}
-    for st in ("cut", "driver"):
-        L._FORCE_SWEEP_SMALL_STATE = st
-        try:
-            out[st] = {
-                r["event_id"]: (r["event_ts_ns"], r["s_span"], r["n_span"])
-                for r in L.span_sweep(
-                    spans, tr, val_col=None, chunk_ns=LS.HOUR_NS, est_events=n
-                ).collect()
-            }
-        finally:
-            L._FORCE_SWEEP_SMALL_STATE = None
-    assert out["cut"] == out["driver"]
-    assert len(out["cut"]) > 0
+    tr, spans, _n = LS._trades_spans(spark, "/root/testdata/sf0.001")
+    drv, dist = gate_sides(
+        lambda: {
+            r["event_id"]: (r["event_ts_ns"], r["s_span"], r["n_span"])
+            for r in L.span_sweep(spans, tr, val_col=None, chunk_ns=LS.HOUR_NS).collect()
+        }
+    )
+    assert drv == dist
+    assert len(drv) > 0
 
 
-def test_span_sweep_degenerate_inputs_both_states(spark):
-    """Round-8 edges: empty spans, a single event, a zero-length span
+def test_span_sweep_degenerate_inputs_both_states(spark, gate_sides):
+    """Edge inputs: empty spans, a single event, a zero-length span
     (touch == event ts), and events sharing a timestamp must produce
-    identical results through the driver-carry and cut paths — and the
-    empty case must not crash the numpy pivot."""
+    identical results through the driver and distributed sides — and
+    the empty case must not crash the numpy pivot."""
     from pyspark.sql import functions as F
 
     from finmlkit_spark.operators import labels as L
@@ -378,18 +373,11 @@ def test_span_sweep_degenerate_inputs_both_states(spark):
         )
         if not spans_rows:
             spans = spans.where(F.lit(False))
-        out = {}
-        for st in ("driver", "cut"):
-            L._FORCE_SWEEP_SMALL_STATE = st
-            try:
-                out[st] = sorted(
-                    tuple(r)
-                    for r in L.span_sweep(
-                        spans, trades, chunk_ns=100, est_events=len(spans_rows)
-                    ).collect()
-                )
-            finally:
-                L._FORCE_SWEEP_SMALL_STATE = None
-        assert out["driver"] == out["cut"], (name, out)
+        drv, dist = gate_sides(
+            lambda: sorted(
+                tuple(r) for r in L.span_sweep(spans, trades, chunk_ns=100).collect()
+            )
+        )
+        assert drv == dist, (name, drv, dist)
         if name == "empty":
-            assert out["driver"] == []
+            assert drv == []

@@ -32,7 +32,7 @@ DEFAULT_QUERIES = [
 def build_session(overlay: dict[str, str]):
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("abcfg")

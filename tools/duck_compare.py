@@ -43,7 +43,7 @@ def main() -> int:
     from finmlkit_spark import suite
 
     con = duckdb.connect()
-    con.execute(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.execute(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count())}")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
