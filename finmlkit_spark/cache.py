@@ -33,8 +33,10 @@ if TYPE_CHECKING:
 
 _LIVE: list[DataFrame] = []
 _CUT: list[DataFrame] = []
-#: Test hook: when True, :func:`collect_if_small` never collects, so every
-#: gated operator takes its distributed side on any input size.
+#: The one test hook: when True, every crossover takes its scale side on
+#: any input size — :func:`collect_if_small` never collects, the side and
+#: flagship windows plan ``"chunked"``, ``segment_dedup`` ignores
+#: ``onepart`` and driver k-means uses the two-level partial fold.
 _FORCE_DISTRIBUTED = False
 
 

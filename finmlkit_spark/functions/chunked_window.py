@@ -34,9 +34,10 @@ to the SUM of lookbacks along the deepest chain.
 
 This is the DataFrame analog of the reference's chunked parallel
 feature computation (``finmlkit/feature/kit.py`` multiprocessing over
-row chunks with warmup overlap) — exact, not the truncation-error
-variant (that one is ``sequential.ewma_chunked`` for infinite-memory
-recurrences).
+row chunks with warmup overlap) — exact for bounded frames. Infinite-
+memory recurrences (EWMA, EW-std) cannot be warmed up exactly; they use
+the closed-combine scans in ``sequential`` (``ewma_parallel`` and
+siblings).
 """
 
 from __future__ import annotations

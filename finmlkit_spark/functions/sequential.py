@@ -8,10 +8,9 @@ sequential *within* a (symbol) group, parallel *across* groups, exactly
 mirroring the reference's per-array Numba kernels run per instrument.
 
 Scale posture (100 TB): state per group is O(1)-O(window), so the only
-constraint is one task per symbol; for a single huge symbol, chunk by
-time with warmup overlap (EWMA memory ≈ a few half-lives) — helpers
-accept pre-chunked input and the truncation error is quantified in the
-docstrings.
+constraint is one task per symbol; for a single huge symbol the
+``*_parallel`` / ``*_chunked`` scans split the rows into chunks and
+carry the exact cross-chunk state (no warmup truncation).
 
 Reference behavior parity (math re-derived, no code reuse):
 EWMA family ``core/ma.py:6-43``, EW std ``core/volatility.py:9-219``,
@@ -105,54 +104,6 @@ def ewmst(ts_ns: np.ndarray, y: np.ndarray, halflife_ns: float) -> np.ndarray:
     return out
 
 
-def ewma_chunked(
-    df: DataFrame,
-    col: str,
-    span: float,
-    order_col: str = "ts_ns",
-    chunk_ns: int = 86_400_000_000_000,
-    warmup_mult: float = 10.0,
-    by: str | None = None,
-    out: str = "ewma",
-) -> DataFrame:
-    """Time-chunked parallel EWMA for a single huge symbol (SURVEY §7
-    "what's hard"): each chunk is computed *independently* with a warmup
-    overlap read from the previous chunk, then warmup rows are dropped.
-
-    Exactness: adjust=True EWMA memory decays as (1−α)^k; with a warmup
-    of ``warmup_mult``·span rows the truncation error is
-    (1−α)^(warmup_mult·span) ≈ e^(−2·warmup_mult) (≈ 2e-9 at 10×) —
-    below any practical tolerance. Parallelism = number of chunks, even
-    within one symbol; state never crosses a task.
-    """
-    by_cols = [by] if by else []
-    chunk = F.floor(F.col(order_col) / F.lit(chunk_ns))
-    d = df.withColumn("_chunk", chunk)
-    # rows also participate in the NEXT chunk as warmup (duplicate + tag)
-    main = d.withColumn("_tgt", F.col("_chunk")).withColumn("_warm", F.lit(False))
-    warm = d.withColumn("_tgt", F.col("_chunk") + 1).withColumn("_warm", F.lit(True))
-    u = main.unionByName(warm)
-
-    warmup_rows = int(warmup_mult * span)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([order_col]).reset_index(drop=True)
-        # keep only the trailing warmup_rows of the warm prefix
-        warm_mask = pdf["_warm"].to_numpy()
-        n_warm = int(warm_mask.sum())
-        start = max(0, n_warm - warmup_rows)
-        pdf = pdf.iloc[start:].reset_index(drop=True)
-        pdf[out] = ewma(pdf[col].to_numpy(), span)
-        return pdf.loc[~pdf["_warm"], [*by_cols, order_col, out]]
-
-    schema_parts = [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in by_cols]
-    schema_parts.append(f"`{order_col}` {df.schema[order_col].dataType.simpleString()}")
-    schema_parts.append(f"`{out}` double")
-    return u.groupBy(*by_cols, "_tgt").applyInPandas(
-        kernel, schema=", ".join(schema_parts)
-    )
-
-
 def ewma_parallel(
     df: DataFrame,
     col: str,
@@ -164,8 +115,8 @@ def ewma_parallel(
     coarse_span: int = 86_400_000_000_000,
 ) -> DataFrame:
     """EXACT parallel EWMA via a two-pass chunked scan — no warmup
-    truncation at all (vs :func:`ewma_chunked`'s ~e^(−2·warmup_mult)
-    error). The sequential tier's real scale answer for one huge symbol.
+    truncation: every row's value carries the full history. The
+    sequential tier's scale answer for one huge symbol.
 
     adjust=True EWMA is a ratio of two linear recurrences
     (``core/ma.py:6-43`` semantics):

@@ -87,11 +87,6 @@ def tfidf_keywords(
         )
     )
 
-#: Test hook: force the segment_dedup execution mode regardless of the
-#: caller's ``onepart`` (True/False); None = respect the caller.
-_FORCE_SEGDEDUP_ONEPART: bool | None = None
-
-
 def segment_dedup(
     docs: DataFrame,
     seg_tokens: int = 8,
@@ -124,7 +119,7 @@ def segment_dedup(
     yields tens of thousands of expected collisions, each silently
     deleting a unique segment, while 2^128 makes collisions negligible.
 
-    ``onepart`` (round 10): below-crossover fusion for bench-scale
+    ``onepart``: below-crossover fusion for bench-scale
     inputs — the exploded segments repartition to ONE partition below
     the window (SinglePartition satisfies both the window's and the
     reassembly agg's clustered distributions, fusing
@@ -135,15 +130,15 @@ def segment_dedup(
     group regardless of partitioning, and the reassembly agg sorts the
     collected structs. The at-scale caller leaves ``onepart=False``
     and keeps the digest-parallel window — the plan a 100 TB corpus
-    needs. ``test_plan_regression`` pins both sides via the force hook:
+    needs; ``cache._FORCE_DISTRIBUTED`` forces it on every call.
+    ``test_plan_regression`` pins both sides:
     ``test_no_single_partition_exchange[segment_dedup]`` holds the
     at-scale plan SinglePartition-free, and
     ``test_segment_dedup_modes_bit_identical`` asserts the two modes
     yield byte-identical rows AND that the fused mode actually plans
     the single-partition shape.
     """
-    if _FORCE_SEGDEDUP_ONEPART is not None:
-        onepart = _FORCE_SEGDEDUP_ONEPART
+    onepart = onepart and not cache._FORCE_DISTRIBUTED
     t = tokens(text_col)
     nseg = F.ceil(F.size(t) / F.lit(seg_tokens)).cast("int")
     segs = docs.select(

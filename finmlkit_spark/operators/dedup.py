@@ -56,32 +56,17 @@ def normalized_dedup(
     )
 
 
-#: shingle_hashes engine force hook ("arrow"/"hof") — tests pin the
-#: element-identity of the two forms with it
-_FORCE_SHINGLE_ENGINE: str | None = None
-
-
-def shingle_hashes(text_col: str = "text", k: int = 3, engine: str = "hof") -> Column:
+def shingle_hashes(text_col: str = "text", k: int = 3) -> Column:
     """Distinct token-k-gram shingle hashes, combined from per-token
     polynomial hashes (hash each token once, fold k of them — 3× less
     char work than hashing shingle strings; same recurrence shape).
 
-    Engines (element-identical arrays, pinned by test — same hashes,
-    same first-occurrence distinct order):
-
-    - ``"hof"`` (default): the let-bound zip_with JVM expression —
-      measured A/B at sf0.1: 0.43 s for the projection, 0.70 s with a
-      downstream explode;
-    - ``"arrow"`` (``text.shingle_hashes_arrow``): the vectorized numpy
-      fold — 0.40 s projection but 0.79 s with explode (the array pays
-      the Arrow boundary and still explodes JVM-side), so it is NOT the
-      default here. The Arrow fold wins where the kernel emits the
-      EXPLODED rows directly and skips the array round-trip entirely —
-      that is ``_positional_trigram_rows`` (dup_span_ranges, ~5×)."""
-    from .text import shingle_hashes_arrow
-
-    if (_FORCE_SHINGLE_ENGINE or engine) == "arrow":
-        return shingle_hashes_arrow(text_col, k)
+    The let-bound zip_with JVM expression; ``array_distinct`` keeps the
+    FIRST occurrence order. An Arrow array kernel measured slower here
+    once a downstream explode follows (0.79 vs 0.70 s at sf0.1): the
+    array pays the Arrow boundary and still explodes JVM-side. Where a
+    consumer needs the exploded rows, :func:`_positional_trigram_rows`
+    and :func:`_distinct_shingle_rows` emit them directly instead."""
     return shingle_hashes_from_tokens(token_hashes(text_col), k)
 
 
@@ -209,13 +194,11 @@ def ngram_jaccard_pairs(
     shingle to be corpus-wide boilerplate, which the threshold filter
     would likely reject anyway.
     """
-    # round-9: no path reads the full shingle ARRAYS more than once any
-    # more (the bounded path verifies via counts + hot arrays, below),
-    # so the array-column storage boundary (localCheckpoint of d) is
-    # gone. r14: the shingle fold + distinct + explode runs in the
-    # Arrow kernel (row-multiset-identical to the HOF form, see
-    # _distinct_shingle_rows) — the dup_span_ranges engine trade
-    # applied to the set-shingle explode; −20% on the query, 3/3 reps.
+    # no path reads the full shingle ARRAYS more than once (the bounded
+    # path verifies via counts + hot arrays, below), so there is no
+    # array-column storage boundary. The shingle fold + distinct +
+    # explode runs in one Arrow kernel (row-multiset-identical to the
+    # HOF form, see _distinct_shingle_rows).
     e = _distinct_shingle_rows(docs, 3, text_col, id_col)
     if max_doc_freq is None:
         e = cache.keep(e)  # feeds both sides of the unbounded self-join
@@ -317,175 +300,94 @@ def ngram_jaccard_pairs(
     )
 
 
-#: dup_span_ranges engine force hook ("arrow"/"hof") — tests pin the
-#: bit-identity of the two positional-shingle stages with it
-_FORCE_SPANS_ENGINE: str | None = None
+def _kgram_rows(texts, k: int):
+    """The one shingle-row generator behind the Arrow shingle kernels:
+    every positional token-k-gram of a batch of texts as parallel arrays
+    ``(doc_idx, p, g)`` — batch-local doc index, token position, k-gram
+    hash — exactly the rows of ``posexplode(positional_shingle_hashes(
+    token_hashes(text)))``.
+
+    Token semantics mirrored exactly: ``split(trim(text), ' +')``
+    equals the maximal runs of non-space (0x20) characters for every
+    input (trim removes the leading empties, trailing empties can't
+    exist on trimmed text), except all-space/empty texts, which the HOF
+    tokenizer turns into ONE empty token (hash 0) — a (p=0, g=0) row
+    at k=1 and nothing at k≥2; NULL texts yield no rows. Characters are
+    compared as CODEPOINTS (utf-32 decode), the same value Spark's and
+    DuckDB's ``ascii()`` fold uses."""
+    import numpy as np
+
+    from .text import _shingle_combine, _token_hash_arrays
+
+    th, tok_doc, cnt, _toff = _token_hash_arrays(texts, MOD)
+    g, tpos, valid = _shingle_combine(th, tok_doc, cnt, k, MOD)
+    d, p, g = tok_doc[valid], tpos[valid], g[valid]
+    if k == 1:
+        is_str = np.fromiter((isinstance(t, str) for t in texts), bool, len(texts))
+        e0 = np.flatnonzero((cnt == 0) & is_str).astype(np.int64)
+        z = np.zeros(len(e0), np.int64)
+        d, p, g = (np.concatenate(x) for x in ((e0, d), (z, p), (z, g)))
+    return d, p, g
+
+
+def _map_kgram_rows(
+    docs: DataFrame, k: int, text_col: str, id_col: str, emit, cols: str
+) -> DataFrame:
+    """``mapInPandas`` over ``(id_col, text_col)``: each batch's
+    :func:`_kgram_rows` go through ``emit(ids, n_docs, d, p, g)``, which
+    returns the batch's output frame (``doc`` plus ``cols``)."""
+    id_type = dict(docs.dtypes)[id_col]
+
+    def gen(batches):
+        for pdf in batches:
+            texts = pdf[text_col].values
+            yield emit(pdf[id_col].values, len(texts), *_kgram_rows(texts, k))
+
+    return docs.select(id_col, text_col).mapInPandas(gen, f"doc {id_type}, {cols}")
 
 
 def _positional_trigram_rows(
     docs: DataFrame, k: int, text_col: str, id_col: str
 ) -> DataFrame:
-    """Arrow engine for dup_span_ranges' positional-shingle explode:
-    emits the same (doc, p, g) rows as ``posexplode(
-    positional_shingle_hashes(token_hashes(text)))`` — exact integer
-    parity, ~5× the interpreted per-char HOF fold's throughput
-    (the fold runs max-token-length vectorized numpy passes over ALL
-    tokens of an Arrow batch at once instead of one interpreted lambda
-    step per character).
-
-    Token semantics mirrored exactly: ``split(trim(text), ' +')``
-    equals the maximal runs of non-space (0x20) characters for every
-    input (trim removes the leading empties, trailing empties can't
-    exist on trimmed text), except all-space/empty/NULL texts — which
-    yield <k tokens under both forms and so contribute no rows either
-    way. Characters are compared as CODEPOINTS (utf-32 decode), the
-    same value Spark's ``ascii()``/DuckDB's ``ascii()`` fold uses."""
+    """The (doc, p, g) positional-shingle rows of :func:`dup_span_ranges`
+    — the rows of ``posexplode(positional_shingle_hashes(
+    token_hashes(text)))``, exact integer parity (pinned against that
+    HOF form by test), without the per-character interpreted fold."""
     import numpy as np
     import pandas as pd
 
-    from .text import _shingle_combine, _token_hash_arrays
+    def emit(ids, _n, d, p, g):
+        return pd.DataFrame({"doc": ids[d], "p": p.astype(np.int32), "g": g})
 
-    id_type = dict(docs.dtypes)[id_col]
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf[id_col].values
-            texts = pdf[text_col].values
-            th, tok_doc, cnt, _toff = _token_hash_arrays(texts, MOD)
-            parts = []
-            if k == 1:
-                # empty / all-space text: the HOF tokenizer yields ONE
-                # empty token (hash 0) — a (p=0, g=0) row at k=1
-                e0 = np.array(
-                    [
-                        d
-                        for d in range(len(texts))
-                        if cnt[d] == 0 and isinstance(texts[d], str)
-                    ],
-                    dtype=np.int64,
-                )
-                if len(e0):
-                    parts.append(
-                        pd.DataFrame(
-                            {
-                                "doc": ids[e0],
-                                "p": np.zeros(len(e0), np.int32),
-                                "g": np.zeros(len(e0), np.int64),
-                            }
-                        )
-                    )
-            if th.shape[0]:
-                g, tpos, valid = _shingle_combine(th, tok_doc, cnt, k, MOD)
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "doc": ids[tok_doc[valid]],
-                            "p": tpos[valid].astype(np.int32),
-                            "g": g[valid],
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-            else:
-                yield pd.DataFrame(
-                    {
-                        "doc": ids[:0],
-                        "p": np.empty(0, np.int32),
-                        "g": np.empty(0, np.int64),
-                    }
-                )
-
-    return docs.select(id_col, text_col).mapInPandas(
-        gen, f"doc {id_type}, p int, g long"
-    )
+    return _map_kgram_rows(docs, k, text_col, id_col, emit, "p int, g long")
 
 
 def _distinct_shingle_rows(
     docs: DataFrame, k: int, text_col: str, id_col: str
 ) -> DataFrame:
-    """Arrow engine for the SET-shingle explode: emits the same
-    (doc, n_sh, g) rows as ``explode(shingle_hashes(text))`` with
-    ``n_sh = size(shingle_hashes(text))`` riding every row — the input
-    table of :func:`ngram_jaccard_pairs`. Exact integer parity with the
-    HOF form (row-multiset-identical, pinned by
-    ``test_distinct_shingle_rows_matches_hof``): same
-    ``_shingle_combine`` hashes as :func:`_positional_trigram_rows`,
-    per-doc distinct via one vectorized lexsort + neighbor mask instead
-    of ``array_distinct`` (order is irrelevant to an exploded multiset),
-    ``n_sh`` from a bincount of the deduped rows. Same ~5×
-    expression-throughput trade as the positional kernel; measured
-    inside ngram_jaccard (sf0.1, best-of-2 warm, 3 reps):
-    2.75/2.23/2.07 → 2.20/1.71/1.65 s (−20%, 3/3)."""
+    """The SET-shingle rows: the same (doc, n_sh, g) rows as
+    ``explode(shingle_hashes(text))`` with ``n_sh =
+    size(shingle_hashes(text))`` riding every row — the input table of
+    :func:`ngram_jaccard_pairs`. Row-multiset-identical to the HOF form
+    (pinned by ``test_distinct_shingle_rows_matches_hof``): per-doc
+    distinct via one vectorized lexsort + neighbour mask over
+    :func:`_kgram_rows` (order is irrelevant to an exploded multiset),
+    ``n_sh`` from a bincount of the deduped rows."""
     import numpy as np
     import pandas as pd
 
-    from .text import _shingle_combine, _token_hash_arrays
+    def emit(ids, n_docs, d, _p, g):
+        order = np.lexsort((g, d))
+        ds, gs = d[order], g[order]
+        keep = np.ones(len(ds), bool)
+        keep[1:] = (ds[1:] != ds[:-1]) | (gs[1:] != gs[:-1])
+        ds, gs = ds[keep], gs[keep]
+        n_per = np.bincount(ds, minlength=n_docs)
+        return pd.DataFrame(
+            {"doc": ids[ds], "n_sh": n_per[ds].astype(np.int32), "g": gs}
+        )
 
-    id_type = dict(docs.dtypes)[id_col]
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf[id_col].values
-            texts = pdf[text_col].values
-            th, tok_doc, cnt, _toff = _token_hash_arrays(texts, MOD)
-            parts = []
-            if k == 1:
-                # empty / all-space text: the HOF tokenizer yields ONE
-                # empty token (hash 0) — a distinct (n_sh=1, g=0) row
-                # at k=1 (mirrors _positional_trigram_rows)
-                e0 = np.array(
-                    [
-                        d
-                        for d in range(len(texts))
-                        if cnt[d] == 0 and isinstance(texts[d], str)
-                    ],
-                    dtype=np.int64,
-                )
-                if len(e0):
-                    parts.append(
-                        pd.DataFrame(
-                            {
-                                "doc": ids[e0],
-                                "n_sh": np.ones(len(e0), np.int32),
-                                "g": np.zeros(len(e0), np.int64),
-                            }
-                        )
-                    )
-            if th.shape[0]:
-                g, _tpos, valid = _shingle_combine(th, tok_doc, cnt, k, MOD)
-                d_idx = tok_doc[valid]
-                gv = g[valid]
-                order = np.lexsort((gv, d_idx))
-                ds, gs = d_idx[order], gv[order]
-                if len(ds):
-                    keep = np.ones(len(ds), bool)
-                    keep[1:] = (ds[1:] != ds[:-1]) | (gs[1:] != gs[:-1])
-                    ds, gs = ds[keep], gs[keep]
-                    n_per = np.bincount(ds, minlength=len(texts))
-                    parts.append(
-                        pd.DataFrame(
-                            {
-                                "doc": ids[ds],
-                                "n_sh": n_per[ds].astype(np.int32),
-                                "g": gs,
-                            }
-                        )
-                    )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-            else:
-                yield pd.DataFrame(
-                    {
-                        "doc": ids[:0],
-                        "n_sh": np.empty(0, np.int32),
-                        "g": np.empty(0, np.int64),
-                    }
-                )
-
-    return docs.select(id_col, text_col).mapInPandas(
-        gen, f"doc {id_type}, n_sh int, g long"
-    )
+    return _map_kgram_rows(docs, k, text_col, id_col, emit, "n_sh int, g long")
 
 
 def dup_span_ranges(
@@ -493,7 +395,6 @@ def dup_span_ranges(
     k: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Maximal cross-document duplicated token SPANS per document — the
     distributed output analog of suffix-array substring dedup (Lee et
@@ -512,15 +413,7 @@ def dup_span_ranges(
     fanned out pairwise), one per-doc window for the island merge —
     integers end-to-end, so the SQL oracle matches exactly.
     """
-    from .text import positional_shingle_hashes
-
-    if (_FORCE_SPANS_ENGINE or engine) == "arrow":
-        e = _positional_trigram_rows(docs, k, text_col, id_col)
-    else:
-        g = positional_shingle_hashes(token_hashes(text_col), k)
-        e = docs.select(
-            F.col(id_col).alias("doc"), F.posexplode(g).alias("p", "g")
-        )
+    e = _positional_trigram_rows(docs, k, text_col, id_col)
     w = Window.partitionBy("g")
     dup = (
         e.withColumn("_mn", F.min("doc").over(w))

@@ -10,7 +10,8 @@ with ``FootprintData.get_df`` (``bar/utils.py:129-209``).
 
 Price levels are integer ticks (float-error avoidance, reference
 ``base.py:688-708``): level = round(price / tick) computed as
-round(price · 1/tick) identically in both engines.
+round(price · 1/tick); at tick = 0.01 the multiplier is exactly 100.0,
+the one the DuckDB oracle uses.
 """
 
 from __future__ import annotations
@@ -42,14 +43,14 @@ def footprint_features(
     key: str = "bar_close_ns",
     tick: float = 0.01,
     bar_vwap: DataFrame | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Per-bar footprint features (``comp_footprint_features``
     ``base.py:755-850``):
 
     - diagonal imbalance flags: sell[l] > m·buy[l+1] (sell imbalance),
-      buy[l] > m·sell[l−1] (buy imbalance) — lag/lead over the level
-      window within the bar (``base.py:795-798``);
+      buy[l] > m·sell[l−1] (buy imbalance) — lead/lag over the bar's
+      ascending levels; the edge levels have no neighbour and count as
+      no imbalance (``base.py:795-798``);
     - buy/sell imbalance counts; SIGNED longest imbalance run — buy
       priority on dual-imbalance levels, first maximal run wins ties
       (gaps-and-islands over levels, ``base.py:800-822``);
@@ -60,134 +61,23 @@ def footprint_features(
       ``base.py:838-843``); we fix the semantics by skewing around the
       bar's TRADE vwap (pass ``bar_vwap``); vp_var is the matching
       2nd moment Σv·(p−bar_vwap)²/Σv — the SHIFTED one-pass form, a
-      sum of non-negative terms (no ``E[x²]−E[x]²`` cancellation: the
-      naive form amplifies a 1-ulp pow() difference by mean²/var,
-      which broke cross-engine parity at condition numbers ~1e12);
+      sum of non-negative terms (no ``E[x²]−E[x]²`` cancellation);
       NULL when no ``bar_vwap`` is supplied, like vp_skew; vp_gini =
       1−Σ(vol/Σvol)² (``base.py:845-848``).
 
-    Late-r13 determinism rework: every moment term is HALF_UP-quantized
-    to 1e6 integer units BEFORE summing (``floor(term·1e6 + 0.5)``, the
-    ``embedding_outliers`` discipline), so the sums are exact integers
-    in ANY fold order and the final ratios are one identical double
-    expression in both engines — the float form's last-ulp fold-order
-    drift (which could flip a value sitting exactly on a round(·,6)
-    boundary: the one documented sf0.1 miss) is gone by construction.
-    Exactness bound: |term|·1e6 < 2^63 per level (per-level vol ≤ ~3e6
-    and |p−vwap|²·vol ≤ ~9e12); the SQL engine folds decimal(38,0) and
-    the Arrow kernel int64 — identical through the shared regime.
+    Plan: ONE hash aggregation per bar —
+    ``sort_array(collect_list(struct(level, vols)))`` — feeding a
+    vectorized Arrow kernel, then one SQL projection for the ratios.
+    Per-bar array length is bounded by the price range per bar, so the
+    packed row stays small at any data scale.
 
-    Two engines, bit-identical outputs (pinned by test):
-
-    - ``engine="arrow"`` (default): ONE hash aggregation per bar —
-      ``sort_array(collect_list(struct(level, vols)))`` — feeding a
-      vectorized Arrow kernel that replays the window chain per bar
-      (lead/lag imbalance flags, gaps-and-islands signed run,
-      first-max argmax ≡ the SQL ``min_by(.., struct(-x, level))``
-      tie-break, exact quantized-int64 moment sums — associative, so
-      no fold-order replay is needed). Replaces the window
-      exchange+sort stage and its 2-3
-      downstream AQE jobs with a single agg + one Arrow projection
-      (round-8: exec 0.46 → ~0.2 s at sf0.1 on the cached-input A/B);
-      per-bar array length is bounded by the price range per bar, so
-      the packed row stays small at any data scale.
-    - ``engine="sql"``: one server-parsed SQL stage (round-7 — same
-      Catalyst expressions and output bits as the op-chained form).
-      All windows share one (bar, level) exchange+sort; the run length
-      is the running last-run-start arithmetic (no second partitioning
-      — see the im/ch/st CTE chain). Zero Python in the plan — for
-      SQL-only deployment surfaces.
-
-    The final vp_skew/vp_var/vp_gini ratios are computed by the SAME
-    Catalyst expressions in both engines (the kernel emits the
-    quantized integer moment sums), so engine choice never moves an
-    output bit.
+    Determinism: every moment term is HALF_UP-quantized to 1e6 integer
+    units BEFORE summing (``floor(term·1e6 + 0.5)``), so the int64 sums
+    are exact in any fold order and no output bit depends on partition
+    count or batch boundaries. Exactness bound: |term|·1e6 < 2^63 per
+    level (per-level vol ≤ ~3e6 and |p−vwap|²·vol ≤ ~9e12). Tie-breaks
+    are first-index argmax over ascending levels (lowest level wins).
     """
-    if engine == "arrow":
-        return _footprint_features_arrow(fp, imb_mult, key, tick, bar_vwap)
-    if engine != "sql":
-        raise ValueError(f"footprint_features: unknown engine {engine!r}")
-    m = f"CAST('{float(imb_mult)!r}' AS DOUBLE)"
-    tk = f"CAST('{float(tick)!r}' AS DOUBLE)"
-    if bar_vwap is not None:
-        bv_sql = f"SELECT s.*, b.bar_vwap FROM st s JOIN (SELECT {key}, bar_vwap FROM {{bar_vwap}}) b USING ({key})"
-        frames = {"fp": fp, "bar_vwap": bar_vwap}
-    else:
-        bv_sql = "SELECT s.*, CAST(NULL AS DOUBLE) AS bar_vwap FROM st s"
-        frames = {"fp": fp}
-    price = f"(level * {tk})"
-    sql = f"""
-WITH im AS (
-  SELECT *, buy_vol + sell_vol AS vol,
-         CAST(floor(buy_vol * 1000000.0d + 0.5d) AS BIGINT)
-           + CAST(floor(sell_vol * 1000000.0d + 0.5d) AS BIGINT) AS volq,
-         CAST(sell_vol > {m} * lead(buy_vol) OVER wl AS INT) AS sell_imb,
-         CAST(buy_vol > {m} * lag(sell_vol) OVER wl AS INT) AS buy_imb
-  FROM {{fp}}
-  WINDOW wl AS (PARTITION BY {key} ORDER BY level)
-),
-sg AS (
-  SELECT *, CASE WHEN buy_imb = 1 THEN 1
-                 WHEN sell_imb = 1 THEN -1
-                 ELSE 0 END AS imb_sgn
-  FROM im
-),
-ch AS (
-  SELECT *,
-         CASE WHEN imb_sgn != lag(imb_sgn, 1, 0) OVER wl THEN 1 ELSE 0 END AS chg,
-         row_number() OVER wl AS _rn
-  FROM sg
-  WINDOW wl AS (PARTITION BY {key} ORDER BY level)
-),
-st AS (
-  SELECT *,
-         CASE WHEN imb_sgn != 0
-              THEN _rn - last(CASE WHEN chg = 1 THEN _rn END, true)
-                     OVER (PARTITION BY {key} ORDER BY level
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + 1
-              ELSE 0 END AS run_len
-  FROM ch
-),
-bvj AS ({bv_sql}),
-a AS (
-  SELECT {key},
-         CAST(count(*) AS BIGINT) AS n_levels,
-         CAST(sum(coalesce(buy_imb, 0)) AS BIGINT) AS buy_imb_sum,
-         CAST(sum(coalesce(sell_imb, 0)) AS BIGINT) AS sell_imb_sum,
-         CAST(min_by(run_len * imb_sgn, struct(-run_len AS nr, level)) AS BIGINT) AS max_imb_run,
-         min_by(level, struct(-vol AS nv, level)) AS cot_level,
-         sum(CAST(floor((CAST(volq AS DOUBLE) / 1000000.0d) * (CAST(volq AS DOUBLE) / 1000000.0d) * 1000000.0d + 0.5d) AS DECIMAL(38,0))) AS _v2q,
-         sum(CAST(volq AS DECIMAL(38,0))) AS _v1q,
-         sum(CAST(floor(({price} - bar_vwap) * ({price} - bar_vwap) * (CAST(volq AS DOUBLE) / 1000000.0d) * 1000000.0d + 0.5d) AS DECIMAL(38,0))) AS _var_q,
-         sum(CAST(floor(({price} - bar_vwap) * (CAST(volq AS DOUBLE) / 1000000.0d) * 1000000.0d + 0.5d) AS DECIMAL(38,0))) AS _skew_q
-  FROM bvj GROUP BY {key}
-)
-SELECT {key}, n_levels, buy_imb_sum, sell_imb_sum, max_imb_run, cot_level,
-       CAST(_skew_q AS DOUBLE) / nullif(CAST(_v1q AS DOUBLE), 0.0d) AS vp_skew,
-       CAST(_var_q AS DOUBLE) / nullif(CAST(_v1q AS DOUBLE), 0.0d) AS vp_var,
-       CAST('1.0' AS DOUBLE) - CAST(_v2q AS DOUBLE) * 1000000.0d
-         / nullif(CAST(_v1q AS DOUBLE) * CAST(_v1q AS DOUBLE), 0.0d) AS vp_gini
-FROM a
-"""
-    return sql_stage(sql, **frames)
-
-
-def _footprint_features_arrow(
-    fp: DataFrame,
-    imb_mult: float,
-    key: str,
-    tick: float,
-    bar_vwap: DataFrame | None,
-) -> DataFrame:
-    """Arrow engine behind :func:`footprint_features` — see its
-    docstring for the parity contract. The kernel mirrors the SQL
-    window chain row-for-row: NULL lead/lag flags count as 0 everywhere
-    they are consumed (``coalesce`` in the sums, ``= 1`` in the sign),
-    ``np.argmax`` returns the FIRST maximum over level-ascending rows ≡
-    ``min_by(.., struct(-x, level))``, and every moment is a sequential
-    left-to-right fold over level order (``np.cumsum``) — the exact
-    accumulation the SQL hash agg performs on the window stage's sorted
-    output."""
     import numpy as np
     import pandas as pd
 
@@ -216,8 +106,7 @@ def _footprint_features_arrow(
                 }
             )
         # flatten the batch: one set of vectorized segment ops instead of
-        # a per-bar Python loop (round-8 A/B: the loop form cost ~0.4 s
-        # of pure numpy-call overhead per batch at sf0.1)
+        # a per-bar Python loop
         lens = np.fromiter(map(len, levels.values), dtype=np.int64, count=nseg)
         starts = np.zeros(nseg, dtype=np.int64)
         np.cumsum(lens[:-1], out=starts[1:])
@@ -229,9 +118,8 @@ def _footprint_features_arrow(
         idx = np.arange(n)
         first = idx == starts[seg]
         last = idx == (starts[seg] + lens[seg] - 1)
-        # SQL: sell_vol > m*lead(buy_vol); buy_vol > m*lag(sell_vol)
-        # within the bar (NULL at the edges -> contributes 0, the sign
-        # case falls through)
+        # sell_vol > m*lead(buy_vol); buy_vol > m*lag(sell_vol) within
+        # the bar (no neighbour at the edges -> no imbalance)
         sell = np.zeros(n, dtype=bool)
         buy = np.zeros(n, dtype=bool)
         if n > 1:
@@ -250,7 +138,7 @@ def _footprint_features_arrow(
         gstart = np.maximum.accumulate(np.where(newgrp, idx, -1))
         run = np.where(sgn != 0, idx - np.where(gstart < 0, 0, gstart) + 1, 0)
         big = np.iinfo(np.int64).max
-        # first index of the per-bar max == min_by(.., struct(-x, level))
+        # first index of the per-bar max: the lowest level wins ties
         runmax = np.maximum.reduceat(run, starts)
         j = np.minimum.reduceat(np.where(run == runmax[seg], idx, big), starts)
         vol = b + s
@@ -258,27 +146,18 @@ def _footprint_features_arrow(
         c = np.minimum.reduceat(np.where(vol == volmax[seg], idx, big), starts)
         price = lv * tk
         vw = np.asarray(vwaps.values, dtype=np.float64)
-        # moment sums as HALF_UP-1e6-quantized EXACT int64 folds
-        # (late-r13: the float form needed a -0.0-padded sequential
-        # cumsum to bit-match the SQL hash agg's fold ORDER, and even
-        # then a cross-engine last-ulp could flip a value sitting on a
-        # round(·,6) boundary — footprint_features' one documented
-        # sf0.1 miss. Integer sums are associative: np.add.reduceat is
-        # exact in any order and both engines floor the SAME doubles,
-        # so the final ratios are identical by construction at every
-        # scale. Exactness bound: |term|·1e6 < 2^63, i.e. per-level
-        # vol ≤ ~3e6 — document-scale safe; the SQL engine folds
-        # decimal(38,0) and agrees through the shared < 2^63 regime.)
-        # d computed ONCE then squared term-wise — same value and op
-        # order as the SQL `(p - bar_vwap) * (p - bar_vwap) * vol`
+        # moment sums as HALF_UP-1e6-quantized EXACT int64 folds:
+        # integer sums are associative, so np.add.reduceat is exact in
+        # any order (bound: |term|·1e6 < 2^63 per level). d is computed
+        # ONCE then squared term-wise: (p - bar_vwap) * (p - bar_vwap) * vol
         d = price - vw[seg]
         nanv = np.isnan(d)
         d0 = np.where(nanv, 0.0, d)
-        # per-level volumes quantized FIRST (buy/sell separately — the
-        # same ints the SQL engine's volq computes), then ONE identical
-        # vold double feeds every moment term: the raw buy_vol/sell_vol
-        # floats are cross-engine sums whose last ulp differs, and a
-        # term's floor would flip on that ulp near a boundary
+        # per-level volumes quantized FIRST (buy/sell separately), then
+        # ONE vold double feeds every moment term: the raw
+        # buy_vol/sell_vol floats are upstream sums whose last ulp may
+        # differ by fold order, and a term's floor would flip on that
+        # ulp near a boundary
         vq = np.floor(b * 1e6 + 0.5).astype(np.int64) + np.floor(
             s * 1e6 + 0.5
         ).astype(np.int64)
@@ -297,8 +176,8 @@ def _footprint_features_arrow(
                 "_v2q": np.add.reduceat(v2q, starts),
             }
         )
-        # NULL bar_vwap must surface as NULL (not a garbage fold) like
-        # the SQL sums — nullable Int64 so Arrow emits bigint NULLs
+        # NULL bar_vwap must surface as NULL (not a garbage fold) —
+        # nullable Int64 so Arrow emits bigint NULLs
         out["_var_q"] = (
             pd.Series(np.add.reduceat(varq, starts))
             .mask(np.isnan(vw))
@@ -327,8 +206,7 @@ def _footprint_features_arrow(
             F.col("_lv.level"), F.col("_lv.buy_vol"), F.col("_lv.sell_vol"), vw_col
         ).alias("_f"),
     )
-    # the SAME final Catalyst expressions as the SQL engine (pow/div on
-    # bit-identical sums) — keeps the two engines byte-equal end-to-end
+    # the ratios are one double expression over the exact integer sums
     tail = f"""
 SELECT {key}, _f.n_levels AS n_levels, _f.buy_imb_sum AS buy_imb_sum,
        _f.sell_imb_sum AS sell_imb_sum, _f.max_imb_run AS max_imb_run,

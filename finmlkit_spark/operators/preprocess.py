@@ -140,13 +140,6 @@ DAY_NS = 86_400_000_000_000
 #: switch is purely a cost decision)
 SIDE_SMALL_ROWS = 1_000_000
 
-#: test hook: force a side-path mode regardless of the caller's choice
-#: (the plan-regression suite pins "chunked" to assert the at-scale
-#: plan has zero SinglePartition even though the bench-scale inputs
-#: auto-select the global window)
-_FORCE_SIDE_MODE: str | None = None
-
-
 def with_trade_side_chunked(
     df: DataFrame,
     chunk_ns: int = DAY_NS,
@@ -177,7 +170,8 @@ def with_trade_side_chunked(
     ``"global"`` (one ordered window — faster below ``small_rows``
     because the chunk-carry machinery's fixed cost disappears), or
     ``"auto"`` (a column-pruned count picks the side of the measured
-    crossover). Both paths are bit-identical.
+    crossover). Both paths are bit-identical. ``cache._FORCE_DISTRIBUTED``
+    forces ``"chunked"``.
     """
     d, _ = chunked_side_frame(df, chunk_ns=chunk_ns, mode=mode, small_rows=small_rows)
     return d.drop(*SIDE_HELPERS)
@@ -211,8 +205,8 @@ def chunked_side_frame(
     earlier chunk), so stacked-lag consumers work unchanged and remain
     bit-identical across modes.
     """
-    if _FORCE_SIDE_MODE is not None:
-        mode = _FORCE_SIDE_MODE
+    if cache._FORCE_DISTRIBUTED:
+        mode = "chunked"
     if mode == "auto":
         # column-pruned count: one cheap scan decides the crossover;
         # callers that know their scale pass mode explicitly and skip

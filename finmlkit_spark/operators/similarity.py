@@ -22,10 +22,9 @@ N_PLANES = 16
 _INT64_BOUND = 9.223372036854775808e18  # 2^63 — the smallest double ≥ int64 max
 
 # Driver-carried k-means engages a two-level (executor pre-reduce)
-# partial fold above this many input partitions; None = auto. Tests pin
-# both paths bit-identical by forcing True/False.
+# partial fold above this many input partitions (always under
+# ``cache._FORCE_DISTRIBUTED``; tests pin both folds bit-identical).
 _KMEANS_TREE_MIN_PARTS = 64
-_FORCE_KMEANS_TREE: bool | None = None
 
 
 def _saturating_int64(Qf):
@@ -192,95 +191,49 @@ def lsh_bucket(emb: Column, n_planes: int = N_PLANES) -> Column:
     )
 
 
-def _rp_weight(j, i, dim: int) -> Column:
-    """Deterministic integer projection weight in [-32768, 32768): the
-    same LCG family as ``_plane_weight``, kept INTEGER so the projection
-    sum is exact int64 arithmetic (order-independent, hence
-    bit-reproducible in plain SQL)."""
-    idx = (j * dim + i + 1).cast("long")
-    return (F.lit(1103515245).cast("long") * idx + 12345) % F.lit(65536) - F.lit(32768)
-
-
 def random_projection(
     emb_df: DataFrame,
     out_dim: int = 16,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     dim: int = DIM,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Johnson-Lindenstrauss random projection to ``out_dim`` dims — the
     dimensionality-reduction stage in front of ANN/clustering at scale
     (project 100 TB of wide embeddings once, run candidate generation in
     the narrow space, verify exact in the original space).
 
-    Exactness posture: components quantize to 1e-6 units (BIGINT), the
-    per-output-dim weighted sum runs entirely in int64 (|q|·|w|·dim ≤
-    ~4e12 ≪ 2^63 — no overflow, no float fold-order), and ONE terminal
-    division rescales to double — so Spark and any SQL engine produce
-    bit-identical projections regardless of summation order. Weights
-    come from a seeded integer LCG over the flat (out_dim × dim) index,
-    reproducible in plain SQL (``random_projection`` oracle).
-
-    ``engine="arrow"`` (default) runs the projection as an int64 numpy
-    matmul in an Arrow-batched kernel — EXACT integer arithmetic is
-    order-independent, so the result is bit-identical to the SQL fold
-    at ~100× the per-core speed (the interpreted HOF costs ~100 ns per
-    lambda step; out_dim·dim·3 ≈ 3k steps/row — round-7 A/B: 0.91 →
-    0.05 s of exec at sf0.1). ``engine="sql"`` keeps the pure
-    JVM higher-order-function expression (zero Python dependencies in
-    the plan — e.g. for SQL-only deployment surfaces).
+    Exactness posture: components quantize to 1e-6 units (BIGINT,
+    ``floor(x·1e6 + 0.5)``), the per-output-dim weighted sum runs
+    entirely in int64 (|q|·|w|·dim ≤ ~4e12 ≪ 2^63 — no overflow, no
+    float fold-order), and ONE terminal division rescales to double —
+    so the projection is bit-reproducible regardless of summation order.
+    Weights are INTEGERS in [-32768, 32768) from a seeded LCG over the
+    flat (out_dim × dim) index, ``(1103515245·idx + 12345) mod 65536 −
+    32768`` with idx = j·dim + i + 1, reproducible in plain SQL (the
+    ``random_projection`` oracle). The projection is an int64 numpy
+    matmul in an Arrow-batched kernel.
     """
-    if engine == "arrow":
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        idx = np.arange(1, out_dim * dim + 1, dtype=np.int64).reshape(out_dim, dim)
-        W = (1103515245 * idx + 12345) % 65536 - 32768  # == _rp_weight
+    idx = np.arange(1, out_dim * dim + 1, dtype=np.int64).reshape(out_dim, dim)
+    W = (1103515245 * idx + 12345) % 65536 - 32768
 
-        @F.pandas_udf("array<double>")
-        def _proj(v):
-            if len(v) == 0:
-                return pd.Series([], dtype=object)
-            A = np.stack(v.values).astype(np.float64)
-            # CAST(floor(x·1e6 + 0.5) AS BIGINT) parity: NaN -> 0,
-            # ±Inf and |x| ≥ 2^63 saturate (shared shim — same posture
-            # as the k-means driver mode)
-            Q = _saturating_int64(np.floor(A * 1e6 + 0.5))
-            S = Q @ W.T  # exact int64 — order-independent
-            out = S.astype(np.float64) / (1e6 * 32768.0)
-            return pd.Series(list(out))
+    @F.pandas_udf("array<double>")
+    def _proj(v):
+        if len(v) == 0:
+            return pd.Series([], dtype=object)
+        A = np.stack(v.values).astype(np.float64)
+        # CAST(floor(x·1e6 + 0.5) AS BIGINT) parity: NaN -> 0, ±Inf and
+        # |x| ≥ 2^63 saturate (shared shim — same posture as the
+        # k-means driver mode)
+        Q = _saturating_int64(np.floor(A * 1e6 + 0.5))
+        S = Q @ W.T  # exact int64 — order-independent
+        out = S.astype(np.float64) / (1e6 * 32768.0)
+        return pd.Series(list(out))
 
-        return emb_df.select(
-            F.col(id_col), _proj(as_double(emb_col)).alias("projection")
-        )
-    if engine != "sql":
-        raise ValueError(f"random_projection: unknown engine {engine!r}")
-    v = as_double(emb_col)
-    q = F.transform(v, lambda x: F.floor(x * 1e6 + 0.5).cast("long"))
-
-    def project(qb: Column) -> Column:
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(out_dim - 1)),
-            lambda j: F.aggregate(
-                F.zip_with(
-                    qb,
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(dim - 1)),
-                        lambda i: _rp_weight(j, i, dim),
-                    ),
-                    lambda x, w: x * w,
-                ),
-                F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            ).cast("double")
-            / F.lit(1e6 * 32768.0),
-        )
-
-    # let-bind the quantized array: it is referenced by all out_dim
-    # lambda bodies and Catalyst re-inlines per reference (lesson 1)
-    proj = F.get(F.transform(F.array(q), project), 0)
-    return emb_df.select(F.col(id_col), proj.alias("projection"))
+    return emb_df.select(F.col(id_col), _proj(as_double(emb_col)).alias("projection"))
 
 
 def ann_brute_topk(
@@ -775,11 +728,7 @@ def _kmeans_train_driver(
     if iters <= 0:
         return cents
     part_schema = "cid bigint, n0 bigint, s array<bigint>"
-    tree = (
-        _FORCE_KMEANS_TREE
-        if _FORCE_KMEANS_TREE is not None
-        else nparts > _KMEANS_TREE_MIN_PARTS
-    )
+    tree = cache._FORCE_DISTRIBUTED or nparts > _KMEANS_TREE_MIN_PARTS
     for _ in range(iters):
         if not cents:
             break

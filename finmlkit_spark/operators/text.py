@@ -213,7 +213,12 @@ def positional_shingle_hashes(th: Column, k: int = 3, mod: int = MOD) -> Column:
     :func:`shingle_hashes_from_tokens` (same fold, NO distinct), for
     span-level dedup where the location of a duplicated k-gram matters,
     not just its membership. Same let-binding discipline (the input
-    fans into k+2 sub-expressions)."""
+    fans into k+2 sub-expressions).
+
+    No library operator plans this expression: ``dup_span_ranges``
+    emits the same rows from the Arrow kernel
+    ``dedup._positional_trigram_rows``. It stays as the pure-JVM
+    reference the tests pin that kernel's hash bits against."""
 
     def _body(thv: Column) -> Column:
         n = F.size(thv)
@@ -231,8 +236,8 @@ def positional_shingle_hashes(th: Column, k: int = 3, mod: int = MOD) -> Column:
 def _token_hash_arrays(texts, mod: int = MOD):
     """Batch-vectorized token poly-hashes for an Arrow batch of texts —
     the shared engine behind the Arrow shingle kernels (exact integer
-    parity with the ``token_hashes`` HOF; see
-    ``dedup._positional_trigram_rows`` for the token-semantics proof:
+    parity with the ``token_hashes`` HOF; see ``dedup._kgram_rows`` for
+    the token-semantics proof:
     ``split(trim(text), ' +')`` == maximal runs of non-space chars for
     every input whose tokens can form a shingle).
 
@@ -328,44 +333,6 @@ def _shingle_combine(th, tok_doc, cnt, k: int, mod: int = MOD):
         nxt = np.concatenate((th[j:], np.zeros(min(j, n_tok), dtype=np.int64)))
         g = (g * 31 + nxt) % mod
     return g, tpos, valid
-
-
-def shingle_hashes_arrow(col: str = "text", k: int = 3, mod: int = MOD) -> Column:
-    """Arrow engine for ``dedup.shingle_hashes`` — element-identical
-    arrays to ``shingle_hashes_from_tokens(token_hashes(col), k)``
-    including the ``array_distinct`` FIRST-OCCURRENCE order (np.unique
-    indices re-sorted by position), so every downstream consumer
-    (minhash min-fold, Jaccard set ops, simhash bit sums) sees the
-    same bytes. ~5× the interpreted per-char HOF fold (measured on the
-    positional sibling). NULL/empty/sub-k-token texts yield the same
-    empty array the HOF's size guard emits."""
-    import numpy as np
-    import pandas as pd
-
-    # annotation-free def: pandas_udf resolves type hints from function
-    # globals, and pandas is imported locally here (verify-skill gotcha)
-    @F.pandas_udf("array<long>")
-    def _sh(texts):
-        th, tok_doc, cnt, toff = _token_hash_arrays(texts.values, mod)
-        g, _tpos, valid = _shingle_combine(th, tok_doc, cnt, k, mod)
-        out = []
-        for d in range(len(texts)):
-            m = max(int(cnt[d]) - (k - 1), 0)
-            if cnt[d] == 0 and k == 1 and isinstance(texts.values[d], str):
-                # empty / all-space text: the HOF tokenizer yields ONE
-                # empty token (split(trim('')) == ['']) whose poly hash
-                # is 0 — visible only at k=1 (k≥2 can't form a shingle
-                # from one token either way)
-                out.append(np.zeros(1, dtype=np.int64))
-                continue
-            arr = g[toff[d] : toff[d] + m]
-            if m > 1:
-                _, idx = np.unique(arr, return_index=True)
-                arr = arr[np.sort(idx)]
-            out.append(arr)
-        return pd.Series(out)
-
-    return _sh(F.col(col))
 
 
 def shingles(col: str = "text", k: int = 3) -> Column:

@@ -13,112 +13,13 @@ from . import multiuser_suite  # noqa: F401
 from . import analytics_suite  # noqa: F401
 from . import developing_suite  # noqa: F401
 
-# --- registration order = driver check order -------------------------------
-# The external driver verifies the FIRST 50 registered queries per round.
-#
-# ROUND-13 WINDOW:
-# 1-3:   NEW in round 13 — store_upsert (the incremental-ingest
-#        round-trip: materialize + batch-wins upsert + store read-back
-#        gated against the one-shot aggregate), tfidf_index_topk (the
-#        materialized retrieval index served back and gated against
-#        the inline corpus build), and kmv_fast_user_count (the
-#        production sketch path oracle-gated through KMV's
-#        hash-independent below-k exactness regime); the last r8-head
-#        fill (volume_bars_approx) moves to the r14 window.
-# 4-20:  every query whose implementation CHANGED in round 13 —
-#        hybrid_search (xxhash64 token keys + broadcast norm joins,
-#        then the df-count-window weight build), kmv_overlap (pair
-#        algebra collapsed to packed sketch arrays — late r13),
-#        tfidf_cosine_pairs (df via count window — late r13),
-#        footprint_features (late r13: quantized-int moment folds +
-#        the oracle's DECIMAL-literal price fixed — now raw-BIT-exact
-#        at sf0.1, the old round-boundary hazard closed),
-#        ann_topk + lsh_recall_audit (ann_brute_topk's one-pass Arrow
-#        scorer), bigram_logprob + perplexity_buckets (single-pass
-#        null-sentinel tokenize + xxhash64 keys), embedding_outliers
-#        (decimal fold cast before sum — the r12 advisory),
-#        diverse_sample (order-generic id tie-breaks — advisory),
-#        quantile_sketch_audit (fixed-range mode added to the sketch),
-#        and the five image/video queries riding the JPEG decoder whose
-#        progressive DC scans now raster the true block grid (advisory)
-#        and whose feature extractors gained on_error='null';
-# 21-48: the 29 remaining r7 rows (5 rounds stale — the user_* family,
-#        tbm pair, sampling/corpus singles, hurst/approx-entropy,
-#        featurekit_build, minhash/simhash, time_bars_filled,
-#        seq_cusum_bars, dedup_clusters_star, store_meta_sidecar);
-# 49-50: the head of the 37-row r8 cohort (trades_side, tick_bars) —
-#        the rest of r8 (volume_bars_approx, bar_directional_1m,
-#        feat_return_log, feat_roc first) leads the round-14 fill.
-#
-# ROUND-12 WINDOW:
-# 1-8:   NEW in round 12 — hll_user_count / kmv_user_count /
-#        kmv_overlap / cm_token_freq / quantile_sketch_audit (the
-#        deterministic cross-engine sketch tier), perplexity_buckets
-#        (CCNet-style LM quality deciles), embedding_outliers
-#        (diagonal-Mahalanobis QC), and hybrid_search (TF·IDF +
-#        embedding RRF fusion);
-# 9-20:  every query whose implementation (or oracle) CHANGED in round
-#        12 — embedding_covariance (the r11 red row: -0.0 canonicalized
-#        on both engine sides), diverse_sample (Arrow argmax passes +
-#        one-batch crossover + id-dtype), tfidf_cosine_pairs
-#        (decimal/HUGEINT dot+norm folds), revenue_rollup (GROUPING
-#        flags), pmi_top_pairs + session_path_topk (TakeOrdered top-k),
-#        bm25_topk (let-bind-once tokenizer), and the five image/video
-#        queries riding the JPEG decoder that gained progressive + DRI
-#        support;
-# 21-49: the 29-row r6 tail (newest green row 5 rounds stale — the
-#        seq_cusum_* family, vp_* family, asof_*, store/io singles,
-#        corpus singles, imbalance/run bars, sql_shared_dialect);
-# 50:    the r7 head (dollar_bars). The remaining 30 r7 rows
-#        (seq_atr_ema, tbm_labels, tbm_meta, lang_id, doc_fingerprint,
-#        minhash_lsh, simhash_near_pairs, ann_topk first) lead the
-#        round-13 fill, then the r8 cohort as it ages.
-#
-# ROUND-11 WINDOW (rotated as the round's FIRST commit, per the r10 verdict):
-# 1:    ann_ivf_pq — NEW in round 10, the only registry entry with no driver
-#       row ever (the r10 window was not rotated before the round closed);
-# 2-9:  NEW in round 11 — video_mjpeg_stats (Motion-JPEG AVI container +
-#       native per-frame JPEG decode), gopher_repetition (Rae et al.
-#       Table A1 repetition rules), weighted_sample (exact integer
-#       weighted draws), embedding_covariance (exact d×d Gram
-#       partials), bpe_train (Sennrich et al. BPE merge-table
-#       training), bpe_segment (train + apply end-to-end),
-#       bigram_logprob (add-one bigram LM word-order score), and
-#       token_length_stats (exact per-lang length percentiles);
-# 10:   segment_dedup — implementation changed in round 10 (below-crossover
-#       onepart fusion), newest driver row r8;
-# 11:   video_frame_stats — implementation changed in round 11 (container
-#       sniff dispatches Y4M vs MJPEG-AVI);
-# 12-14: image_phash_pairs (newest row r5 — 5 rounds stale) plus
-#       image_decode_stats / image_resize_stats, whose shared native JPEG
-#       decoder gains 4:2:0 baseline color support in round 11;
-# 15-50: 36 of the 37-query r6 cohort (newest green row 4 rounds old,
-#       unchanged since; sql_shared_dialect displaced to the r12 fill):
-#       integrity/preprocess singles, the seq_* filter/reset/chunked
-#       tier, the vp_* family, dedup/corpus singles, store/io rows,
-#       asof joins, imbalance/run bars, zscore peak events;
-# (the eight displaced r7 rows — dollar_bars, seq_atr_ema, tbm_labels,
-#       tbm_meta, lang_id, doc_fingerprint, minhash_lsh,
-#       simhash_near_pairs — lead the round-12 fill, together with the
-#       twenty-eight r6 rows the late retrieval/analytics/SQ8 tiers displaced:
-#       regional_revenue, imbalance_bars, run_bars, zscore_peak_events,
-#       pricing_summary, asof_tolerance, asof_sigma,
-#       seq_cusum_bars_chunked, store_inspector, unigram_logprob,
-#       c4_filter, dedup_keep_best, mixture_sample, decontamination,
-#       sequence_packing, multimodal_meta, simhash_fp, exact_dedup,
-#       text_stats, vp_developing, vp_hva_lva, vp_poc, vp_profile,
-#       seq_cusum_test_chunked, seq_cusum_test, seq_volume_bars_exact,
-#       seq_cusum_filter_chunked, seq_cusum_filter.)
-# Still-green-and-unchanged queries sit behind position 50; their prior
-# evidence stands. After round 12 no registry row is older than r7, and
-# the remaining r7 cohort (corpus report/sampling tier, user_* multiuser
-# tier, featurekit_build, hurst/approx-entropy singles) leads round 13.
+# Registration order is the driver's check order: the external driver
+# verifies the first 50 registered queries, so _reorder() moves the
+# _PRIORITY names to the front and keeps every other query after them.
 _PRIORITY = [
-    # -- NEW in round 13 (no driver row yet) -----------------------------------
     "store_upsert",
     "tfidf_index_topk",
     "kmv_fast_user_count",
-    # -- changed in round 13 (re-verify first) ---------------------------------
     "hybrid_search",
     "kmv_overlap",
     "tfidf_cosine_pairs",
@@ -135,7 +36,6 @@ _PRIORITY = [
     "image_phash_pairs",
     "video_frame_stats",
     "video_mjpeg_stats",
-    # -- the r7 tail: newest driver row five rounds old ------------------------
     "seq_atr_ema",
     "tbm_labels",
     "tbm_meta",
@@ -165,7 +65,6 @@ _PRIORITY = [
     "decontamination_bloom",
     "dedup_clusters_star",
     "store_meta_sidecar",
-    # -- the r8 head (the rest of r8 leads the round-14 fill) ------------------
     "trades_side",
     "tick_bars",
     "volume_bars_approx",

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..functions import chunked_window as CW
 from ..functions import rolling as R
 from ._registry import query
@@ -33,12 +34,6 @@ FLAGSHIP_WARMUP = 24
 #: sub-threshold bar stream — callers may pass the (cheaply known)
 #: upstream row count as ``input_rows`` without executing the bar agg.
 FLAGSHIP_SMALL_ROWS = 1_000_000
-
-#: test hook: force a flagship window mode regardless of the caller's
-#: choice (test_plan_regression pins "chunked" to assert the at-scale
-#: plan has zero SinglePartition even though bench-scale inputs
-#: auto-select the global window)
-_FORCE_FLAGSHIP_MODE: str | None = None
 
 #: memoized flagship projection Columns (see _flagship_project)
 _FLAGSHIP_PROJECT_CACHE: tuple | None = None
@@ -168,9 +163,10 @@ def flagship_feature_stage(
     footer) is under ``FLAGSHIP_SMALL_ROWS``, else chunked. Results are
     row-identical across modes (bounded frames + warmup overlap =>
     identical frame contents per row — see chunked_window docs).
+    ``cache._FORCE_DISTRIBUTED`` forces ``"chunked"``.
     Reused by the registry query and the bench's synthetic scale probe."""
-    if _FORCE_FLAGSHIP_MODE is not None:
-        mode = _FORCE_FLAGSHIP_MODE
+    if cache._FORCE_DISTRIBUTED:
+        mode = "chunked"
     if mode == "auto":
         mode = (
             "global"
@@ -234,15 +230,15 @@ def pipeline_1m_features(spark, sf_dir):
     at-scale setting)."""
     n = _parquet_num_rows(f"{sf_dir}/events.parquet")
     # resolve the mode HERE too (same rule flagship_feature_stage
-    # applies, including the test force-hook) so the below-crossover
+    # applies, including cache._FORCE_DISTRIBUTED) so the below-crossover
     # form can also build its bars single-partition: the global window
     # serializes anyway, and moving the boundary below the agg fuses
     # agg+window+projection into one post-shuffle stage (bars_1m
     # ``onepart`` doc). The chunked/at-scale plan never takes this
     # branch — test_plan_regression's zero-SinglePartition pin holds.
-    mode = _FORCE_FLAGSHIP_MODE or (
+    mode = (
         "global"
-        if n is not None and n < FLAGSHIP_SMALL_ROWS
+        if n is not None and n < FLAGSHIP_SMALL_ROWS and not cache._FORCE_DISTRIBUTED
         else "chunked"
     )
     return flagship_feature_stage(

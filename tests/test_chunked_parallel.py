@@ -1,46 +1,7 @@
-"""The chunked-parallel EWMA must agree with the exact single-pass
-kernel to within the quantified warmup-truncation error — the scale-out
-answer for sequential recurrences on one huge symbol."""
+"""Chunked-parallel evaluation of a trade-scale rolling statistic must
+agree with the single-window expression form on every row."""
 
 from __future__ import annotations
-
-import numpy as np
-import pandas as pd
-
-from finmlkit_spark.functions import sequential as S
-
-SEC = 1_000_000_000
-
-
-def test_ewma_chunked_matches_exact(spark):
-    rng = np.random.default_rng(42)
-    n = 5000
-    ts = np.cumsum(rng.integers(1, 60, n)) * SEC  # irregular arrivals
-    x = 100 + np.cumsum(rng.standard_normal(n))
-    df = spark.createDataFrame(
-        pd.DataFrame({"ts_ns": ts.astype("int64"), "x": x})
-    )
-    # chunks of ~1000 rows worth of time
-    chunk_ns = int((ts[-1] - ts[0]) / 5)
-    out = (
-        S.ewma_chunked(df, "x", span=20, chunk_ns=chunk_ns, warmup_mult=10.0, out="e")
-        .orderBy("ts_ns")
-        .toPandas()
-    )
-    exact = S.ewma(x, 20)
-    assert len(out) == n
-    assert np.allclose(out["e"].to_numpy(), exact, rtol=1e-8, atol=1e-8)
-
-
-def test_ewma_chunked_parallelism(spark):
-    # the plan must contain one task group per chunk (no single-partition
-    # funnel): verify the group count equals the chunk count
-    n = 2000
-    ts = (np.arange(n) * SEC).astype("int64")
-    df = spark.createDataFrame(pd.DataFrame({"ts_ns": ts, "x": np.ones(n)}))
-    chunk_ns = 500 * SEC
-    out = S.ewma_chunked(df, "x", span=10, chunk_ns=chunk_ns, out="e")
-    assert out.count() == n  # warmup duplicates dropped exactly
 
 
 def test_rolling_median_chunked_matches_expression_form(spark):

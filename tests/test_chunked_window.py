@@ -76,19 +76,16 @@ def test_global_row_number_exact(spark):
     assert got == want
 
 
-def test_flagship_plan_has_no_single_partition(spark):
+def test_flagship_plan_has_no_single_partition(spark, monkeypatch):
     # the registry query auto-selects the (deliberately single-partition)
     # global window below the measured crossover; force the at-scale mode
     # to assert the plan a 100 TB stream would get
+    from finmlkit_spark import cache
     from finmlkit_spark.suite import QUERIES
-    from finmlkit_spark.suite import pipeline_suite as PS
 
-    PS._FORCE_FLAGSHIP_MODE = "chunked"
-    try:
-        df = QUERIES["pipeline_1m_features"](spark, SF_SMALL)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        PS._FORCE_FLAGSHIP_MODE = None
+    monkeypatch.setattr(cache, "_FORCE_DISTRIBUTED", True)
+    df = QUERIES["pipeline_1m_features"](spark, SF_SMALL)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
 
 
@@ -197,10 +194,11 @@ def test_flagship_modes_bit_identical(spark):
         assert g[k] == c[k], (k, g[k], c[k])
 
 
-def test_flagship_auto_crossover_picks_mode_by_input_rows(spark):
+def test_flagship_auto_crossover_picks_mode_by_input_rows(spark, monkeypatch):
     """mode='auto' plans the global window below FLAGSHIP_SMALL_ROWS and
     the chunked zero-SinglePartition plan at/above it (or when the bound
-    is unknown); the force hook overrides both ways."""
+    is unknown); the force hook overrides the caller's choice."""
+    from finmlkit_spark import cache
     from finmlkit_spark.suite import pipeline_suite as PS
     from finmlkit_spark.suite.features_suite import bars_1m
 
@@ -216,9 +214,8 @@ def test_flagship_auto_crossover_picks_mode_by_input_rows(spark):
     )
     # unknown bound -> conservative chunked plan
     assert "SinglePartition" not in plan(mode="auto", input_rows=None)
+    assert "SinglePartition" in plan(mode="global")
     # the test hook wins over the caller's choice
-    PS._FORCE_FLAGSHIP_MODE = "global"
-    try:
-        assert "SinglePartition" in plan(mode="chunked")
-    finally:
-        PS._FORCE_FLAGSHIP_MODE = None
+    monkeypatch.setattr(cache, "_FORCE_DISTRIBUTED", True)
+    assert "SinglePartition" not in plan(mode="global")
+    assert "SinglePartition" not in plan(mode="auto", input_rows=10)

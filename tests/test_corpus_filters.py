@@ -177,26 +177,26 @@ def test_kmeans_no_seed_vectors_returns_empty(spark):
         assert out == [], state
 
 
-def test_kmeans_tree_fold_bit_identical_to_flat(spark):
+def test_kmeans_tree_fold_bit_identical_to_flat(spark, monkeypatch):
     """The two-level (executor pre-reduce) partial fold must produce
     bit-identical centroids to the flat driver fold: int64 adds are
-    associative, so any re-grouping of the k·P partials is exact. Forced
-    on/off via the test hook regardless of input partition count."""
+    associative, so any re-grouping of the k·P partials is exact. At 8
+    partitions auto takes the flat fold; ``cache._FORCE_DISTRIBUTED``
+    forces the tree fold."""
+    from finmlkit_spark import cache
     from finmlkit_spark.operators import similarity as SIM
 
     embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").repartition(8)
+    assert embs.rdd.getNumPartitions() <= SIM._KMEANS_TREE_MIN_PARTS
     results = {}
-    for force in (False, True):
-        SIM._FORCE_KMEANS_TREE = force
-        try:
-            results[force] = {
-                r["vec_id"]: (r["cluster_id"], r["cos_sim"])
-                for r in SIM.kmeans_assign(
-                    embs, k=8, iters=2, dim=64, state="driver"
-                ).collect()
-            }
-        finally:
-            SIM._FORCE_KMEANS_TREE = None
+    for forced in (False, True):
+        monkeypatch.setattr(cache, "_FORCE_DISTRIBUTED", forced)
+        results[forced] = {
+            r["vec_id"]: (r["cluster_id"], r["cos_sim"])
+            for r in SIM.kmeans_assign(
+                embs, k=8, iters=2, dim=64, state="driver"
+            ).collect()
+        }
     assert results[False] == results[True]
     assert len(results[False]) == embs.count()
 

@@ -196,25 +196,6 @@ def test_cosine_batch_bit_identical_to_hof_fold(spark):
         assert r["hof"] == r["arrow"], (r["hof"], r["arrow"])
 
 
-def test_random_projection_engines_bit_identical(spark):
-    """The Arrow int64-matmul engine must equal the SQL HOF fold
-    BIT-FOR-BIT (exact integer arithmetic is order-independent — any
-    difference is a weight/quantization bug, not float noise)."""
-    from finmlkit_spark.operators.similarity import random_projection
-
-    embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = {
-        r["vec_id"]: list(r["projection"])
-        for r in random_projection(embs, out_dim=16, engine="arrow").collect()
-    }
-    s = {
-        r["vec_id"]: list(r["projection"])
-        for r in random_projection(embs, out_dim=16, engine="sql").collect()
-    }
-    assert a == s
-    assert len(a) == embs.count()
-
-
 def test_lsh_bucket_arrow_bit_identical_to_hof(spark):
     """lsh_bucket_arrow must produce the exact integer buckets of the
     JVM HOF form — same sequential projection fold, same weights, so

@@ -168,9 +168,7 @@ def test_footprint_arrow_kernel_matches_per_bar_reference(spark, bars):
     bv_tbl = spark.createDataFrame(
         [(k, 1.0) for k in expected], "bar_close_ns long, bar_vwap double"
     )
-    got = FP.footprint_features(
-        fp, imb_mult=3.0, tick=0.01, bar_vwap=bv_tbl, engine="arrow"
-    ).collect()
+    got = FP.footprint_features(fp, imb_mult=3.0, tick=0.01, bar_vwap=bv_tbl).collect()
     assert len(got) == len(expected)
     for r in got:
         k = r["bar_close_ns"]

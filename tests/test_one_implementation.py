@@ -1,0 +1,55 @@
+"""Guard: one implementation per operator, one crossover test hook.
+
+No module may grow a per-module force hook (``cache._FORCE_DISTRIBUTED``
+is the one hook: it sends every crossover to its scale side), and no
+public function may let its caller pick an engine — a second engine is
+a second implementation to keep bit-identical with the first.
+"""
+
+from __future__ import annotations
+
+import importlib
+import inspect
+import pkgutil
+
+import finmlkit_spark
+
+ALLOWED_FORCE = {("finmlkit_spark.cache", "_FORCE_DISTRIBUTED")}
+
+
+def _modules():
+    yield finmlkit_spark
+    for info in pkgutil.walk_packages(finmlkit_spark.__path__, "finmlkit_spark."):
+        yield importlib.import_module(info.name)
+
+
+def _public_functions(mod):
+    for name, obj in vars(mod).items():
+        if name.startswith("_") or getattr(obj, "__module__", None) != mod.__name__:
+            continue
+        if inspect.isfunction(obj):
+            yield name, obj
+        elif inspect.isclass(obj):
+            for mname, meth in vars(obj).items():
+                if not mname.startswith("_") and inspect.isfunction(meth):
+                    yield f"{name}.{mname}", meth
+
+
+def test_single_force_hook():
+    hooks = {
+        (mod.__name__, attr)
+        for mod in _modules()
+        for attr in vars(mod)
+        if attr.startswith("_FORCE_")
+    }
+    assert hooks == ALLOWED_FORCE
+
+
+def test_no_engine_parameter():
+    offenders = [
+        f"{mod.__name__}.{name}"
+        for mod in _modules()
+        for name, fn in _public_functions(mod)
+        if "engine" in inspect.signature(fn).parameters
+    ]
+    assert offenders == []

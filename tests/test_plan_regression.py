@@ -59,8 +59,8 @@ GUARDED = [
     "bar_directional_1m",
     "footprint_long",
     "footprint_features",
-    # §corpus at-scale digest-parallel plan (onepart fusion force-disabled
-    # below — the bench-scale fused form is single-partition BY DESIGN and
+    # §corpus at-scale digest-parallel plan (onepart fusion forced off
+    # above — the bench-scale fused form is single-partition BY DESIGN and
     # is pinned separately by test_segment_dedup_modes_bit_identical)
     "segment_dedup",
     # retrieval tier: the postings cap must ride WindowGroupLimit, never
@@ -85,25 +85,17 @@ GUARDED = [
 
 
 @pytest.mark.parametrize("name", GUARDED)
-def test_no_single_partition_exchange(spark, name):
-    # pin the at-scale side path: the tick-rule side auto-selects the
-    # (deliberately single-partition) global window below its measured
-    # crossover, so this guard forces the large-input mode to assert
-    # the plan a 100 TB stream would get
-    from finmlkit_spark.operators import corpus as CP
-    from finmlkit_spark.operators import preprocess as P
-    from finmlkit_spark.suite import pipeline_suite as PS
+def test_no_single_partition_exchange(spark, name, monkeypatch):
+    # pin the at-scale plans: below their measured crossovers the side
+    # window, the flagship window and segment_dedup auto-select
+    # (deliberately single-partition) forms, so this guard forces every
+    # crossover to its scale side to assert the plan a 100 TB input
+    # would get
+    from finmlkit_spark import cache
 
-    P._FORCE_SIDE_MODE = "chunked"
-    PS._FORCE_FLAGSHIP_MODE = "chunked"
-    CP._FORCE_SEGDEDUP_ONEPART = False
-    try:
-        df = QUERIES[name](spark, SF)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        P._FORCE_SIDE_MODE = None
-        PS._FORCE_FLAGSHIP_MODE = None
-        CP._FORCE_SEGDEDUP_ONEPART = None
+    monkeypatch.setattr(cache, "_FORCE_DISTRIBUTED", True)
+    df = QUERIES[name](spark, SF)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange SinglePartition" not in plan, (
         f"{name}: plan regressed to a single-partition exchange:\n{plan}"
     )
@@ -123,28 +115,26 @@ def test_triple_barrier_is_pure_join_aggregate(spark):
     )
 
 
-def test_segment_dedup_modes_bit_identical(spark):
-    """The round-10 below-crossover ``onepart`` fusion must be a pure
-    physical-plan change: forcing each mode via the test hook on the
-    same input must yield byte-identical rows (row_number ranks by
-    (doc, seg_no) inside each digest group regardless of partitioning,
-    and the reassembly agg sorts the collected structs). Also pins that
-    the fused mode actually takes the single-partition fused shape —
-    the whole point of the crossover."""
-    from finmlkit_spark.operators import corpus as CP
+def test_segment_dedup_modes_bit_identical(spark, monkeypatch):
+    """The below-crossover ``onepart`` fusion must be a pure
+    physical-plan change: the auto mode (fused at this corpus size) and
+    the forced scale side must yield byte-identical rows on the same
+    input (row_number ranks by (doc, seg_no) inside each digest group
+    regardless of partitioning, and the reassembly agg sorts the
+    collected structs). Also pins that the fused mode actually takes
+    the single-partition fused shape — the whole point of the
+    crossover."""
+    from finmlkit_spark import cache
 
     results, plans = {}, {}
-    for mode in (False, True):
-        CP._FORCE_SEGDEDUP_ONEPART = mode
-        try:
-            df = QUERIES["segment_dedup"](spark, SF)
-            plans[mode] = df._jdf.queryExecution().executedPlan().toString()
-            results[mode] = sorted(map(tuple, df.collect()))
-        finally:
-            CP._FORCE_SEGDEDUP_ONEPART = None
-    assert results[False] == results[True]
-    assert "Exchange SinglePartition" not in plans[False]
-    assert "Exchange SinglePartition" in plans[True]
+    for forced in (True, False):
+        monkeypatch.setattr(cache, "_FORCE_DISTRIBUTED", forced)
+        df = QUERIES["segment_dedup"](spark, SF)
+        plans[forced] = df._jdf.queryExecution().executedPlan().toString()
+        results[forced] = sorted(map(tuple, df.collect()))
+    assert results[True] == results[False]
+    assert "Exchange SinglePartition" not in plans[True]
+    assert "Exchange SinglePartition" in plans[False]
 
 
 def test_pmi_topk_is_take_ordered(spark):

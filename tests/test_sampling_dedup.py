@@ -533,15 +533,24 @@ def test_cc_driver_union_find_property(spark):
     prop()
 
 
-def test_dup_span_arrow_and_hof_engines_identical(spark):
-    """The Arrow positional-trigram stage must emit EXACTLY the rows of
-    the HOF posexplode form — token semantics (trim + split ' +'),
-    codepoint hashing, positions, and the k-gram combine are all exact
-    integer math, so the engines are compared as sets of full rows on
-    adversarial inputs (empty/space-only/NULL text, runs of spaces,
-    tabs inside tokens, unicode codepoints, <k tokens) plus the real
-    documents table."""
+def test_positional_trigram_rows_match_hof(spark):
+    """The Arrow positional-shingle kernel behind dup_span_ranges must
+    emit EXACTLY the rows of the HOF ``posexplode(
+    positional_shingle_hashes(token_hashes(text)))`` form — token
+    semantics (trim + split ' +'), codepoint hashing, positions and the
+    k-gram combine are all exact integer math, so the forms are compared
+    as sorted full rows (hash VALUES, not just their collision
+    structure) on adversarial inputs (empty/space-only/NULL text, runs
+    of spaces, tabs inside tokens, unicode codepoints, <k tokens) and
+    the real documents table. dup_span_ranges itself is pinned
+    bit-exact against its DuckDB oracle in test_suite_oracle."""
+    from pyspark.sql import functions as F
+
     from finmlkit_spark.operators import dedup as D
+    from finmlkit_spark.operators.text import (
+        positional_shingle_hashes,
+        token_hashes,
+    )
 
     rows = [
         (0, "a b c d e f"),
@@ -560,68 +569,19 @@ def test_dup_span_arrow_and_hof_engines_identical(spark):
     docs_real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for frame in (df, docs_real):
         for k in (1, 3):
-            got = {}
-            for eng in ("arrow", "hof"):
-                out = D.dup_span_ranges(frame, k=k, engine=eng).collect()
-                got[eng] = sorted(
-                    (r["doc_id"], r["span_start"], r["span_end"], r["n_grams"])
-                    for r in out
-                )
-            assert got["arrow"] == got["hof"], k
-            assert len(got["arrow"]) > 0
-
-    # raw-row parity too (g hash VALUES, not just their collision
-    # structure): the kernel must reproduce the oracle's poly-hash bits
-    from pyspark.sql import functions as F
-    from finmlkit_spark.operators.text import (
-        positional_shingle_hashes,
-        token_hashes,
-    )
-
-    raw_a = sorted(
-        (r["doc"], r["p"], r["g"])
-        for r in D._positional_trigram_rows(df, 3, "text", "doc_id").collect()
-    )
-    g = positional_shingle_hashes(token_hashes("text"), 3)
-    raw_h = sorted(
-        (r["doc"], r["p"], r["g"])
-        for r in df.select(
-            F.col("doc_id").alias("doc"), F.posexplode(g).alias("p", "g")
-        ).collect()
-    )
-    assert raw_a == raw_h
-
-
-def test_shingle_arrow_and_hof_engines_element_identical(spark):
-    """shingle_hashes' Arrow engine must emit ELEMENT-identical arrays
-    to the HOF form — same hash values in the same first-occurrence
-    distinct order — on adversarial inputs and the real documents
-    table, so every downstream consumer (minhash min-fold, Jaccard set
-    ops, simhash bit sums) is bit-unaffected by the engine switch."""
-    from finmlkit_spark.operators import dedup as D
-
-    rows = [
-        (0, "a b c d e f"),
-        (1, "x y z x y z x y z"),  # repeated shingles: distinct-order matters
-        (2, "  leading and   multi  spaces a b c "),
-        (3, ""),
-        (4, "   "),
-        (5, None),
-        (6, "one two"),
-        (7, "unicodé ünïcode ✓ a b c"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for frame in (df, real):
-        for k in (1, 3):
-            got = {}
-            for eng in ("arrow", "hof"):
-                out = frame.select(
-                    "doc_id", D.shingle_hashes("text", k=k, engine=eng).alias("sh")
+            raw_a = sorted(
+                (r["doc"], r["p"], r["g"])
+                for r in D._positional_trigram_rows(frame, k, "text", "doc_id").collect()
+            )
+            g = positional_shingle_hashes(token_hashes("text"), k)
+            raw_h = sorted(
+                (r["doc"], r["p"], r["g"])
+                for r in frame.select(
+                    F.col("doc_id").alias("doc"), F.posexplode(g).alias("p", "g")
                 ).collect()
-                got[eng] = {r["doc_id"]: list(r["sh"]) for r in out}
-            assert got["arrow"] == got["hof"], k
-            assert any(len(v) > 1 for v in got["arrow"].values())
+            )
+            assert raw_a == raw_h, k
+            assert len(raw_a) > 0
 
 
 def test_ngram_bounded_jaccard_exact_with_hot_shingles(spark):

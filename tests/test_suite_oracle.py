@@ -56,3 +56,31 @@ def test_gated_query_matches_oracle_forced_distributed(name, spark, duck, monkey
     odf = duck.execute(suite.ORACLES[name]).fetchdf()
     errs = compare(name, sdf, odf)
     assert not errs, f"{name}: {errs}"
+
+
+#: operators with exact integer arithmetic end to end: the Spark output
+#: must equal the DuckDB oracle bit-for-bit, not just within tolerance
+BIT_EXACT = ["random_projection", "footprint_features", "dup_span_ranges"]
+
+
+def _bits(df):
+    """Columns sorted by name, integers as int64, floats as their raw
+    IEEE-754 bit patterns (no rounding, no -0.0 folding); rows sorted."""
+    import numpy as np
+
+    df = df.reindex(sorted(df.columns), axis=1).copy()
+    for c in df.columns:
+        if df[c].dtype.kind == "f":
+            df[c] = df[c].to_numpy(dtype=np.float64).view(np.uint64)
+        else:
+            df[c] = df[c].astype("int64")
+    return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+
+@pytest.mark.parametrize("name", BIT_EXACT)
+def test_operator_matches_oracle_bit_exact(name, spark, duck):
+    sdf = _bits(suite.QUERIES[name](spark, SF_ORACLE).toPandas())
+    odf = _bits(duck.execute(suite.ORACLES[name]).fetchdf())
+    assert len(sdf) > 0
+    assert list(sdf.columns) == list(odf.columns)
+    assert sdf.equals(odf), f"{name}: Spark and oracle differ in some bit"

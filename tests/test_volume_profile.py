@@ -44,45 +44,32 @@ def test_footprint_features_runs(spark):
     assert abs(out["vp_gini"] - (1.0 - (2 * 2 + 11 * 11 + 11 * 11 + 2 * 2) / 26.0**2)) < 1e-12
 
 
-def test_footprint_features_engines_bit_identical(spark):
-    """Round-8: the Arrow per-bar fold engine must reproduce the SQL
-    window-chain engine bit-for-bit — the kernel replays lead/lag flags,
-    the gaps-and-islands run, first-max tie-breaks, and level-ordered
-    sequential moment folds (zero-padded cumsum), and the final ratios
-    are the same Catalyst expressions over those sums. Also pins the
-    Arrow engine's partition-order independence (sort_array in the agg)."""
+def test_footprint_features_partition_order_independent(spark):
+    """The per-bar fold must not depend on input partitioning: the agg's
+    sort_array orders each bar's levels, and the moment sums are exact
+    quantized int64 folds. Bit-exactness against the DuckDB oracle is
+    pinned in test_suite_oracle."""
     from pyspark.sql import functions as F
 
     from finmlkit_spark.operators import bars as B
-    from finmlkit_spark.operators import footprint as FP
     from finmlkit_spark.operators import preprocess as P
     from finmlkit_spark.sources.trades import events_to_trades
 
     raw = B.with_time_bar(
         events_to_trades(spark, "/root/testdata/sf0.001"), 300_000_000_000
     )
-    fp = FP.footprint_long(P.with_trade_side_chunked(raw), tick=0.01)
     bv = raw.groupBy("bar_close_ns").agg(
         (F.sum(F.col("price") * F.col("qty")) / F.sum("qty")).alias("bar_vwap")
     )
+    sided = P.with_trade_side_chunked(raw)
     out = {}
-    for eng in ("sql", "arrow"):
-        out[eng] = {
+    for name, frame in (("plain", sided), ("repart8", sided.repartition(8))):
+        fp = FP.footprint_long(frame, tick=0.01)
+        out[name] = {
             r["bar_close_ns"]: tuple(r)[1:]
             for r in FP.footprint_features(
-                fp, imb_mult=3.0, tick=0.01, bar_vwap=bv, engine=eng
+                fp, imb_mult=3.0, tick=0.01, bar_vwap=bv
             ).collect()
         }
-    assert out["sql"] == out["arrow"]
-    assert len(out["sql"]) > 0
-    # partition-order independence of the Arrow engine
-    fp8 = FP.footprint_long(
-        P.with_trade_side_chunked(raw).repartition(8), tick=0.01
-    )
-    out8 = {
-        r["bar_close_ns"]: tuple(r)[1:]
-        for r in FP.footprint_features(
-            fp8, imb_mult=3.0, tick=0.01, bar_vwap=bv, engine="arrow"
-        ).collect()
-    }
-    assert out8 == out["arrow"]
+    assert out["plain"] == out["repart8"]
+    assert len(out["plain"]) > 0

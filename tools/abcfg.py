@@ -1,12 +1,24 @@
-"""Interleaved config A/B over a query subset, honest-timing methodology
-(mirrors bench.py post-r14-fix: warm run 0, then timed runs that
-re-materialize the tracked persists).
+"""Interleaved A/B over a query subset, honest-timing methodology
+(mirrors bench.py: warm run 0, then timed runs that re-materialize the
+tracked persists).
 
 Usage: python tools/abcfg.py <sf_dir> <overlay_json> [--reps=N] [--queries=a,b,c]
 
 overlay_json: {"label": {"spark.conf.key": "value", ...}, ...} — each
 label is one side; sides run INTERLEAVED (A,B,A,B,...) in fresh
-sessions so host drift cancels. Prints one per-side per-query min table.
+sessions so host drift cancels. Each side's session is the shipped
+``session.session_conf()`` with the overlay merged on top, so an empty
+overlay ``{}`` is the shipped configuration. Prints one per-side
+per-query min table.
+
+Reserved overlay key ``"fmk.cache.keep"`` (not passed to Spark) swaps
+the ``cache.keep`` boundary strategy for that side:
+
+  keep  — as shipped (persist, CacheManager plan-match within a run)
+  cut   — ``cache.cut`` instead (localCheckpoint; no plan-match)
+  none  — identity (no storage boundary; every consumer recomputes)
+
+``cache.cut`` call sites are never touched.
 """
 
 from __future__ import annotations
@@ -29,26 +41,16 @@ DEFAULT_QUERIES = [
 ]
 
 
+KEEP_KEY = "fmk.cache.keep"
+
+
 def build_session(overlay: dict[str, str]):
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
-    b = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("abcfg")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in overlay.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
+    from finmlkit_spark.session import session_conf
+
+    conf = session_conf() | {k: v for k, v in overlay.items() if k != KEEP_KEY}
+    spark = SparkSession.builder.appName("abcfg").config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
@@ -70,9 +72,19 @@ def main():
 
     from finmlkit_spark import cache, suite
 
+    shipped_keep = cache.keep
+    keep_sides = {
+        "keep": shipped_keep,
+        "cut": lambda df, level=None: cache.cut(df),
+        "none": lambda df, level=None: df,
+    }
+    for lab, overlay in sides.items():
+        if overlay.get(KEEP_KEY, "keep") not in keep_sides:
+            raise SystemExit(f"{lab}: {KEEP_KEY} must be one of {sorted(keep_sides)}")
     results: dict[str, dict[str, float]] = {lab: {} for lab in sides}
     for rep in range(reps):
         for lab, overlay in sides.items():
+            cache.keep = keep_sides[overlay.get(KEEP_KEY, "keep")]
             spark = build_session(overlay)
             for name in queries:
                 fn = suite.QUERIES[name]
@@ -97,6 +109,7 @@ def main():
                 flush=True,
             )
             spark.stop()
+    cache.keep = shipped_keep
 
     labs = list(sides)
     print(f"\n{'query':28s} " + " ".join(f"{l:>12s}" for l in labs))

@@ -158,40 +158,25 @@ def main():
             print(line)
         print("```\n")
 
-    # the flagship's at-scale plan: the registry query auto-selects the
-    # global window below the crossover, so force the chunked mode to
-    # record the zero-SinglePartition plan a 100 TB stream would get
-    from finmlkit_spark.suite import pipeline_suite as PS
+    # the at-scale plans: below their crossovers the registry queries
+    # auto-select the single-partition forms (global flagship window,
+    # one-partition segment_dedup), so force every crossover to its
+    # scale side to record the zero-SinglePartition plan a 100 TB input
+    # would get (pinned by test_plan_regression)
+    from finmlkit_spark import cache
 
-    PS._FORCE_FLAGSHIP_MODE = "chunked"
-    try:
-        df = suite.QUERIES["pipeline_1m_features"](spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        PS._FORCE_FLAGSHIP_MODE = None
-    print("## pipeline_1m_features (forced chunked — the at-scale plan)\n")
-    print("```")
-    for line in condense(plan):
-        print(line)
-    print("```\n")
-
-    # segment_dedup's at-scale plan: the registry query auto-selects the
-    # one-partition fused form below its 20k-doc crossover, so force the
-    # digest-parallel mode to record the zero-SinglePartition plan a
-    # 100 TB corpus would get (pinned by test_plan_regression)
-    from finmlkit_spark.operators import corpus as CP
-
-    CP._FORCE_SEGDEDUP_ONEPART = False
-    try:
-        df = suite.QUERIES["segment_dedup"](spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        CP._FORCE_SEGDEDUP_ONEPART = None
-    print("## segment_dedup (forced onepart=False — the at-scale plan)\n")
-    print("```")
-    for line in condense(plan):
-        print(line)
-    print("```\n")
+    for name in ("pipeline_1m_features", "segment_dedup"):
+        cache._FORCE_DISTRIBUTED = True
+        try:
+            df = suite.QUERIES[name](spark, sf_dir)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+        finally:
+            cache._FORCE_DISTRIBUTED = False
+        print(f"## {name} (forced scale side — the at-scale plan)\n")
+        print("```")
+        for line in condense(plan):
+            print(line)
+        print("```\n")
 
     # round 13: the production sketch builds (library functions — the
     # registry keeps the portable oracle forms; kmv_fast_user_count
