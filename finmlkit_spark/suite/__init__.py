@@ -13,8 +13,8 @@ from . import multiuser_suite  # noqa: F401
 from . import analytics_suite  # noqa: F401
 from . import developing_suite  # noqa: F401
 
-# Registration order is the driver's check order: the external driver
-# verifies the first 50 registered queries, so _reorder() moves the
+# Registration order is the oracle check order, and a bounded check
+# covers only the first 50 registered queries, so _reorder() moves the
 # _PRIORITY names to the front and keeps every other query after them.
 _PRIORITY = [
     "store_upsert",
