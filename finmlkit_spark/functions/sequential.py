@@ -57,6 +57,42 @@ def apply_sequential(
     return out.drop("_g") if drop_key else out
 
 
+#: Largest single stream (rows) that :func:`ewma_parallel`,
+#: :func:`ewms_parallel` (``by=None``) and :func:`cusum_filter_chunked`
+#: hand to their sequential kernel on the driver; larger inputs run the
+#: chunk scan. Measured crossover: SCALE.md "Sequential driver gate".
+SEQ_DRIVER_MAX_ROWS = 1_000_000
+
+
+def _driver_scan(
+    df: DataFrame,
+    order_col: str,
+    cols: list[str],
+    out: str,
+    kernel: Callable[..., np.ndarray],
+) -> tuple[DataFrame, DataFrame | None]:
+    """Driver gate of the single-stream scans: ``(cut, local)``.
+
+    The projection ``(order_col, *cols)`` goes through
+    :func:`cache.collect_if_small` at :data:`SEQ_DRIVER_MAX_ROWS`. When it
+    fits, ``kernel`` gets each of ``cols`` as a float64 array (NULL as
+    NaN) in ``order_col`` order, and ``local`` is ``(order_col, out)``
+    replanted as a LocalTableScan, NaN as NULL. Otherwise ``local`` is
+    None and the caller scans ``cut``, the projection behind its lineage
+    cut, so the upstream executes once on either side."""
+    import pyarrow as pa
+
+    from .. import cache
+
+    cut, tbl = cache.collect_if_small(df.select(order_col, *cols), SEQ_DRIVER_MAX_ROWS)
+    if tbl is None:
+        return cut, None
+    tbl = tbl.sort_by(order_col)
+    y = kernel(*(tbl.column(c).to_numpy().astype(np.float64) for c in cols))
+    res = pa.table({order_col: tbl.column(order_col), out: pa.array(y, from_pandas=True)})
+    return cut, df.sparkSession.createDataFrame(res)
+
+
 # --- EWMA family ------------------------------------------------------------
 
 def ewma(x: np.ndarray, span: float) -> np.ndarray:
@@ -139,9 +175,19 @@ def ewma_parallel(
     Deviation from the strict sequential fold is pure float
     reassociation (~1e−12 relative; parity-tested) — NOT a truncation.
     Parallelism = number of chunks, even within one symbol.
+
+    Driver gate (``by=None`` only; :func:`_driver_scan`): a stream of
+    at most :data:`SEQ_DRIVER_MAX_ROWS` rows runs :func:`ewma` on the
+    driver and returns its bits exactly; a larger one runs the chunk
+    scan above, within 1e−11 relative of :func:`ewma`. With ``by`` set
+    the scan is already parallel across groups and is not gated.
     """
     from .chunked_window import with_global_row_number
 
+    if by is None:
+        df, local = _driver_scan(df, order_col, [col], out, lambda x: ewma(x, span))
+        if local is not None:
+            return local
     q = 1.0 - 2.0 / (span + 1.0)
     by_cols = [by] if by else []
     if by:
@@ -235,10 +281,20 @@ def ewms_parallel(
     one-row-per-chunk summary via a broadcast triangular join, then the
     reliability-weight variance V²/(V²−V2)·(Syy/V − (Sy/V)²). Zero
     truncation; deviation from the sequential fold is float
-    reassociation only (parity-tested).
+    reassociation only (parity-tested). The first row is NULL.
+
+    Driver gate (``by=None`` only; :func:`_driver_scan`): a stream of
+    at most :data:`SEQ_DRIVER_MAX_ROWS` rows runs :func:`ewms` on the
+    driver and returns its bits exactly; a larger one runs the chunk
+    scan above, within 1e−9 relative of :func:`ewms`. With ``by`` set
+    the scan is already parallel across groups and is not gated.
     """
     from .chunked_window import with_global_row_number
 
+    if by is None:
+        df, local = _driver_scan(df, order_col, [col], out, lambda x: ewms(x, span))
+        if local is not None:
+            return local
     q = 1.0 - 2.0 / (span + 1.0)
     q2 = q * q
     by_cols = [by] if by else []
@@ -1058,15 +1114,14 @@ class _ChunkStitch:
 
 
 def _chunked_projection(df: DataFrame, order_col: str, cols: list[str],
-                        chunk_ns: int, persist: bool) -> DataFrame:
-    d = df.select(order_col, *cols).withColumn(
-        "_ck", F.floor(F.col(order_col) / F.lit(int(chunk_ns)))
-    )
-    if persist:
-        from .. import cache as _cache
+                        chunk_ns: int) -> DataFrame:
+    """``(order_col, *cols, _ck)``, persisted: every stitch round and the
+    final pass read it."""
+    from .. import cache as _cache
 
-        d = _cache.keep(d)
-    return d
+    return _cache.keep(df.select(order_col, *cols).withColumn(
+        "_ck", F.floor(F.col(order_col) / F.lit(int(chunk_ns)))
+    ))
 
 
 def cusum_filter_chunked(
@@ -1076,20 +1131,31 @@ def cusum_filter_chunked(
     order_col: str = "ts_ns",
     chunk_ns: int = 86_400_000_000_000,
     thr_col: str | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """Symmetric CUSUM filter (:func:`cusum_filter_np` semantics,
-    reference ``sampling/filters.py:6-70``) for ONE huge un-partitioned
-    stream: time-chunked parallel kernel runs + the driver-chained
-    entry-state fixed point (:class:`_ChunkStitch`) — bit-identical to
-    the single-task kernel (differential-tested). ``thr_col`` selects
-    the vector-threshold form; otherwise ``threshold`` is the constant
-    h. The projected input is persisted across the stitch rounds unless
-    ``persist=False``. Returns (order_col, flag)."""
+    reference ``sampling/filters.py:6-70``) for ONE un-partitioned
+    stream. ``thr_col`` selects the vector-threshold form; otherwise
+    ``threshold`` is the constant h. Returns (order_col, flag).
+
+    Driver gate (:func:`_driver_scan`): a stream of at most
+    :data:`SEQ_DRIVER_MAX_ROWS` rows runs :func:`cusum_filter_state` on
+    the driver. A larger one runs time-chunked parallel kernel passes
+    plus the driver-chained entry-state fixed point
+    (:class:`_ChunkStitch`), which replays the same kernel from the
+    exact entry states. Both sides return bit-identical flags
+    (differential-tested)."""
     if (threshold is None) == (thr_col is None):
         raise ValueError("pass exactly one of threshold / thr_col")
     cols = [r_col] + ([thr_col] if thr_col else [])
-    d = _chunked_projection(df, order_col, cols, chunk_ns, persist)
+
+    def _driver(r, *thr):
+        h = thr[0] if thr else np.full(len(r), float(threshold))
+        return cusum_filter_state(r, h, 0.0, 0.0)[0]
+
+    df, local = _driver_scan(df, order_col, cols, "flag", _driver)
+    if local is not None:
+        return local
+    d = _chunked_projection(df, order_col, cols, chunk_ns)
 
     def _thr_arr(pdf):
         if thr_col:
@@ -1102,10 +1168,11 @@ def cusum_filter_chunked(
         )
         return (sp, sn), 0
 
+    sch = f"`{order_col}` {df.schema[order_col].dataType.simpleString()}, flag int"
     st = _ChunkStitch(d, order_col, (0.0, 0.0), ["double", "double"], kern)
     solved = st.solve()
     if not solved:
-        return d.select(order_col, F.lit(0).alias("flag")).where(F.lit(False))
+        return st.spark.createDataFrame([], sch)
 
     def k_final(pdf):
         pdf = pdf.sort_values(order_col).reset_index(drop=True)
@@ -1115,7 +1182,6 @@ def cusum_filter_chunked(
         )
         return pd.DataFrame({order_col: pdf[order_col], "flag": flags})
 
-    sch = f"`{order_col}` {df.schema[order_col].dataType.simpleString()}, flag int"
     return (
         st.with_entries([(int(ck), e[0], e[1]) for ck, e, _ in solved])
         .groupBy("_ck")
@@ -1131,7 +1197,6 @@ def cusum_bar_ids_chunked(
     sigma_col: str = "sigma",
     order_col: str = "ts_ns",
     chunk_ns: int = 86_400_000_000_000,
-    persist: bool = True,
 ) -> DataFrame:
     """CUSUM bar indexer (:func:`cusum_bar_ids` semantics, reference
     ``logic.py:152-221``) over a PRECOMPUTED sigma column, for one huge
@@ -1142,7 +1207,7 @@ def cusum_bar_ids_chunked(
     :func:`cusum_adaptive_bars_chunked` — it carries the EWMST moments
     in the same stitch, keeping the whole composition bit-exact.
     Returns (order_col, bar_id)."""
-    d = _chunked_projection(df, order_col, [r_col, sigma_col], chunk_ns, persist)
+    d = _chunked_projection(df, order_col, [r_col, sigma_col], chunk_ns)
 
     def kern(pdf, entry):
         _, sp, sn, sig, bars = cusum_bar_state(
@@ -1225,7 +1290,6 @@ def cusum_adaptive_bars_chunked(
     r_col: str = "r",
     order_col: str = "ts_ns",
     chunk_ns: int = 604_800_000_000_000,
-    persist: bool = True,
 ) -> DataFrame:
     """The reference's full adaptive CUSUM bar indexer — σ = time-decay
     EW std of returns (halflife), threshold max(mult·σ, floor)
@@ -1239,7 +1303,7 @@ def cusum_adaptive_bars_chunked(
     below one ulp of the local sums — pick ``chunk_ns`` ≫ halflife
     (default one week) and exits become entry-independent, so the fixed
     point lands in 2-3 rounds. Returns (order_col, bar_id)."""
-    d = _chunked_projection(df, order_col, [r_col], chunk_ns, persist)
+    d = _chunked_projection(df, order_col, [r_col], chunk_ns)
     state0 = (0.0, 0.0, 0.0, 0.0, -1, float("nan"), 0.0, 0.0, float(floor_thr))
     types = ["double"] * 4 + ["long"] + ["double"] * 4
 

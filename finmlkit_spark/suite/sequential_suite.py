@@ -103,13 +103,13 @@ SELECT bar_close_ns,
 FROM lx""",
 )
 def seq_ewma_parallel(spark, sf_dir):
-    """The SAME EWMA(19) as seq_ewma, computed by the chunk-parallel
-    two-pass scan (``sequential.ewma_parallel``) instead of one
-    sequential kernel — linear-recurrence carries combine in closed
-    form, so the parallel result agrees with the sequential fold to
-    float reassociation (~1e-15 rel; parity-tested) and hash-matches
-    the identical convolution oracle. The sequential tier's
-    single-huge-symbol scale path, verified green, zero truncation."""
+    """The SAME EWMA(19) as seq_ewma through ``sequential.ewma_parallel``:
+    a bar stream within ``SEQ_DRIVER_MAX_ROWS`` runs the sequential
+    kernel on the driver; a larger one runs the chunk-parallel two-pass
+    scan, whose closed-form carries agree with the sequential fold to
+    float reassociation (parity-tested). Both sides match the identical
+    convolution oracle; the scan side is tested under
+    ``cache._FORCE_DISTRIBUTED``."""
     bars = bars_1m(spark, sf_dir, seq=False)
     return S.ewma_parallel(
         bars, "close", float(SPAN), order_col="bar_close_ns", chunk_rows=512, out="ewma_19"
@@ -174,10 +174,13 @@ SELECT bar_close_ns,
 FROM mom""",
 )
 def seq_ewms_parallel(spark, sf_dir):
-    """The SAME EW moving std as seq_ewms via the chunk-parallel
-    two-pass moment scan (``sequential.ewms_parallel``) — four linear
-    recurrences, closed-form carries, zero truncation, no
-    SinglePartition. Hash-matches the identical convolution oracle."""
+    """The SAME EW moving std as seq_ewms through
+    ``sequential.ewms_parallel``: a bar stream within
+    ``SEQ_DRIVER_MAX_ROWS`` runs the sequential kernel on the driver; a
+    larger one runs the chunk-parallel two-pass moment scan (four
+    linear recurrences, closed-form carries, no SinglePartition). Both
+    sides match the identical convolution oracle; the scan side is
+    tested under ``cache._FORCE_DISTRIBUTED``."""
     bars = bars_1m(spark, sf_dir, seq=False)
     return S.ewms_parallel(
         bars, "close", float(SPAN), order_col="bar_close_ns", chunk_rows=512, out="ewms_19"
@@ -567,11 +570,13 @@ def seq_cusum_filter(spark, sf_dir):
 
 @query("seq_cusum_filter_chunked", _CUSUM_FILTER_SQL)
 def seq_cusum_filter_chunked(spark, sf_dir):
-    """The same CUSUM event filter via the round-6 chunk-stitch
-    (sequential.cusum_filter_chunked): 2-day time chunks run in
-    parallel, entry states chained on the driver to a fixed point —
-    the single-huge-symbol scale-out for the reset machine, checked
-    against the identical recursive-CTE oracle (bit-exact)."""
+    """The same CUSUM event filter through
+    ``sequential.cusum_filter_chunked``: a bar stream within
+    ``SEQ_DRIVER_MAX_ROWS`` runs the kernel on the driver; a larger one
+    runs 2-day time chunks in parallel with entry states chained on the
+    driver to a fixed point. Both sides return bit-identical flags and
+    match the identical recursive-CTE oracle; the chunk side is tested
+    under ``cache._FORCE_DISTRIBUTED``."""
     bars = bars_1h(spark, sf_dir)
     out = S.cusum_filter_chunked(
         bars, threshold=CUSUM_H, r_col="r", order_col="bar_close_ns",

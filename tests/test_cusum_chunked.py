@@ -1,9 +1,10 @@
-"""The chunked CUSUM stitch (round-6 scale-out for the reset state
-machines on one huge symbol) must be BIT-IDENTICAL to the single-task
-kernels: the fixed point converges to the exact sequential entry states,
-so flags / bar ids / test statistics match element-for-element —
-including the degenerate never-reset stream where convergence takes one
-round per chunk."""
+"""The chunked CUSUM stitch (the scale path for the reset state machines
+on one huge symbol) must be BIT-IDENTICAL to the single-task kernels:
+the fixed point converges to the exact sequential entry states, so
+flags / bar ids / test statistics match element-for-element — including
+the degenerate never-reset stream where convergence takes one round per
+chunk. ``cusum_filter_chunked`` is checked on both sides of its driver
+gate."""
 
 from __future__ import annotations
 
@@ -21,7 +22,7 @@ def _frame(spark, ts, **cols):
     )
 
 
-def test_cusum_filter_chunked_matches_exact(spark):
+def test_cusum_filter_chunked_matches_exact(spark, gate_sides):
     rng = np.random.default_rng(7)
     n = 3000
     ts = np.cumsum(rng.integers(1, 4, n)) * SEC
@@ -30,47 +31,47 @@ def test_cusum_filter_chunked_matches_exact(spark):
     r[100:105] = np.nan  # interior gap
     df = _frame(spark, ts, r=r)
     chunk_ns = int((ts[-1] - ts[0]) / 7)
-    out = (
-        S.cusum_filter_chunked(df, threshold=1.0, chunk_ns=chunk_ns)
+    exact = S.cusum_filter_np(r, 1.0)
+    for out in gate_sides(
+        lambda: S.cusum_filter_chunked(df, threshold=1.0, chunk_ns=chunk_ns)
         .orderBy("ts_ns")
         .toPandas()
-    )
-    exact = S.cusum_filter_np(r, 1.0)
-    assert len(out) == n
-    assert np.array_equal(out["flag"].to_numpy(), exact)
+    ):
+        assert len(out) == n
+        assert np.array_equal(out["flag"].to_numpy(), exact)
     assert exact.sum() > 10  # the fixture actually triggers
 
 
-def test_cusum_filter_chunked_vector_threshold(spark):
+def test_cusum_filter_chunked_vector_threshold(spark, gate_sides):
     rng = np.random.default_rng(8)
     n = 2000
     ts = (np.arange(n) * SEC).astype("int64")
     r = rng.standard_normal(n) * 0.3
     thr = 0.5 + 0.5 * rng.random(n)
     df = _frame(spark, ts, r=r, thr=thr)
-    out = (
-        S.cusum_filter_chunked(df, thr_col="thr", chunk_ns=400 * SEC)
+    exact = S.cusum_filter_np(r, thr)
+    for out in gate_sides(
+        lambda: S.cusum_filter_chunked(df, thr_col="thr", chunk_ns=400 * SEC)
         .orderBy("ts_ns")
         .toPandas()
-    )
-    exact = S.cusum_filter_np(r, thr)
-    assert np.array_equal(out["flag"].to_numpy(), exact)
+    ):
+        assert np.array_equal(out["flag"].to_numpy(), exact)
 
 
-def test_cusum_filter_chunked_never_triggers_still_exact(spark):
+def test_cusum_filter_chunked_never_triggers_still_exact(spark, gate_sides):
     # monotone tiny drift: sp never resets, so every chunk's exit depends
     # on its entry — the k-round worst case of the fixed point
     n = 500
     ts = (np.arange(n) * SEC).astype("int64")
     r = np.full(n, 1e-4)
     df = _frame(spark, ts, r=r)
-    out = (
-        S.cusum_filter_chunked(df, threshold=1e9, chunk_ns=100 * SEC)
+    for out in gate_sides(
+        lambda: S.cusum_filter_chunked(df, threshold=1e9, chunk_ns=100 * SEC)
         .orderBy("ts_ns")
         .toPandas()
-    )
-    assert out["flag"].sum() == 0
-    assert len(out) == n
+    ):
+        assert out["flag"].sum() == 0
+        assert len(out) == n
 
 
 def test_cusum_bar_ids_chunked_matches_exact(spark):

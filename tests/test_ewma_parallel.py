@@ -1,6 +1,7 @@
-"""Chunk-parallel EWMA (two-pass linear-recurrence scan) parity vs the
-exact sequential kernel — the truncation-free scale path for the
-sequential tier on a single huge symbol."""
+"""Chunk-parallel EW scans (two-pass linear-recurrence scans) vs the
+sequential kernels — the truncation-free scale path for the sequential
+tier on a single huge symbol. The single-stream tests run both sides of
+the driver gate."""
 
 from __future__ import annotations
 
@@ -16,16 +17,22 @@ def _series(n=5000, seed=3):
     return ts, x
 
 
-def test_parallel_matches_sequential(spark):
+def test_parallel_matches_sequential(spark, gate_sides):
+    """Driver side: the kernel's bits; chunk scan: within 1e-11 rel."""
     ts, x = _series()
     df = spark.createDataFrame(
         list(zip(ts.tolist(), x.tolist())), "ts_ns long, close double"
     )
     exact = S.ewma(x, 19.0)
-    got = S.ewma_parallel(df, "close", 19.0, order_col="ts_ns", chunk_rows=256)
-    gm = {r["ts_ns"]: r["ewma"] for r in got.collect()}
-    gv = np.array([gm[t] for t in ts.tolist()])
-    err = np.nanmax(np.abs(gv - exact) / np.maximum(np.abs(exact), 1e-12))
+
+    def run():
+        got = S.ewma_parallel(df, "close", 19.0, order_col="ts_ns", chunk_rows=256)
+        gm = {r["ts_ns"]: r["ewma"] for r in got.collect()}
+        return np.array([gm[t] for t in ts.tolist()])
+
+    drv, dist = gate_sides(run)
+    assert np.array_equal(drv, exact)
+    err = np.nanmax(np.abs(dist - exact) / np.maximum(np.abs(exact), 1e-12))
     assert err < 1e-11, err
 
 
@@ -46,18 +53,27 @@ def test_parallel_grouped_matches_per_group(spark):
         assert err < 1e-11, (s, err)
 
 
-def test_ewms_parallel_matches_sequential(spark):
+def test_ewms_parallel_matches_sequential(spark, gate_sides):
+    """Driver side: the kernel's bits (NaN head as NULL); chunk scan:
+    the same NULL head and within 1e-9 rel."""
     ts, x = _series()
     df = spark.createDataFrame(
         list(zip(ts.tolist(), x.tolist())), "ts_ns long, close double"
     )
     exact = S.ewms(x, 19.0)
-    got = S.ewms_parallel(df, "close", 19.0, order_col="ts_ns", chunk_rows=256)
-    gm = {r["ts_ns"]: r["ewms"] for r in got.collect()}
-    gv = np.array([np.nan if gm[t] is None else gm[t] for t in ts.tolist()], dtype=np.float64)
+
+    def run():
+        got = S.ewms_parallel(df, "close", 19.0, order_col="ts_ns", chunk_rows=256)
+        gm = {r["ts_ns"]: r["ewms"] for r in got.collect()}
+        return np.array(
+            [np.nan if gm[t] is None else gm[t] for t in ts.tolist()], dtype=np.float64
+        )
+
+    drv, dist = gate_sides(run)
+    assert np.array_equal(drv, exact, equal_nan=True)
     mask = ~np.isnan(exact)
-    assert np.isnan(gv[~mask]).all()
-    err = np.nanmax(np.abs(gv[mask] - exact[mask]) / np.maximum(np.abs(exact[mask]), 1e-12))
+    assert np.isnan(dist[~mask]).all()
+    err = np.nanmax(np.abs(dist[mask] - exact[mask]) / np.maximum(np.abs(exact[mask]), 1e-12))
     assert err < 1e-9, err
 
 
@@ -128,7 +144,11 @@ def test_atr_parallel_matches_sequential(spark):
     assert err < 1e-11, err
 
 
-def test_parallel_plan_has_no_single_partition(spark):
+def test_parallel_plan_has_no_single_partition(spark, monkeypatch):
+    from finmlkit_spark import cache
+
+    # the chunk scan's plan: auto would take the driver side at this size
+    monkeypatch.setattr(cache, "_FORCE_DISTRIBUTED", True)
     ts, x = _series(1000)
     df = spark.createDataFrame(
         list(zip(ts.tolist(), x.tolist())), "ts_ns long, close double"

@@ -44,6 +44,9 @@ GATED = [
     "dup_graph_pagerank",
     "keep_central",
     "return_attribution_sweep",
+    "seq_cusum_filter_chunked",
+    "seq_ewma_parallel",
+    "seq_ewms_parallel",
 ]
 
 

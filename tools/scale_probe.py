@@ -24,6 +24,11 @@ Then each probe query runs warm best-of-3 (plan rebuilt per run — the
 bench methodology) at sf0.1 and at the generated sf1, printing the
 time ratio. Linear-or-better (ratio <= ~10x on 10x rows) is the pass
 criterion; the per-query build constant makes small queries sublinear.
+
+The keys in ``FORCED`` run with ``cache._FORCE_DISTRIBUTED = True`` at
+both sizes: their driver gate would otherwise switch sides between
+sf0.1 and sf1, and the ratio would compare two different plans instead
+of measuring how the scale path grows.
 """
 
 from __future__ import annotations
@@ -58,6 +63,9 @@ PROBE = [
     "kmeans_clusters",
     "ann_projected_topk",
 ]
+
+#: probe keys whose driver gate is forced to its scale side
+FORCED = {"seq_ewma_parallel", "seq_cusum_filter_chunked"}
 
 
 def generate(out: str) -> None:
@@ -130,6 +138,7 @@ def main() -> None:
         row = [name]
         times = []
         for sf_dir in (SF01, out):
+            cache._FORCE_DISTRIBUTED = name in FORCED
             try:
                 q = suite.QUERIES[name]
                 q(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -143,6 +152,7 @@ def main() -> None:
                 times.append(float("nan"))
                 print(f"  {name}@{sf_dir}: {type(exc).__name__}: {exc}", flush=True)
             finally:
+                cache._FORCE_DISTRIBUTED = False
                 cache.release_all()
         ratio = times[1] / times[0] if times[0] else float("nan")
         print(f"{name:28s} {times[0]:8.2f} {times[1]:8.2f} {ratio:5.1f}x",
