@@ -17,13 +17,22 @@ stay pinned until :func:`release_all` runs (dropping your own handles
 is not enough). Long-lived sessions must call it; batch runners do so
 between queries.
 
-:func:`collect_if_small` is the one place that decides whether a bounded
-input is small enough to hand to a driver kernel, and how it gets there.
+:func:`collect_if_small` and :func:`rows_at_most` are the two size
+probes. Every crossover whose size can only be learned by running the
+plan asks one of them: the driver gates ask :func:`collect_if_small`
+(fits → the rows, as Arrow), the plan crossovers ask :func:`rows_at_most`
+(fits → a bool). Both cut their input the same way — behind a
+:func:`cut`, probed once with ``LIMIT n + 1`` — so the upstream runs
+once on either side, and at scale the whole probed input sits behind a
+``localCheckpoint``. Each probe job carries a ``spark.job.description``
+naming its call site and bound.
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING
+import sys
+from collections.abc import Callable
+from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
@@ -34,9 +43,10 @@ if TYPE_CHECKING:
 _LIVE: list[DataFrame] = []
 _CUT: list[DataFrame] = []
 #: The one test hook: when True, every crossover takes its scale side on
-#: any input size — :func:`collect_if_small` never collects, the side and
-#: flagship windows plan ``"chunked"``, ``segment_dedup`` ignores
-#: ``onepart`` and driver k-means uses the two-level partial fold.
+#: any input size — neither probe runs (:func:`collect_if_small` returns
+#: no table, :func:`rows_at_most` answers False), the suites' parquet
+#: footer checks answer False and driver k-means uses the two-level
+#: partial fold.
 _FORCE_DISTRIBUTED = False
 
 
@@ -91,6 +101,38 @@ def cut(df: DataFrame) -> DataFrame:
     return df
 
 
+def _caller() -> str:
+    """``module.function`` of the code that called the public probe."""
+    f = sys._getframe(2)
+    return f"{f.f_globals.get('__name__', '?')}.{f.f_code.co_qualname}"
+
+
+def _probe(
+    df: DataFrame, n: int, site: str, fetch: Callable[[DataFrame], tuple[int, Any]]
+) -> tuple[DataFrame, Any]:
+    """The one probe body: cut ``df``, then — unless the test hook is on —
+    run ``fetch`` over ``limit(n + 1)`` of the cut as a job described by
+    ``site`` and ``n``. ``fetch`` returns ``(rows, payload)``; the result
+    is ``(cut_df, payload)``, with ``payload`` None when forced or when
+    the cut holds more than ``n`` rows."""
+    df = cut(df)
+    if _FORCE_DISTRIBUTED:
+        return df, None
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"size probe {site}: rows <= {n}")
+    try:
+        rows, payload = fetch(df.limit(n + 1))
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+    return df, (payload if rows <= n else None)
+
+
+def _arrow(df: DataFrame) -> tuple[int, pa.Table]:
+    tbl = df.toArrow()
+    return tbl.num_rows, tbl
+
+
 def collect_if_small(df: DataFrame, max_rows: int) -> tuple[DataFrame, pa.Table | None]:
     """The one driver gate: returns ``(cut_df, table)`` where ``cut_df``
     is ``df`` behind a :func:`cut` and ``table`` is its rows as a pyarrow
@@ -104,8 +146,16 @@ def collect_if_small(df: DataFrame, max_rows: int) -> tuple[DataFrame, pa.Table 
     any input scale. Arrow keeps int64/float64 bits and NULLs exact, so a
     driver kernel sees the same values the distributed plan would.
     """
-    df = cut(df)
-    if _FORCE_DISTRIBUTED:
-        return df, None
-    tbl = df.limit(max_rows + 1).toArrow()
-    return df, (tbl if tbl.num_rows <= max_rows else None)
+    return _probe(df, max_rows, _caller(), _arrow)
+
+
+def rows_at_most(df: DataFrame, n: int) -> tuple[DataFrame, bool]:
+    """The plan crossovers' probe: returns ``(cut_df, fits)`` where
+    ``cut_df`` is ``df`` behind a :func:`cut` and ``fits`` is whether it
+    has at most ``n`` rows. :func:`collect_if_small` without the
+    collect: the probe is ``limit(n + 1).count()`` over the cut, so the
+    upstream executes once and the caller plans either side over
+    ``cut_df``. Under the test hook it runs nothing and answers False.
+    """
+    df, fits = _probe(df, n, _caller(), lambda d: (d.count(), True))
+    return df, bool(fits)

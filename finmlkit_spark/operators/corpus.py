@@ -130,15 +130,13 @@ def segment_dedup(
     group regardless of partitioning, and the reassembly agg sorts the
     collected structs. The at-scale caller leaves ``onepart=False``
     and keeps the digest-parallel window — the plan a 100 TB corpus
-    needs; ``cache._FORCE_DISTRIBUTED`` forces it on every call.
-    ``test_plan_regression`` pins both sides:
+    needs. ``test_plan_regression`` pins both sides:
     ``test_no_single_partition_exchange[segment_dedup]`` holds the
     at-scale plan SinglePartition-free, and
     ``test_segment_dedup_modes_bit_identical`` asserts the two modes
     yield byte-identical rows AND that the fused mode actually plans
     the single-partition shape.
     """
-    onepart = onepart and not cache._FORCE_DISTRIBUTED
     t = tokens(text_col)
     nseg = F.ceil(F.size(t) / F.lit(seg_tokens)).cast("int")
     segs = docs.select(

@@ -35,7 +35,7 @@ def _w(by: str | None):
 def infer_time_unit(df: DataFrame, col: str = "ts_ns") -> str:
     """Magnitude heuristic over max(ts) (reference ``data_model.py:399-418``).
 
-    One scalar agg to the driver — the only collect in the pipeline.
+    One scalar agg to the driver.
     """
     mx = df.agg(F.max(col).alias("m")).collect()[0]["m"]
     if mx is None:
@@ -144,7 +144,6 @@ def with_trade_side_chunked(
     df: DataFrame,
     chunk_ns: int = DAY_NS,
     mode: str = "auto",
-    small_rows: int = SIDE_SMALL_ROWS,
 ) -> DataFrame:
     """Tick-rule side for a SINGLE un-partitioned stream without the
     global window that ``with_trade_side(by=None)`` plans as an
@@ -167,13 +166,13 @@ def with_trade_side_chunked(
     — hash partitioning is cheaper than chunk machinery.
 
     ``mode``: ``"chunked"`` (the zero-SinglePartition scale path),
-    ``"global"`` (one ordered window — faster below ``small_rows``
+    ``"global"`` (one ordered window — faster below ``SIDE_SMALL_ROWS``
     because the chunk-carry machinery's fixed cost disappears), or
-    ``"auto"`` (a column-pruned count picks the side of the measured
-    crossover). Both paths are bit-identical. ``cache._FORCE_DISTRIBUTED``
-    forces ``"chunked"``.
+    ``"auto"`` (``cache.rows_at_most`` picks the side of the measured
+    crossover, see :func:`chunked_side_frame`). Both paths are
+    bit-identical.
     """
-    d, _ = chunked_side_frame(df, chunk_ns=chunk_ns, mode=mode, small_rows=small_rows)
+    d, _ = chunked_side_frame(df, chunk_ns=chunk_ns, mode=mode)
     return d.drop(*SIDE_HELPERS)
 
 
@@ -181,7 +180,6 @@ def chunked_side_frame(
     df: DataFrame,
     chunk_ns: int = DAY_NS,
     mode: str = "auto",
-    small_rows: int = SIDE_SMALL_ROWS,
 ):
     """Internal: the time-chunked frame with ``side`` plus the
     ``SIDE_HELPERS`` columns still attached, and the per-chunk
@@ -197,31 +195,23 @@ def chunked_side_frame(
       row (the carry accumulates every earlier chunk's last nonzero
       sign, which is exactly that row's side).
 
-    ``mode="global"`` (or ``"auto"`` below ``small_rows``) evaluates
-    the same semantics over ONE global ordered window — a deliberate
-    ``Exchange SinglePartition`` that is the cheaper plan for bounded
-    inputs (SCALE.md item 9's crossover). The helper columns are still
-    attached (``_prev_last_p``/``_carry`` as typed NULLs — there is no
-    earlier chunk), so stacked-lag consumers work unchanged and remain
-    bit-identical across modes.
+    ``mode="global"`` evaluates the same semantics over ONE global
+    ordered window — a deliberate ``Exchange SinglePartition`` that is
+    the cheaper plan for bounded inputs (SCALE.md item 9's crossover).
+    The helper columns are still attached (``_prev_last_p``/``_carry``
+    as typed NULLs — there is no earlier chunk), so stacked-lag
+    consumers work unchanged and remain bit-identical across modes.
+
+    ``mode="auto"`` asks ``cache.rows_at_most(df, SIDE_SMALL_ROWS)``:
+    global when the input fits, chunked otherwise (always chunked under
+    ``cache._FORCE_DISTRIBUTED``). Either plan reads the probe's cut,
+    so the upstream runs once; at scale the chunked plan's two passes
+    re-read that ``localCheckpoint`` instead of re-scanning the source.
+    An explicit ``"global"`` / ``"chunked"`` runs no probe and no cut.
     """
-    if cache._FORCE_DISTRIBUTED:
-        mode = "chunked"
     if mode == "auto":
-        # column-pruned count: one cheap scan decides the crossover;
-        # callers that know their scale pass mode explicitly and skip
-        # it. The count is a per-build job (~0.1 s), so cache it on the
-        # input frame object — the memoized source relations return the
-        # SAME DataFrame across calls (a derived/repartitioned input is
-        # a new object and re-counts correctly).
-        n = getattr(df, "_fmk_count", None)
-        if n is None:
-            n = df.count()
-            try:
-                df._fmk_count = n
-            except AttributeError:
-                pass
-        mode = "global" if n <= small_rows else "chunked"
+        df, fits = cache.rows_at_most(df, SIDE_SMALL_ROWS)
+        mode = "global" if fits else "chunked"
     if mode == "global":
         w = Window.orderBy("ts_ns", "trade_id")
         raw = F.signum(F.col("price") - F.lag("price").over(w))

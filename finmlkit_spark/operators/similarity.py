@@ -451,22 +451,9 @@ def kmeans_assign(
         ] + ([F.col("v")] if keep_vector else [])
         return e.select(*cols).where(F.lit(False))
     if state == "driver":
-        # partition probe costs ~50-100 ms of physical planning
-        # (measured round 8) — cache it on the INPUT frame object: the
-        # memoized source relations return the SAME DataFrame across
-        # calls, so a bench/driver session probes once; a repartitioned
-        # input is a new object and re-probes correctly. Only the tree-
-        # fold gate consumes it (iters == 0 never folds).
-        nparts = getattr(emb_df, "_fmk_nparts", None)
-        if nparts is None:
-            if iters > 0:
-                nparts = emb_df.rdd.getNumPartitions()
-                try:
-                    emb_df._fmk_nparts = nparts
-                except AttributeError:
-                    pass
-            else:
-                nparts = 1
+        # only the tree-fold crossover reads the partition count, and
+        # iters == 0 never folds
+        nparts = emb_df.rdd.getNumPartitions() if iters > 0 else 1
         # the seed fetch (first k vectors by id) is another per-call job
         # (~0.1 s) over the same memoized frame — cached via the public
         # accessor; callers with fixed/trained centroids pass `seeds`
@@ -496,7 +483,7 @@ def kmeans_seeds(
 ) -> list[tuple[int, list[float], float]]:
     """Public accessor for :func:`kmeans_assign`'s seed centroids (first
     k vectors by id, norms precomputed with the sequential fold) —
-    session-cached on the input frame like the partition probe. Pass
+    session-cached on the input frame object. Pass
     the result as ``kmeans_assign(..., seeds=...)`` to share one seed
     fetch across multiple assignment calls (e.g. an IVF index build and
     its query-side assignment), or hand in externally trained
@@ -520,7 +507,7 @@ def kmeans_seeds(
 def _probe_dim(emb_df: DataFrame, emb_col: str) -> int:
     """One-row embedding-width probe (driver-side scalar config
     inference, the SURVEY §7-sanctioned pattern) — session-cached on the
-    frame object like the partition probe so composed operators pay ONE
+    frame object like :func:`kmeans_seeds` so composed operators pay ONE
     head(1) job per source frame."""
     cache_ = getattr(emb_df, "_fmk_emb_dim", None)
     d = cache_.get(emb_col) if cache_ is not None else None
@@ -570,16 +557,7 @@ def kmeans_centroids(
     cents = cache_.get(key) if cache_ is not None else None
     if cents is None:
         e = emb_df.select(F.col(id_col).alias("vid"), as_double(emb_col).alias("v"))
-        nparts = getattr(emb_df, "_fmk_nparts", None)
-        if nparts is None:
-            if iters > 0:
-                nparts = emb_df.rdd.getNumPartitions()
-                try:
-                    emb_df._fmk_nparts = nparts
-                except AttributeError:
-                    pass
-            else:
-                nparts = 1
+        nparts = emb_df.rdd.getNumPartitions() if iters > 0 else 1
         seeds = kmeans_seeds(emb_df, k, id_col, emb_col)
         cents = (
             _kmeans_train_driver(e, k, iters, ndigits, dim, nparts, seeds)
@@ -2113,13 +2091,14 @@ def ann_ivf_sq8(
     )
 
 
+#: corpus rows from which :func:`ann_sq8_search` takes the IVF side
+ANN_IVF_MIN_ROWS = 262_144
+
+
 def ann_sq8_search(
     emb_df: DataFrame,
     n_queries: int = 10,
     k: int = 5,
-    mode: str = "auto",
-    n_rows: int | None = None,
-    ivf_crossover: int = 262_144,
     k_coarse: int = 8,
     nprobe: int = 2,
     id_col: str = "vec_id",
@@ -2128,21 +2107,17 @@ def ann_sq8_search(
     seeds: list | None = None,
     bounds=None,
 ) -> DataFrame:
-    """Routed SQ8 ANN entry point — the round-12 auto-crossover the
-    segment_dedup/flagship gates use (``corpus.py::segment_dedup``):
-    small corpora take the exact full-scan :func:`ann_sq8_topk`
-    (every encoded row scored per query — the honest baseline, and
-    cheaper than building a coarse index below the crossover), large
-    corpora take the IVF-restricted :func:`ann_ivf_sq8` (only the
-    ``nprobe`` probed cells' candidates are scored — the 100 TB path;
-    measured sf0.1→sf1 growth 2.0× vs the full scan's 3.6×, SCALE.md).
+    """Routed SQ8 ANN entry point: corpora below ``ANN_IVF_MIN_ROWS``
+    take the exact full-scan :func:`ann_sq8_topk` (every encoded row
+    scored per query — the honest baseline, and cheaper than building a
+    coarse index below the crossover), larger corpora take the
+    IVF-restricted :func:`ann_ivf_sq8` (only the ``nprobe`` probed
+    cells' candidates are scored — the 100 TB path; measured sf0.1→sf1
+    growth 2.0× vs the full scan's 3.6×, SCALE.md).
 
-    ``mode``: ``"full"`` / ``"ivf"`` force a side; ``"auto"`` routes on
-    ``n_rows`` (pass a parquet-footer count when you have one — the
-    suite's ``_parquet_num_rows`` posture, no Spark job). When
-    ``n_rows`` is None under auto, ONE narrow count job on the pruned
-    id column decides (cheap next to the search itself; documented
-    rather than hidden).
+    ``cache.rows_at_most`` decides, and either side reads its cut, so
+    the corpus upstream runs once; under ``cache._FORCE_DISTRIBUTED``
+    the IVF side runs. Callers that want one side call it directly.
 
     The two sides agree WHERE THEY OVERLAP: both score with the same
     int64 asymmetric distance over the same SQ8 codes, so any
@@ -2152,13 +2127,8 @@ def ann_sq8_search(
     the probed cells — that recall trade is the point of the index
     (measured honestly by ``lsh_recall_audit``'s sibling posture).
     """
-    if mode not in ("auto", "full", "ivf"):
-        raise ValueError(f"unknown mode {mode!r}")
-    if mode == "auto":
-        if n_rows is None:
-            n_rows = emb_df.select(id_col).count()
-        mode = "full" if n_rows < ivf_crossover else "ivf"
-    if mode == "full":
+    emb_df, small = cache.rows_at_most(emb_df, ANN_IVF_MIN_ROWS - 1)
+    if small:
         return ann_sq8_topk(
             emb_df, n_queries, k, id_col, emb_col, ndigits, bounds=bounds
         )

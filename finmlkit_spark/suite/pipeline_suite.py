@@ -2,21 +2,20 @@
 1-minute bars -> 12 inter-bar features, all in ONE Catalyst plan
 (single select over the bar aggregation; the reference runs this as
 EP1+EP2, SURVEY.md §3). This is the headline bench workload: one scan,
-one shuffle for the bar groupBy, and — since round 3 — ZERO
-``Exchange SinglePartition`` nodes: the feature windows run per row-
-chunk with warmup-row duplication (``functions.chunked_window``), so
-every stage of the flagship parallelizes across executors while staying
-bit-identical to the global-window oracle (bounded frames + warmup
-overlap => identical frame contents per row)."""
+one shuffle for the bar groupBy and, on the scale side of its crossover,
+ZERO ``Exchange SinglePartition`` nodes: the feature windows run per
+row-chunk with warmup-row duplication (``functions.chunked_window``),
+so every stage of the flagship parallelizes across executors while
+staying bit-identical to the global-window oracle (bounded frames +
+warmup overlap => identical frame contents per row)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .. import cache
 from ..functions import chunked_window as CW
 from ..functions import rolling as R
-from ._registry import query
+from ._registry import parquet_rows_below, query
 from .features_suite import _B, _guard, _wf, bars_1m, _w
 
 
@@ -30,9 +29,8 @@ FLAGSHIP_WARMUP = 24
 #: machinery's two shuffle+sort passes (same measured-crossover posture
 #: as ``preprocess.SIDE_SMALL_ROWS`` — both paths are bit-identical, so
 #: the switch is purely a cost decision). The bar count is bounded by
-#: the upstream trade count, so a sub-threshold TRADE stream implies a
-#: sub-threshold bar stream — callers may pass the (cheaply known)
-#: upstream row count as ``input_rows`` without executing the bar agg.
+#: the upstream event count, so :func:`pipeline_1m_features` decides
+#: from the events footer without executing the bar agg.
 FLAGSHIP_SMALL_ROWS = 1_000_000
 
 #: memoized flagship projection Columns (see _flagship_project)
@@ -151,28 +149,19 @@ def flagship_feature_stage(
     chunk_rows: int = 8192,
     persist: bool = True,
     mode: str = "chunked",
-    input_rows: int | None = None,
 ):
     """The flagship's 12-feature window block over OHLCV bars.
 
     ``mode="chunked"`` evaluates partition-parallel via chunked windows
     (zero SinglePartition — the 100 TB plan); ``"global"`` plans the
     plain ordered window (one exchange, no chunk machinery — faster
-    below the crossover); ``"auto"`` picks global when ``input_rows``
-    (an upstream row-count BOUND, e.g. the trade count from a parquet
-    footer) is under ``FLAGSHIP_SMALL_ROWS``, else chunked. Results are
-    row-identical across modes (bounded frames + warmup overlap =>
-    identical frame contents per row — see chunked_window docs).
-    ``cache._FORCE_DISTRIBUTED`` forces ``"chunked"``.
+    below ``FLAGSHIP_SMALL_ROWS``). Results are row-identical across
+    modes (bounded frames + warmup overlap => identical frame contents
+    per row — see chunked_window docs). The crossover rule lives in
+    :func:`pipeline_1m_features`, the one caller that can read a bound.
     Reused by the registry query and the bench's synthetic scale probe."""
-    if cache._FORCE_DISTRIBUTED:
-        mode = "chunked"
-    if mode == "auto":
-        mode = (
-            "global"
-            if input_rows is not None and input_rows < FLAGSHIP_SMALL_ROWS
-            else "chunked"
-        )
+    if mode not in ("global", "chunked"):
+        raise ValueError(f"mode must be global|chunked, got {mode!r}")
     if mode == "global":
         from pyspark.sql import Window
 
@@ -221,53 +210,18 @@ FROM trq""",
 def pipeline_1m_features(spark, sf_dir):
     """Events -> trades -> 1m bars -> 12 features, one logical plan.
 
-    Window mode is auto-selected: the events parquet footer's row count
-    bounds the bar count from above (bars aggregate trades), so below
-    the crossover the plan uses the plain global window and skips the
-    chunk machinery's two extra shuffle+sort passes — bit-identical
-    output either way (``test_chunked_window`` pins the equivalence;
-    ``test_plan_regression`` pins the chunked plan at the forced
-    at-scale setting)."""
-    n = _parquet_num_rows(f"{sf_dir}/events.parquet")
-    # resolve the mode HERE too (same rule flagship_feature_stage
-    # applies, including cache._FORCE_DISTRIBUTED) so the below-crossover
-    # form can also build its bars single-partition: the global window
-    # serializes anyway, and moving the boundary below the agg fuses
-    # agg+window+projection into one post-shuffle stage (bars_1m
-    # ``onepart`` doc). The chunked/at-scale plan never takes this
-    # branch — test_plan_regression's zero-SinglePartition pin holds.
-    mode = (
-        "global"
-        if n is not None and n < FLAGSHIP_SMALL_ROWS and not cache._FORCE_DISTRIBUTED
-        else "chunked"
-    )
+    The flagship crossover: the events parquet footer's row count bounds
+    the bar count from above (bars aggregate trades), so below
+    ``FLAGSHIP_SMALL_ROWS`` events the plan uses the plain global window
+    and skips the chunk machinery's two extra shuffle+sort passes —
+    bit-identical output either way (``test_chunked_window`` pins the
+    equivalence and both plans). The small side also builds its bars
+    single-partition: the global window serializes anyway, and moving
+    the boundary below the agg fuses agg+window+projection into one
+    post-shuffle stage (bars_1m ``onepart`` doc). The scale side never
+    does — test_plan_regression's zero-SinglePartition pin holds."""
+    small = parquet_rows_below(f"{sf_dir}/events.parquet", FLAGSHIP_SMALL_ROWS)
     return flagship_feature_stage(
-        bars_1m(spark, sf_dir, seq=False, onepart=(mode == "global")),
-        mode=mode,
-        input_rows=n,
+        bars_1m(spark, sf_dir, seq=False, onepart=small),
+        mode="global" if small else "chunked",
     )
-
-
-def _parquet_num_rows(path: str) -> int | None:
-    """Footer-only row count for BOTH single-file and directory-style
-    (Spark-written) parquet tables — no Spark job. Returns None when the
-    footers can't be read: the probe is a pure cost heuristic, and on
-    None ``mode="auto"`` conservatively picks the chunked plan instead
-    of turning the heuristic into a hard failure."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    try:
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        total += pq.ParquetFile(
-                            os.path.join(root, f)
-                        ).metadata.num_rows
-            return total
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return None

@@ -21,7 +21,7 @@ from ..operators import sampling as SMP
 from ..operators import similarity as SIM
 from ..operators import text as TX
 from ..sources.tables import read_table
-from ._registry import ORACLES, query
+from ._registry import ORACLES, parquet_rows_below, query
 
 # --- shared DuckDB fragments ------------------------------------------------
 
@@ -30,6 +30,15 @@ _PH = (
     "list_transform(string_split({e}, ''), ch -> CAST(ascii(ch) AS BIGINT))), "
     "(acc, c) -> (acc * 31 + c) % 1000000007)"
 )
+
+#: documents below which a CPU-bound per-doc fold (bpe_segment,
+#: gopher_repetition) spreads the corpus across every core: a small
+#: corpus is one parquet file, read by a few tasks; at corpus scale the
+#: scan is already parallel
+SMALL_CORPUS_DOCS = 100_000
+
+#: documents below which segment_dedup takes its one-partition fused form
+SEGDEDUP_SMALL_DOCS = 20_000
 
 _TOKS = "WITH toks AS (SELECT doc_id, string_split_regex(trim(text), ' +') AS t FROM documents)"
 
@@ -1069,18 +1078,13 @@ def bpe_segment_q(spark, sf_dir):
     train → apply loop end-to-end."""
     from ..operators import corpus as CP
 
-    from .pipeline_suite import _parquet_num_rows
-
     merges = [
         (r["lhs"], r["rhs"])
         for r in CP.bpe_train(_docs(spark, sf_dir), n_merges=10).collect()
     ]
     docs = _docs(spark, sf_dir)
-    # the chained merge folds are CPU-bound per row: spread a small
-    # single-partition file across cores (the gopher_repetition
-    # crossover); at corpus scale the scan is already parallel
-    n = _parquet_num_rows(f"{sf_dir}/documents.parquet")
-    if n is not None and n < 100_000:
+    # the chained merge folds are CPU-bound per row
+    if parquet_rows_below(f"{sf_dir}/documents.parquet", SMALL_CORPUS_DOCS):
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
     return CP.bpe_apply(docs, merges)
 
@@ -1481,12 +1485,10 @@ def gopher_repetition_q(spark, sf_dir):
     keep decision. Shares round to 6 digits; the keep decision is
     exact-integer on both engines."""
     from ..operators import corpus as CP
-    from .pipeline_suite import _parquet_num_rows
 
-    n = _parquet_num_rows(f"{sf_dir}/documents.parquet")
     par = (
         spark.sparkContext.defaultParallelism
-        if n is not None and n < 100_000
+        if parquet_rows_below(f"{sf_dir}/documents.parquet", SMALL_CORPUS_DOCS)
         else None
     )
     out = CP.gopher_repetition(_docs(spark, sf_dir), parallelism=par)
@@ -2182,17 +2184,14 @@ def segment_dedup_q(spark, sf_dir):
     keeps only its first corpus occurrence; docs are reassembled from
     the surviving segments (md5-fingerprinted for the compare).
 
-    Below ~20k docs (parquet footer count, no Spark job) the operator
-    takes its one-partition fused form — the digest-parallel window
-    buys nothing at bench scale and its extra exchanges cost 3 of the
-    4 AQE job barriers (round-10 A/B); sf1 (50k docs) and beyond keep
-    the at-scale digest-partitioned plan."""
-    from .pipeline_suite import _parquet_num_rows
-
-    n = _parquet_num_rows(f"{sf_dir}/documents.parquet")
+    Below ``SEGDEDUP_SMALL_DOCS`` docs (parquet footer count, no Spark
+    job) the operator takes its one-partition fused form: there the
+    digest-parallel window buys nothing, and its extra exchanges are 3
+    of the scale plan's 4 AQE job barriers. sf1 (50k docs) and beyond
+    keep the at-scale digest-partitioned plan."""
     return CP.segment_dedup(
         _docs(spark, sf_dir), seg_tokens=8,
-        onepart=(n is not None and n < 20_000),
+        onepart=parquet_rows_below(f"{sf_dir}/documents.parquet", SEGDEDUP_SMALL_DOCS),
     )
 
 
@@ -2727,9 +2726,9 @@ def ann_sq8_topk_q(spark, sf_dir):
     exact-query-vs-dequantized-candidate squared L2 in 1e-6-quantized
     int64 (rank-exact vs the oracle). This registration pins the
     LABELED full-scan baseline so the oracle stays total; user code
-    should call ``similarity.ann_sq8_search`` (round-12), which
-    footer-gates onto ``ann_ivf_sq8`` above the corpus-size crossover
-    — the scale path this baseline exists to be measured against."""
+    should call ``similarity.ann_sq8_search``, which routes onto
+    ``ann_ivf_sq8`` above the corpus-size crossover — the scale path
+    this baseline exists to be measured against."""
     return SIM.ann_sq8_topk(_embs(spark, sf_dir), n_queries=10, k=5)
 
 

@@ -32,34 +32,35 @@ def duck():
 
 @pytest.fixture
 def gate_sides(monkeypatch):
-    """``run(fn) -> (driver, distributed)``: calls ``fn`` twice, first
-    in auto (asserting every ``cache.collect_if_small`` call took the
-    driver side), then with the forced-distributed hook on (asserting
-    the gate was hit and collected nothing). ``fn`` must build AND
-    collect the operator's output."""
+    """``run(fn) -> (small, scale)``: calls ``fn`` twice, first in auto
+    (asserting every size probe — ``cache.collect_if_small`` and
+    ``cache.rows_at_most`` share one — took the small side), then with
+    the forced-distributed hook on (asserting a probe was hit and took
+    the scale side). ``fn`` must build AND collect the operator's
+    output."""
     from finmlkit_spark import cache
 
-    real = cache.collect_if_small
+    real = cache._probe
     sides = []
 
-    def spy(df, max_rows):
-        out = real(df, max_rows)
+    def spy(*args):
+        out = real(*args)
         sides.append(out[1] is not None)
         return out
 
-    monkeypatch.setattr(cache, "collect_if_small", spy)
+    monkeypatch.setattr(cache, "_probe", spy)
 
     def run(fn):
         sides.clear()
-        drv = fn()
-        assert sides and all(sides), "auto did not take the driver side"
+        small = fn()
+        assert sides and all(sides), "auto did not take the small side"
         sides.clear()
         monkeypatch.setattr(cache, "_FORCE_DISTRIBUTED", True)
         try:
-            dist = fn()
+            scale = fn()
         finally:
             monkeypatch.setattr(cache, "_FORCE_DISTRIBUTED", False)
-        assert sides and not any(sides), "the forced run collected"
-        return drv, dist
+        assert sides and not any(sides), "the forced run took the small side"
+        return small, scale
 
     return run

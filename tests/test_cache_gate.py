@@ -1,8 +1,9 @@
-"""Contract of ``cache.collect_if_small``, the one driver gate: the
+"""Contract of the two size probes, ``cache.collect_if_small`` (the
+driver gate) and ``cache.rows_at_most`` (the plan crossovers): the
 upstream plan executes exactly once on either side of the bound, the
 driver side receives every row, and the forced-distributed hook never
-collects. The gated single-stream scans keep that contract when their
-output feeds two actions."""
+probes. The gated single-stream scans and the side window keep that
+contract when their output feeds an action."""
 
 from __future__ import annotations
 
@@ -11,6 +12,8 @@ from pyspark.sql import functions as F
 
 from finmlkit_spark import cache
 from finmlkit_spark.functions import sequential as S
+from finmlkit_spark.operators import bars as B
+from finmlkit_spark.operators import preprocess as P
 
 N = 20_000
 
@@ -67,6 +70,96 @@ def test_empty_input(spark):
     assert tbl is not None and tbl.num_rows == 0
     assert tbl.schema.names == ["id", "x"]
     assert cut.count() == 0
+
+
+def test_rows_at_most_below_bound(spark):
+    df, acc = _counted(spark)
+    cut, fits = cache.rows_at_most(df, N)
+    assert fits is True
+    assert acc.value == N
+    assert cut.agg(F.sum("x")).collect()[0][0] == N * (N - 1)
+    assert acc.value == N
+
+
+def test_rows_at_most_above_bound(spark):
+    df, acc = _counted(spark)
+    cut, fits = cache.rows_at_most(df, N - 1)
+    assert fits is False
+    assert acc.value == N  # the LIMIT probe materialized the whole cut
+    assert cut.agg(F.sum("x")).collect()[0][0] == N * (N - 1)
+    assert cut.count() == N
+    assert acc.value == N
+
+
+def test_rows_at_most_forced_never_probes(spark, monkeypatch):
+    monkeypatch.setattr(cache, "_FORCE_DISTRIBUTED", True)
+    df, acc = _counted(spark)
+    cut, fits = cache.rows_at_most(df, N)
+    assert fits is False
+    assert acc.value == 0  # no probe ran
+    assert cut.agg(F.sum("x")).collect()[0][0] == N * (N - 1)
+    assert acc.value == N
+
+
+def test_rows_at_most_empty_input(spark):
+    df = spark.range(0).withColumn("x", F.col("id") * 2)
+    cut, fits = cache.rows_at_most(df, 0)
+    assert fits is True
+    assert cut.columns == ["id", "x"]
+    assert cut.count() == 0
+
+
+def test_probe_job_names_its_call_site(spark):
+    """The probe job carries a description naming the caller and bound
+    (the checkpointed column records the description of the job that
+    materialized it), and the caller's own description comes back."""
+    from pyspark import TaskContext
+
+    sc = spark.sparkContext
+    desc = F.udf(lambda _: TaskContext.get().getLocalProperty("spark.job.description"), "string")
+    df = spark.range(0, 4, numPartitions=2).withColumn("d", desc("id"))
+    sc.setJobDescription("outer")
+    try:
+        cut, fits = cache.rows_at_most(df, 10)
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    assert fits
+    site = f"{__name__}.test_probe_job_names_its_call_site"
+    assert {r["d"] for r in cut.collect()} == {f"size probe {site}: rows <= 10"}
+
+
+#: the side window's auto mode, over the counted frame as one trade stream
+SIDE_AUTO = {
+    "with_trade_side_chunked": lambda tr: P.with_trade_side_chunked(
+        tr, chunk_ns=N // 4
+    ).select("trade_id", "side"),
+    "bar_directional_features_chunked": lambda tr: B.bar_directional_features_chunked(
+        B.with_time_bar(tr, 1000), chunk_ns=N // 4
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(SIDE_AUTO))
+def test_side_auto_runs_upstream_once(spark, gate_sides, name):
+    """The side window's auto mode plans either side over the probe's
+    cut: the counted upstream runs once for the build plus one action,
+    and both sides return the same rows."""
+
+    def run():
+        df, acc = _counted(spark)
+        trades = df.select(
+            F.col("id").alias("ts_ns"),
+            F.col("id").alias("trade_id"),
+            (F.col("x") % 7).cast("double").alias("price"),
+            F.lit(1.0).alias("qty"),
+        )
+        rows = sorted(SIDE_AUTO[name](trades).collect())
+        assert acc.value == N
+        return rows
+
+    small, scale = gate_sides(run)
+    assert small and small == scale
 
 
 #: the gated single-stream scans, over the counted frame's (id, x)

@@ -194,28 +194,24 @@ def test_flagship_modes_bit_identical(spark):
         assert g[k] == c[k], (k, g[k], c[k])
 
 
-def test_flagship_auto_crossover_picks_mode_by_input_rows(spark, monkeypatch):
-    """mode='auto' plans the global window below FLAGSHIP_SMALL_ROWS and
-    the chunked zero-SinglePartition plan at/above it (or when the bound
-    is unknown); the force hook overrides the caller's choice."""
+def test_flagship_crossover_picks_mode_by_footer_rows(spark, monkeypatch):
+    """pipeline_1m_features owns the flagship crossover: at sf0.001 (an
+    events footer far below FLAGSHIP_SMALL_ROWS) it plans the global
+    window, under the hook the chunked zero-SinglePartition plan; and
+    flagship_feature_stage plans exactly the mode it is given."""
     from finmlkit_spark import cache
+    from finmlkit_spark.suite import QUERIES
     from finmlkit_spark.suite import pipeline_suite as PS
     from finmlkit_spark.suite.features_suite import bars_1m
 
-    bars = bars_1m(spark, "/root/testdata/sf0.001", seq=False)
-
-    def plan(**kw):
-        df = PS.flagship_feature_stage(bars, persist=False, **kw)
+    def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    assert "SinglePartition" in plan(mode="auto", input_rows=10)
+    bars = bars_1m(spark, SF_SMALL, seq=False)
+    assert "SinglePartition" in plan(PS.flagship_feature_stage(bars, mode="global"))
     assert "SinglePartition" not in plan(
-        mode="auto", input_rows=PS.FLAGSHIP_SMALL_ROWS
+        PS.flagship_feature_stage(bars, persist=False, mode="chunked")
     )
-    # unknown bound -> conservative chunked plan
-    assert "SinglePartition" not in plan(mode="auto", input_rows=None)
-    assert "SinglePartition" in plan(mode="global")
-    # the test hook wins over the caller's choice
+    assert "SinglePartition" in plan(QUERIES["pipeline_1m_features"](spark, SF_SMALL))
     monkeypatch.setattr(cache, "_FORCE_DISTRIBUTED", True)
-    assert "SinglePartition" not in plan(mode="global")
-    assert "SinglePartition" not in plan(mode="auto", input_rows=10)
+    assert "SinglePartition" not in plan(QUERIES["pipeline_1m_features"](spark, SF_SMALL))

@@ -729,52 +729,33 @@ def test_diverse_sample_max_min_property(spark):
         assert g[2] == pytest.approx(w[2], abs=1e-9)
 
 
-def test_ann_sq8_route_crossover(spark):
-    """Round-12 auto-route: ann_sq8_search must take the exact full
-    scan below the crossover and the IVF-restricted search above it,
-    and the two sides must agree bit-for-bit on every (query, cand)
-    pair they BOTH rank — same codes, same int64 distance fold; only
-    top-k membership may differ (the IVF recall trade)."""
+def test_ann_sq8_route_crossover(spark, gate_sides):
+    """ann_sq8_search's route: in auto at sf0.001 (far below
+    ANN_IVF_MIN_ROWS) it must equal the exact full scan, forced to the
+    scale side it must equal the IVF-restricted search, and the two
+    sides must agree bit-for-bit on every (query, cand) pair they BOTH
+    rank — same codes, same int64 distance fold; only top-k membership
+    may differ (the IVF recall trade)."""
     import struct
 
     from finmlkit_spark.operators import similarity as SIM
 
     embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-
-    full = SIM.ann_sq8_search(embs, n_queries=5, k=4, mode="full").collect()
-    ivf = SIM.ann_sq8_search(embs, n_queries=5, k=4, mode="ivf").collect()
-    assert full and ivf
-
-    # auto routes on n_rows around the crossover, no count job needed
-    lo = SIM.ann_sq8_search(embs, n_queries=5, k=4, mode="auto", n_rows=100).collect()
-    hi = SIM.ann_sq8_search(
-        embs, n_queries=5, k=4, mode="auto", n_rows=10**9
-    ).collect()
     key = lambda rows: sorted((r["query_id"], r["cand_id"], r["sq_dist"], r["rank"]) for r in rows)
-    assert key(lo) == key(full)
-    assert key(hi) == key(ivf)
+
+    full, ivf = gate_sides(lambda: key(SIM.ann_sq8_search(embs, n_queries=5, k=4).collect()))
+    assert full and ivf
+    assert full == key(SIM.ann_sq8_topk(embs, n_queries=5, k=4).collect())
+    assert ivf == key(SIM.ann_ivf_sq8(embs, n_queries=5, k=4).collect())
 
     # overlap bit-identity: shared (query, cand) pairs carry the same
     # sq_dist down to the float64 bit pattern
-    fmap = {(r["query_id"], r["cand_id"]): r["sq_dist"] for r in full}
-    imap = {(r["query_id"], r["cand_id"]): r["sq_dist"] for r in ivf}
+    fmap = {(q, c): d for q, c, d, _ in full}
+    imap = {(q, c): d for q, c, d, _ in ivf}
     shared = set(fmap) & set(imap)
     assert shared, "IVF and full scan shared no pairs — test data degenerate"
     for p in shared:
         assert struct.pack("<d", fmap[p]) == struct.pack("<d", imap[p]), p
-
-
-def test_ann_sq8_route_auto_counts_when_unhinted(spark):
-    """mode='auto' without an n_rows hint must still route (one narrow
-    count job) — sf0.001's 1k vectors sit below the default crossover,
-    so the result equals the full scan's."""
-    from finmlkit_spark.operators import similarity as SIM
-
-    embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    auto = SIM.ann_sq8_search(embs, n_queries=3, k=3, mode="auto").collect()
-    full = SIM.ann_sq8_search(embs, n_queries=3, k=3, mode="full").collect()
-    key = lambda rows: sorted(tuple(r) for r in rows)
-    assert key(auto) == key(full)
 
 
 def test_diverse_sample_modes_bit_identical(spark, gate_sides):

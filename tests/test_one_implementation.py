@@ -3,7 +3,8 @@
 No module may grow a per-module force hook (``cache._FORCE_DISTRIBUTED``
 is the one hook: it sends every crossover to its scale side), and no
 public function may let its caller pick an engine — a second engine is
-a second implementation to keep bit-identical with the first.
+a second implementation to keep bit-identical with the first — or pass
+a row-count hint: a size the code can measure is not a caller option.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ import pkgutil
 import finmlkit_spark
 
 ALLOWED_FORCE = {("finmlkit_spark.cache", "_FORCE_DISTRIBUTED")}
+ROW_HINTS = {"small_rows", "n_rows", "input_rows"}
 
 
 def _modules():
@@ -51,5 +53,16 @@ def test_no_engine_parameter():
         for mod in _modules()
         for name, fn in _public_functions(mod)
         if "engine" in inspect.signature(fn).parameters
+    ]
+    assert offenders == []
+
+
+def test_no_row_count_hint_parameter():
+    offenders = [
+        f"{mod.__name__}.{name}({p})"
+        for mod in _modules()
+        for name, fn in _public_functions(mod)
+        for p in inspect.signature(fn).parameters
+        if p in ROW_HINTS or p.endswith("_crossover")
     ]
     assert offenders == []

@@ -32,21 +32,28 @@ def test_query_matches_oracle(name, spark, duck):
     assert not errs, f"{name}: {errs}"
 
 
-#: queries whose operators sit behind ``cache.collect_if_small``; sf0.001
-#: inputs are small, so the test above covers their driver side
+#: queries with a size crossover (a ``cache`` probe or a parquet footer
+#: check); sf0.001 inputs are small, so the test above covers their
+#: small side
 GATED = [
     "avg_uniqueness_sweep",
+    "bar_directional_1m",
     "bpe_segment",
     "bpe_train",
     "dedup_clusters",
     "dedup_keep_best",
     "diverse_sample",
     "dup_graph_pagerank",
+    "feat_vpin",
+    "gopher_repetition",
     "keep_central",
+    "pipeline_1m_features",
     "return_attribution_sweep",
+    "segment_dedup",
     "seq_cusum_filter_chunked",
     "seq_ewma_parallel",
     "seq_ewms_parallel",
+    "trades_side",
 ]
 
 
