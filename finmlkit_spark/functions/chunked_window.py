@@ -132,7 +132,9 @@ def with_row_chunks(
 
     Warmup rows are produced by an ``explode`` of a 1- or 2-element
     chunk-id array, NOT a union of two branches — the upstream subtree
-    appears ONCE in the plan. The remaining double-reference is the tiny
+    appears ONCE in the plan. ``warmup=0`` (the closed-combine scans in
+    ``functions.sequential``) duplicates nothing, so it plans no
+    ``explode`` and no phantom chunk. The remaining double-reference is the tiny
     per-bucket count aggregate inside :func:`with_global_row_number`;
     pass ``persist=True`` to cut it with a storage boundary when the
     input is itself an expensive subtree (e.g. a bar aggregation over a
@@ -147,6 +149,8 @@ def with_row_chunks(
     )
     pos = (F.col(GLOBAL_RN) - 1) % chunk_rows
     base = F.floor((F.col(GLOBAL_RN) - 1) / chunk_rows)
+    if warmup == 0:
+        return d.withColumn(CHUNK, base).withColumn(WARM, F.lit(False))
     targets = F.when(
         pos >= chunk_rows - warmup, F.array(base, base + 1)
     ).otherwise(F.array(base))

@@ -8,9 +8,29 @@ sequential *within* a (symbol) group, parallel *across* groups, exactly
 mirroring the reference's per-array Numba kernels run per instrument.
 
 Scale posture (100 TB): state per group is O(1)-O(window), so the only
-constraint is one task per symbol; for a single huge symbol the
-``*_parallel`` / ``*_chunked`` scans split the rows into chunks and
-carry the exact cross-chunk state (no warmup truncation).
+constraint is one task per symbol. A single huge symbol takes one of two
+scale families, both chunk-parallel with no warmup truncation and no
+``SinglePartition`` exchange:
+
+- closed-combine scans (``ewma_parallel``, ``ewms_parallel``,
+  ``rsi_parallel``, ``atr_ema_parallel`` through :func:`_closed_scan`;
+  ``ewmst_parallel`` with a time-anchored combine): the recurrence is
+  linear, so chunk-local sums plus a closed-form decayed carry give
+  every row its full history. Contract: within 1e-11 relative of the
+  sequential kernel (EW std: 1e-9) — float reassociation only;
+- chunk-stitch scans (``cusum_filter_chunked``,
+  ``cusum_bar_ids_chunked``, ``cusum_adaptive_bars_chunked`` through
+  :class:`_ChunkStitch`): the reset state machines have no closed
+  combine, so exact entry states are found by a driver-chained fixed
+  point and the same kernel is replayed. Contract: bit-identical to the
+  sequential kernel.
+
+(``cusum_test_chunked`` looks back a bounded ``w`` rows, so the warmup
+row chunks of ``chunked_window`` alone make it bit-identical.)
+
+``ewma_parallel``, ``ewms_parallel`` and ``cusum_filter_chunked`` also
+run their sequential kernel on the driver when the stream is at most
+:data:`SEQ_DRIVER_MAX_ROWS` rows (:func:`_driver_scan`).
 
 Reference behavior parity (math re-derived, no code reuse):
 EWMA family ``core/ma.py:6-43``, EW std ``core/volatility.py:9-219``,
@@ -27,8 +47,10 @@ from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .chunked_window import CHUNK, GLOBAL_RN, WARM, with_row_chunks
 
 
 def apply_sequential(
@@ -58,7 +80,7 @@ def apply_sequential(
 
 
 #: Largest single stream (rows) that :func:`ewma_parallel`,
-#: :func:`ewms_parallel` (``by=None``) and :func:`cusum_filter_chunked`
+#: :func:`ewms_parallel` and :func:`cusum_filter_chunked`
 #: hand to their sequential kernel on the driver; larger inputs run the
 #: chunk scan. Measured crossover: SCALE.md "Sequential driver gate".
 SEQ_DRIVER_MAX_ROWS = 1_000_000
@@ -140,127 +162,159 @@ def ewmst(ts_ns: np.ndarray, y: np.ndarray, halflife_ns: float) -> np.ndarray:
     return out
 
 
+# --- closed-combine scans ---------------------------------------------------
+
+
+def _earlier_chunks(left: DataFrame, summary: DataFrame) -> DataFrame:
+    """The triangular join behind every cross-chunk carry: each ``_ck``
+    row of ``left`` meets the ``summary`` row of every strictly earlier
+    chunk (its chunk id renamed ``_ckb``); chunk 0 keeps one NULL row."""
+    return left.join(
+        summary.withColumnRenamed("_ck", "_ckb"), F.col("_ckb") < F.col("_ck"), "left"
+    )
+
+
+def _decayed_count(valid: np.ndarray, q: float) -> np.ndarray:
+    """Σ_{j<=t, valid_j} q^(t−j) over one chunk — the ``ignore_na=False``
+    weight sum: the closed form (1 − q^p)/(1 − q) when every row is
+    valid, else that times the EW mean of the validity flags."""
+    p = np.arange(1, len(valid) + 1, dtype=np.float64)
+    full = (1.0 - q**p) / (1.0 - q)
+    if valid.all():
+        return full
+    flags = pd.Series(valid, dtype=np.float64)
+    return flags.ewm(alpha=1.0 - q, adjust=True).mean().to_numpy() * full
+
+
+def _closed_scan(
+    df: DataFrame,
+    order_col: str,
+    chunk_rows: int,
+    warmup: int,
+    local: Callable[[pd.DataFrame, np.ndarray, int], dict[str, np.ndarray]],
+    decay: dict[str, float],
+    final: Callable[[dict[str, Column]], Column],
+    out: str,
+    rn_col: str | None = None,
+) -> DataFrame:
+    """The two-pass closed-combine scan behind the ``*_parallel`` EW and
+    Wilder scans: ``(order_col[, rn_col], out)``.
+
+    Every moment M in ``decay`` is a linear recurrence
+    M_t = f_t + q·M_{t−1} with its own q. The rows of ``df`` are
+    chunked by exact global row number
+    (:func:`chunked_window.with_row_chunks`, the previous chunk's last
+    ``warmup`` rows in front, flagged ``_warm``). ``local(pdf, real,
+    ck)`` gets one chunk in global row order and returns each moment
+    over the chunk's own rows (``real``), summed from a zero state —
+    or, for a seeded recurrence, chunk 0's true seeded values. The carry
+    into chunk c decays every earlier chunk's end value across the
+    full chunks between them,
+
+        C_M(c) = Σ_{j<c} M_end(j) · q^((c−j−1)·chunk_rows),
+
+    a triangular join over the one-row-per-chunk summary, and the row
+    at position pos of chunk c combines as M = M_loc + q^pos · C_M(c).
+    ``final`` maps the combined moments to the output column (it may
+    read the global row number as ``chunked_window.GLOBAL_RN``), which
+    ``rn_col`` also exposes when set.
+    """
+    d = with_row_chunks(df, order_col, warmup=warmup, chunk_rows=chunk_rows)
+
+    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(GLOBAL_RN).reset_index(drop=True)
+        real = ~pdf[WARM].to_numpy(dtype=bool)
+        ck = int(pdf[CHUNK].iloc[0])
+        mom = local(pdf, real, ck)
+        return pd.DataFrame(
+            {
+                order_col: pdf[order_col].to_numpy()[real],
+                GLOBAL_RN: pdf[GLOBAL_RN].to_numpy()[real],
+                "_ck": ck,
+                "_pos": np.arange(1, int(real.sum()) + 1),
+                **{f"_l_{k}": mom[k] for k in decay},
+            }
+        )
+
+    sch = ", ".join(
+        [
+            f"`{order_col}` {df.schema[order_col].dataType.simpleString()}",
+            f"`{GLOBAL_RN}` long",
+            "`_ck` long",
+            "`_pos` long",
+            *(f"`_l_{k}` double" for k in decay),
+        ]
+    )
+    scanned = d.groupBy(CHUNK).applyInPandas(scan, schema=sch)
+    summary = scanned.groupBy("_ck").agg(
+        *(F.max_by(f"_l_{k}", "_pos").alias(f"_e_{k}") for k in decay)
+    )
+    gap = (F.col("_ck") - F.col("_ckb") - 1) * chunk_rows
+    carries = (
+        _earlier_chunks(summary.select("_ck"), summary)
+        .groupBy("_ck")
+        .agg(
+            *(
+                F.coalesce(F.sum(F.col(f"_e_{k}") * F.pow(F.lit(q), gap)), F.lit(0.0)).alias(
+                    f"_c_{k}"
+                )
+                for k, q in decay.items()
+            )
+        )
+    )
+    moments = {
+        k: F.col(f"_l_{k}") + F.pow(F.lit(q), F.col("_pos")) * F.col(f"_c_{k}")
+        for k, q in decay.items()
+    }
+    rn = [F.col(GLOBAL_RN).alias(rn_col)] if rn_col else []
+    return scanned.join(F.broadcast(carries), ["_ck"]).select(
+        order_col, *rn, final(moments).alias(out)
+    )
+
+
 def ewma_parallel(
     df: DataFrame,
     col: str,
     span: float,
     order_col: str = "ts_ns",
     chunk_rows: int = 4096,
-    by: str | None = None,
     out: str = "ewma",
-    coarse_span: int = 86_400_000_000_000,
 ) -> DataFrame:
-    """EXACT parallel EWMA via a two-pass chunked scan — no warmup
-    truncation: every row's value carries the full history. The
-    sequential tier's scale answer for one huge symbol.
+    """EXACT parallel EWMA for one huge stream — no warmup truncation:
+    every row's value carries the full history.
 
     adjust=True EWMA is a ratio of two linear recurrences
     (``core/ma.py:6-43`` semantics):
 
         y_t = N_t / D_t,  N_t = x_t + q·N_{t−1},  D_t = 1 + q·D_{t−1}
 
-    with q = 1−α. Linearity gives the scan a closed combine: split rows
-    into chunks of ``chunk_rows`` by exact global row number
-    (``chunked_window.with_global_row_number`` — no global sort); each
-    chunk computes its LOCAL decayed sums independently (Arrow kernel,
-    C-speed ``pandas.ewm``); then the cross-chunk carry is a closed
-    form over the one-row-per-chunk summary table:
+    with q = 1−α, so :func:`_closed_scan` combines them: each chunk's
+    local sums come from C-speed ``pandas.ewm`` (N = mean·D), the carry
+    is the closed-form decayed sum over the earlier chunks. A NULL
+    input decays the sums without adding to them (``ignore_na=False``:
+    D counts only non-NULL rows). Terms underflow to 0 once a gap
+    exceeds ~−745/ln q rows, which is exactly the memory horizon.
 
-        carry_N(c) = Σ_{j<c} NL_j · q^(rows between end of j and start of c)
-        y_t = (N_loc,t + q^pos_t · carry_N) / (D_loc,t + q^pos_t · carry_D)
-
-    The carry sum is a triangular join over the tiny summary (same
-    pattern as chunked_window offsets; terms underflow to 0 once the
-    gap exceeds ~−745/ln q rows, which is exactly the memory horizon).
-    Deviation from the strict sequential fold is pure float
-    reassociation (~1e−12 relative; parity-tested) — NOT a truncation.
-    Parallelism = number of chunks, even within one symbol.
-
-    Driver gate (``by=None`` only; :func:`_driver_scan`): a stream of
-    at most :data:`SEQ_DRIVER_MAX_ROWS` rows runs :func:`ewma` on the
-    driver and returns its bits exactly; a larger one runs the chunk
-    scan above, within 1e−11 relative of :func:`ewma`. With ``by`` set
-    the scan is already parallel across groups and is not gated.
+    Driver gate (:func:`_driver_scan`): a stream of at most
+    :data:`SEQ_DRIVER_MAX_ROWS` rows runs :func:`ewma` on the driver and
+    returns its bits exactly; a larger one runs the chunk scan, within
+    1e−11 relative of :func:`ewma` (float reassociation only).
     """
-    from .chunked_window import with_global_row_number
-
-    if by is None:
-        df, local = _driver_scan(df, order_col, [col], out, lambda x: ewma(x, span))
-        if local is not None:
-            return local
+    df, local = _driver_scan(df, order_col, [col], out, lambda x: ewma(x, span))
+    if local is not None:
+        return local
     q = 1.0 - 2.0 / (span + 1.0)
-    by_cols = [by] if by else []
-    if by:
-        # per-group rn: the group is already the parallelism unit
-        d = df.withColumn(
-            "_rn", F.row_number().over(Window.partitionBy(by).orderBy(order_col))
-        )
-    else:
-        # single stream: exact global rn with no global sort
-        d = with_global_row_number(df, order_col, coarse_span=coarse_span, rn_col="_rn")
-    d = d.withColumn("_ck", F.floor((F.col("_rn") - 1) / chunk_rows))
-    d = d.withColumn("_pos", (F.col("_rn") - 1) % chunk_rows + 1)
 
-    def local_scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_pos").reset_index(drop=True)
+    def moments(pdf, real, ck):
         x = pdf[col].to_numpy(dtype=np.float64)
-        alpha = 2.0 / (span + 1.0)
-        p = np.arange(1, len(x) + 1, dtype=np.float64)
-        d_loc = (1.0 - q**p) / (1.0 - q)
-        # pandas C-speed ewm mean; local decayed numerator = mean·denom
-        n_loc = pd.Series(x).ewm(span=span, adjust=True, ignore_na=False).mean().to_numpy() * d_loc
-        return pd.DataFrame(
-            {
-                **{k: pdf[k] for k in by_cols},
-                order_col: pdf[order_col],
-                "_ck": pdf["_ck"],
-                "_pos": pdf["_pos"],
-                "_nloc": n_loc,
-                "_dloc": d_loc,
-            }
-        )
+        d = _decayed_count(~np.isnan(x), q)
+        mean = pd.Series(x).ewm(span=span, adjust=True, ignore_na=False).mean().to_numpy()
+        return {"n": np.where(d > 0, mean * d, 0.0), "d": d}
 
-    sch = ", ".join(
-        [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in by_cols]
-        + [
-            f"`{order_col}` {df.schema[order_col].dataType.simpleString()}",
-            "`_ck` long",
-            "`_pos` long",
-            "`_nloc` double",
-            "`_dloc` double",
-        ]
-    )
-    scanned = d.groupBy(*by_cols, "_ck").applyInPandas(local_scan, schema=sch)
+    def final(m):
+        return F.when(m["d"] > 0, m["n"] / m["d"])
 
-    summary = scanned.groupBy(*by_cols, "_ck").agg(
-        F.max_by("_nloc", "_pos").alias("_nl"),
-        F.max_by("_dloc", "_pos").alias("_dl"),
-        F.count(F.lit(1)).alias("_len"),
-    )
-    a = summary.select(*by_cols, "_ck")
-    b = summary.select(
-        *[F.col(c).alias(f"_b_{c}") for c in by_cols],
-        F.col("_ck").alias("_ckb"),
-        "_nl",
-        "_dl",
-        "_len",
-    )
-    cond = [F.col(f"_b_{c}") == F.col(c) for c in by_cols] + [F.col("_ckb") < F.col("_ck")]
-    # rows between the end of chunk j and the start of chunk c (exclusive
-    # of both chunks): full chunks strictly between them
-    gap = (F.col("_ck") - F.col("_ckb") - 1) * chunk_rows
-    carries = (
-        a.join(b, cond, "left")
-        .groupBy(*by_cols, "_ck")
-        .agg(
-            F.coalesce(F.sum(F.col("_nl") * F.pow(F.lit(q), gap)), F.lit(0.0)).alias("_cn"),
-            F.coalesce(F.sum(F.col("_dl") * F.pow(F.lit(q), gap)), F.lit(0.0)).alias("_cd"),
-        )
-    )
-    outdf = scanned.join(F.broadcast(carries), [*by_cols, "_ck"])
-    qp = F.pow(F.lit(q), F.col("_pos"))
-    y = (F.col("_nloc") + qp * F.col("_cn")) / (F.col("_dloc") + qp * F.col("_cd"))
-    return outdf.select(*by_cols, order_col, y.alias(out))
+    return _closed_scan(df, order_col, chunk_rows, 0, moments, {"n": q, "d": q}, final, out)
 
 
 def ewms_parallel(
@@ -269,119 +323,46 @@ def ewms_parallel(
     span: float,
     order_col: str = "ts_ns",
     chunk_rows: int = 4096,
-    by: str | None = None,
     out: str = "ewms",
-    coarse_span: int = 86_400_000_000_000,
 ) -> DataFrame:
     """EXACT parallel EW moving std (adjust=True, bias-corrected) — the
     four decayed moments behind :func:`ewms` (V, V2, Sy, Syy) are each
-    linear recurrences in q = 1−α (V2 in q²), so the same two-pass
-    chunked scan as :func:`ewma_parallel` combines them in closed form:
-    local moments per chunk at C speed, carries over the
-    one-row-per-chunk summary via a broadcast triangular join, then the
-    reliability-weight variance V²/(V²−V2)·(Syy/V − (Sy/V)²). Zero
-    truncation; deviation from the sequential fold is float
-    reassociation only (parity-tested). The first row is NULL.
+    linear recurrences in q = 1−α (V2 in q²), combined by
+    :func:`_closed_scan`, then the reliability-weight variance
+    V²/(V²−V2)·(Syy/V − (Sy/V)²). V and V2 count only non-NULL rows.
+    The first row is NULL.
 
-    Driver gate (``by=None`` only; :func:`_driver_scan`): a stream of
-    at most :data:`SEQ_DRIVER_MAX_ROWS` rows runs :func:`ewms` on the
-    driver and returns its bits exactly; a larger one runs the chunk
-    scan above, within 1e−9 relative of :func:`ewms`. With ``by`` set
-    the scan is already parallel across groups and is not gated.
+    Driver gate (:func:`_driver_scan`): a stream of at most
+    :data:`SEQ_DRIVER_MAX_ROWS` rows runs :func:`ewms` on the driver and
+    returns its bits exactly; a larger one runs the chunk scan, within
+    1e−9 relative of :func:`ewms`.
     """
-    from .chunked_window import with_global_row_number
-
-    if by is None:
-        df, local = _driver_scan(df, order_col, [col], out, lambda x: ewms(x, span))
-        if local is not None:
-            return local
+    df, local = _driver_scan(df, order_col, [col], out, lambda x: ewms(x, span))
+    if local is not None:
+        return local
     q = 1.0 - 2.0 / (span + 1.0)
-    q2 = q * q
-    by_cols = [by] if by else []
-    if by:
-        d = df.withColumn(
-            "_rn", F.row_number().over(Window.partitionBy(by).orderBy(order_col))
-        )
-    else:
-        d = with_global_row_number(df, order_col, coarse_span=coarse_span, rn_col="_rn")
-    d = d.withColumn("_ck", F.floor((F.col("_rn") - 1) / chunk_rows))
-    d = d.withColumn("_pos", (F.col("_rn") - 1) % chunk_rows + 1)
 
-    def local_scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_pos").reset_index(drop=True)
+    def moments(pdf, real, ck):
         x = pdf[col].to_numpy(dtype=np.float64)
-        p = np.arange(1, len(x) + 1, dtype=np.float64)
-        v = (1.0 - q**p) / (1.0 - q)
-        v2 = (1.0 - q2**p) / (1.0 - q2)
-        ew = pd.Series(x).ewm(span=span, adjust=True, ignore_na=False)
-        sy = ew.mean().to_numpy() * v
+        valid = ~np.isnan(x)
+        v = _decayed_count(valid, q)
+        sy = pd.Series(x).ewm(span=span, adjust=True, ignore_na=False).mean().to_numpy() * v
         syy = pd.Series(x * x).ewm(span=span, adjust=True, ignore_na=False).mean().to_numpy() * v
-        return pd.DataFrame(
-            {
-                **{k: pdf[k] for k in by_cols},
-                order_col: pdf[order_col],
-                "_ck": pdf["_ck"],
-                "_pos": pdf["_pos"],
-                "_v": v,
-                "_v2": v2,
-                "_sy": sy,
-                "_syy": syy,
-            }
-        )
+        return {
+            "v": v,
+            "v2": _decayed_count(valid, q * q),
+            "sy": np.where(v > 0, sy, 0.0),
+            "syy": np.where(v > 0, syy, 0.0),
+        }
 
-    sch = ", ".join(
-        [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in by_cols]
-        + [
-            f"`{order_col}` {df.schema[order_col].dataType.simpleString()}",
-            "`_ck` long",
-            "`_pos` long",
-            "`_v` double",
-            "`_v2` double",
-            "`_sy` double",
-            "`_syy` double",
-        ]
-    )
-    scanned = d.groupBy(*by_cols, "_ck").applyInPandas(local_scan, schema=sch)
+    def final(m):
+        V, V2, Sy, Syy = m["v"], m["v2"], m["sy"], m["syy"]
+        mean = Sy / V
+        var = F.greatest(Syy / V - mean * mean, F.lit(0.0)) * V * V / (V * V - V2)
+        return F.when((F.col(GLOBAL_RN) > 1) & (V * V > V2), F.sqrt(var))
 
-    summary = scanned.groupBy(*by_cols, "_ck").agg(
-        F.max_by("_v", "_pos").alias("_vl"),
-        F.max_by("_v2", "_pos").alias("_v2l"),
-        F.max_by("_sy", "_pos").alias("_syl"),
-        F.max_by("_syy", "_pos").alias("_syyl"),
-    )
-    a = summary.select(*by_cols, "_ck")
-    b = summary.select(
-        *[F.col(c).alias(f"_b_{c}") for c in by_cols],
-        F.col("_ck").alias("_ckb"),
-        "_vl",
-        "_v2l",
-        "_syl",
-        "_syyl",
-    )
-    cond = [F.col(f"_b_{c}") == F.col(c) for c in by_cols] + [F.col("_ckb") < F.col("_ck")]
-    gap = (F.col("_ck") - F.col("_ckb") - 1) * chunk_rows
-    carries = (
-        a.join(b, cond, "left")
-        .groupBy(*by_cols, "_ck")
-        .agg(
-            F.coalesce(F.sum(F.col("_vl") * F.pow(F.lit(q), gap)), F.lit(0.0)).alias("_cv"),
-            F.coalesce(F.sum(F.col("_v2l") * F.pow(F.lit(q2), gap)), F.lit(0.0)).alias("_cv2"),
-            F.coalesce(F.sum(F.col("_syl") * F.pow(F.lit(q), gap)), F.lit(0.0)).alias("_csy"),
-            F.coalesce(F.sum(F.col("_syyl") * F.pow(F.lit(q), gap)), F.lit(0.0)).alias("_csyy"),
-        )
-    )
-    outdf = scanned.join(F.broadcast(carries), [*by_cols, "_ck"])
-    qp = F.pow(F.lit(q), F.col("_pos"))
-    qp2 = F.pow(F.lit(q2), F.col("_pos"))
-    V = F.col("_v") + qp * F.col("_cv")
-    V2 = F.col("_v2") + qp2 * F.col("_cv2")
-    Sy = F.col("_sy") + qp * F.col("_csy")
-    Syy = F.col("_syy") + qp * F.col("_csyy")
-    rn = F.col("_ck") * chunk_rows + F.col("_pos")
-    m = Sy / V
-    var = F.greatest(Syy / V - m * m, F.lit(0.0)) * V * V / (V * V - V2)
-    std = F.when((rn > 1) & (V * V > V2), F.sqrt(var))
-    return outdf.select(*by_cols, order_col, std.alias(out))
+    decay = {"v": q, "v2": q * q, "sy": q, "syy": q}
+    return _closed_scan(df, order_col, chunk_rows, 0, moments, decay, final, out)
 
 
 def ewmst_parallel(
@@ -390,9 +371,7 @@ def ewmst_parallel(
     y_col: str,
     halflife_ns: float,
     chunk_rows: int = 4096,
-    by: str | None = None,
     out: str = "ewmst",
-    coarse_span: int = 86_400_000_000_000,
 ) -> DataFrame:
     """EXACT parallel time-decay EW std (:func:`ewmst` semantics) — the
     reference's volatility estimator for TBM targets, parallel within
@@ -407,29 +386,22 @@ def ewmst_parallel(
         C_M(c) = Σ_{j<c} M_end(j)·exp(−λ(T_ref(c) − T_j))
 
     — which IS the combined end-state of the previous chunks, so the
-    per-row combine is one decay factor exp(−λ(t − T_ref)). Exponents
-    are never positive: no overflow, and terms underflow to zero
-    exactly at the estimator's memory horizon. NaN inputs emit the
-    previous sample's std (sequential semantics) via an ignore-nulls
-    forward fill within the chunk, falling back to the carry's own std
-    at chunk heads; rows before any sample stay NULL.
+    per-row combine is one decay factor exp(−λ(t − T_ref)). Both T_ref
+    and the carry are triangular joins over the per-chunk summary
+    (:func:`_earlier_chunks`). Exponents are never positive: no
+    overflow, and terms underflow to zero exactly at the estimator's
+    memory horizon. NaN inputs emit the previous sample's std
+    (sequential semantics) via an ignore-nulls forward fill within the
+    chunk, falling back to the carry's own std at chunk heads; rows
+    before any sample stay NULL.
 
     Caveat (documented, irrelevant for distinct-timestamp bar data): if
     two samples share one timestamp the V²>V2 guard can suppress a
     mid-series std, and a NaN immediately after would fill from an
     older value than the sequential kernel's NaN.
     """
-    from .chunked_window import with_global_row_number
-
     lam = math.log(2.0) / float(halflife_ns)
-    by_cols = [by] if by else []
-    if by:
-        d = df.withColumn(
-            "_rn", F.row_number().over(Window.partitionBy(by).orderBy(ts_col))
-        )
-    else:
-        d = with_global_row_number(df, ts_col, coarse_span=coarse_span, rn_col="_rn")
-    d = d.withColumn("_ck", F.floor((F.col("_rn") - 1) / chunk_rows))
+    d = with_row_chunks(df, ts_col, warmup=0, chunk_rows=chunk_rows)
 
     def local_scan(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(ts_col).reset_index(drop=True)
@@ -454,9 +426,8 @@ def ewmst_parallel(
             Vv[i], V2v[i], Syv[i], Syyv[i] = V, V2, Sy, Syy
         return pd.DataFrame(
             {
-                **{k: pdf[k] for k in by_cols},
                 ts_col: pdf[ts_col],
-                "_ck": pdf["_ck"],
+                "_ck": pdf[CHUNK],
                 "_y": y,
                 "_v": Vv,
                 "_v2": V2v,
@@ -466,8 +437,7 @@ def ewmst_parallel(
         )
 
     sch = ", ".join(
-        [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in by_cols]
-        + [
+        [
             f"`{ts_col}` {df.schema[ts_col].dataType.simpleString()}",
             "`_ck` long",
             "`_y` double",
@@ -477,38 +447,27 @@ def ewmst_parallel(
             "`_syy` double",
         ]
     )
-    scanned = d.groupBy(*by_cols, "_ck").applyInPandas(local_scan, schema=sch)
+    scanned = d.groupBy(CHUNK).applyInPandas(local_scan, schema=sch)
 
     nn = scanned.where(~F.isnan("_v") & F.col("_v").isNotNull())
-    summary = nn.groupBy(*by_cols, "_ck").agg(
-        F.max(ts_col).alias("_T"),
+    summary = nn.groupBy("_ck").agg(
+        F.max(ts_col).alias("_Tb"),
         F.max_by("_v", ts_col).alias("_vl"),
         F.max_by("_v2", ts_col).alias("_v2l"),
         F.max_by("_sy", ts_col).alias("_syl"),
         F.max_by("_syy", ts_col).alias("_syyl"),
     )
-    a = summary.select(*by_cols, "_ck")
-    b = summary.select(
-        *[F.col(c).alias(f"_b_{c}") for c in by_cols],
-        F.col("_ck").alias("_ckb"),
-        F.col("_T").alias("_Tb"),
-        "_vl",
-        "_v2l",
-        "_syl",
-        "_syyl",
-    )
-    cond = [F.col(f"_b_{c}") == F.col(c) for c in by_cols] + [F.col("_ckb") < F.col("_ck")]
     tref = (
-        a.join(b, cond, "left")
-        .groupBy(*by_cols, "_ck")
+        _earlier_chunks(summary.select("_ck"), summary)
+        .groupBy("_ck")
         .agg(F.max("_Tb").alias("_Tref"))
     )
     # second triangular pass: decayed sums anchored at T_ref(c)
     dec1 = F.exp(-lam * (F.col("_Tref") - F.col("_Tb")))
     dec2 = F.exp(-2.0 * lam * (F.col("_Tref") - F.col("_Tb")))
     carries = (
-        tref.join(b, cond, "left")
-        .groupBy(*by_cols, "_ck", "_Tref")
+        _earlier_chunks(tref, summary)
+        .groupBy("_ck", "_Tref")
         .agg(
             F.coalesce(F.sum(F.col("_vl") * dec1), F.lit(0.0)).alias("_cv"),
             F.coalesce(F.sum(F.col("_v2l") * dec2), F.lit(0.0)).alias("_cv2"),
@@ -522,7 +481,7 @@ def ewmst_parallel(
         var = F.greatest(Syy / V - m * m, F.lit(0.0)) * V * V / (V * V - V2)
         return F.when((V > 0) & (V * V > V2), F.sqrt(var))
 
-    outdf = scanned.join(F.broadcast(carries), [*by_cols, "_ck"], "left")
+    outdf = scanned.join(F.broadcast(carries), ["_ck"], "left")
     has_c = F.col("_Tref").isNotNull()
     # NB: Arrow maps the kernel's NaN to Spark NULL, and Spark's
     # isnan(NULL) is FALSE — so the sample test must check BOTH
@@ -535,7 +494,7 @@ def ewmst_parallel(
     Syy = F.when(is_sample, F.col("_syy")).otherwise(F.lit(0.0)) + rdec1 * F.coalesce("_csyy", F.lit(0.0))
     std_sample = F.when(is_sample, _std(V, V2, Sy, Syy))
     outdf = outdf.withColumn("_std_s", std_sample)
-    wfill = Window.partitionBy(*by_cols, "_ck").orderBy(ts_col).rowsBetween(
+    wfill = Window.partitionBy("_ck").orderBy(ts_col).rowsBetween(
         Window.unboundedPreceding, 0
     )
     carry_std = _std(
@@ -546,7 +505,7 @@ def ewmst_parallel(
     ).otherwise(
         F.coalesce(F.last("_std_s", ignorenulls=True).over(wfill), F.when(has_c, carry_std))
     )
-    return outdf.select(*by_cols, ts_col, filled.alias(out))
+    return outdf.select(ts_col, filled.alias(out))
 
 
 def rsi_parallel(
@@ -557,44 +516,30 @@ def rsi_parallel(
     chunk_rows: int = 4096,
     out: str = "rsi",
     rn_col: str | None = None,
-    coarse_span: int = 86_400_000_000_000,
 ) -> DataFrame:
-    """EXACT parallel Wilder RSI — same two-pass closed-combine scan as
-    :func:`ewma_parallel`, single symbol, zero truncation.
+    """EXACT parallel Wilder RSI for one huge stream via
+    :func:`_closed_scan`, zero truncation.
 
     After its SMA seed, each Wilder average is one linear recurrence
     avg_t = q·avg_{t−1} + x_t/n (q = (n−1)/n). Chunk 0 runs the true
     seeded recurrence sequentially (the seed never crosses a chunk:
-    ``chunk_rows`` must exceed n); later chunks compute local decayed
-    sums at C speed, and the carry is the usual triangular combine —
-    chunk 0's summary contribution is its true seeded end state, so
-    the expansion reproduces the seeded recurrence everywhere. Each
-    chunk reads ONE warmup row (previous close) for its first diff via
-    ``chunked_window.with_row_chunks(warmup=1)``.
+    ``chunk_rows`` must exceed n+1); later chunks compute local decayed
+    sums at C speed. Chunk 0's end value is its true seeded state, so
+    the carry reproduces the seeded recurrence everywhere. Each chunk
+    reads ONE warmup row (previous close) for its first diff.
 
     ``rn_col`` optionally exposes the exact global row number (for
     warmup filtering downstream). Parity vs :func:`rsi_wilder` is float
     reassociation only.
     """
-    from .chunked_window import CHUNK, GLOBAL_RN, WARM, with_row_chunks
-
     if chunk_rows <= n + 1:
         raise ValueError(f"chunk_rows ({chunk_rows}) must exceed n+1 ({n + 1})")
     q = (n - 1.0) / n
-    d = with_row_chunks(
-        df, order_col, warmup=1, chunk_rows=chunk_rows, coarse_span=coarse_span
-    )
 
-    def local_scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(GLOBAL_RN).reset_index(drop=True)
-        close = pdf[close_col].to_numpy(dtype=np.float64)
-        warm = pdf[WARM].to_numpy(dtype=bool)
-        ck = int(pdf[CHUNK].iloc[0])
-        diff = np.diff(close, prepend=np.nan)
-        gain = np.where(diff > 0, diff, 0.0)
-        loss = np.where(diff < 0, -diff, 0.0)
-        real = ~warm
-        g, l = gain[real], loss[real]
+    def moments(pdf, real, ck):
+        diff = np.diff(pdf[close_col].to_numpy(dtype=np.float64), prepend=np.nan)
+        g = np.where(diff > 0, diff, 0.0)[real]
+        l = np.where(diff < 0, -diff, 0.0)[real]
         m = len(g)
         if ck == 0:
             ag = np.full(m, np.nan)
@@ -608,63 +553,22 @@ def rsi_parallel(
                     a_l = ((n - 1) * a_l + l[i]) / n
                     ag[i], al[i] = a_g, a_l
         else:
-            p = np.arange(1, m + 1, dtype=np.float64)
-            scale = 1.0 - q**p
+            scale = 1.0 - q ** np.arange(1, m + 1, dtype=np.float64)
             ag = pd.Series(g).ewm(alpha=1.0 / n, adjust=True).mean().to_numpy() * scale
             al = pd.Series(l).ewm(alpha=1.0 / n, adjust=True).mean().to_numpy() * scale
-        return pd.DataFrame(
-            {
-                order_col: pdf[order_col].to_numpy()[real],
-                "_rng": pdf[GLOBAL_RN].to_numpy()[real],
-                "_ck": ck,
-                "_pos": np.arange(1, m + 1),
-                "_lg": ag,
-                "_ll": al,
-            }
-        )
+        return {"g": ag, "l": al}
 
-    sch = ", ".join(
-        [
-            f"`{order_col}` {df.schema[order_col].dataType.simpleString()}",
-            "`_rng` long",
-            "`_ck` long",
-            "`_pos` long",
-            "`_lg` double",
-            "`_ll` double",
-        ]
-    )
-    scanned = d.groupBy(CHUNK).applyInPandas(local_scan, schema=sch)
+    def final(m):
+        ag, al = m["g"], m["l"]
+        # Scale-invariant form: 100·(ag/(ag+al)) == 100 − 100/(1 + ag/al) but
+        # never forms the ag/al quotient; the bounded quotient ag/(ag+al) ∈
+        # [0,1] is formed FIRST so neither factor can overflow (100·ag would
+        # hit +Inf above ~1.8e306 if multiplied before dividing).
+        return F.when(al == 0, F.lit(100.0)).otherwise(100.0 * (ag / (ag + al)))
 
-    summary = scanned.groupBy("_ck").agg(
-        F.max_by("_lg", "_pos").alias("_lgl"),
-        F.max_by("_ll", "_pos").alias("_lll"),
+    return _closed_scan(
+        df, order_col, chunk_rows, 1, moments, {"g": q, "l": q}, final, out, rn_col
     )
-    a = summary.select("_ck")
-    b = summary.select(
-        F.col("_ck").alias("_ckb"), "_lgl", "_lll"
-    )
-    gap = (F.col("_ck") - F.col("_ckb") - 1) * chunk_rows
-    carries = (
-        a.join(b, F.col("_ckb") < F.col("_ck"), "left")
-        .groupBy("_ck")
-        .agg(
-            F.coalesce(F.sum(F.col("_lgl") * F.pow(F.lit(q), gap)), F.lit(0.0)).alias("_cg"),
-            F.coalesce(F.sum(F.col("_lll") * F.pow(F.lit(q), gap)), F.lit(0.0)).alias("_cl"),
-        )
-    )
-    outdf = scanned.join(F.broadcast(carries), ["_ck"])
-    qp = F.pow(F.lit(q), F.col("_pos"))
-    ag = F.col("_lg") + qp * F.col("_cg")
-    al = F.col("_ll") + qp * F.col("_cl")
-    # Scale-invariant form: 100·(ag/(ag+al)) == 100 − 100/(1 + ag/al) but never
-    # forms the ag/al quotient; the bounded quotient ag/(ag+al) ∈ [0,1] is
-    # formed FIRST so neither factor can overflow (100·ag would hit +Inf
-    # above ~1.8e306 if multiplied before dividing).
-    rsi = F.when(al == 0, F.lit(100.0)).otherwise(100.0 * (ag / (ag + al)))
-    cols = [order_col, rsi.alias(out)]
-    if rn_col:
-        cols.insert(1, F.col("_rng").alias(rn_col))
-    return outdf.select(*cols)
 
 
 def atr_ema_parallel(
@@ -676,36 +580,25 @@ def atr_ema_parallel(
     close_col: str = "close",
     chunk_rows: int = 4096,
     out: str = "atr",
-    rn_col: str | None = None,
-    coarse_span: int = 86_400_000_000_000,
 ) -> DataFrame:
     """EXACT parallel Wilder EMA ATR — the single-recurrence sibling of
     :func:`rsi_parallel`: chunk 0 runs the true SMA-seeded fold, later
-    chunks fold the linear recurrence atr_t = q·atr_{t−1} + tr_t/n via
-    local decayed sums + triangular carries; each chunk reads ONE
-    warmup row for its first true-range's previous close. Rows where
-    the sequential kernel emits NaN (the first n) are dropped, matching
-    the registry query's non-null contract.
+    chunks fold the linear recurrence atr_t = q·atr_{t−1} + tr_t/n from
+    zero, and :func:`_closed_scan` carries between them; each chunk
+    reads ONE warmup row for its first true-range's previous close.
+    Rows where the sequential kernel emits NaN (the first n) are
+    dropped, matching the registry query's non-null contract.
     """
-    from .chunked_window import CHUNK, GLOBAL_RN, WARM, with_row_chunks
-
     if chunk_rows <= n + 1:
         raise ValueError(f"chunk_rows ({chunk_rows}) must exceed n+1 ({n + 1})")
     q = (n - 1.0) / n
-    d = with_row_chunks(
-        df, order_col, warmup=1, chunk_rows=chunk_rows, coarse_span=coarse_span
-    )
 
-    def local_scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(GLOBAL_RN).reset_index(drop=True)
-        tr_all = true_range_np(
+    def moments(pdf, real, ck):
+        tr = true_range_np(
             pdf[high_col].to_numpy(dtype=np.float64),
             pdf[low_col].to_numpy(dtype=np.float64),
             pdf[close_col].to_numpy(dtype=np.float64),
-        )
-        warm = pdf[WARM].to_numpy(dtype=bool)
-        ck = int(pdf[CHUNK].iloc[0])
-        tr = tr_all[~warm]
+        )[real]
         m = len(tr)
         if ck == 0:
             vals = np.full(m, np.nan)
@@ -719,46 +612,13 @@ def atr_ema_parallel(
                     a = ((n - 1) * a + tr[i]) / n
                     vals[i] = a
         else:
-            p = np.arange(1, m + 1, dtype=np.float64)
-            vals = (
-                pd.Series(tr).ewm(alpha=1.0 / n, adjust=True).mean().to_numpy()
-                * (1.0 - q**p)
+            vals = pd.Series(tr).ewm(alpha=1.0 / n, adjust=True).mean().to_numpy() * (
+                1.0 - q ** np.arange(1, m + 1, dtype=np.float64)
             )
-        return pd.DataFrame(
-            {
-                order_col: pdf[order_col].to_numpy()[~warm],
-                "_rng": pdf[GLOBAL_RN].to_numpy()[~warm],
-                "_ck": ck,
-                "_pos": np.arange(1, m + 1),
-                "_lt": vals,
-            }
-        )
+        return {"t": vals}
 
-    sch = ", ".join(
-        [
-            f"`{order_col}` {df.schema[order_col].dataType.simpleString()}",
-            "`_rng` long",
-            "`_ck` long",
-            "`_pos` long",
-            "`_lt` double",
-        ]
-    )
-    scanned = d.groupBy(CHUNK).applyInPandas(local_scan, schema=sch)
-    summary = scanned.groupBy("_ck").agg(F.max_by("_lt", "_pos").alias("_ltl"))
-    a = summary.select("_ck")
-    b = summary.select(F.col("_ck").alias("_ckb"), "_ltl")
-    gap = (F.col("_ck") - F.col("_ckb") - 1) * chunk_rows
-    carries = (
-        a.join(b, F.col("_ckb") < F.col("_ck"), "left")
-        .groupBy("_ck")
-        .agg(F.coalesce(F.sum(F.col("_ltl") * F.pow(F.lit(q), gap)), F.lit(0.0)).alias("_ct"))
-    )
-    outdf = scanned.join(F.broadcast(carries), ["_ck"])
-    atr = F.col("_lt") + F.pow(F.lit(q), F.col("_pos")) * F.col("_ct")
-    cols = [order_col, atr.alias(out)]
-    if rn_col:
-        cols.insert(1, F.col("_rng").alias(rn_col))
-    return outdf.select(*cols).where(F.col(out).isNotNull() & ~F.isnan(out))
+    atr = _closed_scan(df, order_col, chunk_rows, 1, moments, {"t": q}, lambda m: m["t"], out)
+    return atr.where(F.col(out).isNotNull() & ~F.isnan(out))
 
 
 # --- Wilder recurrences -----------------------------------------------------
@@ -977,20 +837,19 @@ def run_bar_ids(
     return out
 
 
-# --- chunked CUSUM scale-out (round 6) --------------------------------------
+# --- chunk stitch: the CUSUM scale path -------------------------------------
 #
-# The CUSUM family's reset state machines have no closed combine (the
-# round-4/5 escape hatch for EWMA/EWMS/EWMST/RSI/ATR), so one huge
-# symbol used to mean one task. The stitch: time-chunk the stream, run
-# every chunk's kernel in parallel from an ENTRY-STATE GUESS, collect
-# the k chunk exit states (k rows — scalar-tier driver traffic, the
+# The CUSUM family's reset state machines have no closed combine, so
+# their scale path is a stitch: time-chunk the stream, run every
+# chunk's kernel in parallel from an ENTRY-STATE GUESS, collect the k
+# chunk exit states (k rows — scalar-tier driver traffic, the
 # connected-components precedent), chain them in chunk order on the
 # driver, and re-run only the chunks whose entry changed — a fixed
 # point that is provably reached in <= k rounds (chunk c's entry is
 # exact once chunks 1..c-1 are), and in practice in 2-3 because a reset
 # inside a chunk makes everything after it entry-independent. The
-# converged entries then feed ONE final flags/ids pass. Worst case
-# (a degenerate stream that never triggers) degrades to sequential-
+# converged entries then feed ONE final output pass. Worst case (a
+# degenerate stream that never triggers) degrades to sequential-
 # equivalent total work spread over rounds; typical streams trigger
 # every few hundred rows and converge immediately.
 
@@ -1012,45 +871,59 @@ def _state_eq(a: tuple, b: tuple) -> bool:
 class _ChunkStitch:
     """Entry-state fixed-point engine over time chunks of one stream.
 
-    ``d`` is a persisted projection carrying ``_ck`` (the time-chunk id)
-    plus the kernel's input columns. ``kernel(pdf, entry) -> (exit,
-    count)`` replays the sequential state machine over one chunk from an
-    explicit entry state. ``state_types`` gives each state field's Spark
-    type — exact-integer fields (e.g. the EWMST ``prev_t`` anchor, whose
-    ns magnitude exceeds double's 2^53 integer range) MUST be ``long``.
+    The projection ``(order_col, *cols)`` gets ``_ck`` (the
+    ``chunk_ns`` time-chunk id) and is persisted: every round and the
+    final pass read it. ``kernel(pdf, entry) -> (values, exit, count)``
+    replays the sequential state machine over one chunk (rows in
+    ``order_col`` order) from an explicit entry state: the chunk's
+    output values, its exit state, and how many running ids it used
+    (0 for a kernel whose values are not ids). ``state_types`` gives
+    each state field's Spark type — exact-integer fields (e.g. the
+    EWMST ``prev_t`` anchor, whose ns magnitude exceeds double's 2^53
+    integer range) MUST be ``long``.
 
     Round 1 runs EVERY chunk from the seed state in one job (this also
     discovers the chunk list — no separate distinct() pass); each later
-    round chains the k exit states on the driver (k rows — scalar-tier
-    traffic, the connected-components precedent) and re-runs only chunks
-    whose entry changed. Chunk c's entry is exact once chunks 1..c-1
-    are, so <= k rounds always converge; in practice 2-3 because a reset
-    (or, for decayed moments, float absorption of the entry term) makes
-    a chunk's exit entry-independent. ``solve`` returns ordered
-    ``[(ck, converged_entry, count_prefix)]`` for the final output pass.
+    round chains the k exit states on the driver and re-runs only
+    chunks whose entry changed. Chunk c's entry is exact once chunks
+    1..c-1 are, so <= k rounds always converge; in practice 2-3 because
+    a reset (or, for decayed moments, float absorption of the entry
+    term) makes a chunk's exit entry-independent. :meth:`output` then
+    replays each chunk once from its converged entry and offsets its
+    values by ``_base``, the exclusive prefix of the converged counts —
+    so the output is bit-identical to the sequential kernel.
     """
 
-    def __init__(self, d: DataFrame, order_col: str, state0: tuple,
-                 state_types: list[str], kernel):
-        self.d, self.order_col = d, order_col
+    def __init__(self, df: DataFrame, order_col: str, cols: list[str], chunk_ns: int,
+                 state0: tuple, state_types: list[str], kernel):
+        from .. import cache
+
+        self.d = cache.keep(df.select(order_col, *cols).withColumn(
+            "_ck", F.floor(F.col(order_col) / F.lit(int(chunk_ns)))
+        ))
+        self.order_col = order_col
+        self.order_type = df.schema[order_col].dataType.simpleString()
         self.state0, self.types, self.kernel = state0, state_types, kernel
-        self.spark = d.sparkSession
+        self.spark = df.sparkSession
         n = len(state0)
         self.ent_sch = "_ck long, " + ", ".join(
-            f"_e{i} {t}" for i, t in enumerate(state_types))
+            f"_e{i} {t}" for i, t in enumerate(state_types)) + ", _base long"
         self.out_sch = "_ck long, " + ", ".join(
             f"_x{i} {t}" for i, t in enumerate(state_types)) + ", _nb long"
-        order, kern = order_col, kernel
+        order = order_col
+
+        def enter(pdf: pd.DataFrame) -> tuple[pd.DataFrame, tuple]:
+            pdf = pdf.sort_values(order).reset_index(drop=True)
+            return pdf, tuple(pdf[f"_e{i}"].iloc[0].item() for i in range(n))
 
         def k(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(order).reset_index(drop=True)
-            entry = tuple(pdf[f"_e{i}"].iloc[0].item() for i in range(n))
-            ex, nb = kern(pdf, entry)
+            pdf, entry = enter(pdf)
+            _, ex, nb = kernel(pdf, entry)
             row = {"_ck": [int(pdf["_ck"].iloc[0])], "_nb": [int(nb)]}
             row.update({f"_x{i}": [ex[i]] for i in range(n)})
             return pd.DataFrame(row)
 
-        self._k = k
+        self._enter, self._k = enter, k
 
     def _coerce(self, state: tuple) -> tuple:
         return tuple(
@@ -1058,11 +931,11 @@ class _ChunkStitch:
             for x, t in zip(state, self.types)
         )
 
-    def with_entries(self, rows: list[tuple]) -> DataFrame:
-        """Join per-chunk entry rows (ck, *state[, extra]) onto ``d``."""
-        sch = self.ent_sch + (", _base long" if len(rows[0]) > len(self.types) + 1
-                              else "")
-        ent = self.spark.createDataFrame(rows, sch)
+    def _with_entries(self, rows: list[tuple]) -> DataFrame:
+        """Join per-chunk entry rows (ck, entry, base) onto ``d``."""
+        ent = self.spark.createDataFrame(
+            [(int(ck), *self._coerce(e), int(base)) for ck, e, base in rows], self.ent_sch
+        )
         return self.d.join(F.broadcast(ent), "_ck")
 
     def _run(self, stale, entries) -> dict:
@@ -1074,14 +947,14 @@ class _ChunkStitch:
             }
             dd = self.d.withColumns(lits)
         else:
-            dd = self.with_entries(
-                [(int(ck), *self._coerce(entries[ck])) for ck in stale])
+            dd = self._with_entries([(ck, entries[ck], 0) for ck in stale])
         rows = dd.groupBy("_ck").applyInPandas(self._k, self.out_sch).collect()
         n = len(self.state0)
         return {r["_ck"]: (tuple(r[f"_x{i}"] for i in range(n)), r["_nb"])
                 for r in rows}
 
     def solve(self) -> list[tuple[int, tuple, int]]:
+        """Ordered ``[(ck, converged_entry, count_prefix)]``."""
         got = self._run(None, {})
         cks = sorted(got)
         if not cks:
@@ -1112,16 +985,21 @@ class _ChunkStitch:
         raise RuntimeError("cusum chunk stitch did not converge "
                            "(impossible: bounded by chunk count)")
 
+    def output(self, out: str, out_type: str) -> DataFrame:
+        """``(order_col, out)``: solve, then ONE final pass from the
+        converged entries; no rows in the same schema on empty input."""
+        sch = f"`{self.order_col}` {self.order_type}, `{out}` {out_type}"
+        solved = self.solve()
+        if not solved:
+            return self.spark.createDataFrame([], sch)
+        order, enter, kernel = self.order_col, self._enter, self.kernel
 
-def _chunked_projection(df: DataFrame, order_col: str, cols: list[str],
-                        chunk_ns: int) -> DataFrame:
-    """``(order_col, *cols, _ck)``, persisted: every stitch round and the
-    final pass read it."""
-    from .. import cache as _cache
+        def k_final(pdf: pd.DataFrame) -> pd.DataFrame:
+            pdf, entry = enter(pdf)
+            values, _, _ = kernel(pdf, entry)
+            return pd.DataFrame({order: pdf[order], out: values + int(pdf["_base"].iloc[0])})
 
-    return _cache.keep(df.select(order_col, *cols).withColumn(
-        "_ck", F.floor(F.col(order_col) / F.lit(int(chunk_ns)))
-    ))
+        return self._with_entries(solved).groupBy("_ck").applyInPandas(k_final, sch)
 
 
 def cusum_filter_chunked(
@@ -1139,8 +1017,7 @@ def cusum_filter_chunked(
 
     Driver gate (:func:`_driver_scan`): a stream of at most
     :data:`SEQ_DRIVER_MAX_ROWS` rows runs :func:`cusum_filter_state` on
-    the driver. A larger one runs time-chunked parallel kernel passes
-    plus the driver-chained entry-state fixed point
+    the driver. A larger one runs the chunk stitch
     (:class:`_ChunkStitch`), which replays the same kernel from the
     exact entry states. Both sides return bit-identical flags
     (differential-tested)."""
@@ -1155,38 +1032,15 @@ def cusum_filter_chunked(
     df, local = _driver_scan(df, order_col, cols, "flag", _driver)
     if local is not None:
         return local
-    d = _chunked_projection(df, order_col, cols, chunk_ns)
 
-    def _thr_arr(pdf):
-        if thr_col:
-            return pdf[thr_col].to_numpy(np.float64)
-        return np.full(len(pdf), float(threshold))
+    def kernel(pdf, entry):
+        r = pdf[r_col].to_numpy(np.float64)
+        h = pdf[thr_col].to_numpy(np.float64) if thr_col else np.full(len(r), float(threshold))
+        flags, sp, sn = cusum_filter_state(r, h, *entry)
+        return flags, (sp, sn), 0
 
-    def kern(pdf, entry):
-        _, sp, sn = cusum_filter_state(
-            pdf[r_col].to_numpy(np.float64), _thr_arr(pdf), entry[0], entry[1]
-        )
-        return (sp, sn), 0
-
-    sch = f"`{order_col}` {df.schema[order_col].dataType.simpleString()}, flag int"
-    st = _ChunkStitch(d, order_col, (0.0, 0.0), ["double", "double"], kern)
-    solved = st.solve()
-    if not solved:
-        return st.spark.createDataFrame([], sch)
-
-    def k_final(pdf):
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        flags, _, _ = cusum_filter_state(
-            pdf[r_col].to_numpy(np.float64), _thr_arr(pdf),
-            float(pdf["_e0"].iloc[0]), float(pdf["_e1"].iloc[0]),
-        )
-        return pd.DataFrame({order_col: pdf[order_col], "flag": flags})
-
-    return (
-        st.with_entries([(int(ck), e[0], e[1]) for ck, e, _ in solved])
-        .groupBy("_ck")
-        .applyInPandas(k_final, sch)
-    )
+    st = _ChunkStitch(df, order_col, cols, chunk_ns, (0.0, 0.0), ["double"] * 2, kernel)
+    return st.output("flag", "int")
 
 
 def cusum_bar_ids_chunked(
@@ -1200,50 +1054,24 @@ def cusum_bar_ids_chunked(
 ) -> DataFrame:
     """CUSUM bar indexer (:func:`cusum_bar_ids` semantics, reference
     ``logic.py:152-221``) over a PRECOMPUTED sigma column, for one huge
-    stream via the chunk-entry fixed point; state = (sp, sn, last_sig).
-    Global bar ids = local ids + the exclusive prefix of converged
-    per-chunk bar counts (chained on the driver from the same k-row
-    exits). When sigma itself is the reference's EWMST estimate, use
+    stream via the chunk stitch; state = (sp, sn, last_sig). Global bar
+    ids = local ids + the exclusive prefix of converged per-chunk bar
+    counts. When sigma itself is the reference's EWMST estimate, use
     :func:`cusum_adaptive_bars_chunked` — it carries the EWMST moments
     in the same stitch, keeping the whole composition bit-exact.
     Returns (order_col, bar_id)."""
-    d = _chunked_projection(df, order_col, [r_col, sigma_col], chunk_ns)
 
-    def kern(pdf, entry):
-        _, sp, sn, sig, bars = cusum_bar_state(
+    def kernel(pdf, entry):
+        ids, *exit_, bars = cusum_bar_state(
             pdf[r_col].to_numpy(np.float64),
             pdf[sigma_col].to_numpy(np.float64),
-            mult, floor_thr, entry[0], entry[1], entry[2],
+            mult, floor_thr, *entry,
         )
-        return (sp, sn, sig), bars
+        return ids, exit_, bars
 
-    st = _ChunkStitch(d, order_col, (0.0, 0.0, float(floor_thr)),
-                      ["double"] * 3, kern)
-    solved = st.solve()
-    if not solved:
-        return d.select(order_col, F.lit(0).cast("long").alias("bar_id")).where(
-            F.lit(False)
-        )
-
-    def k_final(pdf):
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        ids, *_ = cusum_bar_state(
-            pdf[r_col].to_numpy(np.float64),
-            pdf[sigma_col].to_numpy(np.float64),
-            mult, floor_thr,
-            float(pdf["_e0"].iloc[0]), float(pdf["_e1"].iloc[0]),
-            float(pdf["_e2"].iloc[0]),
-        )
-        return pd.DataFrame(
-            {order_col: pdf[order_col], "bar_id": ids + int(pdf["_base"].iloc[0])}
-        )
-
-    sch = f"`{order_col}` {df.schema[order_col].dataType.simpleString()}, bar_id long"
-    return (
-        st.with_entries([(int(ck), e[0], e[1], e[2], base) for ck, e, base in solved])
-        .groupBy("_ck")
-        .applyInPandas(k_final, sch)
-    )
+    st = _ChunkStitch(df, order_col, [r_col, sigma_col], chunk_ns,
+                      (0.0, 0.0, float(floor_thr)), ["double"] * 3, kernel)
+    return st.output("bar_id", "long")
 
 
 def ewmst_state(
@@ -1303,56 +1131,21 @@ def cusum_adaptive_bars_chunked(
     below one ulp of the local sums — pick ``chunk_ns`` ≫ halflife
     (default one week) and exits become entry-independent, so the fixed
     point lands in 2-3 rounds. Returns (order_col, bar_id)."""
-    d = _chunked_projection(df, order_col, [r_col], chunk_ns)
     state0 = (0.0, 0.0, 0.0, 0.0, -1, float("nan"), 0.0, 0.0, float(floor_thr))
     types = ["double"] * 4 + ["long"] + ["double"] * 4
 
-    def kern(pdf, entry):
+    def kernel(pdf, entry):
         V, V2, Sy, Syy, prev_t, last_out, sp, sn, last_sig = entry
-        ts = pdf[order_col].to_numpy(np.int64)
         r = pdf[r_col].to_numpy(np.float64)
-        sigma, V, V2, Sy, Syy, prev_t, last_out = ewmst_state(
-            ts, r, halflife_ns, V, V2, Sy, Syy, int(prev_t), last_out
+        sigma, *ew = ewmst_state(
+            pdf[order_col].to_numpy(np.int64), r, halflife_ns,
+            V, V2, Sy, Syy, int(prev_t), last_out,
         )
-        _, sp, sn, last_sig, bars = cusum_bar_state(
-            r, sigma, mult, floor_thr, sp, sn, last_sig
-        )
-        return (V, V2, Sy, Syy, prev_t, last_out, sp, sn, last_sig), bars
+        ids, *cu, bars = cusum_bar_state(r, sigma, mult, floor_thr, sp, sn, last_sig)
+        return ids, (*ew, *cu), bars
 
-    st = _ChunkStitch(d, order_col, state0, types, kern)
-    solved = st.solve()
-    if not solved:
-        return d.select(order_col, F.lit(0).cast("long").alias("bar_id")).where(
-            F.lit(False)
-        )
-
-    def k_final(pdf):
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        ts = pdf[order_col].to_numpy(np.int64)
-        r = pdf[r_col].to_numpy(np.float64)
-        sigma, *_ = ewmst_state(
-            ts, r, halflife_ns,
-            float(pdf["_e0"].iloc[0]), float(pdf["_e1"].iloc[0]),
-            float(pdf["_e2"].iloc[0]), float(pdf["_e3"].iloc[0]),
-            int(pdf["_e4"].iloc[0]), float(pdf["_e5"].iloc[0]),
-        )
-        ids, *_ = cusum_bar_state(
-            r, sigma, mult, floor_thr,
-            float(pdf["_e6"].iloc[0]), float(pdf["_e7"].iloc[0]),
-            float(pdf["_e8"].iloc[0]),
-        )
-        return pd.DataFrame(
-            {order_col: pdf[order_col], "bar_id": ids + int(pdf["_base"].iloc[0])}
-        )
-
-    sch = f"`{order_col}` {df.schema[order_col].dataType.simpleString()}, bar_id long"
-    return (
-        st.with_entries(
-            [(int(ck), *st._coerce(e), base) for ck, e, base in solved]
-        )
-        .groupBy("_ck")
-        .applyInPandas(k_final, sch)
-    )
+    st = _ChunkStitch(df, order_col, [r_col], chunk_ns, state0, types, kernel)
+    return st.output("bar_id", "long")
 
 
 def cusum_test_chunked(
@@ -1372,8 +1165,6 @@ def cusum_test_chunked(
     bit-for-bit. Rows below the global ``warmup`` index are dropped,
     exactly like the sequential form leaves them NaN-only.
     Returns (order_col, cusum_stat)."""
-    from .chunked_window import CHUNK, GLOBAL_RN, WARM, with_row_chunks
-
     d = with_row_chunks(
         df.select(order_col, y_col), order_col, warmup=w + 1, chunk_rows=chunk_rows
     )

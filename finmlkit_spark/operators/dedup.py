@@ -126,13 +126,12 @@ def minhash_lsh_pairs(
     # arrays pathologically (50s for 5k docs vs 2s to recompute). The
     # signature is a pandas_udf stage, which Catalyst plans as its own
     # ArrowEvalPython node (no project-collapse re-inlining).
-    # r14: the (doc, sh) table gets its own cut boundary — checkpoint
-    # BLOCK writes don't have the columnar array pathology, and the
-    # shingle pass (tokenize + k-gram hash fold over every doc) used
-    # to run TWICE: once under the signature and once in the verify
-    # join's sh_tbl. One pass feeds both now. Interleaved sf0.1 A/B,
-    # best-of-2 warm, 3 reps: 1.87/1.52/1.50 -> 1.32/1.21/1.09 s
-    # (-20-30%, 3/3), outputs identical.
+    # The (doc, sh) table gets its own cut boundary — checkpoint BLOCK
+    # writes don't have the columnar array pathology — so the shingle
+    # pass (tokenize + k-gram hash fold over every doc) runs ONCE and
+    # feeds both the signature and the verify join's sh_tbl (without
+    # the boundary it runs twice: 1.32 vs 1.87 s at sf0.1, interleaved
+    # A/B, outputs identical).
     d0 = cache.cut(
         docs.select(F.col(id_col).alias("doc"), shingle_hashes(text_col).alias("sh"))
     )
@@ -141,10 +140,9 @@ def minhash_lsh_pairs(
     # band join + pair-dedup on bare ids (cheap shuffle), THEN join the
     # shingle arrays back only for surviving candidates — the arrays never
     # ride through the band join or the distinct
-    # storage boundary: cache.cut, not keep (r14 honest-timing A/B —
-    # the timed region now pays materialization, and the columnar
-    # persist write costs ~0.4 s more than the checkpoint block write
-    # here: 1.56 -> 1.15 s)
+    # storage boundary: cache.cut, not keep — with materialization
+    # timed, the columnar persist write costs ~0.4 s more than the
+    # checkpoint block write here (1.56 vs 1.15 s at sf0.1)
     e = cache.cut(d_bk.select("doc", F.explode("bk").alias("key")))
     l = e.select(F.col("doc").alias("doc_a"), "key")
     r = e.select(F.col("doc").alias("doc_b"), "key")
@@ -228,10 +226,10 @@ def ngram_jaccard_pairs(
     # does not reuse the exchange across consumers (the projections
     # above it differ) — without the boundary the explode + exchange +
     # sort + window evaluates three times per action (measured 40% of
-    # the query for two consumers). cache.cut, not keep (r14: under
-    # honest timing — materialization inside the timed region — the
-    # columnar persist write of the exploded table costs ~0.45 s more
-    # than the checkpoint block write: 2.04 -> 1.59 s).
+    # the query for two consumers). cache.cut, not keep: with
+    # materialization timed, the columnar persist write of the exploded
+    # table costs ~0.45 s more than the checkpoint block write (2.04 vs
+    # 1.59 s at sf0.1).
     em = cache.cut(em)
     er = em.where(F.col("_df") <= max_doc_freq)
     # size-ratio prefilter (prefix-filtering lemma): the arrays are
@@ -259,10 +257,9 @@ def ngram_jaccard_pairs(
         # the shingle arrays are distinct sets, so each shared RARE
         # shingle contributes exactly one row to the self-join — the
         # groupBy count IS |rare(A) ∩ rare(B)|. No pair ever touches
-        # the full shingle arrays (round-9: the former exact-verify
-        # joined both ~50-element arrays onto every candidate row and
-        # ran an allocating array_intersect per pair — measured ~half
-        # the query at sf0.1's 850k candidates).
+        # the full shingle arrays (joining both ~50-element arrays onto
+        # every candidate row for an allocating array_intersect per
+        # pair costs ~half the query at sf0.1's 850k candidates).
         .groupBy("doc_a", "doc_b", "na", "nb")
         .agg(F.count("*").alias("_ir"))
     )
@@ -510,8 +507,8 @@ def simhash_near_pairs(
     # fingerprints feed BOTH sides of the band self-join; materialize
     # the (doc, fp) projection — two longs per row — so the shingle
     # fold + SimHash UDF run once over the corpus, not once per join
-    # side. cache.cut, not keep (r14 honest-timing A/B: 0.76 -> 0.66 s;
-    # recomputing per side was 1.75 s)
+    # side. cache.cut, not keep: with materialization timed, 0.66 s
+    # vs 0.76 s for keep and 1.75 s recomputing per side (sf0.1)
     d = cache.cut(
         docs.select(
             F.col(id_col).alias("doc"),
@@ -592,7 +589,7 @@ def materialize_simhash_edges(
     are the EXACT (doc_a, doc_b, hamming) rows the inline build
     derives — any consumer fed :func:`read_simhash_edges` returns
     bit-identical results to the inline form (pinned by test).
-    ``n_partitions=None`` (default, r13): repartition by ``doc_a``
+    ``n_partitions=None`` (default): repartition by ``doc_a``
     without a fixed count so AQE sizes the output files by bytes
     (the materialize_lexical_weights discipline)."""
     e = simhash_near_pairs(
@@ -800,7 +797,7 @@ def dedup_clusters_star(
     Both are one groupBy + one join over the edge list — the same
     shuffle shape as a propagation round — but the edge list contracts
     toward stars doubly-exponentially. Convergence is detected
-    STRUCTURALLY (r13 optimization): a round-pair's output with every
+    STRUCTURALLY: a round-pair's output with every
     node having at most one outgoing edge and no node both child and
     parent is a star forest, and a star forest is a FIXPOINT of the
     round-pair — large-star maps each child's reversed edge back to
@@ -828,8 +825,8 @@ def dedup_clusters_star(
     def large_star(ed: DataFrame) -> DataFrame:
         # no trailing .distinct(): small_star's single final distinct
         # dedups the combined round-pair output, so the extra exchange
-        # here bought nothing (r13 optimization — duplicate (v, _m)
-        # rows are edge-bounded and min-aggregation-invisible)
+        # here would buy nothing (duplicate (v, _m) rows are
+        # edge-bounded and min-aggregation-invisible)
         both = ed.union(ed.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = both.groupBy("u").agg(F.min("v").alias("_mn"))
         mins = mins.select("u", F.least("u", "_mn").alias("_m"))
@@ -1195,7 +1192,7 @@ def tfidf_cosine_pairs(
     bit-identical in both engines (the ``tfidf_keywords`` libm
     discipline extended to the pair score).
 
-    Overflow posture (round-12, after the r11 advisory): wq for a
+    Overflow posture: wq for a
     UNIQUE token (df=1) is ~scale·tf·N, so wq² reaches 2^63 at only
     ~3M documents — int64 sums would wrap silently under Spark's
     non-ANSI mode. Dots and norms therefore fold as
@@ -1246,12 +1243,11 @@ def tfidf_cosine_pairs(
     # sides of the candidate self-join); without a storage boundary
     # Catalyst re-inlines the whole tokenize→tf→df subtree per
     # reference — 12 corpus scans and 16 tokenizer passes at sf0.1
-    # (round-12 plan audit). One storage boundary makes it one —
-    # cache.cut, not keep (r14 honest-timing A/B, materialization paid
-    # inside the timed region: keep 1.44 s, cut 0.79 s, no boundary
-    # 0.77 s at sf0.1 — cut kept for the 100 TB posture, where three
-    # recomputes of the data-scale tokenize subtree dwarf one
-    # checkpoint write).
+    # (read off the plan). One storage boundary makes it one —
+    # cache.cut, not keep (materialization timed: keep 1.44 s, cut
+    # 0.79 s, no boundary 0.77 s at sf0.1 — cut kept for the 100 TB
+    # posture, where three recomputes of the data-scale tokenize
+    # subtree dwarf one checkpoint write).
     from .. import cache
 
     w = cache.cut(w)

@@ -242,14 +242,12 @@ def ann_brute_topk(
     """Brute-force cosine top-k: score the corpus against the query
     vectors in ONE map-only Arrow pass and rank by (cosine desc, id).
 
-    Round 13 (hybrid_search constant): the prior form crossJoined the
-    corpus with the broadcast query side, so every corpus vector
-    crossed the Arrow boundary |queries| times; this form collects the
-    ≤|queries| query vectors to the driver (bounded driver-mode state,
-    the kmeans posture) and a single ``mapInPandas`` pass emits all
-    |queries| cosines per corpus batch — each vector transfers once.
-    Bit-identical to the old kernel (A/B-verified): dots and norms are
-    the same SEQUENTIAL left-to-right cumsum folds as
+    The ≤|queries| query vectors are collected to the driver (bounded
+    driver-mode state, the kmeans posture) and a single ``mapInPandas``
+    pass emits all |queries| cosines per corpus batch, so each corpus
+    vector crosses the Arrow boundary once (a crossJoin with the
+    broadcast query side would send it |queries| times). Dots and
+    norms are the same SEQUENTIAL left-to-right cumsum folds as
     :func:`cosine_batch`, so results match the engines' list folds
     byte-for-byte, and the top-k stays a WindowGroupLimit."""
     import numpy as np
@@ -348,7 +346,7 @@ def ann_projected_topk(
         # HOF here, Arrow above: the exact verify touches only
         # |queries|·shortlist pairs, where an Arrow stage's fixed
         # worker round-trip costs more than the tiny interpreted fold
-        # (round-7 A/B: batch/hof 1.00 s vs batch/batch 1.42 s)
+        # (batch/hof 1.00 s vs batch/batch 1.42 s at sf0.1)
         .select("query_id", "cand_id", cosine(F.col("qv"), F.col("v")).alias("cos_sim"))
     )
     w2 = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
@@ -388,9 +386,9 @@ def kmeans_assign(
     the trainable coarse quantizer for IVF search (``ann_ivf`` uses fixed
     seed centroids; this learns them).
 
-    Two execution modes, same bit-identical results (round-7 A/B at
-    sf0.1, quiet best-of-4: driver 0.54 s vs the round-6 unrolled SQL
-    chain's 1.56 s on the same host):
+    Two execution modes, same bit-identical results (sf0.1, quiet
+    best-of-4: driver 0.54 s vs 1.56 s for an unrolled SQL chain on
+    the same host):
 
     - ``state="driver"`` (default): MLlib-style driver-carried
       centroids. Each Lloyd iteration is ONE map-only job — a
@@ -548,8 +546,8 @@ def kmeans_centroids(
     as the seed cache — never data rows."""
     # dim is part of the key: a caller passing an explicit dim that
     # differs from a prior call's (or the probed) value must train its
-    # own centroids, not silently inherit the other dim's (round-10
-    # review catch — same contract as the seed cache's emb_col key)
+    # own centroids, not silently inherit the other dim's (same
+    # contract as the seed cache's emb_col key)
     if dim is None:
         dim = _probe_dim(emb_df, emb_col)
     key = ("centroids", id_col, emb_col, int(k), int(iters), int(ndigits), int(dim))
@@ -816,10 +814,10 @@ def _kmeans_assign_distributed(
     iterations unrolled as a CTE chain. Centroids travel as a collected
     (sorted) k-row array through a 1-row broadcast cross join; the
     assignment is a map-side JVM argmax over higher-order-function
-    cosine folds — no Python, and no n-row shuffle per iteration (the
-    round-6 form's per-vector max_by aggregate shuffled every row every
-    iteration; round-7 A/B: this form 1.2-1.7 s vs 1.6-2.3 s at sf0.1,
-    identical output bits)."""
+    cosine folds — no Python, and no n-row shuffle per iteration (a
+    per-vector max_by aggregate would shuffle every row every
+    iteration: 1.6-2.3 s vs this form's 1.2-1.7 s at sf0.1, identical
+    output bits)."""
     scale = 10**ndigits
     dot_sql = (
         "aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
@@ -1735,12 +1733,12 @@ def _sq8_quantized_consts(vmin, d255, scale: int):
 
 
 def _sq8_recon_cols(vminq, deltaq):
-    """Candidate-side factor of the SQ8 asymmetric distance (r14, guide
-    §1.2 per-task work): reconstruct each candidate ONCE —
-    ``recon_d = vminq_d + code_d·deltaq_d`` and ``r2 = Σ_d recon_d²`` —
-    instead of re-deriving it inside every query's fold (the full scan
-    scores each candidate against n_queries broadcast rows; the old
-    fold recomputed the reconstruction n_queries times per row).
+    """Candidate-side factor of the SQ8 asymmetric distance: reconstruct
+    each candidate ONCE — ``recon_d = vminq_d + code_d·deltaq_d`` and
+    ``r2 = Σ_d recon_d²`` — instead of re-deriving it inside every
+    query's fold (the full scan scores each candidate against n_queries
+    broadcast rows, so an in-fold reconstruction would run n_queries
+    times per row).
     Returns (_recon, _r2) expressions over the row's ``codes``."""
     recon = F.transform(
         "codes", lambda c, i: F.get(vminq, i) + c.cast("long") * F.get(deltaq, i)
@@ -1863,11 +1861,11 @@ def knn_graph(
     (src_id, dst_id, cos_sim, rank); vectors alone in their cell have
     no neighbors (raise k_neighbors' reach by lowering k).
 
-    Plan (r13 optimization): one within-cluster Arrow scan emits each
+    Plan: one within-cluster Arrow scan emits each
     node's top-``k_neighbors`` DIRECTLY — a node's entire candidate set
     lives inside its cell's task, so the per-node selection is exact
     in-kernel and only n·k ranked rows ever leave Python, instead of
-    the former Σ|cluster|² pair fan-out + union + row_number window
+    a Σ|cluster|² pair fan-out + union + row_number window
     (two more exchanges of pair-scale rows). Bit-identical to the
     window form by construction: cosines reproduce the pair kernel's
     elementwise-product + sequential-cumsum fold (commutative per
@@ -2180,7 +2178,7 @@ def embedding_outliers(
     if dim is None:
         # one-row dim probe; callers with a fixed-width embeddings
         # table pass ``dim`` and skip this driver job at plan-build
-        # (the kmeans_assign posture — r14)
+        # (the kmeans_assign posture)
         d = emb_df.select(F.size(F.col(emb_col)).alias("d")).limit(1).collect()
         if not d:
             return emb_df.sparkSession.createDataFrame(

@@ -402,8 +402,8 @@ def seq_atr_ema(spark, sf_dir):
 
     Exact recursive-CTE replay oracle: the SMA seed is accumulated as a
     left-to-right fold inside the recursion and the kernel folds in the
-    same order, so both engines emit bit-identical doubles (the round-1
-    truncated-convolution oracle's tail exceeded the driver's hash
+    same order, so both engines emit bit-identical doubles (a truncated
+    convolution oracle's tail would exceed the driver's hash
     precision)."""
     bars = bars_1h(spark, sf_dir)
 

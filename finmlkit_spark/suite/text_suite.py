@@ -79,6 +79,28 @@ def _embs(spark, sf_dir):
     return read_table(spark, sf_dir, "embeddings")
 
 
+def _payload_docs(spark, sf_dir, payload):
+    """``(doc_id, payload binary)``: ``payload(doc_id) -> bytes`` per
+    document, built on the executors."""
+    import pandas as pd
+
+    def encode(it):
+        for pdf in it:
+            ids = pdf["doc_id"].to_numpy()
+            yield pd.DataFrame({"doc_id": ids, "payload": [payload(int(d)) for d in ids]})
+
+    docs = _docs(spark, sf_dir).select("doc_id")
+    return docs.mapInPandas(encode, schema="doc_id long, payload binary")
+
+
+def _gradient_png(doc_id):
+    """The 8x16 grayscale PNG whose pixel i is (doc_id*7 + i) % 256."""
+    import numpy as np
+
+    i = np.arange(128, dtype=np.int64)
+    return MM.encode_png(((doc_id * 7 + i) % 256).astype(np.uint8).reshape(8, 16))
+
+
 # --- text analysis ----------------------------------------------------------
 
 @query(
@@ -499,25 +521,7 @@ def image_decode_stats(spark, sf_dir):
     luminance stats. The oracle computes the same stats from the pixel
     formula directly — so a hash match proves the PNG encode->decode
     round-trip and the feature kernel end-to-end."""
-    import numpy as np
-    import pandas as pd
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def _encode(it):
-        from ..operators.multimodal import encode_png
-
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for did in ids:
-                i = np.arange(128, dtype=np.int64)
-                img = ((int(did) * 7 + i) % 256).astype(np.uint8).reshape(8, 16)
-                payloads.append(encode_png(img))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    payload_df = docs.mapInPandas(_encode, schema="doc_id long, payload binary")
-    feats = MM.image_features(payload_df)
+    feats = MM.image_features(_payload_docs(spark, sf_dir, _gradient_png))
     return feats.select(
         "doc_id",
         "width",
@@ -556,31 +560,15 @@ def video_frame_stats_q(spark, sf_dir):
     pixel formula directly, so a hash match proves the Y4M
     encode -> frame-sample -> decode round-trip end-to-end."""
     import numpy as np
-    import pandas as pd
 
-    docs = _docs(spark, sf_dir).select("doc_id")
+    def y4m(did):
+        i = np.arange(128, dtype=np.int64)
+        frames = np.stack(
+            [((did * 11 + f * 17 + i) % 256).astype(np.uint8).reshape(8, 16) for f in range(4)]
+        )
+        return MM.encode_y4m(frames, "C420jpeg")
 
-    def _encode(it):
-        from ..operators.multimodal import encode_y4m
-
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            i = np.arange(128, dtype=np.int64)
-            for did in ids:
-                frames = np.stack(
-                    [
-                        ((int(did) * 11 + f * 17 + i) % 256)
-                        .astype(np.uint8)
-                        .reshape(8, 16)
-                        for f in range(4)
-                    ]
-                )
-                payloads.append(encode_y4m(frames, "C420jpeg"))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    payload_df = docs.mapInPandas(_encode, schema="doc_id long, payload binary")
-    stats = MM.video_frame_stats(payload_df, every=2)
+    stats = MM.video_frame_stats(_payload_docs(spark, sf_dir, y4m), every=2)
     return stats.select(
         "doc_id",
         "frame_idx",
@@ -621,37 +609,25 @@ def video_mjpeg_stats_q(spark, sf_dir):
     match proves JPEG encode → AVI mux → RIFF walk → JPEG decode →
     reduce, end-to-end."""
     import numpy as np
-    import pandas as pd
 
-    docs = _docs(spark, sf_dir).select("doc_id")
+    # the color formula cycles in doc_id mod 240, so whole payloads
+    # repeat — memoize per residue (≤240 pure-Python JPEG encodes per
+    # task instead of one per doc)
+    memo: dict = {}
 
-    def _encode(it):
-        from ..operators.multimodal import encode_avi_mjpeg
+    def avi(did):
+        key = did % 240
+        if key not in memo:
+            frames = np.empty((4, 16, 16), dtype=np.uint8)
+            for f in range(4):
+                for blk in range(4):
+                    c = (key * 11 + f * 37 + blk * 53) % 240 + 8
+                    by, bx = divmod(blk, 2)
+                    frames[f, by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = c
+            memo[key] = MM.encode_avi_mjpeg(frames, quant=8)
+        return memo[key]
 
-        # the color formula cycles in doc_id mod 240, so whole payloads
-        # repeat — memoize per residue (≤240 pure-Python JPEG encodes
-        # per executor instead of one per doc)
-        memo: dict = {}
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for did in ids:
-                key = int(did) % 240
-                b = memo.get(key)
-                if b is None:
-                    frames = np.empty((4, 16, 16), dtype=np.uint8)
-                    for f in range(4):
-                        for blk in range(4):
-                            c = (key * 11 + f * 37 + blk * 53) % 240 + 8
-                            by, bx = divmod(blk, 2)
-                            frames[f, by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = c
-                    b = encode_avi_mjpeg(frames, quant=8)
-                    memo[key] = b
-                payloads.append(b)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    payload_df = docs.mapInPandas(_encode, schema="doc_id long, payload binary")
-    stats = MM.video_frame_stats(payload_df, every=2)
+    stats = MM.video_frame_stats(_payload_docs(spark, sf_dir, avi), every=2)
     return stats.select(
         "doc_id",
         "frame_idx",
@@ -689,25 +665,7 @@ def image_resize_stats(spark, sf_dir):
     payloads. The oracle replays the nearest-neighbor index mapping
     symbolically (out (y,x) <- src (2y, 2x)), so a hash match proves
     decode -> resample -> encode -> decode -> reduce end-to-end."""
-    import numpy as np
-    import pandas as pd
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def _encode(it):
-        from ..operators.multimodal import encode_png
-
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for did in ids:
-                i = np.arange(128, dtype=np.int64)
-                img = ((int(did) * 7 + i) % 256).astype(np.uint8).reshape(8, 16)
-                payloads.append(encode_png(img))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    payload_df = docs.mapInPandas(_encode, schema="doc_id long, payload binary")
-    resized = MM.image_resize(payload_df, out_w=8, out_h=4)
+    resized = MM.image_resize(_payload_docs(spark, sf_dir, _gradient_png), out_w=8, out_h=4)
     feats = MM.image_features(resized)
     return feats.select(
         "doc_id",
@@ -736,25 +694,13 @@ def audio_spectral_stats(spark, sf_dir):
     integer-bin tone is exactly k (the oracle replays k symbolically,
     so a hash match proves WAV encode -> parse -> FFT end-to-end)."""
     import numpy as np
-    import pandas as pd
 
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def _encode(it):
-        from ..operators.multimodal import encode_wav
-
+    def wav(did):
         i = np.arange(256, dtype=np.float64)
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for did in ids:
-                k = int(did) % 100 + 5
-                pcm = (10000.0 * np.sin(2.0 * np.pi * k * i / 256.0)).astype(np.int16)
-                payloads.append(encode_wav(pcm))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+        k = did % 100 + 5
+        return MM.encode_wav((10000.0 * np.sin(2.0 * np.pi * k * i / 256.0)).astype(np.int16))
 
-    payload_df = docs.mapInPandas(_encode, schema="doc_id long, payload binary")
-    return MM.audio_spectral(payload_df)
+    return MM.audio_spectral(_payload_docs(spark, sf_dir, wav))
 
 
 @query(
@@ -774,25 +720,14 @@ def image_phash_pairs(spark, sf_dir):
     -> bit-pack -> join finds exactly the true duplicate pairs (and no
     false ones) at any sf."""
     import numpy as np
-    import pandas as pd
 
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def _encode(it):
-        from ..operators.multimodal import encode_png
-
+    def png(did):
         i = np.arange(24 * 32, dtype=np.int64)
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for did in ids:
-                cls = int(did) % 250
-                img = (((cls * 31 + 7) * i + cls * cls) % 256).astype(np.uint8).reshape(24, 32)
-                payloads.append(encode_png(img))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+        cls = did % 250
+        img = (((cls * 31 + 7) * i + cls * cls) % 256).astype(np.uint8).reshape(24, 32)
+        return MM.encode_png(img)
 
-    payload_df = docs.mapInPandas(_encode, schema="doc_id long, payload binary")
-    return MM.phash_dup_pairs(payload_df).select("doc_a", "doc_b")
+    return MM.phash_dup_pairs(_payload_docs(spark, sf_dir, png)).select("doc_a", "doc_b")
 
 
 @query(

@@ -3,7 +3,8 @@ driver gate) and ``cache.rows_at_most`` (the plan crossovers): the
 upstream plan executes exactly once on either side of the bound, the
 driver side receives every row, and the forced-distributed hook never
 probes. The gated single-stream scans and the side window keep that
-contract when their output feeds an action."""
+contract when their output feeds an action, and every single-stream
+scale scan returns no rows, in its declared schema, on an empty input."""
 
 from __future__ import annotations
 
@@ -197,3 +198,36 @@ def test_sequential_scan_empty_input(spark, gate_sides, name):
     (drv_schema, drv_rows), (dist_schema, dist_rows) = gate_sides(run)
     assert drv_rows == dist_rows == []
     assert drv_schema == dist_schema
+
+
+#: the scale scans with no driver side, over (id, x, y, z)
+SCALE_SCANS = {
+    "ewmst_parallel": lambda df: S.ewmst_parallel(df, "id", "x", 5.0, chunk_rows=8),
+    "rsi_parallel": lambda df: S.rsi_parallel(df, "x", 3, order_col="id", chunk_rows=8),
+    "atr_ema_parallel": lambda df: S.atr_ema_parallel(
+        df, 3, order_col="id", high_col="z", low_col="y", close_col="x", chunk_rows=8
+    ),
+    "cusum_bar_ids_chunked": lambda df: S.cusum_bar_ids_chunked(
+        df, 2.0, 1.0, r_col="x", sigma_col="y", order_col="id", chunk_ns=8
+    ),
+    "cusum_adaptive_bars_chunked": lambda df: S.cusum_adaptive_bars_chunked(
+        df, 2.0, 1.0, 5.0, r_col="x", order_col="id", chunk_ns=8
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(SCALE_SCANS))
+def test_scale_scan_empty_input(spark, name):
+    """No rows on an empty input, in the schema the scan declares on a
+    non-empty one."""
+    def frame(n):
+        return spark.range(n).select(
+            "id", (F.col("id") % 5).alias("x"), (F.col("id") % 3).alias("y"),
+            (F.col("id") % 7 + 5).alias("z"),
+        )
+
+    scan = SCALE_SCANS[name]
+    full, empty = scan(frame(40)), scan(frame(0))
+    assert full.collect()
+    assert empty.collect() == []
+    assert empty.schema == full.schema

@@ -17,62 +17,53 @@ def _series(n=5000, seed=3):
     return ts, x
 
 
+def _with_nulls(spark, ts, x):
+    """``(ts_ns, close)`` with NULL at a mid-chunk row (700) and at a
+    chunk head (1024 at ``chunk_rows=256``); ``x`` gets NaN there."""
+    x = x.copy()
+    x[[700, 1024]] = np.nan
+    rows = [(t, None if np.isnan(v) else v) for t, v in zip(ts.tolist(), x.tolist())]
+    return spark.createDataFrame(rows, "ts_ns long, close double"), x
+
+
+def _values(got, col, ts):
+    gm = {r["ts_ns"]: r[col] for r in got.collect()}
+    return np.array([np.nan if gm[t] is None else gm[t] for t in ts.tolist()], dtype=np.float64)
+
+
 def test_parallel_matches_sequential(spark, gate_sides):
-    """Driver side: the kernel's bits; chunk scan: within 1e-11 rel."""
+    """Driver side: the kernel's bits; chunk scan: within 1e-11 rel.
+    NULL inputs decay the sums without adding a weight on both sides."""
     ts, x = _series()
-    df = spark.createDataFrame(
-        list(zip(ts.tolist(), x.tolist())), "ts_ns long, close double"
-    )
+    df, x = _with_nulls(spark, ts, x)
     exact = S.ewma(x, 19.0)
 
     def run():
         got = S.ewma_parallel(df, "close", 19.0, order_col="ts_ns", chunk_rows=256)
-        gm = {r["ts_ns"]: r["ewma"] for r in got.collect()}
-        return np.array([gm[t] for t in ts.tolist()])
+        return _values(got, "ewma", ts)
 
     drv, dist = gate_sides(run)
     assert np.array_equal(drv, exact)
+    assert not np.isnan(dist).any()
     err = np.nanmax(np.abs(dist - exact) / np.maximum(np.abs(exact), 1e-12))
     assert err < 1e-11, err
 
 
-def test_parallel_grouped_matches_per_group(spark):
-    ts, x = _series(3000)
-    sym = (np.arange(len(ts)) % 3).astype(str)
-    df = spark.createDataFrame(
-        list(zip(sym.tolist(), ts.tolist(), x.tolist())),
-        "sym string, ts_ns long, close double",
-    )
-    got = S.ewma_parallel(df, "close", 9.0, order_col="ts_ns", chunk_rows=128, by="sym")
-    gm = {(r["sym"], r["ts_ns"]): r["ewma"] for r in got.collect()}
-    for s in "012":
-        mask = sym == s
-        exact = S.ewma(x[mask], 9.0)
-        gv = np.array([gm[(s, t)] for t in ts[mask].tolist()])
-        err = np.nanmax(np.abs(gv - exact) / np.maximum(np.abs(exact), 1e-12))
-        assert err < 1e-11, (s, err)
-
-
 def test_ewms_parallel_matches_sequential(spark, gate_sides):
     """Driver side: the kernel's bits (NaN head as NULL); chunk scan:
-    the same NULL head and within 1e-9 rel."""
+    the same NULL head and within 1e-9 rel, NULL inputs included."""
     ts, x = _series()
-    df = spark.createDataFrame(
-        list(zip(ts.tolist(), x.tolist())), "ts_ns long, close double"
-    )
+    df, x = _with_nulls(spark, ts, x)
     exact = S.ewms(x, 19.0)
 
     def run():
         got = S.ewms_parallel(df, "close", 19.0, order_col="ts_ns", chunk_rows=256)
-        gm = {r["ts_ns"]: r["ewms"] for r in got.collect()}
-        return np.array(
-            [np.nan if gm[t] is None else gm[t] for t in ts.tolist()], dtype=np.float64
-        )
+        return _values(got, "ewms", ts)
 
     drv, dist = gate_sides(run)
     assert np.array_equal(drv, exact, equal_nan=True)
     mask = ~np.isnan(exact)
-    assert np.isnan(dist[~mask]).all()
+    assert np.array_equal(np.isnan(dist), ~mask)
     err = np.nanmax(np.abs(dist[mask] - exact[mask]) / np.maximum(np.abs(exact[mask]), 1e-12))
     assert err < 1e-9, err
 

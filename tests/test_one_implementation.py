@@ -66,3 +66,21 @@ def test_no_row_count_hint_parameter():
         if p in ROW_HINTS or p.endswith("_crossover")
     ]
     assert offenders == []
+
+
+def test_scale_scans_take_no_unused_knob():
+    """The single-stream scale scans take no ``by`` (per-group EW is
+    ``apply_sequential``'s job) and no ``coarse_span``; only RSI exposes
+    the global row number."""
+    from finmlkit_spark.functions import sequential as S
+
+    scans = [S.ewma_parallel, S.ewms_parallel, S.ewmst_parallel, S.rsi_parallel,
+             S.atr_ema_parallel]
+    offenders = [
+        f"{fn.__name__}({p})"
+        for fn in scans
+        for p in inspect.signature(fn).parameters
+        if p in {"by", "coarse_span"}
+    ]
+    assert offenders == []
+    assert "rn_col" not in inspect.signature(S.atr_ema_parallel).parameters
