@@ -25,7 +25,8 @@ plan asks one of them: the driver gates ask :func:`collect_if_small`
 :func:`cut`, probed once with ``LIMIT n + 1`` — so the upstream runs
 once on either side, and at scale the whole probed input sits behind a
 ``localCheckpoint``. Each probe job carries a ``spark.job.description``
-naming its call site and bound.
+naming its call site and bound, and each job a cut runs is described
+``cut <call site>``.
 """
 
 from __future__ import annotations
@@ -95,8 +96,16 @@ def cut(df: DataFrame) -> DataFrame:
     rematerializes. Scale note: checkpointed partitions are not
     recomputable on executor loss; prefer :func:`keep` when fault
     recomputation matters more than driver latency.
+
+    Under AQE the checkpoint runs the plan's shuffle and broadcast
+    stages at once; those jobs carry ``spark.job.description`` =
+    ``cut <module.function>`` naming the caller.
     """
-    df = df.localCheckpoint(eager=False)
+    return _cut(df, _caller())
+
+
+def _cut(df: DataFrame, site: str) -> DataFrame:
+    df = _described(df, f"cut {site}", lambda: df.localCheckpoint(eager=False))
     _CUT.append(df)
     return df
 
@@ -107,6 +116,18 @@ def _caller() -> str:
     return f"{f.f_globals.get('__name__', '?')}.{f.f_code.co_qualname}"
 
 
+def _described(df: DataFrame, desc: str, fn: Callable[[], Any]) -> Any:
+    """``fn()``, its jobs described ``desc``; the caller's description
+    comes back."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try:
+        return fn()
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
 def _probe(
     df: DataFrame, n: int, site: str, fetch: Callable[[DataFrame], tuple[int, Any]]
 ) -> tuple[DataFrame, Any]:
@@ -115,16 +136,11 @@ def _probe(
     ``site`` and ``n``. ``fetch`` returns ``(rows, payload)``; the result
     is ``(cut_df, payload)``, with ``payload`` None when forced or when
     the cut holds more than ``n`` rows."""
-    df = cut(df)
+    df = _cut(df, site)
     if _FORCE_DISTRIBUTED:
         return df, None
-    sc = df.sparkSession.sparkContext
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(f"size probe {site}: rows <= {n}")
-    try:
-        rows, payload = fetch(df.limit(n + 1))
-    finally:
-        sc.setLocalProperty("spark.job.description", prev)
+    desc = f"size probe {site}: rows <= {n}"
+    rows, payload = _described(df, desc, lambda: fetch(df.limit(n + 1)))
     return df, (payload if rows <= n else None)
 
 

@@ -10,11 +10,9 @@ common case of BOUNDED rows-frames (lookback <= warmup):
    rows get a coarse time bucket (e.g. day); a row_number window
    partitioned by bucket (parallel) ranks within buckets; bucket row
    counts (a tiny agg, one row per bucket) are turned into bucket start
-   offsets with ``functions.prefix.exclusive_prefix`` — flat triangular
-   mode for the default daily bucket axis (coarse by construction,
-   cheapest plan), auto-switching to the two-level O(k·log g) mode when
-   a caller picks a sub-day ``coarse_span`` (an hourly grid over years
-   would make the flat join O(k²)); neither mode plans SinglePartition;
+   offsets with ``functions.prefix.exclusive_prefix`` — on the driver
+   for up to ``prefix.DRIVER_MAX_KEYS`` buckets, by the two-level
+   O(k·log g) plan above that; neither side plans SinglePartition;
 2. chunk rows by global row number: chunk = (rn-1) div chunk_rows, so
    every chunk except the last holds exactly chunk_rows rows;
 3. duplicate each chunk's last ``warmup`` rows into the NEXT chunk,
@@ -62,38 +60,20 @@ def with_global_row_number(
     tiebreak_cols: tuple[str, ...] = (),
     coarse_span: int = DAY_NS,
     rn_col: str = GLOBAL_RN,
-    keep_total: bool = False,
 ) -> DataFrame:
     """Exact global row number by (order_col, *tiebreak_cols) with no
-    single-partition exchange (scalable zipWithIndex in pure DataFrame
-    ops — stays one lazy Catalyst plan, no mid-build action).
-    ``keep_total=True`` also attaches ``_cw_total`` (the global row
-    count) to every row, for callers that need the end of the axis."""
+    single-partition exchange (scalable zipWithIndex in DataFrame ops).
+    The bucket offsets are computed while the frame is built (the
+    ``exclusive_prefix`` gate over the per-bucket counts); the rows
+    themselves stay one lazy plan."""
     order = [order_col, *tiebreak_cols]
-    d = df.withColumn("_cw_bkt", F.floor(F.col(order_col) / F.lit(coarse_span)))
+    bkt = F.floor(F.col(order_col) / F.lit(coarse_span))
+    counts = df.groupBy(bkt.alias("_cw_bkt")).agg(F.count(F.lit(1)).alias("_cw_cnt"))
+    # bucket offset = Σ counts of strictly-earlier buckets
+    offsets = exclusive_prefix(counts, "_cw_bkt", sums={"_cw_off": "_cw_cnt"})
+    d = df.withColumn("_cw_bkt", bkt)
     wb = Window.partitionBy("_cw_bkt").orderBy(*order)
     d = d.withColumn("_cw_rnw", F.row_number().over(wb))
-    counts = d.groupBy("_cw_bkt").agg(F.count(F.lit(1)).alias("_cw_cnt"))
-    # bucket offset = Σ counts of strictly-earlier buckets. Day-or-
-    # coarser axes keep prefix's flat triangular mode (k is small by
-    # construction; cheapest plan — see functions/prefix.py); finer
-    # caller-chosen spans switch to the two-level O(k·log g) mode so an
-    # hourly grid over years never pays O(k²) pairs.
-    offsets = exclusive_prefix(
-        counts,
-        "_cw_bkt",
-        sums={"_cw_off": "_cw_cnt"},
-        group=None if coarse_span >= DAY_NS else 4096,
-    )
-    if keep_total:
-        # total row count, derived from the tiny counts table. NOTE this
-        # plans a scalar-agg Exchange SinglePartition over the <=k partial
-        # rows — harmless at any scale, but callers that must keep a
-        # strictly SinglePartition-free plan (the flagship) should not
-        # request it.
-        offsets = offsets.crossJoin(
-            F.broadcast(counts.agg(F.sum("_cw_cnt").alias("_cw_total")))
-        )
     d = d.join(F.broadcast(offsets), "_cw_bkt")
     return d.withColumn(rn_col, F.col("_cw_off") + F.col("_cw_rnw")).drop(
         "_cw_bkt", "_cw_rnw", "_cw_off"
@@ -134,11 +114,11 @@ def with_row_chunks(
     chunk-id array, NOT a union of two branches — the upstream subtree
     appears ONCE in the plan. ``warmup=0`` (the closed-combine scans in
     ``functions.sequential``) duplicates nothing, so it plans no
-    ``explode`` and no phantom chunk. The remaining double-reference is the tiny
-    per-bucket count aggregate inside :func:`with_global_row_number`;
-    pass ``persist=True`` to cut it with a storage boundary when the
-    input is itself an expensive subtree (e.g. a bar aggregation over a
-    100 TB trade scan).
+    ``explode`` and no phantom chunk. The input is read twice: once by
+    the per-bucket counts of :func:`with_global_row_number` (run while the
+    frame is built), once by the rows; pass ``persist=True`` to put
+    a storage boundary under both when the input is itself an expensive
+    subtree (e.g. a bar aggregation over a 100 TB trade scan).
     """
     if chunk_rows <= warmup:
         raise ValueError(f"chunk_rows ({chunk_rows}) must exceed warmup ({warmup})")

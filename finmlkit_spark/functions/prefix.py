@@ -1,44 +1,93 @@
-"""Exclusive prefix aggregates over a small keyed table, scalably.
+"""Exclusive prefix aggregates over a small keyed table.
 
-Several operators reduce cross-chunk state to a per-chunk summary table
-(one row per time chunk / bucket) and then need, for every chunk, an
-aggregate over all STRICTLY EARLIER chunks: running row-count offsets
-(``chunked_window``), carried last-price / last-sign state
-(``preprocess.chunked_side_frame``), running concurrency and sum offsets
-(``labels.span_sweep``). Two naive forms each have a cliff:
+Several operators reduce cross-chunk state to a summary with one row
+per time chunk or bucket, then need, for every key, an aggregate over
+all STRICTLY EARLIER keys: the bucket offsets of
+``chunked_window.with_global_row_number``, the chunk carry of
+``preprocess.chunked_side_frame`` and the carried close of
+``bars.fill_empty_bars``.
 
-- a global ``Window.orderBy(key)`` plans ``Exchange SinglePartition`` —
-  the node the plan-regression guard bans;
-- a triangular ``b.key < a.key`` self-join is O(k²) pairs — fine for
-  k = days (~1e3), real work at an hourly grid over years (k ~ 1e5 →
-  1e10 pairs, per the round-4 advisory).
-
-Two modes, chosen by the caller's knowledge of k:
-
-``group=None`` (flat): the single triangular broadcast join — THREE
-plan ops, no sort, the cheapest shape. Callers whose chunk axis is
-coarse by construction (daily buckets: k ≤ ~1e4 even over decades →
-≤ 1e8 broadcast-filter evaluations, distributed) use this; measured at
-sf0.1 the two-level form's extra exchange+sort stages cost ~0.2 s of
-fixed scheduling per call, which dominates headline queries.
-
-``group=g`` (two-level): rows get a coarse group ``floor(key / g)``; a
-BOUNDED window partitioned by group (parallel, no SinglePartition)
-produces the in-group prefix; per-group totals (k/g rows) go through
-the triangular join — now O((k/g)²), ≤ 600 pairs at k = 1e5 with
-g = 4096 — and broadcast back. Exact for any key distribution (gaps,
-negatives); cost O(k·log g) + O((k/g)²). Callers with a FINE chunk axis
-(hourly sweeps: ``labels.span_sweep``) use this.
-
-In both modes the input table is referenced twice in the plan (totals +
-probe side). All call sites feed either an already-persisted summary
-table or a cheap aggregate, so no storage boundary is added here.
+Up to :data:`DRIVER_MAX_KEYS` rows, the summary goes through the one
+driver gate (``cache.collect_if_small``), is prefixed in NumPy
+(:func:`local_prefix`) and returns as a local table: one job, no
+exchange. Above it, or under ``cache._FORCE_DISTRIBUTED``,
+:func:`two_level` plans the prefix with neither ``Exchange
+SinglePartition`` (a global ``Window.orderBy``) nor O(k²) pairs (a
+triangular self-join): a window partitioned by group ``floor(key / g)``
+gives the in-group prefix and the k/g group totals go through the
+triangular join, O(k·log g) + O((k/g)²). Sums are of integer columns
+and ``lasts`` are carried unchanged, so both sides return the same bits.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .. import cache
+
+#: keys prefixed on the driver: a bound on what is collected and
+#: broadcast back (a few MB), not a measured crossover; daily chunks
+#: over decades or hourly chunks over ten years fit
+DRIVER_MAX_KEYS = 100_000
+
+#: keys per group on the scale side
+_GROUP = 4096
+
+
+def _last_before(vals: pa.Array) -> pa.Array:
+    """For rows in key order: the value on the nearest strictly-earlier
+    row where ``vals`` is non-null, NULL when there is none. Values are
+    taken, never recomputed, so floats (NaN included) keep their bits."""
+    n = len(vals)
+    pos = np.where(pc.is_valid(vals).to_numpy(zero_copy_only=False), np.arange(n), -1)
+    prev = np.full(n, -1, dtype=np.int64)
+    prev[1:] = np.maximum.accumulate(pos)[:-1]
+    return vals.take(pa.array(prev, mask=prev < 0))
+
+
+def local_prefix(
+    tbl: pa.Table, key: str, sums: dict[str, str], lasts: dict[str, str]
+) -> pa.Table:
+    """The driver side of :func:`exclusive_prefix` over an Arrow table:
+    returns ``(key, *outputs)`` in key order."""
+    tbl = tbl.sort_by(key)
+    cols = {key: tbl.column(key)}
+    for out, c in sums.items():
+        v = pc.fill_null(tbl.column(c), 0).to_numpy().astype(np.int64)
+        cols[out] = pa.array(np.cumsum(v) - v)
+    for out, c in lasts.items():
+        cols[out] = _last_before(tbl.column(c).combine_chunks())
+    return pa.table(cols)
+
+
+def exclusive_prefix(
+    df: DataFrame,
+    key: str,
+    sums: dict[str, str] | None = None,
+    lasts: dict[str, str] | None = None,
+) -> DataFrame:
+    """Attach strictly-exclusive prefix aggregates to a keyed table.
+
+    ``df`` must have ONE row per ``key`` (an integer chunk/bucket id).
+    ``sums`` maps output column → integer input column: output = SUM of
+    the input over all rows with a strictly smaller key (0 when none).
+    ``lasts`` maps output column → input column: output = the input
+    value on the largest strictly-smaller key where it is non-null
+    (NULL when none) — the "carry state from the latest earlier chunk"
+    pattern. Returns the PREFIX TABLE ``(key, *outputs)`` for the caller
+    to broadcast back; ``df``'s plan runs once on either side.
+    """
+    sums = sums or {}
+    lasts = lasts or {}
+    cols = sorted({*sums.values(), *lasts.values()})
+    cut, tbl = cache.collect_if_small(df.select(key, *cols), DRIVER_MAX_KEYS)
+    if tbl is None:
+        return two_level(cut, key, sums, lasts)
+    return df.sparkSession.createDataFrame(local_prefix(tbl, key, sums, lasts))
 
 
 def _last_nonnull(val: Column, ordc: Column) -> Column:
@@ -47,59 +96,12 @@ def _last_nonnull(val: Column, ordc: Column) -> Column:
     return F.max_by(val, F.when(val.isNotNull(), ordc))
 
 
-def _flat(
+def two_level(
     df: DataFrame, key: str, sums: dict[str, str], lasts: dict[str, str]
 ) -> DataFrame:
-    """Single triangular broadcast join: b.key < a.key pairs, one agg.
-    Returns the (key, *outs) prefix table."""
-    cols = sorted({*sums.values(), *lasts.values()})
-    a = df.select(F.col(key))
-    b = df.select(
-        F.col(key).alias("_kb"), *[F.col(c).alias(f"_b_{c}") for c in cols]
-    )
-    aggs = [
-        F.coalesce(F.sum(f"_b_{c}"), F.lit(0)).alias(out)
-        for out, c in sums.items()
-    ]
-    aggs += [
-        _last_nonnull(F.col(f"_b_{c}"), F.col("_kb")).alias(out)
-        for out, c in lasts.items()
-    ]
-    return (
-        a.join(F.broadcast(b), F.col("_kb") < F.col(key), "left")
-        .groupBy(key)
-        .agg(*aggs)
-    )
-
-
-def exclusive_prefix(
-    df: DataFrame,
-    key: str,
-    sums: dict[str, str] | None = None,
-    lasts: dict[str, str] | None = None,
-    group: int | None = None,
-) -> DataFrame:
-    """Attach strictly-exclusive prefix aggregates to a keyed table.
-
-    ``df`` must have ONE row per ``key`` (an integer chunk/bucket id).
-    ``sums`` maps output column → input column: output = SUM of the
-    input over all rows with a strictly smaller key (0 when none).
-    ``lasts`` maps output column → input column: output = the input
-    value on the largest strictly-smaller key where it is non-null
-    (NULL when none) — the "carry state from the latest earlier chunk"
-    pattern. Returns the PREFIX TABLE ``(key, *outputs)`` — callers
-    join it back (broadcast) wherever they need it, which keeps the
-    input referenced exactly twice in the plan (the a/b probe sides).
-
-    ``group=None`` → flat triangular join (cheapest; callers guarantee
-    k is coarse). ``group=g`` → two-level window + group-total
-    triangular (O(k log g); for fine chunk axes).
-    """
-    sums = sums or {}
-    lasts = lasts or {}
-    if group is None:
-        return _flat(df, key, sums, lasts)
-    pg = F.floor(F.col(key) / F.lit(int(group)))
+    """The scale side of :func:`exclusive_prefix`, planned over ``df``
+    (referenced twice: the in-group window and the group totals)."""
+    pg = F.floor(F.col(key) / F.lit(int(_GROUP)))
     d = df.withColumn("_pg", pg)
     w = (
         Window.partitionBy("_pg")

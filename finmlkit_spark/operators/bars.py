@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.prefix import exclusive_prefix
+
 
 def _w(by: str | None = "symbol"):
     w = Window.partitionBy(by) if by else Window.partitionBy(F.lit(1))
@@ -218,10 +220,10 @@ def fill_empty_bars(
     runs partition-parallel: time chunks of ``chunk_bars`` grid slots
     (default one day of 1-min bars), within-chunk cumulative
     last-non-null, and a k-row per-chunk summary (last real close per
-    chunk) prefix-combined with a triangular join and broadcast back —
-    the same carry construction as ``preprocess.chunked_side_frame``,
-    exact because the fill only COPIES values. The remaining
-    single-partition node is the 1-row min/max bounds aggregate.
+    chunk) carried by ``functions.prefix.exclusive_prefix`` and
+    broadcast back — exact because the fill only COPIES values. The
+    remaining single-partition node is the 1-row min/max bounds
+    aggregate.
     """
     bounds = bars.agg(F.min(key).alias("lo"), F.max(key).alias("hi"))
     cal = bounds.select(
@@ -240,18 +242,7 @@ def fill_empty_bars(
     summ = joined.groupBy("_fck").agg(
         F.max_by("close", F.when(F.col("close").isNotNull(), F.col(key))).alias("_lastc")
     )
-    carry = (
-        summ.select("_fck")
-        .join(
-            summ.where(F.col("_lastc").isNotNull()).select(
-                F.col("_fck").alias("_fckb"), "_lastc"
-            ),
-            F.col("_fckb") < F.col("_fck"),
-            "left",
-        )
-        .groupBy("_fck")
-        .agg(F.max_by("_lastc", "_fckb").alias("_carry"))
-    )
+    carry = exclusive_prefix(summ, "_fck", lasts={"_carry": "_lastc"})
     joined = joined.join(F.broadcast(carry), "_fck")
     prev_close = F.coalesce("_cin", "_carry")
     return joined.select(

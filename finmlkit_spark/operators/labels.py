@@ -73,11 +73,12 @@ def triple_barrier(
     (sign of terminal return, 0→+1, ``tbm.py:141-143``), touch_ts_ns,
     touch_ret, barrier_ratio.
 
-    Plan shape: one server-parsed SQL stage (round-7; the op-chained
-    form cost ~0.5 s of pure JVM analysis per build on the deep trades
-    subtree — same Catalyst expressions, same bit-identical output,
-    differential-tested). The path walk itself stays a pure bucketed
-    join + hash aggregate: the reference breaks the walk at the first
+    Plan shape: one server-parsed SQL stage. It must stay one: the
+    SQL text is analyzed once per build, where an op-chained form
+    re-analyzes the deep trades subtree per op (~0.5 s of JVM analysis
+    per build), and it yields the same Catalyst expressions, so the
+    output bits are the same (differential-tested). The path walk
+    itself stays a pure bucketed join + hash aggregate: the reference breaks the walk at the first
     touch, but that prefix truncation is OBSERVATIONALLY IRRELEVANT —
     max_urbr/max_lrbr feed barrier_ratio only in the
     ``touch_ts == last_ts`` branch (no touch, or a touch on the path's

@@ -18,11 +18,13 @@ from __future__ import annotations
 
 import math
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import cache
-from ..functions.prefix import exclusive_prefix
+from ..functions.prefix import DRIVER_MAX_KEYS, local_prefix, two_level
 
 NS_PER = {"s": 1_000_000_000, "ms": 1_000_000, "us": 1_000, "ns": 1}
 
@@ -153,9 +155,9 @@ def with_trade_side_chunked(
     shuffle+sort passes a row-chunk warmup-duplication design costs):
     rows partition by coarse time chunk; all cross-chunk state — the
     boundary Δprice sign and the carried last-nonzero sign — travels
-    through a per-chunk summary table (k rows for k chunks) combined
-    with ``functions.prefix.exclusive_prefix`` (flat mode at the daily
-    default, two-level mode on finer caller-chosen axes) and
+    through a per-chunk summary table (k rows for k chunks), collected
+    once and prefixed on the driver (``functions.prefix.local_prefix``;
+    the two-level plan above ``prefix.DRIVER_MAX_KEYS`` chunks) and
     broadcast back. Signs are exact
     −1/0/+1 integers, so the result equals ``with_trade_side(by=None)``
     bit-for-bit. ``chunk_ns`` trades parallelism against skew: a chunk
@@ -202,12 +204,17 @@ def chunked_side_frame(
     as typed NULLs — there is no earlier chunk), so stacked-lag
     consumers work unchanged and remain bit-identical across modes.
 
+    ``mode="chunked"`` reads its input once, in the window pass, which
+    it cuts (``cache.cut``); the one summary aggregate and the returned
+    frame both read that cut. The k-row summary goes through one
+    ``cache.collect_if_small`` at ``prefix.DRIVER_MAX_KEYS``; the
+    chained carries (``_prev_last_p`` → ``_bnz`` → ``_nz`` → ``_carry``)
+    then run in NumPy, else as two-level prefix plans.
+
     ``mode="auto"`` asks ``cache.rows_at_most(df, SIDE_SMALL_ROWS)``:
     global when the input fits, chunked otherwise (always chunked under
-    ``cache._FORCE_DISTRIBUTED``). Either plan reads the probe's cut,
-    so the upstream runs once; at scale the chunked plan's two passes
-    re-read that ``localCheckpoint`` instead of re-scanning the source.
-    An explicit ``"global"`` / ``"chunked"`` runs no probe and no cut.
+    the hook). Either plan reads the probe's cut, so the upstream runs
+    once. An explicit ``"global"`` runs no probe and no cut.
     """
     if mode == "auto":
         df, fits = cache.rows_at_most(df, SIDE_SMALL_ROWS)
@@ -228,8 +235,8 @@ def chunked_side_frame(
         return d, w
     if mode != "chunked":
         raise ValueError(f"mode must be auto|global|chunked, got {mode!r}")
-    ck = F.col("_ck")
-    d = df.withColumn("_ck", F.floor(F.col("ts_ns") / F.lit(int(chunk_ns))))
+    ck = F.floor(F.col("ts_ns") / F.lit(int(chunk_ns)))
+    d = df.withColumn("_ck", ck)
     w = Window.partitionBy("_ck").orderBy("ts_ns", "trade_id")
     wcum = w.rowsBetween(Window.unboundedPreceding, 0)
     # in-chunk tick signs; NULL on each chunk's first row (boundary sign
@@ -239,76 +246,58 @@ def chunked_side_frame(
         "_cin",
         F.last(F.when(F.col("_raw") != 0, F.col("_raw")), ignorenulls=True).over(wcum),
     )
-    # per-chunk summary from the RAW stream — two hash-agg passes over a
-    # 3-column projection with k-row shuffles — NOT from the window pass
-    # above: deriving it there would either persist the full windowed
-    # frame (a 100 TB cache) or evaluate the shuffle+sort twice (Spark
-    # plans are trees). Column-pruned re-scans beat both, and keep the
-    # whole operator cache-free.
-    base = df.select(
-        F.floor(F.col("ts_ns") / F.lit(int(chunk_ns))).alias("_ck"), "price", "trade_id"
-    )
-    # first/last price per chunk (trade_id-keyed min_by/max_by — the
-    # canonical id-monotone contract, hash-aggregable)
-    s1 = base.groupBy("_ck").agg(
+    # the window pass runs once, behind a cut that the summary aggregate
+    # and the caller both read. Per chunk: first/last price and the last
+    # in-chunk nonzero sign (_cin on the last row; NULL when the chunk
+    # trades at one price), trade_id-keyed min_by/max_by — the canonical
+    # id-monotone contract, hash-aggregable
+    d = cache.cut(d)
+    summ = d.groupBy("_ck").agg(
         F.min_by("price", "trade_id").alias("_first_p"),
         F.max_by("price", "trade_id").alias("_last_p"),
+        F.max_by("_cin", "trade_id").alias("_lastnz"),
     )
-    # last nonzero IN-CHUNK delta sign without the window: every row
-    # after the chunk's final price-change point trades at _last_p, so
-    # that change is from p_m — the last row priced differently — to
-    # _last_p, giving sign(_last_p − p_m). The changed-to row is at
-    # least the chunk's second row, so this never captures the boundary
-    # delta; NULL when the whole chunk trades at one price.
-    pm = (
-        base.join(F.broadcast(s1.select("_ck", "_last_p")), "_ck")
-        .where(F.col("price") != F.col("_last_p"))
-        .groupBy("_ck")
-        .agg(F.max_by("price", "trade_id").alias("_pm"))
-    )
-    # k rows for k chunks; persisted (via the tracked-cache registry,
-    # see finmlkit_spark.cache) because the exclusive-prefix below
-    # references it twice — without a storage boundary each reference
-    # re-runs the scans+aggs (plans are trees). Unlike caching the
-    # windowed stream this is bounded at ANY data scale: one row per
-    # time chunk (~9k/year on an hourly grid).
-    summ = cache.keep(
-        s1.join(pm, "_ck", "left").withColumn(
-            "_lastnz_excl", F.signum(F.col("_last_p") - F.col("_pm"))
-        )
-    )
-    # boundary sign of chunk k = sign(first_p_k − last_p of the latest
-    # earlier non-empty chunk), via functions.prefix over the k-row
-    # table: flat triangular mode for day-or-coarser chunk_ns (k small
-    # by construction, cheapest plan), two-level O(k·log g) mode when
-    # the caller picks a finer axis (hourly grid over years ⇒ k ~ 1e5,
-    # where flat would be O(k²) pairs); no SinglePartition either way
-    pgrp = None if chunk_ns >= DAY_NS else 4096
-    prevp = exclusive_prefix(
-        summ, "_ck", lasts={"_prev_last_p": "_last_p"}, group=pgrp
-    )
-    s2 = summ.join(prevp, "_ck").select(
-        "_ck",
-        "_prev_last_p",
-        F.when(
-            F.signum(F.col("_first_p") - F.col("_prev_last_p")) != 0,
-            F.signum(F.col("_first_p") - F.col("_prev_last_p")),
-        ).alias("_bnz"),
-        "_lastnz_excl",
-    )
-    # a chunk's last nonzero sign overall = in-chunk one, else boundary
-    # (persisted via the tracked registry: the carry prefix below reads
-    # it on both probe sides)
-    s2 = cache.keep(s2.withColumn("_nz", F.coalesce("_lastnz_excl", "_bnz")))
-    # carry into chunk k = _nz of the latest earlier chunk that has one
-    # (same flat-vs-two-level mode choice as the boundary prefix above)
-    carry = exclusive_prefix(s2, "_ck", lasts={"_carry": "_nz"}, group=pgrp)
-    small = s2.select("_ck", "_prev_last_p", "_bnz").join(carry, "_ck")
+    # k rows for k chunks, collected once; both carries are prefixes
+    # over it (on the driver below the bound, else two-level plans)
+    cut, tbl = cache.collect_if_small(summ, DRIVER_MAX_KEYS)
+    if tbl is None:
+        small = _side_carry_scale(cut)
+    else:
+        small = df.sparkSession.createDataFrame(_side_carry_local(tbl))
     d = d.join(F.broadcast(small), "_ck")
     # last nonzero sign at row i = in-chunk prefix, else this chunk's
     # boundary sign, else the carry; default +1 (reference seeds +1)
     side = F.coalesce(F.col("_cin"), F.col("_bnz"), F.col("_carry"), F.lit(1.0)).cast("int")
     return d.withColumn("side", side), w
+
+
+def _side_carry_local(summ: pa.Table) -> pa.Table:
+    """Driver side of the chunk carry: the summary ``(_ck, _first_p,
+    _last_p, _lastnz)`` → ``(_ck, _prev_last_p, _bnz, _carry)``, in Spark's
+    arithmetic (NULL propagates; NaN is a value, and nonzero)."""
+    summ = summ.sort_by("_ck")
+    prev = local_prefix(summ, "_ck", {}, {"_prev_last_p": "_last_p"})["_prev_last_p"]
+    # boundary sign of chunk k = sign(first_p_k − last_p of the latest
+    # earlier non-empty chunk), NULL when zero
+    b = pc.sign(pc.subtract(summ["_first_p"], prev))
+    bnz = pc.if_else(pc.not_equal(b, 0.0), b, pa.scalar(None, pa.float64()))
+    # a chunk's last nonzero sign overall = in-chunk one, else boundary
+    nz = pc.coalesce(summ["_lastnz"], bnz)
+    out = pa.table({"_ck": summ["_ck"], "_prev_last_p": prev, "_bnz": bnz, "_nz": nz})
+    carry = local_prefix(out, "_ck", {}, {"_carry": "_nz"})["_carry"]
+    return out.drop_columns("_nz").append_column("_carry", carry)
+
+
+def _side_carry_scale(summ: DataFrame) -> DataFrame:
+    """Scale side of :func:`_side_carry_local`: the same chain over the
+    cut summary, each prefix a :func:`prefix.two_level` plan."""
+    prevp = two_level(summ, "_ck", {}, {"_prev_last_p": "_last_p"})
+    bsign = F.signum(F.col("_first_p") - F.col("_prev_last_p"))
+    s2 = summ.join(prevp, "_ck").withColumn("_bnz", F.when(bsign != 0, bsign))
+    # cut: the carry prefix reads s2 on both of its plan sides
+    s2 = cache.cut(s2.withColumn("_nz", F.coalesce("_lastnz", "_bnz")))
+    carry = two_level(s2, "_ck", {}, {"_carry": "_nz"})
+    return s2.select("_ck", "_prev_last_p", "_bnz").join(carry, "_ck")
 
 
 def infer_tick_size(df: DataFrame, sample: int = 10_000) -> float:

@@ -8,6 +8,10 @@ scale scan returns no rows, in its declared schema, on an empty input."""
 
 from __future__ import annotations
 
+import math
+import random
+import struct
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -130,23 +134,37 @@ def test_probe_job_names_its_call_site(spark):
     assert {r["d"] for r in cut.collect()} == {f"size probe {site}: rows <= 10"}
 
 
-#: the side window's auto mode, over the counted frame as one trade stream
-SIDE_AUTO = {
-    "with_trade_side_chunked": lambda tr: P.with_trade_side_chunked(
-        tr, chunk_ns=N // 4
+def test_cut_jobs_name_their_call_site(spark):
+    """Cutting a shuffle plan runs its map stage while the checkpoint is
+    planned; that job carries ``cut <call site>`` and the caller's own
+    description comes back."""
+    from pyspark import TaskContext
+
+    sc = spark.sparkContext
+    desc = F.udf(lambda _: TaskContext.get().getLocalProperty("spark.job.description"), "string")
+    df = spark.range(0, 8, numPartitions=2).withColumn("d", desc("id")).groupBy("d").count()
+    sc.setJobDescription("outer")
+    try:
+        cut = cache.cut(df)
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    site = f"{__name__}.test_cut_jobs_name_their_call_site"
+    assert {r["d"] for r in cut.collect()} == {f"cut {site}"}
+
+
+#: the side window, over the counted frame as one trade stream
+SIDE = {
+    "with_trade_side_chunked": lambda tr, mode: P.with_trade_side_chunked(
+        tr, chunk_ns=N // 4, mode=mode
     ).select("trade_id", "side"),
-    "bar_directional_features_chunked": lambda tr: B.bar_directional_features_chunked(
-        B.with_time_bar(tr, 1000), chunk_ns=N // 4
+    "bar_directional_features_chunked": lambda tr, mode: B.bar_directional_features_chunked(
+        B.with_time_bar(tr, 1000), chunk_ns=N // 4, mode=mode
     ),
 }
 
 
-@pytest.mark.parametrize("name", list(SIDE_AUTO))
-def test_side_auto_runs_upstream_once(spark, gate_sides, name):
-    """The side window's auto mode plans either side over the probe's
-    cut: the counted upstream runs once for the build plus one action,
-    and both sides return the same rows."""
-
+def _side_upstream_once(spark, gate_sides, name, mode):
     def run():
         df, acc = _counted(spark)
         trades = df.select(
@@ -155,12 +173,145 @@ def test_side_auto_runs_upstream_once(spark, gate_sides, name):
             (F.col("x") % 7).cast("double").alias("price"),
             F.lit(1.0).alias("qty"),
         )
-        rows = sorted(SIDE_AUTO[name](trades).collect())
+        rows = sorted(SIDE[name](trades, mode).collect())
         assert acc.value == N
         return rows
 
     small, scale = gate_sides(run)
     assert small and small == scale
+
+
+@pytest.mark.parametrize("name", list(SIDE))
+def test_side_auto_runs_upstream_once(spark, gate_sides, name):
+    """The side window's auto mode plans either side over the probe's
+    cut: the counted upstream runs once for the build plus one action,
+    and both sides return the same rows."""
+    _side_upstream_once(spark, gate_sides, name, "auto")
+
+
+@pytest.mark.parametrize("name", list(SIDE))
+def test_side_chunked_runs_upstream_once(spark, gate_sides, name):
+    """The explicit scale mode reads its input once, in the window pass
+    behind its cut, which the summary aggregate and the output both
+    read, on either side of the summary's driver gate."""
+    _side_upstream_once(spark, gate_sides, name, "chunked")
+
+
+#: chunk span of the multi-chunk side stream
+CK = 1_000
+
+
+def _side_stream(seed, nan=False):
+    """``(ts_ns, trade_id, price, qty)`` over ten chunks of ``CK`` ns:
+    random walks on a coarse grid (many zero deltas); two consecutive
+    single-price chunks at the previous chunk's last price, so the
+    carried sign crosses both; an empty chunk; a chunk of equal-ts_ns
+    ties; and, with ``nan``, one NaN price inside a walk. trade_id rises
+    with (ts_ns, arrival), the trades contract."""
+    rng = random.Random(seed)
+    kinds = ["walk", "walk", "flat", "flat", "empty", "walk", "ties", "walk", "flat", "walk"]
+    rows, tid, p = [], 0, 100.0
+    for day, kind in enumerate(kinds):
+        t0 = day * CK
+        n = 0 if kind == "empty" else rng.randint(8, 40)
+        hi = 4 if kind == "ties" else CK
+        for t in sorted(t0 + rng.randrange(hi) for _ in range(n)):
+            if kind != "flat":
+                p += rng.choice([-1.0, 0.0, 0.0, 1.0])
+            rows.append((t, tid, p, 1.0))
+            tid += 1
+    if nan:
+        t, i, _, q = rows[len(rows) // 2]
+        rows[len(rows) // 2] = (t, i, float("nan"), q)
+    return rows
+
+
+def _tick_rule(rows):
+    """The tick rule row by row in (ts_ns, trade_id) order with Spark's
+    double semantics (a NaN delta is a NaN sign, and NaN is nonzero):
+    trade_id → the sign before the int cast."""
+    out, last, prev = {}, 1.0, None
+    for _, tid, p, _ in sorted(rows):
+        if prev is not None:
+            d = p - prev
+            raw = d if math.isnan(d) else float((d > 0) - (d < 0))
+            if raw != 0:
+                last = raw
+        out[tid] = last
+        prev = p
+    return out
+
+
+def _bits(v):
+    return struct.pack("<d", v) if isinstance(v, float) else v
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_side_bit_identical_across_modes(spark, gate_sides, seed):
+    """``side`` and the directional bar spreads are the same bits in the
+    chunked and global modes, on both sides of the summary's driver
+    gate, and ``side`` equals the row-by-row tick rule."""
+    rows = _side_stream(seed)
+    want = {t: int(s) for t, s in _tick_rule(rows).items()}
+
+    def run():
+        tr = spark.createDataFrame(rows, "ts_ns long, trade_id long, price double, qty double")
+        out = {}
+        for mode in ("chunked", "global"):
+            side = P.with_trade_side_chunked(tr, chunk_ns=CK, mode=mode)
+            out[("side", mode)] = {r["trade_id"]: r["side"] for r in side.collect()}
+            bars = B.bar_directional_features_chunked(
+                B.with_time_bar(tr, 300), chunk_ns=CK, mode=mode
+            )
+            out[("bars", mode)] = sorted(tuple(map(_bits, r)) for r in bars.collect())
+        return out
+
+    small, scale = gate_sides(run)
+    assert small == scale
+    assert small[("side", "chunked")] == small[("side", "global")] == want
+    assert small[("bars", "chunked")] == small[("bars", "global")]
+
+
+def test_side_carry_keeps_nan_prices(spark, gate_sides):
+    """A NaN price has no tick sign; the int ``side`` column fails the
+    ANSI cast on it in every mode, so this compares the sign before the
+    cast, and the carried helper columns, bit for bit across the gate:
+    the driver carry treats NaN as a value and NULL as absent, as Spark
+    does."""
+    rows = _side_stream(3, nan=True)
+    want = {t: _bits(s) for t, s in _tick_rule(rows).items()}
+    sign = F.coalesce("_cin", "_bnz", "_carry", F.lit(1.0)).alias("sign")
+
+    def run():
+        tr = spark.createDataFrame(rows, "ts_ns long, trade_id long, price double, qty double")
+        d, _ = P.chunked_side_frame(tr, chunk_ns=CK, mode="chunked")
+        got = d.select("trade_id", sign, "_prev_last_p", "_bnz", "_carry").collect()
+        return {r["trade_id"]: tuple(map(_bits, r[1:])) for r in got}
+
+    small, scale = gate_sides(run)
+    assert small == scale
+    assert {t: v[0] for t, v in small.items()} == want
+
+
+def test_side_chunked_job_budget(spark):
+    """Building and cutting the explicit scale mode over a 3-day stream
+    runs a pinned number of Spark jobs: one summary collect and no
+    per-prefix job chain, which would add jobs and fail here."""
+    day = 86_400_000_000_000
+    rows = [
+        (d * day + i * 1_000_000, d * 100 + i, 100.0 + i * 7 % 5, 1.0)
+        for d in range(3)
+        for i in range(50)
+    ]
+    tr = spark.createDataFrame(rows, "ts_ns long, trade_id long, price double, qty double")
+    sc = spark.sparkContext
+    group = "test_side_chunked_job_budget"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        cache.cut(P.with_trade_side_chunked(tr, mode="chunked"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
 
 
 #: the gated single-stream scans, over the counted frame's (id, x)

@@ -84,3 +84,11 @@ def test_scale_scans_take_no_unused_knob():
     ]
     assert offenders == []
     assert "rn_col" not in inspect.signature(S.atr_ema_parallel).parameters
+
+
+def test_exclusive_prefix_takes_no_group():
+    """The prefix picks its side through the driver gate; the two-level
+    plan's group size is a module constant, not a caller option."""
+    from finmlkit_spark.functions.prefix import exclusive_prefix
+
+    assert "group" not in inspect.signature(exclusive_prefix).parameters
