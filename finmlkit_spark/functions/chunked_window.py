@@ -48,6 +48,12 @@ from .prefix import exclusive_prefix
 
 DAY_NS = 86_400_000_000_000
 
+# Width of the coarse buckets ranked in parallel by
+# :func:`with_global_row_number` (in ``order_col`` units). The row
+# numbers are exact for any width; it only sets the per-bucket task
+# size, so tests narrow it to force several buckets on small inputs.
+_COARSE_SPAN = DAY_NS
+
 #: helper columns added by :func:`with_row_chunks`
 CHUNK = "_chunk"
 WARM = "_warm"
@@ -58,16 +64,16 @@ def with_global_row_number(
     df: DataFrame,
     order_col: str,
     tiebreak_cols: tuple[str, ...] = (),
-    coarse_span: int = DAY_NS,
     rn_col: str = GLOBAL_RN,
 ) -> DataFrame:
     """Exact global row number by (order_col, *tiebreak_cols) with no
     single-partition exchange (scalable zipWithIndex in DataFrame ops).
     The bucket offsets are computed while the frame is built (the
     ``exclusive_prefix`` gate over the per-bucket counts); the rows
-    themselves stay one lazy plan."""
+    themselves stay one lazy plan. Rows are ranked within buckets of
+    ``_COARSE_SPAN`` ``order_col`` units."""
     order = [order_col, *tiebreak_cols]
-    bkt = F.floor(F.col(order_col) / F.lit(coarse_span))
+    bkt = F.floor(F.col(order_col) / F.lit(_COARSE_SPAN))
     counts = df.groupBy(bkt.alias("_cw_bkt")).agg(F.count(F.lit(1)).alias("_cw_cnt"))
     # bucket offset = Σ counts of strictly-earlier buckets
     offsets = exclusive_prefix(counts, "_cw_bkt", sums={"_cw_off": "_cw_cnt"})
@@ -86,7 +92,6 @@ def with_row_chunks(
     warmup: int,
     chunk_rows: int = 8192,
     tiebreak_cols: tuple[str, ...] = (),
-    coarse_span: int = DAY_NS,
     persist: bool = False,
 ) -> DataFrame:
     """Rows + duplicated warmup rows, ready for per-chunk windows.
@@ -124,9 +129,7 @@ def with_row_chunks(
         raise ValueError(f"chunk_rows ({chunk_rows}) must exceed warmup ({warmup})")
     if persist:
         df = cache.keep(df)
-    d = with_global_row_number(
-        df, order_col, tiebreak_cols=tiebreak_cols, coarse_span=coarse_span
-    )
+    d = with_global_row_number(df, order_col, tiebreak_cols=tiebreak_cols)
     pos = (F.col(GLOBAL_RN) - 1) % chunk_rows
     base = F.floor((F.col(GLOBAL_RN) - 1) / chunk_rows)
     if warmup == 0:

@@ -581,7 +581,6 @@ def rolling_median_chunked(
     tiebreak_cols: tuple[str, ...] = (),
     out_col: str | None = None,
     chunk_rows: int = 8192,
-    coarse_span: int | None = None,
 ):
     """Exact interpolated rolling median at TRADE scale.
 
@@ -606,10 +605,9 @@ def rolling_median_chunked(
     from . import chunked_window as cw
 
     out_col = out_col or f"{col}_med{n}"
-    kw = {} if coarse_span is None else {"coarse_span": coarse_span}
     d = cw.with_row_chunks(
         df, order_col, warmup=n - 1, chunk_rows=chunk_rows,
-        tiebreak_cols=tuple(tiebreak_cols), **kw,
+        tiebreak_cols=tuple(tiebreak_cols),
     )
     schema = StructType(list(df.schema.fields) + [StructField(out_col, DoubleType())])
     helpers = [cw.CHUNK, cw.WARM, cw.GLOBAL_RN]

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import cache
+from ..functions import arrow
 from .text import let_bind, shingle_hashes_from_tokens, shingles, token_hashes  # noqa: F401 (shingles kept for API)
 
 MOD = 1_000_000_007
@@ -75,25 +76,27 @@ def minhash_signature(hashes: Column, num_hashes: int = 16) -> Column:
     (a_j·h + b_j) mod p — universal-hash family with fixed seeds so the
     oracle reproduces it exactly.
 
-    Arrow-batched numpy (one matrix op per row batch): the interpreted
-    HOF fold costs ~6µs/element, the vectorized version ~5ns — identical
-    int64 arithmetic, 16 hash funcs × |shingles| per doc."""
+    Arrow-batched numpy over the flattened batch (one vectorized pass
+    and one ``np.minimum.reduceat`` per hash function): identical int64
+    arithmetic, 16 hash funcs × |shingles| per doc; an empty array
+    signs as int64 max."""
     import numpy as np
-    import pandas as pd
 
-    A = np.array(MH_A[:num_hashes], dtype=np.int64)[:, None]
-    B = np.array(MH_B[:num_hashes], dtype=np.int64)[:, None]
+    A = np.array(MH_A[:num_hashes], dtype=np.int64)
+    B = np.array(MH_B[:num_hashes], dtype=np.int64)
 
-    @F.pandas_udf("array<long>")
-    def _sig(col):
-        out = []
-        for hs in col:
-            h = np.asarray(hs, dtype=np.int64)
-            if h.size == 0:
-                out.append(np.full(num_hashes, 2**63 - 1, dtype=np.int64))
-            else:
-                out.append(((A * h[None, :] + B) % MH_P).min(axis=1))
-        return pd.Series(out)
+    def _sig(hs):
+        h, off = arrow.segments(hs)
+        h = h.astype(np.int64, copy=False)
+        out = np.full((len(off) - 1, num_hashes), 2**63 - 1, dtype=np.int64)
+        nz = np.diff(off) > 0
+        if nz.any():
+            starts = off[:-1][nz]
+            for j in range(num_hashes):
+                out[nz, j] = np.minimum.reduceat((A[j] * h + B[j]) % MH_P, starts)
+        return out
+
+    _sig = arrow.column(_sig, "array<long>")
 
     return _sig(hashes)
 
@@ -124,7 +127,7 @@ def minhash_lsh_pairs(
     # NOTE on materialization: do NOT cache() DataFrames carrying
     # array<long> columns — the columnar in-memory cache serializes nested
     # arrays pathologically (50s for 5k docs vs 2s to recompute). The
-    # signature is a pandas_udf stage, which Catalyst plans as its own
+    # signature is an Arrow UDF stage, which Catalyst plans as its own
     # ArrowEvalPython node (no project-collapse re-inlining).
     # The (doc, sh) table gets its own cut boundary — checkpoint BLOCK
     # writes don't have the columnar array pathology — so the shingle
@@ -328,19 +331,18 @@ def _kgram_rows(texts, k: int):
 
 
 def _map_kgram_rows(
-    docs: DataFrame, k: int, text_col: str, id_col: str, emit, cols: str
+    docs: DataFrame, k: int, text_col: str, id_col: str, emit, cols: dict
 ) -> DataFrame:
-    """``mapInPandas`` over ``(id_col, text_col)``: each batch's
+    """Arrow map over ``(id_col, text_col)``: each batch's
     :func:`_kgram_rows` go through ``emit(ids, n_docs, d, p, g)``, which
-    returns the batch's output frame (``doc`` plus ``cols``)."""
-    id_type = dict(docs.dtypes)[id_col]
+    returns the batch's output columns (``doc`` plus ``cols``)."""
 
-    def gen(batches):
-        for pdf in batches:
-            texts = pdf[text_col].values
-            yield emit(pdf[id_col].values, len(texts), *_kgram_rows(texts, k))
+    def gen(b):
+        texts = b[text_col]
+        return emit(b[id_col], len(texts), *_kgram_rows(texts, k))
 
-    return docs.select(id_col, text_col).mapInPandas(gen, f"doc {id_type}, {cols}")
+    schema = {"doc": docs.schema[id_col].dataType, **cols}
+    return arrow.map_batches(docs.select(id_col, text_col), gen, schema)
 
 
 def _positional_trigram_rows(
@@ -350,13 +352,10 @@ def _positional_trigram_rows(
     — the rows of ``posexplode(positional_shingle_hashes(
     token_hashes(text)))``, exact integer parity (pinned against that
     HOF form by test), without the per-character interpreted fold."""
-    import numpy as np
-    import pandas as pd
-
     def emit(ids, _n, d, p, g):
-        return pd.DataFrame({"doc": ids[d], "p": p.astype(np.int32), "g": g})
+        return {"doc": ids[d], "p": p, "g": g}
 
-    return _map_kgram_rows(docs, k, text_col, id_col, emit, "p int, g long")
+    return _map_kgram_rows(docs, k, text_col, id_col, emit, {"p": "int", "g": "long"})
 
 
 def _distinct_shingle_rows(
@@ -371,7 +370,6 @@ def _distinct_shingle_rows(
     :func:`_kgram_rows` (order is irrelevant to an exploded multiset),
     ``n_sh`` from a bincount of the deduped rows."""
     import numpy as np
-    import pandas as pd
 
     def emit(ids, n_docs, d, _p, g):
         order = np.lexsort((g, d))
@@ -380,11 +378,9 @@ def _distinct_shingle_rows(
         keep[1:] = (ds[1:] != ds[:-1]) | (gs[1:] != gs[:-1])
         ds, gs = ds[keep], gs[keep]
         n_per = np.bincount(ds, minlength=n_docs)
-        return pd.DataFrame(
-            {"doc": ids[ds], "n_sh": n_per[ds].astype(np.int32), "g": gs}
-        )
+        return {"doc": ids[ds], "n_sh": n_per[ds], "g": gs}
 
-    return _map_kgram_rows(docs, k, text_col, id_col, emit, "n_sh int, g long")
+    return _map_kgram_rows(docs, k, text_col, id_col, emit, {"n_sh": "int", "g": "long"})
 
 
 def dup_span_ranges(
@@ -443,23 +439,26 @@ def _bit(h: Column, i: Column) -> Column:
 def simhash(hashes: Column, bits: int = 32) -> Column:
     """SimHash fingerprint over a shingle-hash array column: bit_i = sign
     of Σ(2·((h>>i)&1) − 1); fingerprint = Σ bit_i·2^i (int64-safe for
-    bits <= 62). Arrow-batched numpy — same exact integer math as the
-    SQL oracle, ~1000× the interpreted-HOF fold throughput."""
+    bits <= 62). Arrow-batched numpy over the flattened batch (one
+    ``np.add.reduceat`` per bit) — same exact integer math as the SQL
+    oracle; an empty array fingerprints as 0."""
     import numpy as np
-    import pandas as pd
 
-    shifts = np.arange(bits, dtype=np.int64)
+    def _sim(hs):
+        h, off = arrow.segments(hs)
+        h = h.astype(np.int64, copy=False)
+        out = np.zeros(len(off) - 1, dtype=np.int64)
+        nz = np.diff(off) > 0
+        if nz.any():
+            starts = off[:-1][nz]
+            fp = np.zeros(len(starts), dtype=np.int64)
+            for i in range(bits):
+                bitsum = np.add.reduceat(2 * ((h >> i) & 1) - 1, starts)
+                fp |= (bitsum >= 0).astype(np.int64) << i
+            out[nz] = fp
+        return out
 
-    @F.pandas_udf("long")
-    def _sim(col):
-        out = np.zeros(len(col), dtype=np.int64)
-        for k, hs in enumerate(col):
-            h = np.asarray(hs, dtype=np.int64)
-            if h.size == 0:
-                continue
-            bitsum = (2 * ((h[:, None] >> shifts[None, :]) & 1) - 1).sum(axis=0)
-            out[k] = ((bitsum >= 0).astype(np.int64) << shifts).sum()
-        return pd.Series(out)
+    _sim = arrow.column(_sim, "long")
 
     return _sim(hashes)
 

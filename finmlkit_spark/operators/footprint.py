@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import arrow
 from ..functions.sqlstage import sql_stage
 
 
@@ -79,41 +80,19 @@ def footprint_features(
     are first-index argmax over ascending levels (lowest level wins).
     """
     import numpy as np
-    import pandas as pd
 
     m = float(imb_mult)
     tk = float(tick)
 
-    @F.pandas_udf(
-        "struct<n_levels:bigint,buy_imb_sum:bigint,sell_imb_sum:bigint,"
-        "max_imb_run:bigint,cot_level:bigint,_v1q:bigint,_v2q:bigint,"
-        "_var_q:bigint,_skew_q:bigint>"
-    )
     def _fold(levels, bvols, svols, vwaps):
-        nseg = len(levels)
-        if nseg == 0:
-            return pd.DataFrame(
-                {
-                    c: pd.Series([], dtype="int64")
-                    for c in (
-                        "n_levels", "buy_imb_sum", "sell_imb_sum",
-                        "max_imb_run", "cot_level", "_v1q", "_v2q",
-                    )
-                }
-                | {
-                    c: pd.Series([], dtype="Int64")
-                    for c in ("_var_q", "_skew_q")
-                }
-            )
-        # flatten the batch: one set of vectorized segment ops instead of
+        # the flat batch: one set of vectorized segment ops instead of
         # a per-bar Python loop
-        lens = np.fromiter(map(len, levels.values), dtype=np.int64, count=nseg)
-        starts = np.zeros(nseg, dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        seg = np.repeat(np.arange(nseg), lens)
-        lv = np.concatenate(list(levels.values)).astype(np.int64)
-        b = np.concatenate(list(bvols.values)).astype(np.float64)
-        s = np.concatenate(list(svols.values)).astype(np.float64)
+        lv, offsets = arrow.segments(levels)
+        lens, starts = np.diff(offsets), offsets[:-1]
+        seg = np.repeat(np.arange(len(lens)), lens)
+        lv = lv.astype(np.int64)
+        b = arrow.segments(bvols)[0].astype(np.float64)
+        s = arrow.segments(svols)[0].astype(np.float64)
         n = len(lv)
         idx = np.arange(n)
         first = idx == starts[seg]
@@ -145,7 +124,7 @@ def footprint_features(
         volmax = np.maximum.reduceat(vol, starts)
         c = np.minimum.reduceat(np.where(vol == volmax[seg], idx, big), starts)
         price = lv * tk
-        vw = np.asarray(vwaps.values, dtype=np.float64)
+        vw = vwaps.astype(np.float64)
         # moment sums as HALF_UP-1e6-quantized EXACT int64 folds:
         # integer sums are associative, so np.add.reduceat is exact in
         # any order (bound: |term|·1e6 < 2^63 per level). d is computed
@@ -165,30 +144,27 @@ def footprint_features(
         v2q = np.floor(vold * vold * 1e6 + 0.5).astype(np.int64)
         varq = np.floor(d0 * d0 * vold * 1e6 + 0.5).astype(np.int64)
         skewq = np.floor(d0 * vold * 1e6 + 0.5).astype(np.int64)
-        out = pd.DataFrame(
-            {
-                "n_levels": lens,
-                "buy_imb_sum": np.add.reduceat(buy.astype(np.int64), starts),
-                "sell_imb_sum": np.add.reduceat(sell.astype(np.int64), starts),
-                "max_imb_run": run[j] * sgn[j],
-                "cot_level": lv[c],
-                "_v1q": np.add.reduceat(vq, starts),
-                "_v2q": np.add.reduceat(v2q, starts),
-            }
-        )
-        # NULL bar_vwap must surface as NULL (not a garbage fold) —
-        # nullable Int64 so Arrow emits bigint NULLs
-        out["_var_q"] = (
-            pd.Series(np.add.reduceat(varq, starts))
-            .mask(np.isnan(vw))
-            .astype("Int64")
-        )
-        out["_skew_q"] = (
-            pd.Series(np.add.reduceat(skewq, starts))
-            .mask(np.isnan(vw))
-            .astype("Int64")
-        )
-        return out
+        # NULL bar_vwap must surface as NULL (not a garbage fold):
+        # masked int64 sums, exact, NULL where the mask is set
+        no_vw = np.isnan(vw)
+        return {
+            "n_levels": lens,
+            "buy_imb_sum": np.add.reduceat(buy.astype(np.int64), starts),
+            "sell_imb_sum": np.add.reduceat(sell.astype(np.int64), starts),
+            "max_imb_run": run[j] * sgn[j],
+            "cot_level": lv[c],
+            "_v1q": np.add.reduceat(vq, starts),
+            "_v2q": np.add.reduceat(v2q, starts),
+            "_var_q": np.ma.masked_array(np.add.reduceat(varq, starts), no_vw),
+            "_skew_q": np.ma.masked_array(np.add.reduceat(skewq, starts), no_vw),
+        }
+
+    _fold = arrow.column(
+        _fold,
+        "struct<n_levels:bigint,buy_imb_sum:bigint,sell_imb_sum:bigint,"
+        "max_imb_run:bigint,cot_level:bigint,_v1q:bigint,_v2q:bigint,"
+        "_var_q:bigint,_skew_q:bigint>",
+    )
 
     packed = fp.groupBy(key).agg(
         F.sort_array(

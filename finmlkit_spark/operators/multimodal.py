@@ -1,9 +1,9 @@
 """Multimodal column handling: opaque binary payloads + typed metadata.
 
 Images/audio/video ride as ``binary`` columns with a metadata struct;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` stages so each executor touches only its partition's
-bytes (no driver collect, no shuffle of blobs).
+decode / feature-extract / resize / frame-sample run as Arrow map
+stages (``functions.arrow``) so each executor touches only its
+partition's bytes (no driver collect, no shuffle of blobs).
 
 Decode tiers:
 
@@ -24,9 +24,10 @@ import struct
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions import arrow
 
 META_SCHEMA = "doc_id long, byte_len long, content_md5 string, width int, height int, channels int"
 
@@ -1052,29 +1053,26 @@ SPECTRAL_SCHEMA = "doc_id long, n_samples long, channels int, dominant_bin int"
 
 def audio_spectral(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Spectral feature-extract over WAV payloads: dominant rFFT bin of
-    the channel-mean signal (DC excluded), Arrow-batched numpy FFT in
-    mapInPandas — real DSP on the executors, no audio libs. For a pure
+    the channel-mean signal (DC excluded), Arrow-batched numpy FFT —
+    real DSP on the executors, no audio libs. For a pure
     sine at integer bin k the dominant bin is exactly k (quantization
     noise spreads across the spectrum; the tone's peak dominates), which
     is what the ``audio_spectral_stats`` oracle replays symbolically."""
 
-    def _batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, b in zip(pdf[id_col], pdf["payload"]):
-                s = wav_samples(bytes(b))
-                mono = s.astype(np.float64).mean(axis=1)
-                if mono.size < 2:
-                    rows.append((int(i), s.shape[0], s.shape[1], 0))
-                    continue
-                mag = np.abs(np.fft.rfft(mono))
-                dom = int(np.argmax(mag[1:]) + 1)  # exclude DC
-                rows.append((int(i), s.shape[0], s.shape[1], dom))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_samples", "channels", "dominant_bin"]
-            )
+    def _batch(b):
+        rows = []
+        for i, p in zip(b[id_col], b["payload"]):
+            s = wav_samples(bytes(p))
+            mono = s.astype(np.float64).mean(axis=1)
+            if mono.size < 2:
+                rows.append((int(i), s.shape[0], s.shape[1], 0))
+                continue
+            mag = np.abs(np.fft.rfft(mono))
+            dom = int(np.argmax(mag[1:]) + 1)  # exclude DC
+            rows.append((int(i), s.shape[0], s.shape[1], dom))
+        return rows
 
-    return df.select(id_col, "payload").mapInPandas(_batch, schema=SPECTRAL_SCHEMA)
+    return arrow.map_batches(df.select(id_col, "payload"), _batch, SPECTRAL_SCHEMA)
 
 
 def with_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1085,39 +1083,32 @@ def with_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def decode_meta(df: DataFrame, mode: str = "fake", id_col: str = "doc_id") -> DataFrame:
-    """Decode stage: binary payload -> typed metadata via mapInPandas.
+    """Decode stage: binary payload -> typed metadata (Arrow map).
 
     mode='fake': deterministic dims from byte length (plumbing test);
     mode='real': native WAV/BMP/PPM decode (``decode_payload``); a
     compressed codec in the batch raises at the PIL/ffmpeg seam.
     """
 
-    def _decode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _decode_batch(b):
         import hashlib
 
-        for pdf in it:
-            n = pdf["payload"].map(len)
-            if mode == "real":
-                dims = [decode_payload(bytes(b)) for b in pdf["payload"]]
-                width = pd.Series([d[0] for d in dims], dtype="int32")
-                height = pd.Series([d[1] for d in dims], dtype="int32")
-                channels = pd.Series([d[2] for d in dims], dtype="int32")
-            else:
-                width = (n % 64 + 1).astype("int32")
-                height = (n % 48 + 1).astype("int32")
-                channels = pd.Series([3] * len(pdf), dtype="int32")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].to_numpy(),
-                    "byte_len": n.astype("int64").to_numpy(),
-                    "content_md5": [hashlib.md5(b).hexdigest() for b in pdf["payload"]],
-                    "width": width.to_numpy(),
-                    "height": height.to_numpy(),
-                    "channels": channels.to_numpy(),
-                }
-            )
+        payload = b["payload"]
+        n = np.fromiter(map(len, payload), np.int64, len(payload))
+        if mode == "real":
+            width, height, channels = zip(*(decode_payload(bytes(p)) for p in payload))
+        else:
+            width, height, channels = n % 64 + 1, n % 48 + 1, np.full(len(n), 3)
+        return {
+            "doc_id": b[id_col],
+            "byte_len": n,
+            "content_md5": [hashlib.md5(p).hexdigest() for p in payload],
+            "width": width,
+            "height": height,
+            "channels": channels,
+        }
 
-    return df.select(id_col, "payload").mapInPandas(_decode_batch, schema=META_SCHEMA)
+    return arrow.map_batches(df.select(id_col, "payload"), _decode_batch, META_SCHEMA)
 
 
 AUDIO_FEAT_SCHEMA = "doc_id long, n_samples long, channels int, rms double, peak int"
@@ -1127,19 +1118,16 @@ def audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Feature-extract stage over WAV payloads: RMS + peak amplitude per
     payload, Arrow-batched (numpy over the PCM16 matrix)."""
 
-    def _batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, b in zip(pdf[id_col], pdf["payload"]):
-                s = wav_samples(bytes(b))
-                rms = float(np.sqrt(np.mean(s.astype(np.float64) ** 2))) if s.size else 0.0
-                peak = int(np.max(np.abs(s))) if s.size else 0
-                rows.append((int(i), s.shape[0], s.shape[1], rms, peak))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_samples", "channels", "rms", "peak"]
-            )
+    def _batch(b):
+        rows = []
+        for i, p in zip(b[id_col], b["payload"]):
+            s = wav_samples(bytes(p))
+            rms = float(np.sqrt(np.mean(s.astype(np.float64) ** 2))) if s.size else 0.0
+            peak = int(np.max(np.abs(s))) if s.size else 0
+            rows.append((int(i), s.shape[0], s.shape[1], rms, peak))
+        return rows
 
-    return df.select(id_col, "payload").mapInPandas(_batch, schema=AUDIO_FEAT_SCHEMA)
+    return arrow.map_batches(df.select(id_col, "payload"), _batch, AUDIO_FEAT_SCHEMA)
 
 
 IMAGE_FEAT_SCHEMA = (
@@ -1155,7 +1143,7 @@ def image_features(
     luminance mean/std + horizontal-gradient edge energy, Arrow-batched.
     Decode runs where the bytes live — no blob shuffle, no driver pull.
 
-    ``on_error`` (round 13 — the poisoned-corpus contract): ``"raise"``
+    ``on_error`` (the poisoned-corpus contract): ``"raise"``
     keeps the strict behavior (one undecodable payload fails the task —
     right for curated fixtures); ``"null"`` adds an ``error`` column
     and emits a null-stats row carrying the decoder's exact message for
@@ -1168,44 +1156,39 @@ def image_features(
         raise ValueError("image_features: on_error must be 'raise' or 'null'")
     safe = on_error == "null"
 
-    def _batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, b in zip(pdf[id_col], pdf["payload"]):
-                if safe:
-                    try:
-                        px = image_pixels(bytes(b)).astype(np.float64)
-                    except (NotImplementedError, ValueError) as e:
-                        rows.append(
-                            (int(i), None, None, None, None, None, None,
-                             f"{type(e).__name__}: {e}")
-                        )
-                        continue
-                else:
-                    px = image_pixels(bytes(b)).astype(np.float64)
-                h, w, ch = px.shape
-                lum = px.mean(axis=2)  # channel-mean luminance proxy
-                grad = np.abs(np.diff(lum, axis=1))
-                rows.append(
-                    (
-                        int(i),
-                        w,
-                        h,
-                        ch,
-                        float(lum.mean()),
-                        float(lum.std()),
-                        float(grad.mean()) if grad.size else 0.0,
+    def _batch(b):
+        rows = []
+        for i, p in zip(b[id_col], b["payload"]):
+            if safe:
+                try:
+                    px = image_pixels(bytes(p)).astype(np.float64)
+                except (NotImplementedError, ValueError) as e:
+                    rows.append(
+                        (int(i), None, None, None, None, None, None,
+                         f"{type(e).__name__}: {e}")
                     )
-                    + ((None,) if safe else ())
+                    continue
+            else:
+                px = image_pixels(bytes(p)).astype(np.float64)
+            h, w, ch = px.shape
+            lum = px.mean(axis=2)  # channel-mean luminance proxy
+            grad = np.abs(np.diff(lum, axis=1))
+            rows.append(
+                (
+                    int(i),
+                    w,
+                    h,
+                    ch,
+                    float(lum.mean()),
+                    float(lum.std()),
+                    float(grad.mean()) if grad.size else 0.0,
                 )
-            cols = [
-                "doc_id", "width", "height", "channels",
-                "mean_lum", "std_lum", "edge_energy",
-            ] + (["error"] if safe else [])
-            yield pd.DataFrame(rows, columns=cols)
+                + ((None,) if safe else ())
+            )
+        return rows
 
     schema = IMAGE_FEAT_SCHEMA + (", error string" if safe else "")
-    return df.select(id_col, "payload").mapInPandas(_batch, schema=schema)
+    return arrow.map_batches(df.select(id_col, "payload"), _batch, schema)
 
 
 RESIZE_SCHEMA = "doc_id long, payload binary, width int, height int"
@@ -1215,8 +1198,8 @@ def image_resize(
     df: DataFrame, out_w: int, out_h: int, id_col: str = "doc_id"
 ) -> DataFrame:
     """Resize stage: decode (PNG/BMP/PPM) -> nearest-neighbor resample ->
-    PNG re-encode, Arrow-batched mapInPandas where the bytes live (no
-    blob shuffle, no driver pull).
+    PNG re-encode, an Arrow map where the bytes live (no blob shuffle, no
+    driver pull).
 
     Nearest-neighbor with the top-left convention
     ``src = floor(dst * in / out)`` — exact integer arithmetic, so an
@@ -1227,26 +1210,17 @@ def image_resize(
     identical for any kernel.
     """
 
-    def _batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for i, b in zip(pdf[id_col], pdf["payload"]):
-                px = image_pixels(bytes(b))
-                h, w, _ch = px.shape
-                ys = (np.arange(out_h, dtype=np.int64) * h) // out_h
-                xs = (np.arange(out_w, dtype=np.int64) * w) // out_w
-                ids.append(int(i))
-                payloads.append(encode_png(px[ys][:, xs]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "width": [out_w] * len(ids),
-                    "height": [out_h] * len(ids),
-                }
-            )
+    def _batch(b):
+        rows = []
+        for i, p in zip(b[id_col], b["payload"]):
+            px = image_pixels(bytes(p))
+            h, w, _ch = px.shape
+            ys = (np.arange(out_h, dtype=np.int64) * h) // out_h
+            xs = (np.arange(out_w, dtype=np.int64) * w) // out_w
+            rows.append((int(i), encode_png(px[ys][:, xs]), out_w, out_h))
+        return rows
 
-    return df.select(id_col, "payload").mapInPandas(_batch, schema=RESIZE_SCHEMA)
+    return arrow.map_batches(df.select(id_col, "payload"), _batch, RESIZE_SCHEMA)
 
 
 # --- Y4M video (YUV4MPEG2, public spec) --------------------------------------
@@ -1666,10 +1640,9 @@ def video_frame_stats(
     """Frame-sampled luminance stats over video payloads (Y4M or
     MJPEG-AVI, sniffed per row): one row per sampled frame (doc_id,
     frame_idx, mean_lum, std_lum) — decode runs where the bytes live
-    (Arrow-batched mapInPandas), the video modality analog of
-    ``image_features``.
+    (an Arrow map), the video modality analog of ``image_features``.
 
-    ``on_error="null"`` (round 13 — the poisoned-corpus contract):
+    ``on_error="null"`` (the poisoned-corpus contract):
     adds an ``error`` column; a payload hitting a documented codec
     seam (NotImplementedError — e.g. MP4/H.264 frame decode awaiting
     the ffmpeg plug) or malformed bytes (ValueError) emits ONE
@@ -1679,34 +1652,32 @@ def video_frame_stats(
         raise ValueError("video_frame_stats: on_error must be 'raise' or 'null'")
     safe = on_error == "null"
 
-    def _batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            # ids pass through uncoerced (mirrors pq_encode): the output
-            # schema carries the input id dtype, so string/decimal doc
-            # ids survive instead of crashing an int() in the executor
-            for i, b in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    for idx, luma in _video_frames(bytes(b), every):
-                        lf = luma.astype(np.float64)
-                        rows.append(
-                            (i, idx, float(lf.mean()), float(lf.std()))
-                            + ((None,) if safe else ())
-                        )
-                except (NotImplementedError, ValueError) as e:
-                    if not safe:
-                        raise
-                    rows.append((i, None, None, None, f"{type(e).__name__}: {e}"))
-            cols = [id_col, "frame_idx", "mean_lum", "std_lum"] + (
-                ["error"] if safe else []
-            )
-            yield pd.DataFrame(rows, columns=cols)
+    def _batch(b):
+        rows = []
+        # ids pass through uncoerced (mirrors pq_encode): the output
+        # schema carries the input id dtype, so string/decimal doc ids
+        # survive instead of crashing an int() in the executor
+        for i, p in zip(b[id_col], b["payload"]):
+            try:
+                for idx, luma in _video_frames(bytes(p), every):
+                    lf = luma.astype(np.float64)
+                    rows.append(
+                        (i, idx, float(lf.mean()), float(lf.std()))
+                        + ((None,) if safe else ())
+                    )
+            except (NotImplementedError, ValueError) as e:
+                if not safe:
+                    raise
+                rows.append((i, None, None, None, f"{type(e).__name__}: {e}"))
+        return rows
 
-    id_type = dict(df.dtypes)[id_col]
-    schema = f"{id_col} {id_type}, frame_idx int, mean_lum double, std_lum double" + (
-        ", error string" if safe else ""
-    )
-    return df.select(id_col, "payload").mapInPandas(_batch, schema=schema)
+    schema = {
+        id_col: df.schema[id_col].dataType,
+        "frame_idx": "int",
+        "mean_lum": "double",
+        "std_lum": "double",
+    } | ({"error": "string"} if safe else {})
+    return arrow.map_batches(df.select(id_col, "payload"), _batch, schema)
 
 
 def frame_sample(df: DataFrame, every_n_bytes: int = 1024) -> DataFrame:
@@ -1723,7 +1694,13 @@ def phash64(px: np.ndarray) -> int:
     deterministic, no FFT library variance) → 8×8 low-frequency block
     (DC excluded) → bit_i = coeff_i > median(coeffs). Classic pHash;
     robust to resizing/re-encoding, so equal content hashes equal even
-    across codecs."""
+    across codecs.
+
+    No bit depends on float summation order: the 63 coefficients snap
+    to a grid of 2^-30 × the block's largest magnitude before the
+    median compare, so coefficients that are zero in exact arithmetic
+    (summation noise ~1e-28) become exact ties instead of random
+    signs."""
     lum = px.astype(np.float64).mean(axis=2)
     h, w = lum.shape
     ys = (np.arange(32) * h) // 32
@@ -1733,10 +1710,16 @@ def phash64(px: np.ndarray) -> int:
     k = np.arange(n)
     # DCT-II basis: C[u, x] = cos(pi*(2x+1)*u/(2n))
     C = np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None] / (2 * n))
-    d = C @ s @ C.T
+    return _dct_hash(C @ s @ C.T)
+
+
+def _dct_hash(d: np.ndarray) -> int:
+    """The pHash bits of a 2D DCT ``d``: its 8×8 low-frequency block
+    without DC, snapped (see :func:`phash64`), vs its median."""
     block = d[:8, :8].flatten()[1:]  # drop DC
-    med = np.median(block)
-    bits = block > med
+    top = np.abs(block).max()
+    q = np.rint(block / (top * 2.0**-30)) if top > 0 else block
+    bits = q > np.median(q)
     out = 0
     for i, b in enumerate(bits):
         if b:
@@ -1747,18 +1730,16 @@ def phash64(px: np.ndarray) -> int:
 
 def image_phash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Perceptual-hash stage over image payloads (PNG/BMP/PPM):
-    (doc_id, phash) via mapInPandas where the bytes live."""
+    (doc_id, phash) via an Arrow map where the bytes live."""
 
-    def _batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                (int(i), phash64(image_pixels(bytes(b))))
-                for i, b in zip(pdf[id_col], pdf["payload"])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "phash"])
+    def _batch(b):
+        return [
+            (int(i), phash64(image_pixels(bytes(p))))
+            for i, p in zip(b[id_col], b["payload"])
+        ]
 
-    return df.select(id_col, "payload").mapInPandas(
-        _batch, schema="doc_id long, phash long"
+    return arrow.map_batches(
+        df.select(id_col, "payload"), _batch, "doc_id long, phash long"
     )
 
 

@@ -20,7 +20,7 @@ import math
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from .. import cache
@@ -117,16 +117,28 @@ def merge_split_trades(df: DataFrame, use_side: bool = False) -> DataFrame:
     )
 
 
-def with_trade_side(df: DataFrame, by: str | None = "symbol") -> DataFrame:
-    """Tick rule: sign(Δprice), carry previous side when Δ=0
-    (``bar/utils.py:10-46``); first trade defaults to +1.
-    """
-    w = _w(by)
-    raw = F.signum(F.col("price") - F.lag("price").over(w))
+def _tick_sign(delta: Column) -> Column:
+    """The tick rule's sign of a price change: −1/0/+1 as a double, NULL
+    without a previous price. A NaN Δprice signs 0, so it carries the
+    previous side exactly as Δ = 0 does."""
+    return F.when(F.isnan(delta), F.lit(0.0)).otherwise(F.signum(delta))
+
+
+def _carried_side(w: WindowSpec) -> Column:
+    """``side`` over one ordered window: the last nonzero tick sign up to
+    the row, +1 before the first one."""
+    raw = _tick_sign(F.col("price") - F.lag("price").over(w))
     carried = F.last(F.when(raw != 0, raw), ignorenulls=True).over(
         w.rowsBetween(Window.unboundedPreceding, 0)
     )
-    return df.withColumn("side", F.coalesce(carried, F.lit(1.0)).cast("int"))
+    return F.coalesce(carried, F.lit(1.0)).cast("int")
+
+
+def with_trade_side(df: DataFrame, by: str | None = "symbol") -> DataFrame:
+    """Tick rule: sign(Δprice), carry previous side when Δ=0 or Δ is NaN
+    (``bar/utils.py:10-46``); first trade defaults to +1.
+    """
+    return df.withColumn("side", _carried_side(_w(by)))
 
 
 #: helper columns attached by :func:`chunked_side_frame`
@@ -221,15 +233,11 @@ def chunked_side_frame(
         mode = "global" if fits else "chunked"
     if mode == "global":
         w = Window.orderBy("ts_ns", "trade_id")
-        raw = F.signum(F.col("price") - F.lag("price").over(w))
-        carried = F.last(F.when(raw != 0, raw), ignorenulls=True).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        )
         d = df.withColumns(
             {
                 "_prev_last_p": F.lit(None).cast("double"),
                 "_carry": F.lit(None).cast("double"),
-                "side": F.coalesce(carried, F.lit(1.0)).cast("int"),
+                "side": _carried_side(w),
             }
         )
         return d, w
@@ -241,7 +249,7 @@ def chunked_side_frame(
     wcum = w.rowsBetween(Window.unboundedPreceding, 0)
     # in-chunk tick signs; NULL on each chunk's first row (boundary sign
     # is reconstructed from the summary table below)
-    d = d.withColumn("_raw", F.signum(F.col("price") - F.lag("price").over(w)))
+    d = d.withColumn("_raw", _tick_sign(F.col("price") - F.lag("price").over(w)))
     d = d.withColumn(
         "_cin",
         F.last(F.when(F.col("_raw") != 0, F.col("_raw")), ignorenulls=True).over(wcum),
@@ -274,12 +282,14 @@ def chunked_side_frame(
 def _side_carry_local(summ: pa.Table) -> pa.Table:
     """Driver side of the chunk carry: the summary ``(_ck, _first_p,
     _last_p, _lastnz)`` → ``(_ck, _prev_last_p, _bnz, _carry)``, in Spark's
-    arithmetic (NULL propagates; NaN is a value, and nonzero)."""
+    arithmetic (NULL propagates) and :func:`_tick_sign`'s rule (a NaN
+    boundary Δprice signs 0)."""
     summ = summ.sort_by("_ck")
     prev = local_prefix(summ, "_ck", {}, {"_prev_last_p": "_last_p"})["_prev_last_p"]
     # boundary sign of chunk k = sign(first_p_k − last_p of the latest
     # earlier non-empty chunk), NULL when zero
     b = pc.sign(pc.subtract(summ["_first_p"], prev))
+    b = pc.if_else(pc.is_nan(b), 0.0, b)
     bnz = pc.if_else(pc.not_equal(b, 0.0), b, pa.scalar(None, pa.float64()))
     # a chunk's last nonzero sign overall = in-chunk one, else boundary
     nz = pc.coalesce(summ["_lastnz"], bnz)
@@ -292,7 +302,7 @@ def _side_carry_scale(summ: DataFrame) -> DataFrame:
     """Scale side of :func:`_side_carry_local`: the same chain over the
     cut summary, each prefix a :func:`prefix.two_level` plan."""
     prevp = two_level(summ, "_ck", {}, {"_prev_last_p": "_last_p"})
-    bsign = F.signum(F.col("_first_p") - F.col("_prev_last_p"))
+    bsign = _tick_sign(F.col("_first_p") - F.col("_prev_last_p"))
     s2 = summ.join(prevp, "_ck").withColumn("_bnz", F.when(bsign != 0, bsign))
     # cut: the carry prefix reads s2 on both of its plan sides
     s2 = cache.cut(s2.withColumn("_nz", F.coalesce("_lastnz", "_bnz")))

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import cache
+from ..functions import arrow
 from ..functions.sqlstage import sql_stage
 
 DIM = 64
@@ -64,26 +65,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_batch_udf():
-    """The raw Arrow pandas_udf behind :func:`cosine_batch` — exposed so
-    SQL stages can ``spark.udf.register`` it and call it by name."""
-    import numpy as np
-    import pandas as pd
-
-    @F.pandas_udf("double")
-    def _cos(va, vb):
-        if len(va) == 0:
-            return pd.Series(np.empty(0, dtype=np.float64))
-        A = np.stack(va.values).astype(np.float64)
-        B = np.stack(vb.values).astype(np.float64)
-        dots = (A * B).cumsum(axis=1)[:, -1]
-        na = np.sqrt((A * A).cumsum(axis=1)[:, -1])
-        nb = np.sqrt((B * B).cumsum(axis=1)[:, -1])
-        return pd.Series(dots / (na * nb))
-
-    return _cos
-
-
 def cosine_batch(a: Column, b: Column) -> Column:
     """Arrow-batched pair cosine, bit-identical to :func:`cosine`.
 
@@ -95,7 +76,17 @@ def cosine_batch(a: Column, b: Column) -> Column:
     would drift in the last ulp and break oracle hash equality) — at
     numpy batch speed. Requires equal-length (padded) vectors per batch.
     """
-    return cosine_batch_udf()(a, b)
+
+    def _cos(va, vb):
+        import numpy as np
+
+        A, B = arrow.vectors(va), arrow.vectors(vb)
+        dots = (A * B).cumsum(axis=1)[:, -1]
+        na = np.sqrt((A * A).cumsum(axis=1)[:, -1])
+        nb = np.sqrt((B * B).cumsum(axis=1)[:, -1])
+        return dots / (na * nb)
+
+    return arrow.column(_cos, "double")(a, b)
 
 
 def _plane_weight(j, i) -> Column:
@@ -123,31 +114,24 @@ def lsh_bucket_arrow(emb: Column, n_planes: int = N_PLANES, dim: int = DIM) -> C
     accumulates 0), while NaN components keep Spark's NaN ≥ 0 = TRUE
     ordering inside the kernel."""
     import numpy as np
-    import pandas as pd
 
     idx = np.arange(1, n_planes * dim + 1, dtype=np.int64).reshape(n_planes, dim)
     W = ((1103515245 * idx + 12345) % 2147483648).astype(np.float64) / 2147483648.0 - 0.5
 
-    @F.pandas_udf("long")
     def _bucket(v):
-        if len(v) == 0:
-            return pd.Series([], dtype="int64")
-        vals = v.values
-        if any(x is None for x in vals):
-            # whole-NULL arrays reach the kernel even under the CASE
-            # guard below (Spark projects Python UDFs out of CASE
-            # branches and evaluates them on every row); their kernel
-            # output is discarded by the guard — stand in a zero row
-            width = next((len(x) for x in vals if x is not None), dim)
-            zero = np.zeros(width)
-            vals = [x if x is not None else zero for x in vals]
-        A = np.stack(vals).astype(np.float64)
-        bucket = np.zeros(A.shape[0], dtype=np.int64)
+        # whole-NULL arrays reach the kernel even under the CASE guard
+        # below (Spark projects Python UDFs out of CASE branches and
+        # evaluates them on every row); the guard discards their
+        # output, so they bucket as 0 without entering the fold
+        valid = v.is_valid()
+        A = arrow.vectors(v.filter(valid))
+        bucket = np.zeros(len(v), dtype=np.int64)
         if A.shape[1] == 0:
             # zero-width vectors: the HOF's zip_with pads to DIM with
             # NULLs, the fold yields NULL, and `when(NULL >= 0)` falls
             # through to 0 per plane — bucket 0, matched here
-            return pd.Series(bucket)
+            return bucket
+        acc = np.zeros(A.shape[0], dtype=np.int64)
         for j in range(n_planes):
             proj = (A * W[j]).cumsum(axis=1)[:, -1]  # sequential fold
             # Spark SQL orders NaN ABOVE all numbers, so its `proj >= 0`
@@ -155,8 +139,11 @@ def lsh_bucket_arrow(emb: Column, n_planes: int = N_PLANES, dim: int = DIM) -> C
             # the SQL semantics so NaN-component vectors bucket
             # identically to the HOF form.
             bit = np.where(np.isnan(proj), True, proj >= 0)
-            bucket += bit.astype(np.int64) << j
-        return pd.Series(bucket)
+            acc += bit.astype(np.int64) << j
+        bucket[valid.to_numpy(zero_copy_only=False)] = acc
+        return bucket
+
+    _bucket = arrow.column(_bucket, "long")
 
     col = emb if isinstance(emb, Column) else F.col(emb)
     # NULL array OR any NULL component: the HOF's inner fold goes NULL,
@@ -215,24 +202,20 @@ def random_projection(
     matmul in an Arrow-batched kernel.
     """
     import numpy as np
-    import pandas as pd
 
     idx = np.arange(1, out_dim * dim + 1, dtype=np.int64).reshape(out_dim, dim)
     W = (1103515245 * idx + 12345) % 65536 - 32768
 
-    @F.pandas_udf("array<double>")
     def _proj(v):
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        A = np.stack(v.values).astype(np.float64)
+        A = arrow.vectors(v)
         # CAST(floor(x·1e6 + 0.5) AS BIGINT) parity: NaN -> 0, ±Inf and
         # |x| ≥ 2^63 saturate (shared shim — same posture as the
         # k-means driver mode)
         Q = _saturating_int64(np.floor(A * 1e6 + 0.5))
         S = Q @ W.T  # exact int64 — order-independent
-        out = S.astype(np.float64) / (1e6 * 32768.0)
-        return pd.Series(list(out))
+        return S.astype(np.float64) / (1e6 * 32768.0)
 
+    _proj = arrow.column(_proj, "array<double>")
     return emb_df.select(F.col(id_col), _proj(as_double(emb_col)).alias("projection"))
 
 
@@ -243,7 +226,7 @@ def ann_brute_topk(
     vectors in ONE map-only Arrow pass and rank by (cosine desc, id).
 
     The ≤|queries| query vectors are collected to the driver (bounded
-    driver-mode state, the kmeans posture) and a single ``mapInPandas``
+    driver-mode state, the kmeans posture) and a single Arrow map
     pass emits all |queries| cosines per corpus batch, so each corpus
     vector crosses the Arrow boundary once (a crossJoin with the
     broadcast query side would send it |queries| times). Dots and
@@ -251,9 +234,8 @@ def ann_brute_topk(
     :func:`cosine_batch`, so results match the engines' list folds
     byte-for-byte, and the top-k stays a WindowGroupLimit."""
     import numpy as np
-    import pandas as pd
 
-    id_type = dict(emb_df.dtypes)[id_col]
+    id_type = emb_df.schema[id_col].dataType
     base = emb_df.select(F.col(id_col).alias("cand_id"), as_double(emb_col).alias("v"))
     qrows = sorted(
         (r["cand_id"], r["v"])
@@ -267,30 +249,26 @@ def ann_brute_topk(
             F.lit(0).cast("int").alias("rank"),
         ).where(F.lit(False))
     Q = np.stack([np.asarray(v, dtype=np.float64) for _, v in qrows])
-    qids_found = [i for i, _ in qrows]
+    qids_found = np.array([i for i, _ in qrows], dtype=object)
     qn = np.sqrt((Q * Q).cumsum(axis=1)[:, -1])
 
-    def _score(it):
-        for pdf in it:
-            ids = pdf["cand_id"].to_numpy()
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            vn = np.sqrt((V * V).cumsum(axis=1)[:, -1])
-            out = []
-            for j in range(Q.shape[0]):
-                dots = (V * Q[j]).cumsum(axis=1)[:, -1]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids_found[j],
-                            "cand_id": ids,
-                            "cos_sim": dots / (vn * qn[j]),
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
+    def _score(b):
+        ids = b["cand_id"]
+        V = arrow.vectors(b["v"])
+        vn = np.sqrt((V * V).cumsum(axis=1)[:, -1])
+        cos = np.empty((Q.shape[0], len(ids)), dtype=np.float64)
+        for j in range(Q.shape[0]):
+            dots = (V * Q[j]).cumsum(axis=1)[:, -1]
+            cos[j] = dots / (vn * qn[j])
+        # query-major rows: every candidate against query 0, then 1, ...
+        return {
+            "query_id": np.repeat(qids_found, len(ids)),
+            "cand_id": np.tile(ids, Q.shape[0]),
+            "cos_sim": cos.reshape(-1),
+        }
 
-    scored = base.mapInPandas(
-        _score, f"query_id {id_type}, cand_id {id_type}, cos_sim double"
+    scored = arrow.map_batches(
+        base, _score, {"query_id": id_type, "cand_id": id_type, "cos_sim": "double"}
     ).where(F.col("query_id") != F.col("cand_id"))
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
@@ -391,8 +369,8 @@ def kmeans_assign(
     the same host):
 
     - ``state="driver"`` (default): MLlib-style driver-carried
-      centroids. Each Lloyd iteration is ONE map-only job — a
-      ``mapInPandas`` stage assigns every vector against the current
+      centroids. Each Lloyd iteration is ONE map-only job — an Arrow
+      map stage assigns every vector against the current
       centroids (numpy batch, closure-shipped) and emits k partial-sum
       rows per partition; the driver folds the k·P partials with exact
       int64 adds and recomputes the means. No per-iteration shuffle of
@@ -629,7 +607,7 @@ def _kmeans_train_driver(
     seeds: list | None = None,
 ) -> list:
     """The Lloyd training loop of the driver-carried mode: per iteration
-    one mapInPandas job emitting k partial-sum rows per partition; exact
+    one Arrow map job emitting k partial-sum rows per partition; exact
     int64 fold on the driver. Returns the trained ``(cid, vector,
     norm)`` centroid list (the same shape :func:`kmeans_seeds` emits).
     The k-row-per-partition collect is the same sanctioned class as the
@@ -637,7 +615,6 @@ def _kmeans_train_driver(
     import math
 
     import numpy as np
-    import pandas as pd
 
     scale = 10**ndigits
 
@@ -649,10 +626,8 @@ def _kmeans_train_driver(
         def fn(batches):
             S = np.zeros((nk, dim), dtype=np.int64)
             N = np.zeros(nk, dtype=np.int64)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                A = np.stack(pdf["v"].values).astype(np.float64)
+            for b in batches:
+                A = arrow.vectors(b["v"])
                 _, best, _ = core(A)
                 # the same HALF_UP integer quantization as the SQL
                 # update: floor(x·scale + 0.5) — float64 ops identical.
@@ -668,9 +643,7 @@ def _kmeans_train_driver(
                     if m.any():
                         S[j] += Q[m].sum(axis=0)
                         N[j] += int(m.sum())
-            yield pd.DataFrame(
-                {"cid": cids, "n0": N, "s": [S[j].tolist() for j in range(nk)]}
-            )
+            yield {"cid": cids, "n0": N, "s": S}
 
         return fn
 
@@ -679,11 +652,11 @@ def _kmeans_train_driver(
         # int64 adds are associative, so any grouping folds to the same
         # bits as the flat driver fold (pinned by test)
         acc: dict[int, list] = {}
-        for pdf in batches:
-            for cid, n0, s in zip(pdf["cid"].values, pdf["n0"].values, pdf["s"].values):
+        for b in batches:
+            S = arrow.segments(b["s"])[0].reshape(len(b["cid"]), dim)
+            for cid, n0, sa in zip(b["cid"], b["n0"], S):
                 if n0 == 0:
                     continue
-                sa = np.asarray(s, dtype=np.int64)
                 a = acc.get(int(cid))
                 if a is None:
                     acc[int(cid)] = [sa.copy(), int(n0)]
@@ -692,13 +665,11 @@ def _kmeans_train_driver(
                     a[1] += int(n0)
         if acc:
             cids = sorted(acc)
-            yield pd.DataFrame(
-                {
-                    "cid": np.array(cids, dtype=np.int64),
-                    "n0": np.array([acc[c][1] for c in cids], dtype=np.int64),
-                    "s": [acc[c][0].tolist() for c in cids],
-                }
-            )
+            yield {
+                "cid": cids,
+                "n0": [acc[c][1] for c in cids],
+                "s": np.array([acc[c][0] for c in cids]),
+            }
 
     cents = seeds if seeds is not None else _kmeans_seed(e, k)
     if iters <= 0:
@@ -708,7 +679,7 @@ def _kmeans_train_driver(
     for _ in range(iters):
         if not cents:
             break
-        parts_df = e.select("v").mapInPandas(update_map(cents), part_schema)
+        parts_df = arrow.map_partitions(e.select("v"), update_map(cents), part_schema)
         if tree:
             # two-level fold: hash the k·P partial rows by cid onto a
             # small reducer set and pre-sum per cid executor-side, so
@@ -718,8 +689,8 @@ def _kmeans_train_driver(
             # shuffle stage (~0.1-0.15 s barrier on this host) costs
             # more than folding a few dozen k-row partials driver-side.
             fanin = max(1, min(32, int(math.isqrt(nparts))))
-            parts_df = parts_df.repartition(fanin, "cid").mapInPandas(
-                fold_partials, part_schema
+            parts_df = arrow.map_partitions(
+                parts_df.repartition(fanin, "cid"), fold_partials, part_schema
             )
         parts = parts_df.collect()
         agg: dict[int, tuple[list[int], int]] = {}
@@ -764,9 +735,6 @@ def _kmeans_assign_driver(
     for the centroids (skipped entirely at ``iters=0`` with caller
     seeds — the pre-trained / fixed-centroid path), then ONE map-only
     assignment stage."""
-    import numpy as np
-    import pandas as pd
-
     cents = _kmeans_train_driver(e, k, iters, ndigits, dim, nparts, seeds)
 
     if not cents:
@@ -781,24 +749,20 @@ def _kmeans_assign_driver(
 
     core = _km_core(cents)
 
-    def final_map(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            A = np.stack(pdf["v"].values).astype(np.float64)
-            cids, best, sim = core(A)
-            out = {id_col: pdf["vid"].values, "cluster_id": cids[best], "cos_sim": sim}
-            if keep_vector:
-                # pass the already-decoded vector through so consumers
-                # (semantic_dup_pairs) skip a re-scan + assignment join
-                out["v"] = pdf["v"].values
-            yield pd.DataFrame(out)
+    def final_map(b):
+        A = arrow.vectors(b["v"])
+        cids, best, sim = core(A)
+        out = {id_col: b["vid"], "cluster_id": cids[best], "cos_sim": sim}
+        if keep_vector:
+            # pass the already-decoded vector through so consumers
+            # (semantic_dup_pairs) skip a re-scan + assignment join
+            out["v"] = A
+        return out
 
-    vid_type = dict(e.dtypes)["vid"]
-    out_schema = f"{id_col} {vid_type}, cluster_id bigint, cos_sim double"
-    if keep_vector:
-        out_schema += ", v array<double>"
-    return e.mapInPandas(final_map, out_schema)
+    out_schema = {
+        id_col: e.schema["vid"].dataType, "cluster_id": "bigint", "cos_sim": "double"
+    } | ({"v": "array<double>"} if keep_vector else {})
+    return arrow.map_batches(e, final_map, out_schema)
 
 
 def _kmeans_assign_distributed(
@@ -1066,20 +1030,13 @@ def pq_train_sampled(
     scale = 10**ndigits
     e = emb_df.select(F.col(id_col).alias("vid"), as_double(emb_col).alias("v"))
     tbl = e.orderBy("vid").limit(PQ_TRAIN_MAX_SAMPLE).toArrow()
-    col = tbl.column("v").combine_chunks()
-    n = len(col)
-    if n == 0:
+    # the list array's flat value buffer reshapes to (n, dim) —
+    # to_pylist() would materialize n·dim Python floats (multi-GB
+    # transient heap at the sample cap on wide embeddings)
+    X = arrow.vectors(tbl.column("v"))
+    if len(X) == 0:
         return []
-    # zero-copy-ish decode: the list array's flat value buffer reshapes
-    # to (n, dim) — to_pylist() would materialize n·dim Python floats
-    # (multi-GB transient heap at the sample cap on wide embeddings)
-    flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    offs = col.offsets.to_numpy()
-    widths = np.diff(offs)
-    if widths.size and (widths != widths[0]).any():
-        raise ValueError("pq: ragged embeddings — pad upstream")
-    dim = int(widths[0]) if widths.size else 0
-    X = flat.reshape(n, dim)
+    dim = X.shape[1]
     if dim % m:
         raise ValueError(f"pq: dim {dim} not divisible by m {m}")
     dsub = dim // m
@@ -1140,7 +1097,6 @@ def pq_encode(
     (id, codes array<int>); ties break toward the lower code (numpy
     first-of-min == the oracle's ``row_number ORDER BY dq, code``)."""
     import numpy as np
-    import pandas as pd
 
     scale = 10**ndigits
     books = codebooks if codebooks is not None else pq_codebooks(
@@ -1154,21 +1110,16 @@ def pq_encode(
         ).where(F.lit(False))
     dsub = books[0].shape[1]
 
-    def fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["v"].values).astype(np.float64)
-            codes = np.empty((X.shape[0], len(books)), dtype=np.int32)
-            for j, Cj in enumerate(books):
-                dq = _pq_dist_q(X[:, j * dsub : (j + 1) * dsub], Cj, scale)
-                codes[:, j] = np.argmin(dq, axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf["vid"].values, "codes": list(codes)}
-            )
+    def fn(b):
+        X = arrow.vectors(b["v"])
+        codes = np.empty((X.shape[0], len(books)), dtype=np.int32)
+        for j, Cj in enumerate(books):
+            dq = _pq_dist_q(X[:, j * dsub : (j + 1) * dsub], Cj, scale)
+            codes[:, j] = np.argmin(dq, axis=1)
+        return {id_col: b["vid"], "codes": codes}
 
-    vid_type = dict(e.dtypes)["vid"]
-    return e.mapInPandas(fn, f"{id_col} {vid_type}, codes array<int>")
+    schema = {id_col: e.schema["vid"].dataType, "codes": "array<int>"}
+    return arrow.map_batches(e, fn, schema)
 
 
 def ann_pq_topk(
@@ -1192,9 +1143,6 @@ def ann_pq_topk(
     only shuffle is the per-(query, cand) integer sum. The partial
     distances are 1e-6-quantized int64, so the additive fold is
     order-independent and the oracle ranking matches exactly."""
-    import numpy as np
-    import pandas as pd
-
     scale = 10**ndigits
     books = codebooks if codebooks is not None else pq_codebooks(
         emb_df, m, ksub, id_col, emb_col
@@ -1213,25 +1161,8 @@ def ann_pq_topk(
             F.lit(0).cast("long").alias("rank"),
         ).where(F.lit(False))
     enc = pq_encode(emb_df, m, ksub, id_col, emb_col, ndigits, codebooks=books)
-    dsub = books[0].shape[1]
 
-    def lut_fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["qv"].values).astype(np.float64)
-            rows = {"query_id": [], "j": [], "code": [], "pd_q": []}
-            for j, Cj in enumerate(books):
-                dq = _pq_dist_q(X[:, j * dsub : (j + 1) * dsub], Cj, scale)
-                nq, nc = dq.shape
-                rows["query_id"].append(np.repeat(pdf["query_id"].values, nc))
-                rows["j"].append(np.tile(np.full(nc, j, np.int32), nq))
-                rows["code"].append(np.tile(np.arange(nc, dtype=np.int32), nq))
-                rows["pd_q"].append(dq.reshape(-1))
-            yield pd.DataFrame({c: np.concatenate(v) for c, v in rows.items()})
-
-    qid_type = dict(q.dtypes)["query_id"]
-    lut = q.mapInPandas(lut_fn, f"query_id {qid_type}, j int, code int, pd_q long")
+    lut = _pq_lut_rows(q, books, scale)
     scored = (
         enc.select(id_col, F.posexplode("codes").alias("j", "code"))
         .join(F.broadcast(lut), ["j", "code"])
@@ -1250,6 +1181,32 @@ def ann_pq_topk(
             "rank",
         )
     )
+
+
+def _pq_lut_rows(q: DataFrame, books: list, scale: int) -> DataFrame:
+    """The long-format per-query ADC table ``(query_id, j, code, pd_q)``
+    of the ``(query_id, qv)`` queries: one row per query, subspace and
+    code, ``pd_q`` the quantized subspace distance."""
+    import numpy as np
+
+    dsub = books[0].shape[1]
+
+    def lut_fn(b):
+        X = arrow.vectors(b["qv"])
+        rows = {"query_id": [], "j": [], "code": [], "pd_q": []}
+        for j, Cj in enumerate(books):
+            dq = _pq_dist_q(X[:, j * dsub : (j + 1) * dsub], Cj, scale)
+            nq, nc = dq.shape
+            rows["query_id"].append(np.repeat(b["query_id"], nc))
+            rows["j"].append(np.full(nq * nc, j, np.int32))
+            rows["code"].append(np.tile(np.arange(nc, dtype=np.int32), nq))
+            rows["pd_q"].append(dq.reshape(-1))
+        return {c: np.concatenate(v) for c, v in rows.items()}
+
+    schema = {
+        "query_id": q.schema["query_id"].dataType, "j": "int", "code": "int", "pd_q": "long"
+    }
+    return arrow.map_batches(q, lut_fn, schema)
 
 
 def ivf_pq_encode(
@@ -1271,7 +1228,6 @@ def ivf_pq_encode(
     scalars; no shuffle, no join, linear in the corpus — the index
     build half of the FAISS IVFPQ shape (Jégou et al. 2011 §IV)."""
     import numpy as np
-    import pandas as pd
 
     scale = 10**ndigits
     if seeds is None:
@@ -1280,8 +1236,6 @@ def ivf_pq_encode(
         emb_df, m, ksub, id_col, emb_col
     )
     e = emb_df.select(F.col(id_col).alias("vid"), as_double(emb_col).alias("v"))
-    vid_type = dict(e.dtypes)["vid"]
-    schema = f"{id_col} {vid_type}, cell_id bigint, codes array<int>"
     if not seeds or not books:
         return e.select(
             F.col("vid").alias(id_col),
@@ -1291,25 +1245,17 @@ def ivf_pq_encode(
     core = _km_core(seeds)
     dsub = books[0].shape[1]
 
-    def fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["v"].values).astype(np.float64)
-            cids, best, _sim = core(X)
-            codes = np.empty((X.shape[0], len(books)), dtype=np.int32)
-            for j, Cj in enumerate(books):
-                dq = _pq_dist_q(X[:, j * dsub : (j + 1) * dsub], Cj, scale)
-                codes[:, j] = np.argmin(dq, axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf["vid"].values,
-                    "cell_id": cids[best],
-                    "codes": list(codes),
-                }
-            )
+    def fn(b):
+        X = arrow.vectors(b["v"])
+        cids, best, _sim = core(X)
+        codes = np.empty((X.shape[0], len(books)), dtype=np.int32)
+        for j, Cj in enumerate(books):
+            dq = _pq_dist_q(X[:, j * dsub : (j + 1) * dsub], Cj, scale)
+            codes[:, j] = np.argmin(dq, axis=1)
+        return {id_col: b["vid"], "cell_id": cids[best], "codes": codes}
 
-    return e.mapInPandas(fn, schema)
+    schema = {id_col: e.schema["vid"].dataType, "cell_id": "bigint", "codes": "array<int>"}
+    return arrow.map_batches(e, fn, schema)
 
 
 #: ann_ivf_pq lut="auto" crossover: the packed per-query LUT broadcast
@@ -1319,43 +1265,37 @@ def ivf_pq_encode(
 _IVFPQ_PACKED_MAX_QUERIES = 200_000
 
 
-def _ivf_probe_fn(seeds: list, nprobe: int):
-    """Shared mapInPandas body ranking each query's top-``nprobe``
-    coarse cells — the determinism-critical probe used by BOTH
-    quantized ANN families (ann_ivf_pq and ann_ivf_sq8): sequential-
-    fold cosines against every centroid, ORDER BY cos DESC, cid ASC
-    via stable argsort of the negated sims (negation is order-exact on
-    doubles; column order IS ascending cid). Expects batches with
-    (query_id, qv) columns; yields (query_id, cell_id)."""
+def _ivf_probe(q: DataFrame, seeds: list, nprobe: int) -> DataFrame:
+    """``(query_id, cell_id)``: each ``(query_id, qv)`` query's
+    top-``nprobe`` coarse cells — the determinism-critical probe used by
+    BOTH quantized ANN families (ann_ivf_pq and ann_ivf_sq8):
+    sequential-fold cosines against every centroid, ORDER BY cos DESC,
+    cid ASC via stable argsort of the negated sims (negation is
+    order-exact on doubles; column order IS ascending cid)."""
     import numpy as np
-    import pandas as pd
 
     cids = np.array([c[0] for c in seeds], dtype=np.int64)
     npb = min(int(nprobe), len(seeds))
 
-    def probe_fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["qv"].values).astype(np.float64)
-            # the same sequential-fold cosines the assignment core
-            # computes — re-derived against ALL centroids for the
-            # top-nprobe ranking (core() only returns the argmax)
-            nv = np.sqrt((X * X).cumsum(axis=1)[:, -1])
-            sims = np.empty((X.shape[0], len(cids)), dtype=np.float64)
-            for j in range(len(cids)):
-                Cj = np.asarray(seeds[j][1], dtype=np.float64)
-                dots = (X * Cj).cumsum(axis=1)[:, -1]
-                sims[:, j] = dots / (nv * seeds[j][2])
-            order = np.argsort(-sims, axis=1, kind="stable")[:, :npb]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(pdf["query_id"].values, npb),
-                    "cell_id": cids[order].reshape(-1),
-                }
-            )
+    def probe_fn(b):
+        X = arrow.vectors(b["qv"])
+        # the same sequential-fold cosines the assignment core
+        # computes — re-derived against ALL centroids for the
+        # top-nprobe ranking (core() only returns the argmax)
+        nv = np.sqrt((X * X).cumsum(axis=1)[:, -1])
+        sims = np.empty((X.shape[0], len(cids)), dtype=np.float64)
+        for j in range(len(cids)):
+            Cj = np.asarray(seeds[j][1], dtype=np.float64)
+            dots = (X * Cj).cumsum(axis=1)[:, -1]
+            sims[:, j] = dots / (nv * seeds[j][2])
+        order = np.argsort(-sims, axis=1, kind="stable")[:, :npb]
+        return {
+            "query_id": np.repeat(b["query_id"], npb),
+            "cell_id": cids[order].reshape(-1),
+        }
 
-    return probe_fn
+    schema = {"query_id": q.schema["query_id"].dataType, "cell_id": "bigint"}
+    return arrow.map_batches(q, probe_fn, schema)
 
 
 def ann_ivf_pq(
@@ -1412,9 +1352,6 @@ def ann_ivf_pq(
     bit-identical by construction (pinned by
     ``test_ann_ivf_pq_lut_modes_bit_identical``).
     """
-    import numpy as np
-    import pandas as pd
-
     if lut not in ("auto", "packed", "exploded"):
         raise ValueError(f"lut must be auto|packed|exploded, got {lut!r}")
     scale = 10**ndigits
@@ -1441,43 +1378,37 @@ def ann_ivf_pq(
         seeds=seeds, codebooks=books,
     )
     dsub = books[0].shape[1]
-    qid_type = dict(q.dtypes)["query_id"]
-    probe = q.mapInPandas(
-        _ivf_probe_fn(seeds, nprobe), f"query_id {qid_type}, cell_id bigint"
-    )
+    probe = _ivf_probe(q, seeds, nprobe)
 
     use_packed = lut == "packed" or (
         lut == "auto" and n_queries <= _IVFPQ_PACKED_MAX_QUERIES
     )
     if use_packed:
 
-        def lut_fn(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.stack(pdf["qv"].values).astype(np.float64)
-                # per-subspace blocks may be RAGGED: pq_train_sampled
-                # drops empty clusters per subspace independently, so
-                # trained codebooks can have different row counts —
-                # build array<array<bigint>> rows per subspace instead
-                # of one dense (nq, m, ksub) tensor (codes are bounded
-                # by each subspace's own width, so ragged rows are safe)
-                blocks = [
-                    _pq_dist_q(X[:, j * dsub : (j + 1) * dsub], Cj, scale)
-                    for j, Cj in enumerate(books)
-                ]
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"].values,
-                        "luts": [
-                            [blocks[j][i].tolist() for j in range(len(books))]
-                            for i in range(X.shape[0])
-                        ],
-                    }
-                )
+        def lut_fn(b):
+            X = arrow.vectors(b["qv"])
+            # per-subspace blocks may be RAGGED: pq_train_sampled drops
+            # empty clusters per subspace independently, so trained
+            # codebooks can have different row counts — build
+            # array<array<bigint>> rows per subspace instead of one
+            # dense (nq, m, ksub) tensor (codes are bounded by each
+            # subspace's own width, so ragged rows are safe)
+            blocks = [
+                _pq_dist_q(X[:, j * dsub : (j + 1) * dsub], Cj, scale)
+                for j, Cj in enumerate(books)
+            ]
+            return {
+                "query_id": b["query_id"],
+                "luts": [
+                    [blocks[j][i].tolist() for j in range(len(books))]
+                    for i in range(X.shape[0])
+                ],
+            }
 
-        lutdf = q.mapInPandas(
-            lut_fn, f"query_id {qid_type}, luts array<array<bigint>>"
+        lutdf = arrow.map_batches(
+            q,
+            lut_fn,
+            {"query_id": q.schema["query_id"].dataType, "luts": "array<array<bigint>>"},
         )
         scored = (
             enc.join(F.broadcast(probe), "cell_id")
@@ -1503,30 +1434,7 @@ def ann_ivf_pq(
         # array row ever materializes; the m× posexplode applies to the
         # PROBE-RESTRICTED candidate set only. Identical int64 partials
         # ⇒ identical sums ⇒ bit-identical output.
-        def lutx_fn(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.stack(pdf["qv"].values).astype(np.float64)
-                rows = {"query_id": [], "j": [], "code": [], "pd_q": []}
-                for j, Cj in enumerate(books):
-                    dq = _pq_dist_q(X[:, j * dsub : (j + 1) * dsub], Cj, scale)
-                    nq, nc = dq.shape
-                    rows["query_id"].append(
-                        np.repeat(pdf["query_id"].values, nc)
-                    )
-                    rows["j"].append(np.tile(np.full(nc, j, np.int32), nq))
-                    rows["code"].append(
-                        np.tile(np.arange(nc, dtype=np.int32), nq)
-                    )
-                    rows["pd_q"].append(dq.reshape(-1))
-                yield pd.DataFrame(
-                    {c: np.concatenate(v) for c, v in rows.items()}
-                )
-
-        lutdf = q.mapInPandas(
-            lutx_fn, f"query_id {qid_type}, j int, code int, pd_q long"
-        )
+        lutdf = _pq_lut_rows(q, books, scale)
         scored = (
             enc.join(F.broadcast(probe), "cell_id")
             .where(F.col("query_id") != F.col(id_col))
@@ -1574,7 +1482,7 @@ def embedding_covariance(
     expression (E[q_j q_k] − E[q_j]E[q_k], scaled back), identical in
     both engines bit-for-bit.
 
-    Scale shape: one ``mapInPandas`` pass computes each Arrow batch's
+    Scale shape: one Arrow map pass computes each Arrow batch's
     int64 Gram partial Qᵀ·Q (numpy integer matmul — exact, no BLAS
     rounding) plus column sums and count, emitting ≤ d(d+1)/2 + d + 1
     narrow rows per batch; a (j, k) hash aggregate folds the partials
@@ -1585,29 +1493,24 @@ def embedding_covariance(
     ≤ 1e4·1e12 = 1e16 ≪ 2^63; the terminal fold holds sums as
     DECIMAL(38,0) so corpus-scale totals cannot overflow."""
     import numpy as np
-    import pandas as pd
 
     scale = 10**ndigits
     e = emb_df.select(as_double(emb_col).alias("v"))
 
-    def fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            A = np.stack(pdf["v"].values).astype(np.float64)
-            Q = _saturating_int64(np.floor(A * scale + 0.5))
-            d = Q.shape[1]
-            G = Q.T @ Q  # int64 exact (bounds in the docstring)
-            cs = Q.sum(axis=0)
-            ju, ku = np.triu_indices(d)
-            rows = {
-                "j": np.concatenate([ju, np.arange(d), [-1]]).astype(np.int32),
-                "k": np.concatenate([ku, np.full(d, -1), [-1]]).astype(np.int32),
-                "s": np.concatenate([G[ju, ku], cs, [len(pdf)]]).astype(np.int64),
-            }
-            yield pd.DataFrame(rows)
+    def fn(b):
+        A = arrow.vectors(b["v"])
+        Q = _saturating_int64(np.floor(A * scale + 0.5))
+        d = Q.shape[1]
+        G = Q.T @ Q  # int64 exact (bounds in the docstring)
+        cs = Q.sum(axis=0)
+        ju, ku = np.triu_indices(d)
+        return {
+            "j": np.concatenate([ju, np.arange(d), [-1]]),
+            "k": np.concatenate([ku, np.full(d, -1), [-1]]),
+            "s": np.concatenate([G[ju, ku], cs, [len(A)]]).astype(np.int64),
+        }
 
-    partials = e.mapInPandas(fn, "j int, k int, s long")
+    partials = arrow.map_batches(e, fn, "j int, k int, s long")
     agg = partials.groupBy("j", "k").agg(
         F.sum(F.col("s").cast("decimal(38,0)")).alias("s")
     )
@@ -1651,21 +1554,10 @@ def sq8_train(
     ScalarQuantizer training posture (d pairs of scalars, never a
     full-corpus pass; out-of-range corpus values clip at encode).
     Returns ``(vmin, vmax)`` float64 arrays of length dim."""
-    import numpy as np
-
     e = emb_df.select(F.col(id_col).alias("vid"), as_double(emb_col).alias("v"))
-    tbl = e.orderBy("vid").limit(max_sample).toArrow()
-    col = tbl.column("v").combine_chunks()
-    n = len(col)
-    if n == 0:
+    X = arrow.vectors(e.orderBy("vid").limit(max_sample).toArrow().column("v"))
+    if len(X) == 0:
         return None
-    flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    offs = col.offsets.to_numpy()
-    widths = np.diff(offs)
-    if widths.size and (widths != widths[0]).any():
-        raise ValueError("sq8: ragged embeddings — pad upstream")
-    dim = int(widths[0]) if widths.size else 0
-    X = flat.reshape(n, dim)
     return X.min(axis=0), X.max(axis=0)
 
 
@@ -1682,9 +1574,6 @@ def sq8_encode(
     0, 255)`` — the float expression shape matches the oracle SQL
     token-for-token so both engines emit identical codes. A constant
     dimension (vmax == vmin) encodes to 0."""
-    import numpy as np
-    import pandas as pd
-
     b = bounds if bounds is not None else sq8_train(emb_df, id_col, emb_col)
     e = emb_df.select(F.col(id_col).alias("vid"), as_double(emb_col).alias("v"))
     if b is None:
@@ -1695,17 +1584,11 @@ def sq8_encode(
     vmin, vmax = b
     d255 = (vmax - vmin) / 255.0
 
-    def fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["v"].values).astype(np.float64)
-            yield pd.DataFrame(
-                {id_col: pdf["vid"].values, "codes": list(_sq8_codes_np(X, vmin, d255))}
-            )
+    def fn(b):
+        return {id_col: b["vid"], "codes": _sq8_codes_np(arrow.vectors(b["v"]), vmin, d255)}
 
-    vid_type = dict(e.dtypes)["vid"]
-    return e.mapInPandas(fn, f"{id_col} {vid_type}, codes array<int>")
+    schema = {id_col: e.schema["vid"].dataType, "codes": "array<int>"}
+    return arrow.map_batches(e, fn, schema)
 
 
 def _sq8_codes_np(X, vmin, d255):
@@ -1967,15 +1850,10 @@ def ivf_sq8_encode(
     the product quantizer). Centroids and (min, max) bounds are
     closure-shipped scalars; no shuffle, no join, linear in the
     corpus."""
-    import numpy as np
-    import pandas as pd
-
     if seeds is None:
         seeds = kmeans_seeds(emb_df, k_coarse, id_col, emb_col)
     b = bounds if bounds is not None else sq8_train(emb_df, id_col, emb_col)
     e = emb_df.select(F.col(id_col).alias("vid"), as_double(emb_col).alias("v"))
-    vid_type = dict(e.dtypes)["vid"]
-    schema = f"{id_col} {vid_type}, cell_id bigint, codes array<int>"
     if not seeds or b is None:
         return e.select(
             F.col("vid").alias(id_col),
@@ -1986,21 +1864,15 @@ def ivf_sq8_encode(
     vmin, vmax = b
     d255 = (vmax - vmin) / 255.0
 
-    def fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["v"].values).astype(np.float64)
-            cids, best, _sim = core(X)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf["vid"].values,
-                    "cell_id": cids[best],
-                    "codes": list(_sq8_codes_np(X, vmin, d255)),
-                }
-            )
+    def fn(b):
+        X = arrow.vectors(b["v"])
+        cids, best, _sim = core(X)
+        return {
+            id_col: b["vid"], "cell_id": cids[best], "codes": _sq8_codes_np(X, vmin, d255)
+        }
 
-    return e.mapInPandas(fn, schema)
+    schema = {id_col: e.schema["vid"].dataType, "cell_id": "bigint", "codes": "array<int>"}
+    return arrow.map_batches(e, fn, schema)
 
 
 def ann_ivf_sq8(
@@ -2055,10 +1927,7 @@ def ann_ivf_sq8(
     enc = ivf_sq8_encode(
         emb_df, k_coarse, id_col, emb_col, seeds=seeds, bounds=b
     ).select(id_col, "cell_id", recon.alias("_recon"), r2.alias("_r2"))
-    qid_type = dict(q.dtypes)["query_id"]
-    probe = q.mapInPandas(
-        _ivf_probe_fn(seeds, nprobe), f"query_id {qid_type}, cell_id bigint"
-    )
+    probe = _ivf_probe(q, seeds, nprobe)
     qq = _sq8_query_cols(
         q.select(
             "query_id",
@@ -2270,7 +2139,7 @@ def diverse_sample(
     ``DIVERSE_DRIVER_MAX_BYTES // (8·dim)`` rows crosses to the driver
     once and the k greedy steps run in numpy — one Spark job instead of
     k. A larger table stays behind its lineage cut and takes k map-only
-    ``mapInPandas`` argmax jobs (the kmeans driver-mode posture): every
+    Arrow argmax jobs (the kmeans driver-mode posture): every
     partition emits at most ONE (min_dist, id, vector) candidate and
     the driver folds ≤P partials, so only k·P tiny rows ever leave the
     executors. Past the width probe the projection executes exactly
@@ -2291,7 +2160,6 @@ def diverse_sample(
     negation of the id), and numpy scalars are converted with a plain
     Python coercion that handles object dtypes."""
     import numpy as np
-    import pandas as pd
 
     def _py(x):
         # numpy scalar -> python; str / python scalars pass through
@@ -2317,7 +2185,7 @@ def diverse_sample(
 
     if tbl is not None:
         ids = tbl["id"].to_numpy(zero_copy_only=False)
-        V = np.stack(tbl["v"].to_numpy(zero_copy_only=False)).astype(np.float64)
+        V = arrow.vectors(tbl["v"])
         vn = np.sqrt((V * V).cumsum(axis=1)[:, -1])
         cur = int(np.argmin(ids))
         taken = np.zeros(len(ids), dtype=bool)
@@ -2341,21 +2209,21 @@ def diverse_sample(
     sel_ids = [first[0]["id"]]
     sel_vecs = [np.asarray(first[0]["v"], dtype=np.float64)]
     out_rows = [(1, sel_ids[0], 0.0)]
-    part_schema = f"md double, id {id_type}, v array<double>"
+    part_schema = {"md": "double", "id": id_type, "v": "array<double>"}
     for _ in range(1, k):
         S = np.stack(sel_vecs)
         nrms = np.sqrt((S * S).cumsum(axis=1)[:, -1])
         excl = np.asarray(sel_ids)
 
-        def _argmax(it, S=S, nrms=nrms, excl=excl):
+        def _argmax(batches, S=S, nrms=nrms, excl=excl):
             best = None
-            for pdf in it:
-                ids = pdf["id"].to_numpy()
+            for b in batches:
+                ids = b["id"]
                 mask = ~np.isin(ids, excl)
                 if not mask.any():
                     continue
                 ids = ids[mask]
-                V = np.stack(pdf["v"].to_numpy()[mask]).astype(np.float64)
+                V = arrow.vectors(b["v"])[mask]
                 vn = np.sqrt((V * V).cumsum(axis=1)[:, -1])
                 md = None
                 for j in range(S.shape[0]):
@@ -2367,11 +2235,9 @@ def diverse_sample(
                 if best is None or _beats(cand[0], cand[1], best[0], best[1]):
                     best = cand
             if best is not None:
-                yield pd.DataFrame(
-                    {"md": [best[0]], "id": [best[1]], "v": [list(best[2])]}
-                )
+                yield {"md": [best[0]], "id": [best[1]], "v": best[2][None, :]}
 
-        parts = e.mapInPandas(_argmax, part_schema).collect()
+        parts = arrow.map_partitions(e, _argmax, part_schema).collect()
         if not parts:
             break
         win = parts[0]

@@ -12,7 +12,7 @@ every aggregate an exact integer (register sums as scaled int64, KMV
 order statistics as int64 keys), so the one terminal float expression
 is bit-identical across engines.
 
-TWO PATHS per sketch (round 13 closes the r12 scale caveat):
+TWO PATHS per sketch:
 
 - **Oracle path** (:func:`hll_counts`, :func:`kmv_counts`,
   :func:`cm_table`): the portable polynomial hash is an interpreted
@@ -27,7 +27,7 @@ TWO PATHS per sketch (round 13 closes the r12 scale caveat):
   no char fold) and reduces map-side, so nothing data-scale ever
   crosses an exchange: HLL shuffles ≤ m·|groups| register partials
   per map partition (partial ``max``), KMV shuffles ≤ k·|groups|
-  bounded top-k rows per map partition (an Arrow ``mapInPandas``
+  bounded top-k rows per map partition (an Arrow map
   partial — the only non-builtin step, because Spark has no bounded
   top-k aggregate), and CM shuffles ≤ d·w counter partials per map
   partition (partial ``sum``). Estimator algebra is identical; the
@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import arrow
 from .text import poly_hash
 
 _MASK31 = 0x7FFFFFFF  # 2^31 − 1: all products stay under 2^63
@@ -474,7 +475,7 @@ def quantile_estimates(
     return out
 
 
-# --- production path (round 13): per-occurrence native hash, map-side ---------
+# --- production path: per-occurrence native hash, map-side -------------------
 # partial reduction — nothing data-scale crosses an exchange. See the
 # module docstring's two-path contract; the portable forms above stay
 # as the oracle-gated registry queries.
@@ -562,10 +563,10 @@ def kmv_counts_fast(
 ) -> DataFrame:
     """Production K-minimum-values distinct-count estimate per group:
     per-occurrence ``F.xxhash64`` (→ uniform on [0, 2^63)), then a
-    STRICTLY BOUNDED per-partition partial top-k — an Arrow
-    ``mapInPandas`` pass that keeps, per group, only the k smallest
-    distinct hashes seen in that partition (numpy unique-merge capped
-    at k per batch) and emits ≤ k rows per (group, partition). Spark
+    STRICTLY BOUNDED per-partition partial top-k — an Arrow map pass
+    that keeps, per group, only the k smallest distinct hashes seen in
+    that partition (a sort-based numpy merge capped at k per batch) and
+    emits ≤ k rows per (group, partition); NULL groups are dropped. Spark
     has no bounded top-k aggregate, so this is the one non-builtin
     step; unlike ``collect_set`` the partial STATE and the exchange
     rows are both k-capped, which is the whole point at 100 TB. The
@@ -577,36 +578,32 @@ def kmv_counts_fast(
     is the regime the registry oracle-checks). Output schema matches
     :func:`kmv_counts` (est, n_kept, kth_hash)."""
     import numpy as np
-    import pandas as pd
 
-    gtype = dict(df.dtypes)[group_col]
     proj = df.select(F.col(group_col).alias("g"), _xx63(F.col(key_col)).alias("h"))
 
-    def _partial(it):
-        acc: dict = {}
-        for pdf in it:
-            for g, sub in pdf.groupby("g", sort=False):
-                vals = np.unique(sub["h"].to_numpy())[:k]
-                cur = acc.get(g)
-                acc[g] = (
-                    vals
-                    if cur is None
-                    else np.unique(np.concatenate([cur, vals]))[:k]
-                )
-        if acc:
-            yield pd.DataFrame(
-                {
-                    "g": np.repeat(
-                        np.asarray(list(acc), dtype=object),
-                        [len(v) for v in acc.values()],
-                    ),
-                    "h": np.concatenate(list(acc.values()))
-                    if acc
-                    else np.array([], dtype=np.int64),
-                }
-            )
+    def smallest(g, h):
+        # the k smallest distinct h per g: sort by (g, h), drop repeats,
+        # keep each group's first k
+        keys, gi = np.unique(g, return_inverse=True)
+        order = np.lexsort((h, gi))
+        gi, h = gi[order], h[order]
+        new = np.ones(len(gi), bool)
+        new[1:] = (gi[1:] != gi[:-1]) | (h[1:] != h[:-1])
+        gi, h = gi[new], h[new]
+        first = np.flatnonzero(np.r_[True, gi[1:] != gi[:-1]])
+        rank = np.arange(len(gi)) - np.repeat(first, np.diff(np.r_[first, len(gi)]))
+        return keys[gi[rank < k]], h[rank < k]
 
-    partials = proj.mapInPandas(_partial, f"g {gtype}, h long")
+    def _partial(batches):
+        parts = [smallest(b["g"], b["h"]) for b in batches]
+        g, h = smallest(*(np.concatenate(c) for c in zip(*parts)))
+        yield {"g": g, "h": h}
+
+    partials = arrow.map_partitions(
+        proj.where(F.col("g").isNotNull()),
+        _partial,
+        {"g": df.schema[group_col].dataType, "h": "long"},
+    )
     dh = partials.groupBy("g", "h").agg(F.lit(1))
     w = Window.partitionBy("g").orderBy("h")
     topk = dh.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)

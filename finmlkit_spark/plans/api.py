@@ -23,6 +23,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import arrow
+
 _REGISTRY: dict[str, type] = {}
 
 
@@ -341,10 +343,11 @@ UnaryOp._rewire = _rewire_unary
 
 class LambdaOp(Transform):
     """``Feature.apply(fn)`` analog (reference ``kit.py:240-268``): wrap an
-    arbitrary in-process array->array callable as an Arrow pandas_udf
-    stage over one input column. Interactive-use escape hatch — NOT
-    JSON-serializable (use ``ExternalFunction`` with an import path for
-    persistable pipelines) and opaque to Catalyst (documented tradeoff).
+    arbitrary in-process array->array callable as an Arrow column kernel
+    (``functions.arrow.column``) over one input column. Interactive-use
+    escape hatch — NOT JSON-serializable (use ``ExternalFunction`` with
+    an import path for persistable pipelines) and opaque to Catalyst
+    (documented tradeoff).
     """
 
     def __init__(self, fn, child: Transform, name: str | None = None):
@@ -356,13 +359,10 @@ class LambdaOp(Transform):
         fn = self.fn
         inner = self.child.expr(ctx)
 
-        @F.pandas_udf("double")
-        def _udf(s):
-            import pandas as pd
+        def _udf(x):
+            return fn(x)
 
-            return pd.Series(fn(s.to_numpy()))
-
-        return _udf(inner)
+        return arrow.column(_udf, "double")(inner)
 
     def _params(self):
         raise TypeError("LambdaOp is not serializable; use ExternalFunction")
@@ -379,7 +379,7 @@ Transform.apply = _apply
 class ExternalFunction(Transform):
     """Wrap an arbitrary import-path callable as a vectorized transform
     (reference ``ExternalFunction`` transforms.py:1668-1805): the fn is
-    resolved at build time and applied as an Arrow pandas_udf over the
+    resolved at build time and applied as an Arrow column kernel over the
     required columns — serializable by import path. Documented caveat:
     opaque to Catalyst (no pushdown through it)."""
 
@@ -399,14 +399,10 @@ class ExternalFunction(Transform):
         fn = self._resolve()
         kw = self.kwargs
 
-        @F.pandas_udf("double")
-        def _udf(*series):
-            import pandas as pd
+        def _udf(*arrays):
+            return fn(*arrays, **kw)
 
-            out = fn(*[s.to_numpy() for s in series], **kw)
-            return pd.Series(out)
-
-        return _udf(*[F.col(c) for c in self.cols])
+        return arrow.column(_udf, "double")(*[F.col(c) for c in self.cols])
 
     def _params(self):
         return {

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions import arrow
 from ..operators import corpus as CP
 from ..operators import dedup as D
 from ..operators import multimodal as MM
@@ -82,15 +83,13 @@ def _embs(spark, sf_dir):
 def _payload_docs(spark, sf_dir, payload):
     """``(doc_id, payload binary)``: ``payload(doc_id) -> bytes`` per
     document, built on the executors."""
-    import pandas as pd
 
-    def encode(it):
-        for pdf in it:
-            ids = pdf["doc_id"].to_numpy()
-            yield pd.DataFrame({"doc_id": ids, "payload": [payload(int(d)) for d in ids]})
+    def encode(b):
+        ids = b["doc_id"]
+        return {"doc_id": ids, "payload": [payload(int(d)) for d in ids]}
 
     docs = _docs(spark, sf_dir).select("doc_id")
-    return docs.mapInPandas(encode, schema="doc_id long, payload binary")
+    return arrow.map_batches(docs, encode, "doc_id long, payload binary")
 
 
 def _gradient_png(doc_id):
@@ -487,7 +486,7 @@ SELECT doc_id,
 FROM documents""",
 )
 def multimodal_meta(spark, sf_dir):
-    """Binary-payload decode plumbing via mapInPandas (decode stubbed
+    """Binary-payload decode plumbing via an Arrow map (decode stubbed
     deterministically; schema/partitioning/batch shape are real)."""
     return MM.decode_meta(MM.with_payload(_docs(spark, sf_dir)), mode="fake")
 
@@ -712,22 +711,33 @@ FROM c a JOIN c b ON a.cls = b.cls AND a.doc_id < b.doc_id""",
 )
 def image_phash_pairs(spark, sf_dir):
     """Image-level perceptual dedup end-to-end: a deterministic 24x32
-    image per doc (pixel formula keyed on doc_id % 250, verified
-    collision-free across the 250 classes) is PNG-encoded executor-side;
+    image per doc (pixel formula keyed on doc_id % 250; the 250 classes
+    give 250 distinct hashes in exact arithmetic — no class has
+    constant rows, whose median-sign hashes coincide) is PNG-encoded
+    executor-side;
     ``multimodal.phash_dup_pairs`` decodes, computes the 32x32-DCT
     perceptual hash, and equi-joins on it. The oracle lists same-class
     pairs symbolically — a hash match proves decode -> resample -> DCT
     -> bit-pack -> join finds exactly the true duplicate pairs (and no
     false ones) at any sf."""
-    import numpy as np
 
     def png(did):
-        i = np.arange(24 * 32, dtype=np.int64)
-        cls = did % 250
-        img = (((cls * 31 + 7) * i + cls * cls) % 256).astype(np.uint8).reshape(24, 32)
-        return MM.encode_png(img)
+        return MM.encode_png(_phash_fixture_image(did % 250))
 
     return MM.phash_dup_pairs(_payload_docs(spark, sf_dir, png)).select("doc_a", "doc_b")
+
+
+def _phash_fixture_image(cls: int):
+    """The 24x32 grayscale image of ``image_phash_pairs`` class ``cls``:
+    pixel i (row r = i // 32) is
+    ``((cls·31 + 7)·i + cls² + r²·(2·cls + 1)) % 256``. The row term
+    keeps every class's rows distinct."""
+    import numpy as np
+
+    i = np.arange(24 * 32, dtype=np.int64)
+    r = i // 32
+    px = (cls * 31 + 7) * i + cls * cls + r * r * (2 * cls + 1)
+    return (px % 256).astype(np.uint8).reshape(24, 32)
 
 
 @query(

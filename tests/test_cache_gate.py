@@ -227,14 +227,14 @@ def _side_stream(seed, nan=False):
 
 
 def _tick_rule(rows):
-    """The tick rule row by row in (ts_ns, trade_id) order with Spark's
-    double semantics (a NaN delta is a NaN sign, and NaN is nonzero):
+    """The tick rule row by row in (ts_ns, trade_id) order (a NaN delta
+    signs 0, so it carries the previous sign like a zero delta):
     trade_id → the sign before the int cast."""
     out, last, prev = {}, 1.0, None
     for _, tid, p, _ in sorted(rows):
         if prev is not None:
             d = p - prev
-            raw = d if math.isnan(d) else float((d > 0) - (d < 0))
+            raw = 0.0 if math.isnan(d) else float((d > 0) - (d < 0))
             if raw != 0:
                 last = raw
         out[tid] = last
@@ -273,11 +273,10 @@ def test_side_bit_identical_across_modes(spark, gate_sides, seed):
 
 
 def test_side_carry_keeps_nan_prices(spark, gate_sides):
-    """A NaN price has no tick sign; the int ``side`` column fails the
-    ANSI cast on it in every mode, so this compares the sign before the
-    cast, and the carried helper columns, bit for bit across the gate:
-    the driver carry treats NaN as a value and NULL as absent, as Spark
-    does."""
+    """A NaN price signs 0 and the carry passes over it. This compares
+    the sign before the int cast, and the carried helper columns, bit
+    for bit across the gate: the driver carry signs a NaN boundary
+    delta 0 and treats NULL as absent, as the Spark plans do."""
     rows = _side_stream(3, nan=True)
     want = {t: _bits(s) for t, s in _tick_rule(rows).items()}
     sign = F.coalesce("_cin", "_bnz", "_carry", F.lit(1.0)).alias("sign")

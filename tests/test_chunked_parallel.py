@@ -4,7 +4,7 @@ agree with the single-window expression form on every row."""
 from __future__ import annotations
 
 
-def test_rolling_median_chunked_matches_expression_form(spark):
+def test_rolling_median_chunked_matches_expression_form(spark, monkeypatch):
     """The trade-scale skip-list median (rolling_median_chunked) must
     equal the bar-scale expression form (per-row frame sort) on every
     row, including warmup NULLs — small chunks force several chunk
@@ -14,7 +14,10 @@ def test_rolling_median_chunked_matches_expression_form(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from finmlkit_spark.functions import chunked_window as CW
     from finmlkit_spark.functions import rolling as R
+
+    monkeypatch.setattr(CW, "_COARSE_SPAN", 50_000_000)
 
     random.seed(11)
     n, N = 17, 900
@@ -29,7 +32,7 @@ def test_rolling_median_chunked_matches_expression_form(spark):
     }
     got_df = R.rolling_median_chunked(
         df, "price", n, order_col="ts_ns", tiebreak_cols=("trade_id",),
-        out_col="m", chunk_rows=64, coarse_span=50_000_000,
+        out_col="m", chunk_rows=64,
     )
     got = {r["trade_id"]: r["m"] for r in got_df.collect()}
     assert len(got) == N

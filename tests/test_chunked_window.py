@@ -61,7 +61,8 @@ def test_chunked_features_bit_identical(spark):
             assert got[k][f] == g[f] or (got[k][f] is None and g[f] is None), (k, f)
 
 
-def test_global_row_number_exact(spark):
+def test_global_row_number_exact(spark, monkeypatch):
+    monkeypatch.setattr(CW, "_COARSE_SPAN", CW.DAY_NS // 24)
     bars = _bars(spark)
     want = {
         r["bar_close_ns"]: r["rn"]
@@ -71,7 +72,7 @@ def test_global_row_number_exact(spark):
     }
     got = {
         r["bar_close_ns"]: r[CW.GLOBAL_RN]
-        for r in CW.with_global_row_number(bars, "bar_close_ns", coarse_span=CW.DAY_NS // 24).collect()
+        for r in CW.with_global_row_number(bars, "bar_close_ns").collect()
     }
     assert got == want
 
@@ -96,16 +97,15 @@ def test_warmup_smaller_than_chunk_required(spark):
         CW.with_row_chunks(_bars(spark), "bar_close_ns", warmup=64, chunk_rows=64)
 
 
-def test_global_row_number_with_ties_and_tiebreak(spark):
+def test_global_row_number_with_ties_and_tiebreak(spark, monkeypatch):
     """Duplicate order values resolved deterministically by tiebreak_cols
     even when the duplicates straddle a coarse-bucket row_number."""
+    monkeypatch.setattr(CW, "_COARSE_SPAN", 100)
     rows = [(1000, i) for i in range(50)] + [(2000, i) for i in range(50)]
     df = spark.createDataFrame(rows, "ts long, tid long")
     got = {
         (r["ts"], r["tid"]): r[CW.GLOBAL_RN]
-        for r in CW.with_global_row_number(
-            df, "ts", tiebreak_cols=("tid",), coarse_span=100
-        ).collect()
+        for r in CW.with_global_row_number(df, "ts", tiebreak_cols=("tid",)).collect()
     }
     want = {
         (ts, tid): i + 1
@@ -114,7 +114,7 @@ def test_global_row_number_with_ties_and_tiebreak(spark):
     assert got == want
 
 
-def test_row_chunks_sparse_time_axis(spark):
+def test_row_chunks_sparse_time_axis(spark, monkeypatch):
     """Row-count chunking is immune to arbitrarily sparse stretches of
     the time axis (the failure mode of time-span chunking): warmup rows
     always come from the previous CHUNK regardless of time gaps."""
@@ -123,7 +123,8 @@ def test_row_chunks_sparse_time_axis(spark):
     rng = random.Random(7)
     ts = sorted(rng.sample(range(10**6, 10**12, 997), 500))
     df = spark.createDataFrame([(t, float(i)) for i, t in enumerate(ts)], "ts long, x double")
-    ch = CW.with_row_chunks(df, "ts", warmup=5, chunk_rows=37, coarse_span=10**9)
+    monkeypatch.setattr(CW, "_COARSE_SPAN", 10**9)
+    ch = CW.with_row_chunks(df, "ts", warmup=5, chunk_rows=37)
     w = CW.chunk_window("ts")
     got = {
         r["ts"]: r["s"]
@@ -145,7 +146,7 @@ def test_row_chunks_empty_and_single_row(spark):
     assert len(out) == 1 and out[0]["ts"] == 5
 
 
-def test_all_warm_phantom_chunk(spark):
+def test_all_warm_phantom_chunk(spark, monkeypatch):
     """The documented phantom-trailing-chunk contract: when the last real
     chunk's tail rows sit in the warmup band, they are duplicated into a
     chunk id past the end that contains ONLY warm rows. That group must
@@ -154,7 +155,8 @@ def test_all_warm_phantom_chunk(spark):
     df = spark.createDataFrame(
         [(i * 100, float(i)) for i in range(10)], "ts long, x double"
     )
-    ch = CW.with_row_chunks(df, "ts", warmup=2, chunk_rows=5, coarse_span=10**9)
+    monkeypatch.setattr(CW, "_COARSE_SPAN", 10**9)
+    ch = CW.with_row_chunks(df, "ts", warmup=2, chunk_rows=5)
     rows = ch.select(CW.CHUNK, CW.WARM, "ts").collect()
     by_chunk = {}
     for r in rows:

@@ -1,6 +1,7 @@
 """Empty-input robustness: every major operator must plan and execute
-on zero-row frames (the kmeans dim-probe ParseException from the
-round-4 advisory was exactly this class of bug)."""
+on zero-row frames, including the probes that read the input's shape
+(a dimension probe must not build SQL from a missing row), and every
+Arrow kernel stage returns zero rows in its declared schema."""
 
 from __future__ import annotations
 
@@ -82,3 +83,33 @@ def test_multimodal_ops_empty(spark):
     assert MM.image_features(df).count() == 0
     assert MM.audio_spectral(df).count() == 0
     assert MM.image_resize(df, 4, 4).count() == 0
+    assert MM.audio_features(df).count() == 0
+    assert MM.image_features(df, on_error="null").count() == 0
+    assert MM.video_frame_stats(df, on_error="null").count() == 0
+    assert MM.image_phash(df).count() == 0
+
+
+def test_similarity_encode_kernels_empty(spark):
+    import numpy as np
+
+    from finmlkit_spark.operators import similarity as S
+    from finmlkit_spark.operators import sketches as SK
+
+    embs = _empty(spark, EMBS)
+    books = [np.zeros((2, 4)), np.ones((2, 4))]
+    seeds = [(0, [1.0] * 8, float(np.sqrt(8.0)))]
+    bounds = (np.zeros(8), np.ones(8))
+    stages = {
+        "pq_encode": S.pq_encode(embs, m=2, codebooks=books),
+        "ivf_pq_encode": S.ivf_pq_encode(embs, m=2, seeds=seeds, codebooks=books),
+        "sq8_encode": S.sq8_encode(embs, bounds=bounds),
+        "ivf_sq8_encode": S.ivf_sq8_encode(embs, seeds=seeds, bounds=bounds),
+        "random_projection": S.random_projection(embs, dim=8),
+        "embedding_covariance": S.embedding_covariance(embs),
+        "lsh_bucket_arrow": embs.select(S.lsh_bucket_arrow(F.col("embedding"), dim=8)),
+        "cosine_batch": embs.select(S.cosine_batch(F.col("embedding"), F.col("embedding"))),
+        "kmv_counts_fast": SK.kmv_counts_fast(
+            _empty(spark, "g string, key string"), "g", "key"
+        ),
+    }
+    assert {name: df.count() for name, df in stages.items()} == dict.fromkeys(stages, 0)

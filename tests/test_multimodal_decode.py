@@ -246,6 +246,30 @@ def test_phash_invariance_and_discrimination(spark):
     assert pairs == [(1, 2)]
 
 
+def test_phash_bits_survive_permuted_summation():
+    """No pHash bit depends on float summation order: for every
+    ``image_phash_pairs`` fixture class, a DCT summed in a shuffled
+    order (sequential cumsum over permuted terms, not BLAS) hashes
+    exactly like ``phash64``, and the 250 classes hash apart."""
+    from finmlkit_spark.suite.text_suite import _phash_fixture_image
+
+    rng = np.random.default_rng(0)
+    n = 32
+    k = np.arange(n)
+    C = np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None] / (2 * n))
+    hashes = []
+    for cls in range(250):
+        px = M.image_pixels(M.encode_png(_phash_fixture_image(cls)))
+        h, w = px.shape[:2]
+        s = px.astype(np.float64).mean(axis=2)[(k * h) // n][:, (k * w) // n]
+        p1, p2 = rng.permutation(n), rng.permutation(n)
+        t = (C[:, p1][:, :, None] * s[p1][None, :, :]).cumsum(axis=1)[:, -1]
+        d = (t[:, p2][:, None, :] * C[:, p2][None, :, :]).cumsum(axis=2)[:, :, -1]
+        hashes.append(M.phash64(px))
+        assert M._dct_hash(d) == hashes[-1], cls
+    assert len(set(hashes)) == 250
+
+
 def test_phash_near_pairs_catches_noised_copy(spark):
     """A lightly-noised copy (few flipped low bits) lands within the
     hamming tolerance; unrelated images do not."""

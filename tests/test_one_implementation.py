@@ -70,12 +70,16 @@ def test_no_row_count_hint_parameter():
 
 def test_scale_scans_take_no_unused_knob():
     """The single-stream scale scans take no ``by`` (per-group EW is
-    ``apply_sequential``'s job) and no ``coarse_span``; only RSI exposes
-    the global row number."""
+    ``apply_sequential``'s job) and no ``coarse_span`` (the bucket width
+    is ``chunked_window._COARSE_SPAN``), nor do the chunk helpers and
+    the trade-scale median; only RSI exposes the global row number."""
+    from finmlkit_spark.functions import chunked_window as CW
+    from finmlkit_spark.functions import rolling as R
     from finmlkit_spark.functions import sequential as S
 
     scans = [S.ewma_parallel, S.ewms_parallel, S.ewmst_parallel, S.rsi_parallel,
-             S.atr_ema_parallel]
+             S.atr_ema_parallel, R.rolling_median_chunked, CW.with_row_chunks,
+             CW.with_global_row_number]
     offenders = [
         f"{fn.__name__}({p})"
         for fn in scans
@@ -92,3 +96,54 @@ def test_exclusive_prefix_takes_no_group():
     from finmlkit_spark.functions.prefix import exclusive_prefix
 
     assert "group" not in inspect.signature(exclusive_prefix).parameters
+
+
+#: the pandas kernel sites left outside ``functions/arrow.py``:
+#: (module path, top-level function, kind) -> why it stays pandas
+PANDAS_SITES = {
+    ("sources/trades.py", "read_binance_zip", "mapInPandas"):
+        "streams one frame per zip member through pd.read_csv",
+    ("operators/similarity.py", "semantic_dup_pairs", "np.stack"):
+        "inside the grouped applyInPandas cluster-pair kernel",
+    ("operators/similarity.py", "knn_graph", "np.stack"):
+        "inside the grouped applyInPandas cluster top-k kernel",
+}
+
+
+def _pandas_sites():
+    """Every ``mapInPandas`` call, ``pandas_udf`` reference and
+    ``np.stack`` over a pandas ``.values`` / ``.to_numpy()`` in the
+    library, keyed like :data:`PANDAS_SITES`."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(finmlkit_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                kind = None
+                if isinstance(node, ast.Attribute) and node.attr == "mapInPandas":
+                    kind = "mapInPandas"
+                elif (isinstance(node, ast.Attribute) and node.attr == "pandas_udf") or (
+                    isinstance(node, ast.Name) and node.id == "pandas_udf"
+                ):
+                    kind = "pandas_udf"
+                elif (
+                    isinstance(node, ast.Call)
+                    and ast.unparse(node.func) == "np.stack"
+                    and any(s in ast.unparse(node) for s in (".values", ".to_numpy()"))
+                ):
+                    kind = "np.stack"
+                if kind:
+                    yield (
+                        str(path.relative_to(root)),
+                        getattr(top, "name", "<module>"),
+                        kind,
+                    )
+
+
+def test_one_arrow_kernel_boundary():
+    """Map and column kernels cross Spark through ``functions/arrow.py``;
+    the only pandas kernel sites are the allowlisted ones."""
+    assert set(_pandas_sites()) == set(PANDAS_SITES)

@@ -116,3 +116,34 @@ def test_trade_side_chunked_plateaus_and_constant_chunks(spark):
         for r in P.with_trade_side_chunked(tr, chunk_ns=MIN, mode="chunked").select("trade_id", "side").collect()
     }
     assert got == glob
+
+
+def test_nan_price_carries_previous_side(spark, gate_sides):
+    """A NaN price (and the trade after it: its Δprice is NaN too) signs
+    0, so it carries the previous side like Δ = 0. Stream B holds a run
+    of NaN prices covering a whole 20-unit time chunk and the first row
+    of the next. Every mode gives the same sides, without an error."""
+    nan = float("nan")
+    streams = {
+        "A": [100.0, 101.0, nan, 101.0, 100.0, 100.0, 102.0],
+        "B": [102.0, 101.0, nan, nan, nan, 100.0, 101.0],
+    }
+    want = {
+        **{("A", i): s for i, s in enumerate([1, 1, 1, 1, -1, -1, 1])},
+        **{("B", i): s for i, s in enumerate([1, -1, -1, -1, -1, -1, 1])},
+    }
+    rows = [(sym, i * 10, i, p, 1.0) for sym, ps in streams.items() for i, p in enumerate(ps)]
+    df = spark.createDataFrame(rows, "symbol string, ts_ns long, trade_id long, price double, qty double")
+
+    def sides(d):
+        return {(r["symbol"], r["trade_id"]): r["side"] for r in d.collect()}
+
+    assert sides(P.with_trade_side(df, by="symbol")) == want
+    for sym in streams:
+        one = df.where(df.symbol == sym)
+        mine = {k: v for k, v in want.items() if k[0] == sym}
+        assert sides(P.with_trade_side_chunked(one, chunk_ns=20, mode="global")) == mine
+        small, scale = gate_sides(
+            lambda one=one: sides(P.with_trade_side_chunked(one, chunk_ns=20, mode="chunked"))
+        )
+        assert small == scale == mine
