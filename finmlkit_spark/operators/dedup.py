@@ -913,11 +913,16 @@ def dedup_clusters_star(
 def keep_canonical(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Fuzzy-dedup keep filter: one doc per near-dup cluster (the min
     id), singletons kept. The document set a training run actually
-    consumes."""
-    comp = dedup_clusters(pairs, docs, id_col)
-    return docs.join(
-        comp.where(F.col(id_col) == F.col("cluster_id")).select(id_col), id_col
+    consumes. Reads ``docs`` once: the non-canonical ids (``id !=
+    cluster_id``) leave by one anti-join, and a NULL id is dropped.
+    The key column leads the output, as in an equi-join on it."""
+    drop = (
+        dedup_clusters(pairs, id_col=id_col)
+        .where(F.col(id_col) != F.col("cluster_id"))
+        .select(id_col)
     )
+    kept = docs.where(F.col(id_col).isNotNull()).join(drop, id_col, "left_anti")
+    return kept.select(id_col, *(c for c in docs.columns if c != id_col))
 
 
 def decontaminate(

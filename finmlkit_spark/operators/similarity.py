@@ -75,16 +75,22 @@ def cosine_batch(a: Column, b: Column) -> Column:
     summation via cumsum (numpy's sum/dot use pairwise summation, which
     would drift in the last ulp and break oracle hash equality) — at
     numpy batch speed. Requires equal-length (padded) vectors per batch.
+    A NULL vector on either side gives NULL, as the fold does.
     """
 
     def _cos(va, vb):
         import numpy as np
+        import pyarrow.compute as pc
 
-        A, B = arrow.vectors(va), arrow.vectors(vb)
-        dots = (A * B).cumsum(axis=1)[:, -1]
-        na = np.sqrt((A * A).cumsum(axis=1)[:, -1])
-        nb = np.sqrt((B * B).cumsum(axis=1)[:, -1])
-        return dots / (na * nb)
+        valid = pc.and_(va.is_valid(), vb.is_valid())
+        A, B = arrow.vectors(va.filter(valid)), arrow.vectors(vb.filter(valid))
+        out = np.full(len(va), np.nan)  # NaN -> NULL at the boundary
+        if A.size:
+            dots = (A * B).cumsum(axis=1)[:, -1]
+            na = np.sqrt((A * A).cumsum(axis=1)[:, -1])
+            nb = np.sqrt((B * B).cumsum(axis=1)[:, -1])
+            out[valid.to_numpy(zero_copy_only=False)] = dots / (na * nb)
+        return out
 
     return arrow.column(_cos, "double")(a, b)
 

@@ -5,7 +5,8 @@ LLM-side analog of ``plans.api.FeatureKit`` (reference kit pattern,
 A :class:`CurationKit` is an ordered list of :class:`Stage` configs;
 ``run(docs)`` folds them into ONE lazy DataFrame plan — Catalyst sees
 the whole chain (filters push into the scan, projections prune), so the
-declarative form costs nothing over hand-written code. Stages carry
+declarative form costs nothing over hand-written code. The plan is cut
+only inside a stage that reads its input more than once. Stages carry
 their params and round-trip through JSON (``to_config``/``from_config``)
 so a curation recipe is a versionable artifact, like a feature config.
 
@@ -122,13 +123,11 @@ class ExactDedup(Stage):
     kind = "exact_dedup"
 
     def apply(self, docs: DataFrame) -> DataFrame:
-        # window form, not keep-set join-back (r14, guide §2.4): the
-        # same keep decision — doc_id == min(doc_id) per md5(text) —
-        # computed with ONE exchange of the doc rows (by the digest)
-        # instead of the digest aggregate + a second full-payload
-        # join-back exchange of docs by doc_id (SMJ sorted both sides
-        # on top). Interleaved sf0.1 A/B inside curation_pipeline:
-        # wins every rep, −13% combined with the 3-column input prune.
+        # window form: the keep decision (doc_id == min(doc_id) per
+        # md5(text)) costs ONE exchange of the doc rows, by the digest;
+        # a keep-set join-back would add a second full-payload exchange
+        # by doc_id. One digest's rows land in one window task (no
+        # skew split).
         from pyspark.sql import Window
 
         w = Window.partitionBy(F.md5(F.col("text")))
@@ -150,6 +149,7 @@ class NearDupDedup(Stage):
         super().__init__(threshold=threshold)
 
     def apply(self, docs: DataFrame) -> DataFrame:
+        docs = cache.cut(docs)  # read by the signature and keep passes
         pairs = D.minhash_lsh_pairs(docs, threshold=self.params["threshold"])
         return D.keep_canonical(docs, pairs)
 
@@ -166,6 +166,7 @@ class Decontaminate(Stage):
         super().__init__(bench_filter=bench_filter, min_shared=min_shared)
 
     def apply(self, docs: DataFrame) -> DataFrame:
+        docs = cache.cut(docs)  # read by both slices and the anti-join
         bench = docs.where(F.expr(self.params["bench_filter"]))
         train = docs.where(~F.expr(self.params["bench_filter"]))
         hits = D.decontaminate(train, bench, min_shared=self.params["min_shared"])
@@ -210,31 +211,22 @@ class MixtureSample(Stage):
 class CurationKit:
     """Ordered stage list -> one lazy curated-corpus plan.
 
-    ``persist_after`` names stage kinds whose output should be
-    materialized (``cache.cut`` lineage checkpoint). Stages that branch their input —
-    ``decontaminate`` reads it for the bench slice, the train slice,
-    and the anti-join — otherwise recompute the whole upstream chain
-    per branch; persisting the boundary before such a stage is the
-    standard materialize-between-phases pattern of production curation
-    pipelines (the frame is narrow doc rows, safe to cache, unlike
-    array-signature intermediates — see the minhash cache note).
+    A stage that reads its input more than once cuts it itself
+    (``cache.cut`` on its first line), so the upstream chain runs once
+    per kit run however the stages branch, and a kit needs no
+    boundary list. ``cut``, not ``keep``: the checkpoint's block write
+    of the doc rows costs less than the columnar persist. The cut
+    trades fault recovery for that: its blocks are not recomputable if
+    an executor is lost (see ``cache.cut``).
     """
 
-    def __init__(self, stages: list[Stage], persist_after: list[str] | None = None):
+    def __init__(self, stages: list[Stage]):
         self.stages = list(stages)
-        self.persist_after = list(persist_after or [])
 
     def run(self, docs: DataFrame) -> DataFrame:
         out = docs
         for s in self.stages:
             out = s.apply(out)
-            if s.kind in self.persist_after:
-                # cache.cut, not keep (r14 honest-timing A/B:
-                # curation_pipeline 2.42 -> 1.72 s — the columnar
-                # persist write of the doc rows costs more than the
-                # checkpoint block write now that the timed region
-                # pays materialization)
-                out = cache.cut(out)
         return out
 
     def report(self, docs: DataFrame) -> dict[str, int]:
@@ -249,17 +241,13 @@ class CurationKit:
 
     # -- serialization ------------------------------------------------------
     def to_config(self) -> dict[str, Any]:
-        cfg: dict[str, Any] = {"stages": [s.to_config() for s in self.stages]}
-        if self.persist_after:
-            cfg["persist_after"] = self.persist_after
-        return cfg
+        return {"stages": [s.to_config() for s in self.stages]}
 
     @classmethod
     def from_config(cls, cfg: dict[str, Any]) -> "CurationKit":
-        return cls(
-            [stage_from_config(c) for c in cfg["stages"]],
-            persist_after=cfg.get("persist_after"),
-        )
+        """Other top-level keys (an old ``persist_after`` list) are
+        ignored: the stages cut their own inputs."""
+        return cls([stage_from_config(c) for c in cfg["stages"]])
 
     def save_config(self, path: str) -> None:
         import json

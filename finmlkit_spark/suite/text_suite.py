@@ -2456,16 +2456,11 @@ def curation_pipeline_q(spark, sf_dir):
             CK.ExactDedup(),
             CK.Decontaminate(bench_filter="doc_id % 97 = 0", min_shared=1),
             CK.HashSplit(test_permille=100, side="train"),
-        ],
-        # decontaminate branches its input 3x (bench slice, train slice,
-        # anti-join); persist the post-dedup boundary so the upstream
-        # filter+dedup chain computes once
-        persist_after=["exact_dedup"],
+        ]
     )
-    # prune the kit input to the columns the stages + output touch
-    # (guide §2.3): the persist boundary materializes its full schema
-    # — lang/n_chars would be checkpoint-written and re-read 3x by the
-    # decontaminate branches for nothing
+    # prune the kit input to the columns the stages + output touch:
+    # Decontaminate's input cut materializes its full schema, so
+    # lang/n_chars would be written and re-read by its three branches
     out = kit.run(_docs(spark, sf_dir).select("doc_id", "text", "source"))
     return out.select("doc_id", "source", TX.token_count().alias("n_tokens"))
 

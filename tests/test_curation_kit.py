@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from finmlkit_spark.plans import curation as C
@@ -83,14 +84,44 @@ def test_near_dup_and_mixture_stages(spark):
     assert set(mix.columns) >= {"doc_id", "text", "source"}
 
 
-def test_persist_after_round_trip(spark):
-    kit = C.CurationKit(
-        [C.ExactDedup(), C.Decontaminate()], persist_after=["exact_dedup"]
-    )
-    kit2 = C.CurationKit.from_config(kit.to_config())
-    assert kit2.persist_after == ["exact_dedup"]
-    out = kit2.run(_docs(spark))
-    assert out.count() > 0
+def test_config_round_trip_ignores_persist_after(spark):
+    """The stages cut their own inputs, so a kit config is its stage
+    list; an old config's ``persist_after`` key loads and is dropped."""
+    kit = C.CurationKit([C.ExactDedup(), C.Decontaminate()])
+    cfg = kit.to_config()
+    assert set(cfg) == {"stages"}
+    assert C.CurationKit.from_config(cfg).to_config() == cfg
+    kit2 = C.CurationKit.from_config({**cfg, "persist_after": ["exact_dedup"]})
+    assert kit2.to_config() == cfg
+    assert kit2.run(_docs(spark)).count() > 0
+
+
+def _counted(spark, docs):
+    """``docs`` behind a pass-through Arrow map that adds each batch's
+    row count to an accumulator — one tick per upstream row read."""
+    from finmlkit_spark.functions import arrow
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(cols):
+        acc.add(len(cols["doc_id"]))
+        return cols
+
+    return arrow.map_batches(docs, tick, docs.schema), acc
+
+
+@pytest.mark.parametrize(
+    "stage",
+    [C.NearDupDedup(threshold=0.5), C.Decontaminate(bench_filter="doc_id % 3 = 0")],
+    ids=lambda s: s.kind,
+)
+def test_branching_stage_reads_upstream_once(spark, stage):
+    """A stage that reads its input more than once cuts it: one action
+    downstream of it evaluates the upstream rows once, not per branch."""
+    docs, acc = _counted(spark, _docs(spark))
+    n = stage.apply(docs).count()
+    assert n > 0
+    assert acc.value == 5
 
 
 def test_gopher_repetition_stage(spark):

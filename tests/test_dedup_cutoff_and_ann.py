@@ -196,6 +196,25 @@ def test_cosine_batch_bit_identical_to_hof_fold(spark):
         assert r["hof"] == r["arrow"], (r["hof"], r["arrow"])
 
 
+def test_cosine_batch_null_vector_matches_hof(spark):
+    """A NULL vector gives a NULL cosine row, as the HOF fold does,
+    instead of failing the batch."""
+    from pyspark.sql import functions as F
+
+    from finmlkit_spark.operators import similarity as SIM
+
+    df = spark.createDataFrame(
+        [([1.0, 2.0, 3.0], [3.0, 2.0, 1.0]), (None, [1.0, 0.0, 1.0])],
+        "v array<double>, w array<double>",
+    )
+    out = df.select(
+        SIM.cosine(F.col("v"), F.col("w")).alias("hof"),
+        SIM.cosine_batch(F.col("v"), F.col("w")).alias("arrow"),
+    ).collect()
+    assert [r["hof"] for r in out] == [r["arrow"] for r in out]
+    assert out[0]["arrow"] is not None and out[1]["arrow"] is None
+
+
 def test_lsh_bucket_arrow_bit_identical_to_hof(spark):
     """lsh_bucket_arrow must produce the exact integer buckets of the
     JVM HOF form — same sequential projection fold, same weights, so

@@ -76,8 +76,12 @@ def test_dedup_clusters_and_keep(spark):
     docs = _docs_df(spark, [(i, f"t{i}", "en", "s") for i in [1, 2, 3, 5, 7, 9]])
     comp = {r["doc_id"]: r["cluster_id"] for r in D.dedup_clusters(pairs, docs).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 5: 5, 7: 7, 9: 7}
-    kept = sorted(r["doc_id"] for r in D.keep_canonical(docs, pairs).collect())
-    assert kept == [1, 5, 7]
+    kept = D.keep_canonical(docs, pairs)
+    assert kept.columns == docs.columns
+    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 5, 7]
+    # a NULL doc_id is in no cluster and is dropped
+    with_null = docs.union(_docs_df(spark, [(None, "tn", "en", "s")]))
+    assert sorted(r["doc_id"] for r in D.keep_canonical(with_null, pairs).collect()) == [1, 5, 7]
 
 
 def test_dedup_clusters_long_chain(spark):
