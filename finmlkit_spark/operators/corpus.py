@@ -498,10 +498,10 @@ def _c4_keep_from(s: dict):
 def c4_keep_expr(text_col: str = "text"):
     """The C4 keep decision as ONE inline boolean Column — lets a
     curation stage FILTER the doc stream directly instead of computing
-    a doc_id keep-set and joining it back (r13 optimization: the join
-    form is a data-scale self-join — SMJ at 100 TB — for what is a
-    pure per-row predicate; identical keep decisions by construction,
-    both built from :func:`_c4_signal_exprs`)."""
+    a doc_id keep-set and joining it back: the predicate is per-row, so
+    a keep-set join would be a data-scale self-join (SMJ at 100 TB) for
+    nothing. The keep decisions equal :func:`c4_filter_signals`' ``keep``
+    by construction (both built from :func:`_c4_signal_exprs`)."""
     return _c4_keep_from(_c4_signal_exprs(text_col))
 
 
@@ -617,8 +617,7 @@ def bigram_logprob(
     V); docs with fewer than two tokens emit no row (no transitions to
     score).
 
-    Plan (round 13 — the perplexity_buckets constant): ONE
-    tokenize+hash pass serves unigrams AND bigrams — ``zip_with`` pads
+    Plan: ONE tokenize+hash pass serves unigrams AND bigrams — ``zip_with`` pads
     the shorter (shifted) side with null, so entry i is (h_i, h_{i+1})
     and the final entry per doc carries r IS NULL (``xxhash64(NULL)``
     is the SEED, 42, not null — the r-hash is therefore null-guarded);
@@ -626,9 +625,9 @@ def bigram_logprob(
     exactly the adjacent pairs. Token KEYS are ``F.xxhash64`` — pure
     join/count identity that never reaches the output, so any
     injective map yields identical scores while the oracle keys on raw
-    token strings (A/B-pinned bit-equal to the r12 string-keyed form;
-    the swap + single pass took the build from 1.14 s to 0.83 s at
-    sf0.1). Counts are map-side combined; V is a lazy broadcast
+    token strings (bit-equal to a string-keyed form; hash keys plus the
+    single pass build in 0.83 s at sf0.1 against 1.14 s for string keys
+    over two passes). Counts are map-side combined; V is a lazy broadcast
     scalar; the three consumers re-scan the narrow explode rather than
     localCheckpointing a data-scale intermediate (3 narrow scans beat
     materializing the exploded stream — measured, and the at-100 TB

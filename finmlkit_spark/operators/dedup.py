@@ -2,8 +2,10 @@
 north star): exact, n-gram Jaccard, MinHash+LSH, SimHash, embedding
 cosine (in ``similarity``).
 
-All pure DataFrame expressions — shingle/minhash/simhash signatures are
-higher-order-function columns (JVM, codegen), candidate generation is an
+Shingle hash arrays are higher-order-function columns (JVM, codegen);
+MinHash and SimHash signatures are Arrow column kernels over those
+arrays (``functions.arrow.column``), and the exploded shingle rows some
+operators need come from Arrow map kernels. Candidate generation is an
 equi-join on band/bucket keys (shuffle-bounded, no O(n²) cross join),
 and only candidate pairs pay the exact-verification cost. This is the
 shape that survives 100 TB: signatures are a narrow projection;
@@ -123,7 +125,11 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs: signature projection -> explode band
     keys -> self-equi-join on (band, key) -> exact shingle-Jaccard verify
-    >= threshold. Returns (doc_a, doc_b, jaccard), doc_a < doc_b."""
+    >= threshold. Returns (doc_a, doc_b, jaccard), doc_a < doc_b.
+
+    A doc with an empty or NULL shingle set (fewer than 3 tokens) emits
+    no band key, so it is in no pair: its Jaccard with another such doc
+    is 0/0, and all of them would share the one all-max signature."""
     # NOTE on materialization: do NOT cache() DataFrames carrying
     # array<long> columns — the columnar in-memory cache serializes nested
     # arrays pathologically (50s for 5k docs vs 2s to recompute). The
@@ -138,7 +144,7 @@ def minhash_lsh_pairs(
     d0 = cache.cut(
         docs.select(F.col(id_col).alias("doc"), shingle_hashes(text_col).alias("sh"))
     )
-    d = d0.withColumn("sig", minhash_signature(F.col("sh")))
+    d = d0.where(F.size("sh") > 0).withColumn("sig", minhash_signature(F.col("sh")))
     d_bk = d.select("doc", band_keys(F.col("sig"), bands, rows).alias("bk"))
     # band join + pair-dedup on bare ids (cheap shuffle), THEN join the
     # shingle arrays back only for surviving candidates — the arrays never

@@ -131,8 +131,7 @@ def bm25_topk(
     # NB: the per-term filter lambdas close over `w` but F.filter
     # BUILDS the expression immediately inside the comprehension, so
     # Python late binding never bites; the outer body keeps arity 1
-    # (a 2-arg lambda would be read as (element, index) by the HOFs —
-    # same gotcha as text.lang_scores)
+    # (a 2-arg lambda would be read as (element, index) by the HOFs)
     def _counts_body(t):
         return F.struct(
             F.size(t).cast("long").alias("dl"),

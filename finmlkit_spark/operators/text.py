@@ -37,7 +37,15 @@ def let_bind(expr: Column, body) -> Column:
     non-trivial expression consumed by 2+ sub-expressions of one
     projection should be bound with this before fan-out. Implemented as
     a one-element-array ``transform`` — the inner references are
-    NamedLambdaVariable reads, not tree copies."""
+    NamedLambdaVariable reads, not tree copies.
+
+    Token signals follow one rule: a projection or filter that computes
+    several of them binds ``tokens(col)`` once and hands the bound array
+    to the ``_*_of(t)`` bodies (``_quality_of``, ``_repetition_of``,
+    ``_lang_guess_of``, ...); each public signal binds its own split.
+    To select several signals as columns, bind one struct of them and
+    read its fields in a second projection — Catalyst does not collapse
+    those field reads back into per-field copies of a lambda producer."""
     return F.get(F.transform(F.array(expr), body), 0)
 
 
@@ -84,23 +92,23 @@ def stopword_ratio(col: str = "text", words: list[str] | None = None) -> Column:
     return let_bind(tokens(col), lambda t: _stopword_ratio_of(t, words or STOPWORDS))
 
 
+def _quality_of(t: Column) -> Column:
+    n = F.size(t).cast("long")
+    sw = _stopword_ratio_of(t, STOPWORDS)
+    return let_bind(
+        _avg_token_len_of(t),
+        lambda atl: F.when((n >= 10) & (n <= 100_000), 0.4).otherwise(0.0)
+        + F.when((atl >= 2.0) & (atl <= 12.0), 0.3).otherwise(0.0)
+        + F.when(sw > 0.0, 0.3).otherwise(0.0),
+    )
+
+
 def quality_score(col: str = "text") -> Column:
     """Composite quality heuristic: length band + mean token length band +
     stopword presence (the classic Gopher-style rule shape). The token
     array and the mean token length are let-bound — each is consumed by
-    multiple band predicates below."""
-    n = token_count(col)
-
-    def body(t: Column) -> Column:
-        sw = _stopword_ratio_of(t, STOPWORDS)
-        return let_bind(
-            _avg_token_len_of(t),
-            lambda atl: F.when((n >= 10) & (n <= 100_000), 0.4).otherwise(0.0)
-            + F.when((atl >= 2.0) & (atl <= 12.0), 0.3).otherwise(0.0)
-            + F.when(sw > 0.0, 0.3).otherwise(0.0),
-        )
-
-    return let_bind(tokens(col), body).alias("quality")
+    multiple band predicates."""
+    return let_bind(tokens(col), _quality_of).alias("quality")
 
 
 def _lang_score_of(t: Column, words: list[str]) -> Column:
@@ -108,18 +116,19 @@ def _lang_score_of(t: Column, words: list[str]) -> Column:
     return F.size(F.filter(t, lambda x: F.array_contains(arr, x))).cast("long")
 
 
-def lang_scores(col: str = "text") -> dict[str, Column]:
-    """Per-language stopword hit counts (n-gram heuristic lang-ID)."""
-
-    # NB: a `lambda t, w=words:` default-arg closure would give the
-    # lambda arity 2, which F.transform interprets as (element, index)
-    def _scorer(words: list[str]):
-        return lambda t: _lang_score_of(t, words)
-
-    return {
-        lang: let_bind(tokens(col), _scorer(words))
-        for lang, words in LANG_WORDS.items()
-    }
+def _lang_guess_of(t: Column) -> Column:
+    entries = [
+        F.struct(_lang_score_of(t, words).alias("s"), F.lit(-i).alias("ni"))
+        for i, words in enumerate(LANG_WORDS.values())
+    ]
+    names = F.array(*[F.lit(lang) for lang in LANG_WORDS])
+    # the argmax is bound: both the guard and the pick read it
+    return let_bind(
+        F.array_max(F.array(*entries)),
+        lambda best: F.when(
+            best["s"] > 0, F.element_at(names, (-best["ni"] + 1).cast("int"))
+        ).otherwise(F.lit("und")),
+    )
 
 
 def lang_guess(col: str = "text") -> Column:
@@ -135,22 +144,7 @@ def lang_guess(col: str = "text") -> Column:
     field-by-field: highest score wins, ties resolve to the SMALLEST
     index via the negated-index second field — identical semantics to
     the strictly-greater-replaces loop."""
-    langs = list(LANG_WORDS)
-
-    def body(t: Column) -> Column:
-        entries = [
-            F.struct(
-                _lang_score_of(t, words).alias("s"), F.lit(-i).alias("ni")
-            )
-            for i, (_, words) in enumerate(LANG_WORDS.items())
-        ]
-        best = F.array_max(F.array(*entries))
-        names = F.array(*[F.lit(lang) for lang in langs])
-        return F.when(
-            best["s"] > 0, F.element_at(names, (-best["ni"] + 1).cast("int"))
-        ).otherwise(F.lit("und"))
-
-    return let_bind(tokens(col), body)
+    return let_bind(tokens(col), _lang_guess_of)
 
 
 def poly_hash(expr: Column | str, mod: int = MOD) -> Column:
@@ -173,16 +167,25 @@ def token_hashes(col: str = "text", mod: int = MOD) -> Column:
     return F.transform(tokens(col), lambda t: poly_hash(t, mod))
 
 
+def _kgrams(arr: Column, k: int, m: Column, join) -> Column:
+    """The k-grams at positions 1..m of a BOUND array: k shifted
+    ``slice``s folded pairwise by ``zip_with(join)`` — linear. The
+    ``transform(sequence, i -> element_at(arr, i + j))`` form re-inlines
+    the array expression per element under Catalyst's lambda evaluation
+    (O(n²·chars) per doc)."""
+    acc = F.slice(arr, 1, m)
+    for j in range(1, k):
+        acc = F.zip_with(acc, F.slice(arr, j + 1, m), join)
+    return acc
+
+
 def shingle_hashes_from_tokens(th: Column, k: int = 3, mod: int = MOD) -> Column:
     """Distinct k-gram shingle hashes combined from a token-hash array:
     h = fold(h·31 + th[i+j]) % mod — one step per token, not per char.
 
     Implementation notes:
 
-    - built from k shifted ``slice``s folded with ``zip_with`` (linear).
-      The naive ``transform(sequence, i -> element_at(th, i+j))`` form
-      re-inlines and re-evaluates the ENTIRE token-hash expression per
-      element under Catalyst's lambda evaluation — O(n²·chars) per doc.
+    - built by :func:`_kgrams` (linear).
     - the input expression is LET-BOUND via a one-element-array
       ``transform`` before the slices read it: ``th`` appears k+2 times
       below (size guard + k slices), and Catalyst duplicates the whole
@@ -194,17 +197,12 @@ def shingle_hashes_from_tokens(th: Column, k: int = 3, mod: int = MOD) -> Column
 
     def _body(thv: Column) -> Column:
         n = F.size(thv)
-        m = n - (k - 1)  # number of shingles
-        acc = F.slice(thv, 1, m)
-        for j in range(1, k):
-            acc = F.zip_with(
-                acc, F.slice(thv, j + 1, m), lambda a, b: (a * 31 + b) % F.lit(mod)
-            )
+        acc = _kgrams(thv, k, n - (k - 1), lambda a, b: (a * 31 + b) % F.lit(mod))
         return F.when(n >= k, F.array_distinct(acc)).otherwise(
             F.array().cast("array<long>")
         )
 
-    return F.get(F.transform(F.array(th), _body), 0)
+    return let_bind(th, _body)
 
 
 def positional_shingle_hashes(th: Column, k: int = 3, mod: int = MOD) -> Column:
@@ -222,15 +220,10 @@ def positional_shingle_hashes(th: Column, k: int = 3, mod: int = MOD) -> Column:
 
     def _body(thv: Column) -> Column:
         n = F.size(thv)
-        m = n - (k - 1)
-        acc = F.slice(thv, 1, m)
-        for j in range(1, k):
-            acc = F.zip_with(
-                acc, F.slice(thv, j + 1, m), lambda a, b: (a * 31 + b) % F.lit(mod)
-            )
+        acc = _kgrams(thv, k, n - (k - 1), lambda a, b: (a * 31 + b) % F.lit(mod))
         return F.when(n >= k, acc).otherwise(F.array().cast("array<long>"))
 
-    return F.get(F.transform(F.array(th), _body), 0)
+    return let_bind(th, _body)
 
 
 def _token_hash_arrays(texts, mod: int = MOD):
@@ -344,12 +337,7 @@ def shingles(col: str = "text", k: int = 3) -> Column:
 
     def body(t: Column) -> Column:
         n = F.size(t)
-        m = n - (k - 1)
-        grams = F.slice(t, 1, m)
-        for j in range(1, k):
-            grams = F.zip_with(
-                grams, F.slice(t, j + 1, m), lambda a, b: F.concat_ws(" ", a, b)
-            )
+        grams = _kgrams(t, k, n - (k - 1), lambda a, b: F.concat_ws(" ", a, b))
         return F.when(n >= k, F.array_distinct(grams)).otherwise(
             F.array().cast("array<string>")
         )
@@ -357,29 +345,20 @@ def shingles(col: str = "text", k: int = 3) -> Column:
     return let_bind(tokens(col), body)
 
 
+def _repetition_of(t: Column, n: int = 3) -> Column:
+    m = F.size(t) - (n - 1)
+    grams = _kgrams(t, n, F.greatest(m, F.lit(1)), lambda a, b: F.concat_ws(" ", a, b))
+    return F.when(
+        m >= 1,
+        1.0 - F.size(F.array_distinct(grams)).cast("double") / m,
+    ).otherwise(F.lit(0.0))
+
+
 def repetition_ratio(col: str = "text", n: int = 3) -> Column:
     """Within-document repetition: 1 − distinct/total token n-grams — the
     Gopher/RefinedWeb duplicated-n-gram quality signal. 0.0 for docs too
     short to form an n-gram. Pure HOF projection (scale-free)."""
-    # slice+zip_with, NOT transform(sequence, element_at): element_at
-    # under Catalyst's lambda re-inlines the whole split per element
-    # (O(n²·chars) per doc — see shingle_hashes_from_tokens). The token
-    # array is let-bound — it feeds the size guard plus n slices
-    # (measured 2× on the document table).
-    def body(t: Column) -> Column:
-        m = F.size(t) - (n - 1)
-        mm = F.greatest(m, F.lit(1))
-        grams = F.slice(t, 1, mm)
-        for j in range(1, n):
-            grams = F.zip_with(
-                grams, F.slice(t, j + 1, mm), lambda a, b: F.concat_ws(" ", a, b)
-            )
-        return F.when(
-            m >= 1,
-            1.0 - F.size(F.array_distinct(grams)).cast("double") / m,
-        ).otherwise(F.lit(0.0))
-
-    return let_bind(tokens(col), body)
+    return let_bind(tokens(col), lambda t: _repetition_of(t, n))
 
 
 # Patterns kept to the regex subset with identical semantics in Java

@@ -59,7 +59,8 @@ def stage_from_config(cfg: dict[str, Any]) -> Stage:
 @register_stage
 class QualityFilter(Stage):
     """Gopher-style gate: quality score, language, repetition ratio
-    (pure projections — scale-free)."""
+    (pure projections — scale-free). The three signals read one bound
+    token array, so each doc is split once."""
 
     kind = "quality_filter"
 
@@ -68,12 +69,16 @@ class QualityFilter(Stage):
 
     def apply(self, docs: DataFrame) -> DataFrame:
         p = self.params
-        cond = (TX.quality_score() >= p["min_quality"]) & (
-            TX.repetition_ratio() < p["max_rep3"]
-        )
-        if p["lang"]:
-            cond = cond & (TX.lang_guess() == p["lang"])
-        return docs.where(cond)
+
+        def keep(t):
+            cond = (TX._quality_of(t) >= p["min_quality"]) & (
+                TX._repetition_of(t, 3) < p["max_rep3"]
+            )
+            if p["lang"]:
+                cond = cond & (TX._lang_guess_of(t) == p["lang"])
+            return cond
+
+        return docs.where(TX.let_bind(TX.tokens(), keep))
 
 
 @register_stage

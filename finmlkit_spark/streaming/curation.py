@@ -24,23 +24,29 @@ from pyspark.sql import functions as F
 from ..operators import text as TX
 
 
-def curation_columns(text_col: str = "text") -> dict[str, Column]:
-    """The shared projection set: identical expressions serve the batch
-    table and the stream (Catalyst doesn't care which)."""
-    return {
-        "content_md5": F.md5(F.col(text_col)),
-        "n_chars": TX.char_count(text_col),
-        "n_tokens": TX.token_count(text_col),
-        "quality": TX.quality_score(text_col),
-        "lang": TX.lang_guess(text_col),
-    }
-
-
 def with_curation_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
-    out = df
-    for name, col in curation_columns(text_col).items():
-        out = out.withColumn(name, col)
-    return out
+    """The shared projection set: identical expressions serve the batch
+    table and the stream (Catalyst doesn't care which). The three token
+    signals are fields of one struct over one bound token array, read
+    apart by a second projection, so each doc is split once."""
+
+    def tok(t: Column) -> Column:
+        return F.struct(
+            F.size(t).cast("long").alias("n_tokens"),
+            TX._quality_of(t).alias("quality"),
+            TX._lang_guess_of(t).alias("lang"),
+        )
+
+    out = df.withColumns(
+        {
+            "content_md5": F.md5(F.col(text_col)),
+            "n_chars": TX.char_count(text_col),
+            "_tok": TX.let_bind(TX.tokens(text_col), tok),
+        }
+    )
+    return out.withColumns(
+        {c: F.col(f"_tok.{c}") for c in ("n_tokens", "quality", "lang")}
+    ).drop("_tok")
 
 
 def streaming_quality_filter(

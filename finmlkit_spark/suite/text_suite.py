@@ -174,13 +174,18 @@ SELECT doc_id, s_en, s_es, s_de, s_fr,
 FROM f4""",
 )
 def lang_id(spark, sf_dir):
-    """N-gram/stopword language-ID heuristic (scores + argmax guess)."""
-    scores = TX.lang_scores()
+    """N-gram/stopword language-ID heuristic (scores + argmax guess):
+    one struct over one bound token array, fields selected apart."""
+
+    def body(t):
+        return F.struct(
+            *[TX._lang_score_of(t, w).alias(f"s_{k}") for k, w in TX.LANG_WORDS.items()],
+            TX._lang_guess_of(t).alias("lang_guess"),
+        )
+
     return _docs(spark, sf_dir).select(
-        "doc_id",
-        *[c.alias(f"s_{k}") for k, c in scores.items()],
-        TX.lang_guess().alias("lang_guess"),
-    )
+        "doc_id", TX.let_bind(TX.tokens(), body).alias("_l")
+    ).select("doc_id", "_l.*")
 
 
 @query(
@@ -1070,7 +1075,8 @@ def embedding_covariance_q(spark, sf_dir):
     +0.0 after rounding: IEEE -0.0 + 0.0 = +0.0, so a covariance that
     rounds to zero canonicalizes to the same sign bit in both engines
     (DuckDB ROUND preserves the sign of tiny negatives; Spark does
-    not — the round-11 driver red on dim pair (5, 9))."""
+    not, so without the +0.0 a tiny negative covariance compares as
+    -0.0 against +0.0)."""
     from ..operators import similarity as SIM
 
     out = SIM.embedding_covariance(_embs(spark, sf_dir))
@@ -1549,8 +1555,8 @@ FROM r WHERE rank <= 5""",
 )
 def ann_ivf_pq_q(spark, sf_dir):
     """IVF×PQ composed ANN (the full FAISS IVFPQ search, Jégou et al.
-    2011 §IV) — round 10 composes the two halves that shipped separately
-    in round 9: the corpus builds its index in ONE map-only pass
+    2011 §IV) — the coarse IVF cells and the PQ codes composed into one
+    index: the corpus builds it in ONE map-only pass
     (coarse cell + m PQ codes together), each query probes its
     nprobe=2 nearest of 8 coarse cells, and ONLY those cells'
     candidates are ADC-scored (a JVM fold over the packed broadcast
@@ -1694,7 +1700,7 @@ def dedup_clusters_q(spark, sf_dir):
     """Connected components over MinHash-LSH near-dup pairs (threshold
     0.5) -> full corpus (doc_id, cluster_id) mapping; singletons map to
     themselves. Oracle = transitive closure via recursive UNION
-    fixpoint. Round 8: below the 2M-edge crossover the components come
+    fixpoint. Below the 2M-edge crossover the components come
     from a driver union-find over the LIMIT-probed edge list
     (bit-identical, pinned); `dedup_clusters_star` below keeps the pure
     distributed O(log n) form as the at-scale measurement."""
@@ -2317,11 +2323,10 @@ def perplexity_buckets_q(spark, sf_dir):
     # the per-doc score frame feeds the cutpoint aggregate AND the
     # bucket assignment — one storage boundary keeps the whole
     # bigram-LM pipeline (pair explode + two count joins) from running
-    # twice. cache.cut, not keep (r14 honest-timing A/B with
-    # materialization inside the timed region: cut 0.87 s, keep 1.15 s,
-    # no boundary 0.86 s — cut kept over none for the 100 TB posture,
-    # where two runs of the data-scale bigram pipeline dwarf one
-    # doc-scale checkpoint write).
+    # twice. cache.cut, not keep: with materialization timed, the cut
+    # costs 0.87 s, keep 1.15 s and no boundary 0.86 s at sf0.1; the
+    # cut stays over none because at 100 TB two runs of the data-scale
+    # bigram pipeline cost far more than one doc-scale checkpoint write.
     lp = cache.cut(
         CP.bigram_logprob(_docs(spark, sf_dir)).select("doc_id", "mean_logprob")
     )
@@ -3153,10 +3158,10 @@ def pmi_top_pairs_q(spark, sf_dir):
         )
     )
     # TakeOrderedAndProject over the unbounded bigram aggregate, then
-    # re-rank the surviving 20 rows — the global row_number() window
-    # this replaces forced an Exchange SinglePartition of EVERY
-    # distinct bigram with c_ab >= 5 (round-12 advisory); the re-rank
-    # window still single-partitions, but over exactly 20 rows.
+    # re-rank the surviving 20 rows: a global row_number() window over
+    # the aggregate would force an Exchange SinglePartition of EVERY
+    # distinct bigram with c_ab >= 5; the re-rank window single-
+    # partitions exactly 20 rows.
     top = sc.orderBy(F.col("ratio").desc(), F.col("l"), F.col("r")).limit(20)
     w = Window.orderBy(F.col("ratio").desc(), F.col("l"), F.col("r"))
     return (

@@ -152,3 +152,27 @@ def test_gopher_repetition_stage(spark):
         [C.stage_from_config(sc) for sc in cfg["stages"]]
     )
     assert kit2.to_config() == cfg
+
+
+def test_docs_without_shingles_are_in_no_near_dup_pair(spark):
+    """A doc with fewer than 3 tokens (or NULL text) has an empty
+    shingle set: it emits no band key, so it is in no pair instead of
+    dividing 0/0 in the Jaccard verify, and a kit with the default
+    quality gate keeps such docs."""
+    from finmlkit_spark.operators import dedup as D
+
+    short = spark.createDataFrame(
+        [(0, "the cat"), (1, "a dog")], "doc_id long, text string"
+    )
+    assert D.minhash_lsh_pairs(short).collect() == []
+    kit = C.CurationKit([C.QualityFilter(), C.ExactDedup(), C.NearDupDedup(0.6)])
+    assert sorted(r["doc_id"] for r in kit.run(short).collect()) == [0, 1]
+
+    mixed = _docs(spark).unionByName(
+        spark.createDataFrame(
+            [(5, "the cat", "web"), (6, "a dog", "web"), (7, None, "web"), (8, "", "web")],
+            "doc_id long, text string, source string",
+        )
+    )
+    pairs = D.minhash_lsh_pairs(mixed, threshold=0.5)
+    assert [(r["doc_a"], r["doc_b"]) for r in pairs.collect()] == [(0, 3)]
