@@ -28,6 +28,13 @@ scale families, both chunk-parallel with no warmup truncation and no
 (``cusum_test_chunked`` looks back a bounded ``w`` rows, so the warmup
 row chunks of ``chunked_window`` alone make it bit-identical.)
 
+Each state machine (EWMST, the CUSUM filter and bars, volume, imbalance
+and run bars) has ONE per-row body in entry-state form, ``*_state(...,
+*entry) -> (values, *exit)``, the bar indexers appending the count of
+bars closed: the batch function runs it from the initial state,
+:class:`_ChunkStitch` from the converged chunk entries, and
+``streaming.bars`` from the state a GroupState carries.
+
 ``ewma_parallel``, ``ewms_parallel`` and ``cusum_filter_chunked`` also
 run their sequential kernel on the driver when the stream is at most
 :data:`SEQ_DRIVER_MAX_ROWS` rows (:func:`_driver_scan`).
@@ -128,9 +135,52 @@ def ewms(x: np.ndarray, span: float) -> np.ndarray:
     return pd.Series(x).ewm(span=span, adjust=True, ignore_na=False).std(bias=False).to_numpy()
 
 
+#: :func:`ewmst_state` entry before any sample: (V, V2, Sy, Syy, prev_t, last_out)
+EWMST_STATE0 = (0.0, 0.0, 0.0, 0.0, -1, float("nan"))
+
+
+def ewmst_state(
+    ts_ns: np.ndarray,
+    y: np.ndarray,
+    halflife_ns: float,
+    V: float, V2: float, Sy: float, Syy: float,
+    prev_t: int, last_out: float,
+) -> tuple[np.ndarray, float, float, float, float, int, float]:
+    """The :func:`ewmst` recurrence from an explicit entry state — the
+    one body behind the batch kernel, the chunk stitch and the stream.
+    ``prev_t`` is the EXACT int64 ns anchor of the last non-NaN sample
+    (< 0 = none yet: ns epochs exceed double's 2^53 integer range, so it
+    must never pass through a float); that sentinel needs every
+    ``ts_ns`` ≥ 0. ``last_out`` is the previous emitted std for the
+    NaN-carry. Returns (sigma, V, V2, Sy, Syy, prev_t, last_out); a
+    chained replay is bit-identical to one run over the whole series."""
+    lam = math.log(2.0) / halflife_ns
+    out = np.full(len(y), np.nan)
+    for i in range(len(y)):
+        if np.isnan(y[i]):
+            if V != 0:
+                out[i] = out[i - 1] if i > 0 else last_out
+            continue
+        d = 1.0 if prev_t < 0 else math.exp(-lam * (ts_ns[i] - prev_t))
+        V = 1.0 + d * V
+        V2 = 1.0 + d * d * V2
+        Sy = y[i] + d * Sy
+        Syy = y[i] * y[i] + d * Syy
+        prev_t = int(ts_ns[i])
+        if V * V > V2:
+            m = Sy / V
+            var = max(Syy / V - m * m, 0.0) * (V * V) / (V * V - V2)
+            out[i] = math.sqrt(var)
+    if len(y):
+        last_out = float(out[-1])
+    return out, V, V2, Sy, Syy, prev_t, last_out
+
+
 def ewmst(ts_ns: np.ndarray, y: np.ndarray, halflife_ns: float) -> np.ndarray:
     """Time-decay EW std on an irregular series: weight of sample i at
     time t is exp(−(t−t_i)·ln2/halflife); bias-corrected like ``ewms``.
+    NaN samples re-emit the previous std. It is :func:`ewmst_state`
+    from :data:`EWMST_STATE0`, so ``ts_ns`` must be ≥ 0.
 
     O(1) state recurrence (V, V2, Sy, Syy decay by d = w^Δt per step) —
     the closed form over absolute time is what the DuckDB oracle uses.
@@ -141,25 +191,7 @@ def ewmst(ts_ns: np.ndarray, y: np.ndarray, halflife_ns: float) -> np.ndarray:
     tests/test_kernel_properties.py). Chosen deliberately so the SQL
     oracle computes the *identical* expression.
     """
-    lam = math.log(2.0) / halflife_ns
-    out = np.full(len(y), np.nan)
-    V = V2 = Sy = Syy = 0.0
-    prev_t = None
-    for i in range(len(y)):
-        if np.isnan(y[i]):
-            out[i] = np.nan if V == 0 else out[i - 1]
-            continue
-        d = 1.0 if prev_t is None else math.exp(-lam * (ts_ns[i] - prev_t))
-        V = 1.0 + d * V
-        V2 = 1.0 + d * d * V2
-        Sy = y[i] + d * Sy
-        Syy = y[i] * y[i] + d * Syy
-        prev_t = ts_ns[i]
-        if V * V > V2:
-            m = Sy / V
-            var = max(Syy / V - m * m, 0.0) * (V * V) / (V * V - V2)
-            out[i] = math.sqrt(var)
-    return out
+    return ewmst_state(ts_ns, y, halflife_ns, *EWMST_STATE0)[0]
 
 
 # --- closed-combine scans ---------------------------------------------------
@@ -773,11 +805,33 @@ def cusum_bar_ids(
     return cusum_bar_state(r, sigma, mult, floor_thr, 0.0, 0.0, floor_thr)[0]
 
 
-def volume_bar_ids_exact(qty: np.ndarray, threshold: float) -> np.ndarray:
-    """Exact reset-to-zero volume bar indexer (reference ``logic.py:87-115``:
-    cumulative volume resets to 0 on close — no carry-over)."""
+def cusum_adaptive_bar_state(
+    ts_ns: np.ndarray,
+    r: np.ndarray,
+    mult: float,
+    floor_thr: float,
+    halflife_ns: float,
+    V: float, V2: float, Sy: float, Syy: float, prev_t: int, last_out: float,
+    sp: float, sn: float, last_sig: float,
+) -> tuple:
+    """The reference's adaptive CUSUM bar indexer as one state kernel:
+    σ = :func:`ewmst_state` of the returns, fed to
+    :func:`cusum_bar_state` (``bar/logic.py:152-221``). The entry state
+    is the EWMST state then the CUSUM state; returns (local_ids, the
+    nine exit fields in the same order, bars_closed). Batch, chunk
+    stitch and stream all run this composition."""
+    sigma, *ew = ewmst_state(ts_ns, r, halflife_ns, V, V2, Sy, Syy, int(prev_t), last_out)
+    ids, *cu, bars = cusum_bar_state(r, sigma, mult, floor_thr, sp, sn, last_sig)
+    return (ids, *ew, *cu, bars)
+
+
+def volume_bar_state(
+    qty: np.ndarray, threshold: float, cum: float
+) -> tuple[np.ndarray, float, int]:
+    """:func:`volume_bar_ids_exact` body with an explicit entry state
+    (the running volume). Local bar ids start at 0; returns
+    (local_ids, cum_exit, bars_closed)."""
     out = np.empty(len(qty), dtype=np.int64)
-    cum = 0.0
     bar = 0
     for i in range(len(qty)):
         cum += qty[i]
@@ -785,7 +839,32 @@ def volume_bar_ids_exact(qty: np.ndarray, threshold: float) -> np.ndarray:
         if cum >= threshold:
             bar += 1
             cum = 0.0
-    return out
+    return out, cum, bar
+
+
+def volume_bar_ids_exact(qty: np.ndarray, threshold: float) -> np.ndarray:
+    """Exact reset-to-zero volume bar indexer (reference ``logic.py:87-115``:
+    cumulative volume resets to 0 on close — no carry-over)."""
+    return volume_bar_state(qty, threshold, 0.0)[0]
+
+
+def imbalance_bar_state(
+    side: np.ndarray, qty: np.ndarray, ewma_span: float, theta: float, expected: float
+) -> tuple[np.ndarray, float, float, int]:
+    """:func:`imbalance_bar_ids` body with an explicit entry state
+    (signed volume θ, expected imbalance E). Local bar ids start at 0;
+    returns (local_ids, theta_exit, expected_exit, bars_closed)."""
+    alpha = 2.0 / (ewma_span + 1.0)
+    out = np.empty(len(side), dtype=np.int64)
+    bar = 0
+    for i in range(len(side)):
+        theta += side[i] * qty[i]
+        out[i] = bar
+        if abs(theta) >= expected:
+            expected = (1 - alpha) * expected + alpha * abs(theta)
+            theta = 0.0
+            bar += 1
+    return out, theta, expected, bar
 
 
 def imbalance_bar_ids(
@@ -796,32 +875,18 @@ def imbalance_bar_ids(
     here beyond-reference): close a bar when |Σ signed volume| exceeds
     the expected imbalance, E updated as an EWMA of realized per-bar
     |imbalance| (adjust=False, span ``ewma_span``)."""
-    alpha = 2.0 / (ewma_span + 1.0)
-    out = np.empty(len(side), dtype=np.int64)
-    theta = 0.0
-    expected = init_expected
-    bar = 0
-    for i in range(len(side)):
-        theta += side[i] * qty[i]
-        out[i] = bar
-        if abs(theta) >= expected:
-            expected = (1 - alpha) * expected + alpha * abs(theta)
-            theta = 0.0
-            bar += 1
-    return out
+    return imbalance_bar_state(side, qty, ewma_span, 0.0, init_expected)[0]
 
 
-def run_bar_ids(
-    side: np.ndarray, qty: np.ndarray, ewma_span: float = 100.0, init_expected: float = 100.0
-) -> np.ndarray:
-    """Volume-run bars (AFML §2.3.2.2; reference ``logic.py:244-261``
-    NotImplementedError — implemented beyond-reference): track the max of
-    one-sided cumulative volumes within the bar; close when it exceeds
-    the expected run, E updated as EWMA of realized runs."""
+def run_bar_state(
+    side: np.ndarray, qty: np.ndarray, ewma_span: float,
+    buy: float, sell: float, expected: float,
+) -> tuple[np.ndarray, float, float, float, int]:
+    """:func:`run_bar_ids` body with an explicit entry state (one-sided
+    volumes, expected run E). Local bar ids start at 0; returns
+    (local_ids, buy_exit, sell_exit, expected_exit, bars_closed)."""
     alpha = 2.0 / (ewma_span + 1.0)
     out = np.empty(len(side), dtype=np.int64)
-    buy = sell = 0.0
-    expected = init_expected
     bar = 0
     for i in range(len(side)):
         if side[i] > 0:
@@ -834,7 +899,17 @@ def run_bar_ids(
             expected = (1 - alpha) * expected + alpha * run
             buy = sell = 0.0
             bar += 1
-    return out
+    return out, buy, sell, expected, bar
+
+
+def run_bar_ids(
+    side: np.ndarray, qty: np.ndarray, ewma_span: float = 100.0, init_expected: float = 100.0
+) -> np.ndarray:
+    """Volume-run bars (AFML §2.3.2.2; reference ``logic.py:244-261``
+    NotImplementedError — implemented beyond-reference): track the max of
+    one-sided cumulative volumes within the bar; close when it exceeds
+    the expected run, E updated as EWMA of realized runs."""
+    return run_bar_state(side, qty, ewma_span, 0.0, 0.0, init_expected)[0]
 
 
 # --- chunk stitch: the CUSUM scale path -------------------------------------
@@ -1074,42 +1149,6 @@ def cusum_bar_ids_chunked(
     return st.output("bar_id", "long")
 
 
-def ewmst_state(
-    ts_ns: np.ndarray,
-    y: np.ndarray,
-    halflife_ns: float,
-    V: float, V2: float, Sy: float, Syy: float,
-    prev_t: int, last_out: float,
-) -> tuple[np.ndarray, float, float, float, float, int, float]:
-    """:func:`ewmst` body with an explicit entry state — the chunk-
-    stitch building block. ``prev_t`` is the EXACT int64 ns anchor of
-    the last non-NaN sample (< 0 = none yet: ns epochs exceed double's
-    2^53 integer range, so it must never pass through a float);
-    ``last_out`` is the previous emitted std for the NaN-carry. Returns
-    (sigma, V, V2, Sy, Syy, prev_t, last_out) — bit-identical to the
-    sequential kernel given the exact entry state (same op order)."""
-    lam = math.log(2.0) / halflife_ns
-    out = np.full(len(y), np.nan)
-    for i in range(len(y)):
-        if np.isnan(y[i]):
-            if V != 0:
-                out[i] = out[i - 1] if i > 0 else last_out
-            continue
-        d = 1.0 if prev_t < 0 else math.exp(-lam * (ts_ns[i] - prev_t))
-        V = 1.0 + d * V
-        V2 = 1.0 + d * d * V2
-        Sy = y[i] + d * Sy
-        Syy = y[i] * y[i] + d * Syy
-        prev_t = int(ts_ns[i])
-        if V * V > V2:
-            m = Sy / V
-            var = max(Syy / V - m * m, 0.0) * (V * V) / (V * V - V2)
-            out[i] = math.sqrt(var)
-    if len(y):
-        last_out = float(out[-1])
-    return out, V, V2, Sy, Syy, prev_t, last_out
-
-
 def cusum_adaptive_bars_chunked(
     df: DataFrame,
     mult: float,
@@ -1122,27 +1161,24 @@ def cusum_adaptive_bars_chunked(
     """The reference's full adaptive CUSUM bar indexer — σ = time-decay
     EW std of returns (halflife), threshold max(mult·σ, floor)
     (``bar/logic.py:152-221``) — for one huge stream, scaled out by
-    carrying the FUSED state (EWMST moments V,V2,Sy,Syy + exact prev_t
-    anchor + NaN-carry std + CUSUM sp,sn,last_sig) through the chunk
-    stitch, so the composition replays the sequential
-    ``ewmst -> cusum_bar_ids`` pipeline bit-for-bit. Convergence note:
+    carrying the FUSED state of :func:`cusum_adaptive_bar_state` (EWMST
+    moments V,V2,Sy,Syy + exact prev_t anchor + NaN-carry std + CUSUM
+    sp,sn,last_sig) through the chunk stitch, so the composition replays
+    the sequential ``ewmst -> cusum_bar_ids`` pipeline bit-for-bit. Convergence note:
     beyond a trigger reset, the EWMST entry terms decay as
     2^(−Δt/halflife) and are ABSORBED exactly by float addition once
     below one ulp of the local sums — pick ``chunk_ns`` ≫ halflife
     (default one week) and exits become entry-independent, so the fixed
     point lands in 2-3 rounds. Returns (order_col, bar_id)."""
-    state0 = (0.0, 0.0, 0.0, 0.0, -1, float("nan"), 0.0, 0.0, float(floor_thr))
+    state0 = (*EWMST_STATE0, 0.0, 0.0, float(floor_thr))
     types = ["double"] * 4 + ["long"] + ["double"] * 4
 
     def kernel(pdf, entry):
-        V, V2, Sy, Syy, prev_t, last_out, sp, sn, last_sig = entry
-        r = pdf[r_col].to_numpy(np.float64)
-        sigma, *ew = ewmst_state(
-            pdf[order_col].to_numpy(np.int64), r, halflife_ns,
-            V, V2, Sy, Syy, int(prev_t), last_out,
+        ids, *exit_, bars = cusum_adaptive_bar_state(
+            pdf[order_col].to_numpy(np.int64), pdf[r_col].to_numpy(np.float64),
+            mult, floor_thr, halflife_ns, *entry,
         )
-        ids, *cu, bars = cusum_bar_state(r, sigma, mult, floor_thr, sp, sn, last_sig)
-        return ids, (*ew, *cu), bars
+        return ids, exit_, bars
 
     st = _ChunkStitch(df, order_col, [r_col], chunk_ns, state0, types, kernel)
     return st.output("bar_id", "long")

@@ -3,13 +3,26 @@
 The reference is batch-only; its "developing"/incremental kernels are
 the state formulations we reuse here:
 
-- time bars = event-time tumbling windows + watermark (late data beyond
-  the watermark is dropped — the streaming analog of the reference's
-  sorted-input assumption);
-- information-driven sampling (CUSUM filter) = arbitrary stateful op via
-  ``applyInPandasWithState`` with the same reset state machine as the
-  batch kernel (``functions.sequential.cusum_filter_np`` semantics),
-  state = (s_pos, s_neg, last_price) per symbol.
+- time bars and sessions = event-time windows + watermark (late data
+  beyond the watermark is dropped — the streaming analog of the
+  reference's sorted-input assumption);
+- the information-driven samplers (volume, imbalance, run and CUSUM
+  bars, the CUSUM filter) = arbitrary stateful ops via
+  ``applyInPandasWithState``.
+
+Invariant: each stateful sampler IS its ``functions.sequential`` state
+kernel run from the carried GroupState — :func:`_state_op` reads the
+state (the batch kernel's initial state on a key's first batch), orders
+the micro-batch once, calls the kernel, offsets its local bar ids by the
+carried bar counter and stores the exit state. No recurrence has a
+second per-row body here, so a stream equals the batch kernel over the
+concatenated micro-batches in event-time order.
+
+Two GroupState ops keep their own function: ``streaming_late_data_metrics``
+reads rows in ARRIVAL order (its subject is disorder, which
+``_ordered_batch`` would erase) and emits one summary row per batch, and
+``streaming_funnel`` is keyed by user and emits its state in update
+mode; neither is a ``sequential.py`` recurrence.
 
 Batch/stream parity is tested by running the same input through both
 paths (tests/test_streaming.py).
@@ -17,12 +30,16 @@ paths (tests/test_streaming.py).
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..functions import sequential as S
 
 
 def _ordered_batch(pdfs) -> pd.DataFrame:
@@ -85,118 +102,93 @@ def streaming_sessions(
     )
 
 
-VB_STATE_SCHEMA = "cum double, bar_id long"
-VB_OUT_SCHEMA = "symbol string, ts long, bar_id long"
+def _state_op(
+    stream: DataFrame,
+    kernel: Callable[[pd.DataFrame, tuple], tuple],
+    state0: tuple,
+    state_schema: str,
+    out: str = "bar_id long",
+) -> DataFrame:
+    """The GroupState adapter of the sequential samplers, per symbol.
 
+    ``kernel(pdf, entry) -> (values, exit, count)`` is the chunk-stitch
+    contract (``sequential._ChunkStitch``): it replays one ordered
+    micro-batch from ``entry`` and returns one value per row, the exit
+    state and the bars it closed. The GroupState is ``state_schema``
+    plus the running ``bar_id`` counter; a key's first batch enters at
+    ``state0``. Emits (symbol, ts, ``out``) per row, with the values
+    offset by the counter."""
+    col = out.split()[0]
 
-def streaming_volume_bars(stream: DataFrame, threshold: float) -> DataFrame:
-    """Stateful exact-reset volume bar assignment per symbol — the
-    streaming form of ``sequential.volume_bar_ids_exact`` (information-
-    driven sampling as an arbitrary stateful op, SURVEY §2.10). State =
-    (running volume, bar counter), carried across micro-batches."""
-
-    def fn(key, pdfs, state: GroupState):
-        cum, bar = state.get if state.exists else (0.0, 0)
-        rows = []
+    def fn(key: tuple, pdfs: Any, state: GroupState):
+        *entry, base = state.get if state.exists else (*state0, 0)
         pdf = _ordered_batch(pdfs)
         if len(pdf):
-            for ts, qty in zip(pdf["ts_ns"], pdf["qty"]):
-                cum += qty
-                rows.append((key[0], int(ts), int(bar)))
-                if cum >= threshold:
-                    bar += 1
-                    cum = 0.0
-        state.update((cum, bar))
-        yield pd.DataFrame(rows, columns=["symbol", "ts", "bar_id"])
+            values, exit_, count = kernel(pdf, tuple(entry))
+            state.update((*exit_, base + count))
+            yield pd.DataFrame({"symbol": key[0], "ts": pdf["ts_ns"].to_numpy(), col: values + base})
 
     return stream.groupBy("symbol").applyInPandasWithState(
         fn,
-        outputStructType=VB_OUT_SCHEMA,
-        stateStructType=VB_STATE_SCHEMA,
+        outputStructType=f"symbol string, ts long, {out}",
+        stateStructType=f"{state_schema}, bar_id long",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
-IB_STATE_SCHEMA = "theta double, expected double, bar_id long"
-IB_OUT_SCHEMA = "symbol string, ts long, bar_id long"
+def _log_returns(price: np.ndarray, last: float) -> np.ndarray:
+    """log(p_t / p_{t−1}) against the carried last price — the batch
+    kernels' returns: NaN at a NaN price (and at the stream's first
+    row), ±inf at a zero one."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.log(price / np.concatenate(([last], price[:-1])))
+
+
+def streaming_volume_bars(stream: DataFrame, threshold: float) -> DataFrame:
+    """Exact-reset volume bar assignment per symbol:
+    ``sequential.volume_bar_state`` from the carried (running volume,
+    bar counter). Output (symbol, ts, bar_id)."""
+
+    def kernel(pdf, entry):
+        ids, cum, bars = S.volume_bar_state(pdf["qty"].to_numpy(np.float64), threshold, *entry)
+        return ids, (cum,), bars
+
+    return _state_op(stream, kernel, (0.0,), "cum double")
 
 
 def streaming_imbalance_bars(
     stream: DataFrame, ewma_span: float = 100.0, init_expected: float = 100.0
 ) -> DataFrame:
-    """Stateful volume-imbalance bar assignment per symbol — the
-    streaming form of ``sequential.imbalance_bar_ids`` (AFML §2.3.2.1,
-    beyond-reference): close a bar when |Σ signed volume| exceeds the
-    EWMA-adaptive expected imbalance. State = (theta, expected, bar),
-    carried across micro-batches; identical recurrence to the batch
-    kernel, so batch/stream parity is exact on ordered input."""
-    alpha = 2.0 / (ewma_span + 1.0)
+    """Volume-imbalance bar assignment per symbol (AFML §2.3.2.1,
+    beyond-reference): ``sequential.imbalance_bar_state`` from the
+    carried (theta, expected, bar counter)."""
 
-    def fn(key, pdfs, state: GroupState):
-        theta, expected, bar = (
-            state.get if state.exists else (0.0, float(init_expected), 0)
+    def kernel(pdf, entry):
+        ids, *exit_, bars = S.imbalance_bar_state(
+            pdf["side"].to_numpy(np.float64), pdf["qty"].to_numpy(np.float64), ewma_span, *entry
         )
-        rows = []
-        pdf = _ordered_batch(pdfs)
-        if len(pdf):
-            for ts, side, qty in zip(pdf["ts_ns"], pdf["side"], pdf["qty"]):
-                theta += side * qty
-                rows.append((key[0], int(ts), int(bar)))
-                if abs(theta) >= expected:
-                    expected = (1 - alpha) * expected + alpha * abs(theta)
-                    theta = 0.0
-                    bar += 1
-        state.update((theta, expected, bar))
-        yield pd.DataFrame(rows, columns=["symbol", "ts", "bar_id"])
+        return ids, exit_, bars
 
-    return stream.groupBy("symbol").applyInPandasWithState(
-        fn,
-        outputStructType=IB_OUT_SCHEMA,
-        stateStructType=IB_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-RB_STATE_SCHEMA = "buy double, sell double, expected double, bar_id long"
+    return _state_op(stream, kernel, (0.0, float(init_expected)), "theta double, expected double")
 
 
 def streaming_run_bars(
     stream: DataFrame, ewma_span: float = 100.0, init_expected: float = 100.0
 ) -> DataFrame:
-    """Stateful volume-run bar assignment per symbol — the streaming form
-    of ``sequential.run_bar_ids`` (AFML §2.3.2.2): close when the max
-    one-sided cumulative volume exceeds the EWMA-adaptive expected run."""
-    alpha = 2.0 / (ewma_span + 1.0)
+    """Volume-run bar assignment per symbol (AFML §2.3.2.2):
+    ``sequential.run_bar_state`` from the carried (buy, sell, expected,
+    bar counter)."""
 
-    def fn(key, pdfs, state: GroupState):
-        buy, sell, expected, bar = (
-            state.get if state.exists else (0.0, 0.0, float(init_expected), 0)
+    def kernel(pdf, entry):
+        ids, *exit_, bars = S.run_bar_state(
+            pdf["side"].to_numpy(np.float64), pdf["qty"].to_numpy(np.float64), ewma_span, *entry
         )
-        rows = []
-        pdf = _ordered_batch(pdfs)
-        if len(pdf):
-            for ts, side, qty in zip(pdf["ts_ns"], pdf["side"], pdf["qty"]):
-                if side > 0:
-                    buy += qty
-                else:
-                    sell += qty
-                rows.append((key[0], int(ts), int(bar)))
-                run = max(buy, sell)
-                if run >= expected:
-                    expected = (1 - alpha) * expected + alpha * run
-                    buy = sell = 0.0
-                    bar += 1
-        state.update((buy, sell, expected, bar))
-        yield pd.DataFrame(rows, columns=["symbol", "ts", "bar_id"])
+        return ids, exit_, bars
 
-    return stream.groupBy("symbol").applyInPandasWithState(
-        fn,
-        outputStructType=IB_OUT_SCHEMA,
-        stateStructType=RB_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _state_op(
+        stream, kernel, (0.0, 0.0, float(init_expected)),
+        "buy double, sell double, expected double",
     )
 
 
@@ -229,7 +221,6 @@ def streaming_late_data_metrics(
     two queries): the bar query keeps its exactly-once append output, and
     this one makes the drop behavior observable. State per symbol is three
     scalars, so the operator adds no meaningful state pressure."""
-    import numpy as np
 
     def fn(key, pdfs, state: GroupState):
         max_ts, n_total, n_late_total = state.get if state.exists else (-(2**62), 0, 0)
@@ -285,54 +276,24 @@ def streaming_late_data_metrics(
     )
 
 
-CUSUM_STATE_SCHEMA = "sp double, sn double, last_price double"
-CUSUM_OUT_SCHEMA = "symbol string, ts long, flag int"
-
-
 def streaming_cusum_filter(stream: DataFrame, threshold: float) -> DataFrame:
-    """Stateful symmetric CUSUM event filter per symbol
-    (``applyInPandasWithState``): exactly the batch reset recurrence,
-    carried across micro-batches in GroupState."""
+    """Symmetric CUSUM event filter per symbol:
+    ``sequential.cusum_filter_state`` over the log returns against the
+    carried last price, from the carried (sp, sn). Emits only the
+    flagged rows, (symbol, ts, flag = 1)."""
 
-    def fn(
-        key: tuple, pdfs: Any, state: GroupState
-    ):
-        sp, sn, last = state.get if state.exists else (0.0, 0.0, float("nan"))
-        rows = []
-        pdf = _ordered_batch(pdfs)
-        if len(pdf):
-            for ts, price in zip(pdf["ts_ns"], pdf["price"]):
-                if last == last and last > 0:  # not NaN
-                    import math
+    def kernel(pdf, entry):
+        last, sp, sn = entry
+        price = pdf["price"].to_numpy(np.float64)
+        r = _log_returns(price, last)
+        flags, sp, sn = S.cusum_filter_state(r, np.full(len(r), float(threshold)), sp, sn)
+        return flags, (price[-1], sp, sn), 0
 
-                    r = math.log(price / last)
-                    sp = max(0.0, sp + r)
-                    sn = min(0.0, sn + r)
-                    # reference order/strictness (filters.py:48-55)
-                    if sn < -threshold:
-                        rows.append((key[0], int(ts), 1))
-                        sn = 0.0
-                    elif sp > threshold:
-                        rows.append((key[0], int(ts), 1))
-                        sp = 0.0
-                last = price
-        state.update((sp, sn, last))
-        yield pd.DataFrame(rows, columns=["symbol", "ts", "flag"])
-
-    return stream.groupBy("symbol").applyInPandasWithState(
-        fn,
-        outputStructType=CUSUM_OUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    out = _state_op(
+        stream, kernel, (float("nan"), 0.0, 0.0),
+        "last_price double, sp double, sn double", out="flag int",
     )
-
-
-CB_STATE_SCHEMA = (
-    "V double, V2 double, Sy double, Syy double, prev_t long, "
-    "last_price double, sp double, sn double, last_sig double, bar_id long"
-)
-CB_OUT_SCHEMA = "symbol string, ts long, bar_id long"
+    return out.where(F.col("flag") == 1)
 
 
 def streaming_cusum_bars(
@@ -341,84 +302,30 @@ def streaming_cusum_bars(
     floor_thr: float = 1e-4,
     halflife_ns: float = 1_800_000_000_000.0,
 ) -> DataFrame:
-    """Stateful CUSUM *bar* assignment with the EWMST-adaptive threshold
-    — the streaming form of ``sequential.cusum_bar_ids`` fed by
-    ``sequential.ewmst`` (reference ``bar/logic.py:152-221``: threshold
-    = max(mult·σ_t, floor), σ_t a time-decay EW std of log returns,
-    NaN σ carries the last valid value; the triggering row closes its
-    own bar). This was the last §2.10 asymmetry: batch covered the
-    adaptive-threshold indexer but streaming only had the constant-
-    threshold CUSUM *filter*.
+    """CUSUM *bar* assignment with the EWMST-adaptive threshold per
+    symbol (reference ``bar/logic.py:152-221``: threshold =
+    max(mult·σ_t, floor), σ_t a time-decay EW std of log returns):
+    ``sequential.cusum_adaptive_bar_state`` over the log returns against
+    the carried last price. The state is scalars only — last price,
+    EWMST moments with the exact int64 ``prev_t`` anchor and NaN-carry
+    std, CUSUM (sp, sn, last σ) and the bar counter — so it stays bounded
+    however long the stream runs. ``ts_ns`` must be ≥ 0 (the EWMST
+    no-sample sentinel)."""
 
-    State per symbol = the full EWMST recurrence (V, V2, Sy, Syy,
-    prev_t — O(1) per row, irregular Δt handled by the closed-form
-    decay) + the CUSUM machine (sp, sn, carried σ, bar counter) + the
-    previous price for the log return — all scalars, so the state row
-    is bounded regardless of stream length. Bit-identical to running
-    the batch kernels over the concatenated micro-batches in arrival
-    order (parity-tested in tests/test_streaming.py)."""
-    import math
+    def kernel(pdf, entry):
+        last, *ent = entry
+        ts = pdf["ts_ns"].to_numpy(np.int64)
+        price = pdf["price"].to_numpy(np.float64)
+        ids, *exit_, bars = S.cusum_adaptive_bar_state(
+            ts, _log_returns(price, last), mult, floor_thr, halflife_ns, *ent
+        )
+        return ids, (price[-1], *exit_), bars
 
-    lam = math.log(2.0) / halflife_ns
-
-    def fn(key: tuple, pdfs: Any, state: GroupState):
-        if state.exists:
-            V, V2, Sy, Syy, prev_t, last_price, sp, sn, last_sig, bar = state.get
-        else:
-            V = V2 = Sy = Syy = 0.0
-            prev_t = -1
-            last_price = float("nan")
-            sp = sn = 0.0
-            last_sig = floor_thr
-            bar = 0
-        rows = []
-        pdf = _ordered_batch(pdfs)
-        if len(pdf):
-            for ts, price in zip(pdf["ts_ns"], pdf["price"]):
-                r = (
-                    math.log(price / last_price)
-                    if last_price == last_price and last_price > 0
-                    else float("nan")
-                )
-                last_price = price
-                # EWMST update (sequential.ewmst): NaN return leaves the
-                # state untouched and re-emits the previous sigma
-                sig_val = float("nan")
-                if r == r:
-                    d = 1.0 if prev_t < 0 else math.exp(-lam * (ts - prev_t))
-                    V = 1.0 + d * V
-                    V2 = 1.0 + d * d * V2
-                    Sy = r + d * Sy
-                    Syy = r * r + d * Syy
-                    prev_t = int(ts)
-                    if V * V > V2:
-                        m = Sy / V
-                        var = max(Syy / V - m * m, 0.0) * (V * V) / (V * V - V2)
-                        sig_val = math.sqrt(var)
-                # CUSUM machine (sequential.cusum_bar_ids): NaN sigma
-                # carries the last valid one
-                if sig_val == sig_val:
-                    sig = sig_val
-                    last_sig = sig_val
-                else:
-                    sig = last_sig
-                thr = max(mult * sig, floor_thr)
-                x = 0.0 if r != r else r
-                sp = max(0.0, sp + x)
-                sn = min(0.0, sn + x)
-                rows.append((key[0], int(ts), int(bar)))
-                if sp >= thr or sn <= -thr:
-                    sp = sn = 0.0
-                    bar += 1
-        state.update((V, V2, Sy, Syy, prev_t, last_price, sp, sn, last_sig, bar))
-        yield pd.DataFrame(rows, columns=["symbol", "ts", "bar_id"])
-
-    return stream.groupBy("symbol").applyInPandasWithState(
-        fn,
-        outputStructType=CB_OUT_SCHEMA,
-        stateStructType=CB_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    state0 = (float("nan"), *S.EWMST_STATE0, 0.0, 0.0, float(floor_thr))
+    return _state_op(
+        stream, kernel, state0,
+        "last_price double, V double, V2 double, Sy double, Syy double, prev_t long, "
+        "last_out double, sp double, sn double, last_sig double",
     )
 
 

@@ -172,8 +172,7 @@ def streaming_quantile_histogram(
 ) -> DataFrame:
     """Running quantile estimates per group over a stream — the
     GroupState twin of ``operators.sketches.quantile_histogram``
-    (round 13: completes the streaming sketch tier's symmetry —
-    distinct=HLL/KMV, quantiles=this).
+    (the streaming sketch tier: distinct = HLL/KMV, quantiles = this).
 
     State per group: the ``bins`` int64 bin counts — fixed size
     forever; counts merge by addition (associative), so micro-batch

@@ -147,3 +147,58 @@ def test_one_arrow_kernel_boundary():
     """Map and column kernels cross Spark through ``functions/arrow.py``;
     the only pandas kernel sites are the allowlisted ones."""
     assert set(_pandas_sites()) == set(PANDAS_SITES)
+
+
+#: the ``applyInPandasWithState`` sites of ``streaming/bars.py``:
+#: (module path, top-level function, kind) -> why the site is there
+STATE_SITES = {
+    ("streaming/bars.py", "_state_op", "applyInPandasWithState"):
+        "the one GroupState adapter: a sequential.py state kernel from the carried state",
+    ("streaming/bars.py", "streaming_late_data_metrics", "applyInPandasWithState"):
+        "reads rows in arrival order and emits one summary row per batch",
+    ("streaming/bars.py", "streaming_funnel", "applyInPandasWithState"):
+        "keyed by user, update mode; not a sequential.py recurrence",
+}
+
+#: the streaming samplers that must be a sequential.py state kernel
+STATE_KERNEL_OPS = (
+    "streaming_volume_bars",
+    "streaming_imbalance_bars",
+    "streaming_run_bars",
+    "streaming_cusum_filter",
+    "streaming_cusum_bars",
+)
+
+
+def _top_level(rel: str) -> dict:
+    """The top-level statements of library module ``rel``, by name."""
+    import ast
+    import pathlib
+
+    path = pathlib.Path(finmlkit_spark.__file__).parent / rel
+    return {getattr(top, "name", "<module>"): top for top in ast.parse(path.read_text()).body}
+
+
+def _loops(node) -> list[str]:
+    import ast
+
+    return [type(n).__name__ for n in ast.walk(node) if isinstance(n, (ast.For, ast.While))]
+
+
+def test_one_state_kernel_per_recurrence():
+    """Each streaming sampler runs its batch state kernel through the
+    one GroupState adapter: no other ``applyInPandasWithState`` site in
+    ``streaming/bars.py`` and no per-row loop in the samplers; the batch
+    ``ewmst`` is ``ewmst_state`` with no loop of its own."""
+    import ast
+
+    bars = _top_level("streaming/bars.py")
+    sites = {
+        ("streaming/bars.py", name, node.attr)
+        for name, top in bars.items()
+        for node in ast.walk(top)
+        if isinstance(node, ast.Attribute) and node.attr == "applyInPandasWithState"
+    }
+    assert sites == set(STATE_SITES)
+    assert {op: _loops(bars[op]) for op in STATE_KERNEL_OPS} == {op: [] for op in STATE_KERNEL_OPS}
+    assert _loops(_top_level("functions/sequential.py")["ewmst"]) == []

@@ -34,6 +34,20 @@ def stream_dir(tmp_path_factory):
     return str(d)
 
 
+def _batch_cusum_flags(pdf, threshold):
+    """Sorted ``ts`` of the rows ``cusum_filter_np`` flags over the
+    log returns of ``pdf`` (columns ts, value) in its row order."""
+    import numpy as np
+
+    from finmlkit_spark.functions.sequential import cusum_filter_np
+
+    prices = pdf["value"].to_numpy(np.float64)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        r = np.concatenate([[np.nan], np.log(prices[1:] / prices[:-1])])
+    flags = cusum_filter_np(r, threshold).astype(bool)
+    return sorted(pdf["ts"].to_numpy()[flags].tolist())
+
+
 def test_streaming_time_bars_parity(spark, stream_dir):
     batch = spark.read.parquet(stream_dir)
     schema = batch.schema
@@ -79,10 +93,6 @@ def test_streaming_time_bars_parity(spark, stream_dir):
 
 
 def test_streaming_cusum_parity(spark, stream_dir):
-    import numpy as np
-
-    from finmlkit_spark.functions.sequential import cusum_filter_np
-
     batch = spark.read.parquet(stream_dir)
     schema = batch.schema
     stream = (
@@ -103,13 +113,10 @@ def test_streaming_cusum_parity(spark, stream_dir):
         .start()
     )
     q.awaitTermination(120)
-    got = spark.sql("select * from cusum_stream").count()
+    got = [r["ts"] for r in spark.sql("select ts from cusum_stream").collect()]
 
     pdf = batch.orderBy("ts", "event_id").toPandas()
-    prices = pdf["value"].to_numpy()
-    r = np.concatenate([[np.nan], np.log(prices[1:] / prices[:-1])])
-    expected = int(cusum_filter_np(r, 1.0).sum())
-    assert got == expected and got > 0
+    assert sorted(got) == _batch_cusum_flags(pdf, 1.0) and got
 
 
 def test_streaming_volume_bars_parity(spark, stream_dir):
@@ -523,9 +530,6 @@ def test_streaming_imbalance_and_run_bars_multibatch(spark, stream_dir, tmp_path
 
 def test_streaming_cusum_filter_multibatch(spark, stream_dir, tmp_path):
     """CUSUM filter state (sp, sn, last price) across micro-batches."""
-    import numpy as np
-
-    from finmlkit_spark.functions.sequential import cusum_filter_np
     from finmlkit_spark.streaming.bars import streaming_cusum_filter
 
     batch = spark.read.parquet(stream_dir)
@@ -546,12 +550,45 @@ def test_streaming_cusum_filter_multibatch(spark, stream_dir, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    got = spark.sql("select * from cf_mb").count()
+    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
+    got = [r["ts"] for r in spark.sql("select ts from cf_mb").collect()]
 
-    prices = pdf["value"].to_numpy()
-    r = np.concatenate([[np.nan], np.log(prices[1:] / prices[:-1])])
-    expected = int(cusum_filter_np(r, 1.0).sum())
-    assert got == expected and got > 0
+    assert n_batches >= 4
+    assert sorted(got) == _batch_cusum_flags(pdf, 1.0) and got
+
+
+def test_streaming_cusum_filter_nan_and_zero_price_match_batch(spark, tmp_path):
+    """A NaN price makes two NaN returns and a zero price two infinite
+    ones; the stream must skip and flag exactly the rows the batch
+    kernel does, across a micro-batch boundary."""
+    import pandas as pd
+
+    from finmlkit_spark.streaming.bars import streaming_cusum_filter
+
+    price = [100.0, 100.6, 101.2, float("nan"), 101.5, 101.9, 102.3,
+             102.0, 0.0, 101.0, 101.4, 102.2, 102.9]
+    pdf = pd.DataFrame({"ts": range(1, len(price) + 1), "value": price})
+    d = _chunked_dir(pdf, tmp_path, "cf_nan_zero", n_files=2)
+    stream = (
+        spark.readStream.schema("ts long, value double")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(d)
+        .selectExpr("'EVT' as symbol", "ts as ts_ns", "value as price")
+    )
+    q = (
+        streaming_cusum_filter(stream, threshold=0.015)
+        .writeStream.format("memory")
+        .queryName("cf_nan_zero")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = [r["ts"] for r in spark.sql("select ts from cf_nan_zero").collect()]
+
+    expected = _batch_cusum_flags(pdf, 0.015)
+    assert {6, 9, 10} <= set(expected)
+    assert sorted(got) == expected
 
 
 def test_streaming_state_ops_survive_arrow_chunking(spark, stream_dir, tmp_path):
@@ -603,53 +640,6 @@ def test_streaming_state_ops_survive_arrow_chunking(spark, stream_dir, tmp_path)
     exp = dict(zip(pdf["ts"].to_numpy().tolist(), expected.tolist()))
     assert len(got) == len(exp)
     assert sum(1 for k in exp if got.get(k) != exp[k]) == 0
-
-
-def test_tws_volume_bars_probe_gated(spark, stream_dir):
-    """Spark-4 transformWithStateInPandas port of the exact-reset volume
-    bars (round-8 verdict item 7): without google.protobuf the probe is
-    False and the operator raises the documented RuntimeError; with it
-    (self-skip until the container gains it) the TWS form must match
-    the batch kernel exactly, like the GroupState parity test."""
-    import pytest
-
-    from finmlkit_spark.streaming import tws
-
-    batch = spark.read.parquet(stream_dir)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .parquet(stream_dir)
-        .selectExpr(
-            "'EVT' as symbol",
-            "ts as ts_ns",
-            "cast(1 + (event_id % 5) as double) as qty",
-        )
-    )
-    if not tws.tws_available():
-        with pytest.raises(RuntimeError, match="protobuf"):
-            tws.streaming_volume_bars_tws(stream, threshold=50.0)
-        pytest.skip("google.protobuf not in this container — TWS seam "
-                    "verified (RuntimeError); parity pending protobuf")
-
-    import numpy as np
-
-    from finmlkit_spark.functions.sequential import volume_bar_ids_exact
-
-    out = tws.streaming_volume_bars_tws(stream, threshold=50.0)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("vb_tws")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["ts"]: r["bar_id"] for r in spark.sql("select * from vb_tws").collect()}
-    pdf = batch.orderBy("ts", "event_id").toPandas()
-    qty = (1 + pdf["event_id"].to_numpy() % 5).astype(float)
-    exp = dict(zip(pdf["ts"].to_numpy().tolist(),
-                   volume_bar_ids_exact(qty, 50.0).tolist()))
-    assert got == exp
 
 
 def test_streaming_funnel_parity(spark, stream_dir, tmp_path):
@@ -849,8 +839,7 @@ def test_streaming_kmv_distinct_parity(spark, stream_dir, tmp_path):
 
 
 def test_streaming_quantile_histogram_parity(spark, stream_dir, tmp_path):
-    """Round 13 (completes the streaming sketch tier's symmetry):
-    multi-batch streaming quantile histogram == the batch fixed-range
+    """Multi-batch streaming quantile histogram == the batch fixed-range
     sketch over the same rows. Bin counts only grow (addition is
     associative), so each group's final emission (max n) must carry
     BIT-IDENTICAL interpolated quantiles to
@@ -939,8 +928,7 @@ def test_streaming_quantile_histogram_clamps_out_of_range(spark, tmp_path):
 
 
 def test_streaming_cm_table_parity(spark, stream_dir, tmp_path):
-    """Round 13 (completes the streaming sketch tier: frequency):
-    multi-batch streaming count-min == the batch cm_table per group over
+    """Multi-batch streaming count-min == the batch cm_table per group over
     the same rows. Counters are exact integer sums (associative), so
     the final emission per group (max total mass) must equal the batch
     table cell-for-cell — including that batch hashing per DISTINCT key
