@@ -3,12 +3,14 @@ become NumPy arrays and NumPy results become Spark batches.
 
 Map kernels run through :func:`map_batches` (one output per input
 batch) or :func:`map_partitions` (a generator over a partition's
-batches, for per-partition folds); column kernels run through
-:func:`column`. The boundary owns four jobs:
+batches, for per-partition folds); grouped kernels run through
+:func:`groups` (one output per group, its rows sorted); column kernels
+run through :func:`column`. The boundary owns four jobs:
 
 - **Batching and empty input.** A zero-row batch never reaches a
   kernel, and a partition (or column batch) without rows produces no
-  kernel call; an empty input gives zero rows in the declared schema.
+  kernel call, nor does a group (a group always has rows); an empty
+  input gives zero rows in the declared schema.
 - **The NumPy/Arrow format.** A kernel receives ``{name: array}``:
   primitive, string and binary columns as NumPy arrays (the pandas
   conversions: nullable ints and NULL floats as float64 NaN, strings and
@@ -20,9 +22,10 @@ batches, for per-partition folds); column kernels run through
 - **Output schema.** Outputs are built in the declared schema's column
   order and types: a DDL string, a ``StructType`` or an ordered
   ``{name: type}`` mapping (a type is a DDL string or a ``DataType``).
-  A kernel returns ``{name: column}`` or a list of row tuples in schema
-  order; a column is a NumPy array (masked or not), a sequence or, for a
-  list column, an ``(n, d)`` matrix.
+  A kernel returns ``{name: column}`` (names outside the schema are
+  ignored) or a list of row tuples in schema order; a column is a NumPy
+  array (masked or not), a sequence or, for a list column, an
+  ``(n, d)`` matrix.
 """
 
 from __future__ import annotations
@@ -94,6 +97,21 @@ def vectors(arr) -> np.ndarray:
     return values.astype(np.float64, copy=False).reshape(len(widths), d)
 
 
+def _columns(batch: pa.RecordBatch) -> dict:
+    """One input batch as the kernel sees it: ``{name: array}``."""
+    return {n: _numpy(c) for n, c in zip(batch.schema.names, batch.columns)}
+
+
+def _batch(out, schema: pa.Schema) -> pa.RecordBatch:
+    """One kernel output (``{name: column}`` or row tuples in schema
+    order) as a batch of ``schema``."""
+    if isinstance(out, list):
+        out = dict(zip(schema.names, list(zip(*out)) or [()] * len(schema)))
+    return pa.RecordBatch.from_arrays(
+        [_arrow(out[f.name], f.type) for f in schema], schema=schema
+    )
+
+
 def map_partitions(df: DataFrame, kernel, schema) -> DataFrame:
     """``kernel(batches)`` is a generator over one partition's non-empty
     batches (each ``{name: array}``) that yields output mappings; it is
@@ -102,20 +120,12 @@ def map_partitions(df: DataFrame, kernel, schema) -> DataFrame:
     out_schema = to_arrow_schema(st)
 
     def run(batches):
-        cols = (
-            {n: _numpy(c) for n, c in zip(b.schema.names, b.columns)}
-            for b in batches
-            if b.num_rows
-        )
+        cols = (_columns(b) for b in batches if b.num_rows)
         first = next(cols, None)
         if first is None:
             return
         for out in kernel(itertools.chain([first], cols)):
-            if isinstance(out, list):  # row tuples in schema order
-                out = dict(zip(out_schema.names, list(zip(*out)) or [()] * len(st)))
-            yield pa.RecordBatch.from_arrays(
-                [_arrow(out[f.name], f.type) for f in out_schema], schema=out_schema
-            )
+            yield _batch(out, out_schema)
 
     return df.mapInArrow(run, st)
 
@@ -124,6 +134,25 @@ def map_batches(df: DataFrame, kernel, schema) -> DataFrame:
     """``kernel(cols)`` once per non-empty batch, returning that batch's
     output (``{name: column}`` or row tuples)."""
     return map_partitions(df, lambda batches: map(kernel, batches), schema)
+
+
+def groups(df: DataFrame, by, kernel, schema, order=()) -> DataFrame:
+    """``kernel(cols)`` once per group of ``df`` by the column(s) ``by``
+    (``None``: all rows are one group), its rows sorted by the columns
+    ``order`` (a stable sort: ties keep their input order), returning
+    that group's output (``{name: column}`` or row tuples)."""
+    st = _spark_type(schema)
+    out_schema = to_arrow_schema(st)
+    keys = [(c, "ascending") for c in order]
+
+    def run(table):
+        if keys:
+            table = table.sort_by(keys)
+        (batch,) = table.combine_chunks().to_batches()
+        return pa.Table.from_batches([_batch(kernel(_columns(batch)), out_schema)])
+
+    by = [F.lit(True)] if by is None else [by] if isinstance(by, str) else list(by)
+    return df.groupBy(*by).applyInArrow(run, st)
 
 
 def column(kernel, return_type):

@@ -109,10 +109,11 @@ def with_row_chunks(
     chunk that contains ONLY ``_warm`` rows (suppressing it would need
     the global row count, i.e. a scalar-agg SinglePartition exchange —
     deliberately not paid; ``finish()`` drops the rows anyway). Every
-    grouped consumer (``applyInPandas`` over ``_chunk``) MUST therefore
-    tolerate a group whose rows are all warmup: emit rows normally and
-    let the ``_warm`` filter discard them (the seeded-carry scans in
-    ``functions.sequential`` do this), or return an empty frame. Guarded
+    grouped consumer over ``_chunk`` (``arrow.groups``; ``applyInPandas``
+    for the rolling median) MUST therefore tolerate a group whose rows
+    are all warmup: emit rows normally and let the ``_warm`` filter
+    discard them (the seeded-carry scans in ``functions.sequential`` do
+    this), or return no rows. Guarded
     by ``tests/test_chunked_window.py::test_all_warm_phantom_chunk``.
 
     Warmup rows are produced by an ``explode`` of a 1- or 2-element

@@ -1,11 +1,13 @@
 """Sequential-recurrence kernels (SURVEY.md §2.5 "seq" rows + §2.3
-stateful bar indexers) — the grouped Arrow pandas-UDF tier.
+stateful bar indexers) — the grouped-kernel tier.
 
 These operators are true recurrences (EWMA family, Wilder smoothing,
 CUSUM state machines, reset-semantics bar indexers) with no bounded
-window form. Execution model: ``applyInPandas`` over a group key —
-sequential *within* a (symbol) group, parallel *across* groups, exactly
-mirroring the reference's per-array Numba kernels run per instrument.
+window form. Execution model: a NumPy kernel per group through the
+Arrow kernel boundary (:func:`arrow.groups`, rows sorted within the
+group) — sequential *within* a (symbol) group, parallel *across*
+groups, exactly mirroring the reference's per-array Numba kernels run
+per instrument.
 
 Scale posture (100 TB): state per group is O(1)-O(window), so the only
 constraint is one task per symbol. A single huge symbol takes one of two
@@ -57,33 +59,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import arrow
 from .chunked_window import CHUNK, GLOBAL_RN, WARM, with_row_chunks
-
-
-def apply_sequential(
-    df: DataFrame,
-    kernel: Callable[[pd.DataFrame], pd.DataFrame],
-    out_schema: str,
-    by: str | None = None,
-    order: tuple[str, ...] = ("ts_ns", "trade_id"),
-) -> DataFrame:
-    """Run an ordered per-group kernel via applyInPandas (Arrow-batched).
-
-    ``kernel`` receives the group's rows sorted by ``order`` and returns
-    the output frame matching ``out_schema``.
-    """
-    drop_key = False
-    if by is None:
-        df = df.withColumn("_g", F.lit(1))
-        by, drop_key = "_g", True
-
-    cols = list(order)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return kernel(pdf.sort_values(cols).reset_index(drop=True))
-
-    out = df.groupBy(by).applyInPandas(fn, schema=out_schema)
-    return out.drop("_g") if drop_key else out
 
 
 #: Largest single stream (rows) that :func:`ewma_parallel`,
@@ -223,7 +200,7 @@ def _closed_scan(
     order_col: str,
     chunk_rows: int,
     warmup: int,
-    local: Callable[[pd.DataFrame, np.ndarray, int], dict[str, np.ndarray]],
+    local: Callable[[dict[str, np.ndarray], np.ndarray, int], dict[str, np.ndarray]],
     decay: dict[str, float],
     final: Callable[[dict[str, Column]], Column],
     out: str,
@@ -236,9 +213,9 @@ def _closed_scan(
     M_t = f_t + q·M_{t−1} with its own q. The rows of ``df`` are
     chunked by exact global row number
     (:func:`chunked_window.with_row_chunks`, the previous chunk's last
-    ``warmup`` rows in front, flagged ``_warm``). ``local(pdf, real,
-    ck)`` gets one chunk in global row order and returns each moment
-    over the chunk's own rows (``real``), summed from a zero state —
+    ``warmup`` rows in front, flagged ``_warm``). ``local(cols, real,
+    ck)`` gets one chunk's columns in global row order and returns each
+    moment over the chunk's own rows (``real``), summed from a zero state —
     or, for a seeded recurrence, chunk 0's true seeded values. The carry
     into chunk c decays every earlier chunk's end value across the
     full chunks between them,
@@ -253,20 +230,18 @@ def _closed_scan(
     """
     d = with_row_chunks(df, order_col, warmup=warmup, chunk_rows=chunk_rows)
 
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(GLOBAL_RN).reset_index(drop=True)
-        real = ~pdf[WARM].to_numpy(dtype=bool)
-        ck = int(pdf[CHUNK].iloc[0])
-        mom = local(pdf, real, ck)
-        return pd.DataFrame(
-            {
-                order_col: pdf[order_col].to_numpy()[real],
-                GLOBAL_RN: pdf[GLOBAL_RN].to_numpy()[real],
-                "_ck": ck,
-                "_pos": np.arange(1, int(real.sum()) + 1),
-                **{f"_l_{k}": mom[k] for k in decay},
-            }
-        )
+    def scan(cols):
+        real = ~cols[WARM]
+        ck = int(cols[CHUNK][0])
+        pos = np.arange(1, int(real.sum()) + 1)
+        mom = local(cols, real, ck)
+        return {
+            order_col: cols[order_col][real],
+            GLOBAL_RN: cols[GLOBAL_RN][real],
+            "_ck": np.full(len(pos), ck),
+            "_pos": pos,
+            **{f"_l_{k}": mom[k] for k in decay},
+        }
 
     sch = ", ".join(
         [
@@ -277,7 +252,7 @@ def _closed_scan(
             *(f"`_l_{k}` double" for k in decay),
         ]
     )
-    scanned = d.groupBy(CHUNK).applyInPandas(scan, schema=sch)
+    scanned = arrow.groups(d, CHUNK, scan, sch, order=(GLOBAL_RN,))
     summary = scanned.groupBy("_ck").agg(
         *(F.max_by(f"_l_{k}", "_pos").alias(f"_e_{k}") for k in decay)
     )
@@ -337,8 +312,8 @@ def ewma_parallel(
         return local
     q = 1.0 - 2.0 / (span + 1.0)
 
-    def moments(pdf, real, ck):
-        x = pdf[col].to_numpy(dtype=np.float64)
+    def moments(cols, real, ck):
+        x = cols[col].astype(np.float64)
         d = _decayed_count(~np.isnan(x), q)
         mean = pd.Series(x).ewm(span=span, adjust=True, ignore_na=False).mean().to_numpy()
         return {"n": np.where(d > 0, mean * d, 0.0), "d": d}
@@ -374,8 +349,8 @@ def ewms_parallel(
         return local
     q = 1.0 - 2.0 / (span + 1.0)
 
-    def moments(pdf, real, ck):
-        x = pdf[col].to_numpy(dtype=np.float64)
+    def moments(cols, real, ck):
+        x = cols[col].astype(np.float64)
         valid = ~np.isnan(x)
         v = _decayed_count(valid, q)
         sy = pd.Series(x).ewm(span=span, adjust=True, ignore_na=False).mean().to_numpy() * v
@@ -435,10 +410,9 @@ def ewmst_parallel(
     lam = math.log(2.0) / float(halflife_ns)
     d = with_row_chunks(df, ts_col, warmup=0, chunk_rows=chunk_rows)
 
-    def local_scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        t = pdf[ts_col].to_numpy(dtype=np.int64)
-        y = pdf[y_col].to_numpy(dtype=np.float64)
+    def local_scan(cols):
+        t = cols[ts_col].astype(np.int64)
+        y = cols[y_col].astype(np.float64)
         n = len(y)
         Vv = np.full(n, np.nan)
         V2v = np.full(n, np.nan)
@@ -456,17 +430,15 @@ def ewmst_parallel(
             Syy = y[i] * y[i] + dec * Syy
             prev_t = t[i]
             Vv[i], V2v[i], Syv[i], Syyv[i] = V, V2, Sy, Syy
-        return pd.DataFrame(
-            {
-                ts_col: pdf[ts_col],
-                "_ck": pdf[CHUNK],
-                "_y": y,
-                "_v": Vv,
-                "_v2": V2v,
-                "_sy": Syv,
-                "_syy": Syyv,
-            }
-        )
+        return {
+            ts_col: cols[ts_col],
+            "_ck": cols[CHUNK],
+            "_y": y,
+            "_v": Vv,
+            "_v2": V2v,
+            "_sy": Syv,
+            "_syy": Syyv,
+        }
 
     sch = ", ".join(
         [
@@ -479,7 +451,7 @@ def ewmst_parallel(
             "`_syy` double",
         ]
     )
-    scanned = d.groupBy(CHUNK).applyInPandas(local_scan, schema=sch)
+    scanned = arrow.groups(d, CHUNK, local_scan, sch, order=(ts_col,))
 
     nn = scanned.where(~F.isnan("_v") & F.col("_v").isNotNull())
     summary = nn.groupBy("_ck").agg(
@@ -568,8 +540,8 @@ def rsi_parallel(
         raise ValueError(f"chunk_rows ({chunk_rows}) must exceed n+1 ({n + 1})")
     q = (n - 1.0) / n
 
-    def moments(pdf, real, ck):
-        diff = np.diff(pdf[close_col].to_numpy(dtype=np.float64), prepend=np.nan)
+    def moments(cols, real, ck):
+        diff = np.diff(cols[close_col].astype(np.float64), prepend=np.nan)
         g = np.where(diff > 0, diff, 0.0)[real]
         l = np.where(diff < 0, -diff, 0.0)[real]
         m = len(g)
@@ -625,11 +597,11 @@ def atr_ema_parallel(
         raise ValueError(f"chunk_rows ({chunk_rows}) must exceed n+1 ({n + 1})")
     q = (n - 1.0) / n
 
-    def moments(pdf, real, ck):
+    def moments(cols, real, ck):
         tr = true_range_np(
-            pdf[high_col].to_numpy(dtype=np.float64),
-            pdf[low_col].to_numpy(dtype=np.float64),
-            pdf[close_col].to_numpy(dtype=np.float64),
+            cols[high_col].astype(np.float64),
+            cols[low_col].astype(np.float64),
+            cols[close_col].astype(np.float64),
         )[real]
         m = len(tr)
         if ck == 0:
@@ -947,9 +919,9 @@ class _ChunkStitch:
     """Entry-state fixed-point engine over time chunks of one stream.
 
     The projection ``(order_col, *cols)`` gets ``_ck`` (the
-    ``chunk_ns`` time-chunk id) and is persisted: every round and the
-    final pass read it. ``kernel(pdf, entry) -> (values, exit, count)``
-    replays the sequential state machine over one chunk (rows in
+    ``chunk_ns`` time-chunk id) and is persisted: every pass reads it.
+    ``kernel(cols, entry) -> (values, exit, count)`` replays the
+    sequential state machine over one chunk's columns (rows in
     ``order_col`` order) from an explicit entry state: the chunk's
     output values, its exit state, and how many running ids it used
     (0 for a kernel whose values are not ids). ``state_types`` gives
@@ -957,11 +929,11 @@ class _ChunkStitch:
     EWMST ``prev_t`` anchor, whose ns magnitude exceeds double's 2^53
     integer range) MUST be ``long``.
 
-    Round 1 runs EVERY chunk from the seed state in one job (this also
-    discovers the chunk list — no separate distinct() pass); each later
-    round chains the k exit states on the driver and re-runs only
+    The first pass runs EVERY chunk from the seed state in one job (this
+    also discovers the chunk list — no separate distinct() pass); each
+    later pass chains the k exit states on the driver and re-runs only
     chunks whose entry changed. Chunk c's entry is exact once chunks
-    1..c-1 are, so <= k rounds always converge; in practice 2-3 because
+    1..c-1 are, so <= k passes always converge; in practice 2-3 because
     a reset (or, for decayed moments, float absorption of the entry
     term) makes a chunk's exit entry-independent. :meth:`output` then
     replays each chunk once from its converged entry and offsets its
@@ -985,18 +957,13 @@ class _ChunkStitch:
             f"_e{i} {t}" for i, t in enumerate(state_types)) + ", _base long"
         self.out_sch = "_ck long, " + ", ".join(
             f"_x{i} {t}" for i, t in enumerate(state_types)) + ", _nb long"
-        order = order_col
 
-        def enter(pdf: pd.DataFrame) -> tuple[pd.DataFrame, tuple]:
-            pdf = pdf.sort_values(order).reset_index(drop=True)
-            return pdf, tuple(pdf[f"_e{i}"].iloc[0].item() for i in range(n))
+        def enter(cols: dict) -> tuple:
+            return tuple(cols[f"_e{i}"][0].item() for i in range(n))
 
-        def k(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf, entry = enter(pdf)
-            _, ex, nb = kernel(pdf, entry)
-            row = {"_ck": [int(pdf["_ck"].iloc[0])], "_nb": [int(nb)]}
-            row.update({f"_x{i}": [ex[i]] for i in range(n)})
-            return pd.DataFrame(row)
+        def k(cols: dict) -> list[tuple]:
+            _, ex, nb = kernel(cols, enter(cols))
+            return [(int(cols["_ck"][0]), *ex, int(nb))]
 
         self._enter, self._k = enter, k
 
@@ -1014,7 +981,7 @@ class _ChunkStitch:
         return self.d.join(F.broadcast(ent), "_ck")
 
     def _run(self, stale, entries) -> dict:
-        if stale is None:  # round 1: every chunk from the seed state
+        if stale is None:  # the first pass: every chunk from the seed state
             lits = {
                 f"_e{i}": F.lit(x).cast(t)
                 for i, (x, t) in enumerate(zip(self._coerce(self.state0),
@@ -1023,7 +990,7 @@ class _ChunkStitch:
             dd = self.d.withColumns(lits)
         else:
             dd = self._with_entries([(ck, entries[ck], 0) for ck in stale])
-        rows = dd.groupBy("_ck").applyInPandas(self._k, self.out_sch).collect()
+        rows = arrow.groups(dd, "_ck", self._k, self.out_sch, (self.order_col,)).collect()
         n = len(self.state0)
         return {r["_ck"]: (tuple(r[f"_x{i}"] for i in range(n)), r["_nb"])
                 for r in rows}
@@ -1045,8 +1012,8 @@ class _ChunkStitch:
                 if not _state_eq(ent_used, e):
                     stale.append(ck)
                 # downstream chaining guess: the last computed exit —
-                # exact when this chunk's entry was, else refined next
-                # round
+                # exact when this chunk's entry was, else refined by the
+                # next pass
                 e = ex
             if not stale:
                 base, out = 0, []
@@ -1069,12 +1036,11 @@ class _ChunkStitch:
             return self.spark.createDataFrame([], sch)
         order, enter, kernel = self.order_col, self._enter, self.kernel
 
-        def k_final(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf, entry = enter(pdf)
-            values, _, _ = kernel(pdf, entry)
-            return pd.DataFrame({order: pdf[order], out: values + int(pdf["_base"].iloc[0])})
+        def k_final(cols: dict) -> dict:
+            values, _, _ = kernel(cols, enter(cols))
+            return {order: cols[order], out: values + int(cols["_base"][0])}
 
-        return self._with_entries(solved).groupBy("_ck").applyInPandas(k_final, sch)
+        return arrow.groups(self._with_entries(solved), "_ck", k_final, sch, (order,))
 
 
 def cusum_filter_chunked(
@@ -1108,9 +1074,9 @@ def cusum_filter_chunked(
     if local is not None:
         return local
 
-    def kernel(pdf, entry):
-        r = pdf[r_col].to_numpy(np.float64)
-        h = pdf[thr_col].to_numpy(np.float64) if thr_col else np.full(len(r), float(threshold))
+    def kernel(cols, entry):
+        r = cols[r_col].astype(np.float64)
+        h = cols[thr_col].astype(np.float64) if thr_col else np.full(len(r), float(threshold))
         flags, sp, sn = cusum_filter_state(r, h, *entry)
         return flags, (sp, sn), 0
 
@@ -1136,10 +1102,10 @@ def cusum_bar_ids_chunked(
     in the same stitch, keeping the whole composition bit-exact.
     Returns (order_col, bar_id)."""
 
-    def kernel(pdf, entry):
+    def kernel(cols, entry):
         ids, *exit_, bars = cusum_bar_state(
-            pdf[r_col].to_numpy(np.float64),
-            pdf[sigma_col].to_numpy(np.float64),
+            cols[r_col].astype(np.float64),
+            cols[sigma_col].astype(np.float64),
             mult, floor_thr, *entry,
         )
         return ids, exit_, bars
@@ -1173,9 +1139,9 @@ def cusum_adaptive_bars_chunked(
     state0 = (*EWMST_STATE0, 0.0, 0.0, float(floor_thr))
     types = ["double"] * 4 + ["long"] + ["double"] * 4
 
-    def kernel(pdf, entry):
+    def kernel(cols, entry):
         ids, *exit_, bars = cusum_adaptive_bar_state(
-            pdf[order_col].to_numpy(np.int64), pdf[r_col].to_numpy(np.float64),
+            cols[order_col].astype(np.int64), cols[r_col].astype(np.float64),
             mult, floor_thr, halflife_ns, *entry,
         )
         return ids, exit_, bars
@@ -1205,24 +1171,19 @@ def cusum_test_chunked(
         df.select(order_col, y_col), order_col, warmup=w + 1, chunk_rows=chunk_rows
     )
 
-    def k(pdf):
-        pdf = pdf.sort_values(GLOBAL_RN).reset_index(drop=True)
-        y = pdf[y_col].to_numpy(np.float64)
+    def k(cols):
+        y = cols[y_col].astype(np.float64)
         # local warmup 1 skips only the frameless first row; the global
         # warmup gate is applied on the exact global row number below
         stat = cusum_test_rolling(y, w, warmup=min(1, len(y)))
-        out = pd.DataFrame(
-            {order_col: pdf[order_col], "cusum_stat": stat,
-             "_rn": pdf[GLOBAL_RN], "_warm": pdf[WARM]}
-        )
-        out = out[(~out["_warm"]) & (out["_rn"] > warmup)]
-        return out[[order_col, "cusum_stat"]]
+        keep = ~cols[WARM] & (cols[GLOBAL_RN] > warmup)
+        return {order_col: cols[order_col][keep], "cusum_stat": stat[keep]}
 
     sch = (
         f"`{order_col}` {df.schema[order_col].dataType.simpleString()}, "
         "cusum_stat double"
     )
-    return d.groupBy(CHUNK).applyInPandas(k, sch)
+    return arrow.groups(d, CHUNK, k, sch, order=(GLOBAL_RN,))
 
 
 # --- complexity / long-memory estimators -----------------------------------

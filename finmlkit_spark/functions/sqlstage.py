@@ -1,6 +1,6 @@
 """Server-parsed SQL stages: one JVM analysis pass per stage.
 
-Round-5/6 measurement (SCALE.md item 10): every PySpark Dataset op is
+Measured (SCALE.md item 10): every PySpark Dataset op is
 analyzed eagerly JVM-side against its WHOLE subtree, so an operator
 built as ~30 chained ops on a deep tree pays seconds of pure driver
 latency per build — `avg_uniqueness_sweep` spent 1.86 s building vs

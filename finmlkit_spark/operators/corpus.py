@@ -1070,7 +1070,7 @@ def zipf_fit(
     ln(frequency) on ln(rank) — the rank-frequency slope a natural
     corpus keeps near −1 (template/synthetic/boilerplate text shows up
     as a flat or kinked curve; a standard data-quality audit metric).
-    Returns ONE row (n_terms, slope, intercept, r2).
+    Returns ONE row ``(n_terms, slope, intercept, r2)``.
 
     Plan: the top-k vocabulary table (``vocab_topk`` — explode, two
     hash aggregates, TakeOrdered) is k rows; the OLS closed form is

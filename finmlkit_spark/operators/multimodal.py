@@ -920,8 +920,8 @@ def _jpeg_progressive_pixels(b: bytes) -> np.ndarray:
 
 
 def jpeg_gray_pixels(b: bytes) -> np.ndarray:
-    """Historical entry point (round 9 shipped grayscale only) — now a
-    thin alias of :func:`jpeg_pixels`, which also decodes baseline
+    """Grayscale-era entry point, kept as a thin alias of
+    :func:`jpeg_pixels`, which also decodes baseline
     interleaved color: (h, w, 1) for grayscale payloads, (h, w, 3) RGB
     for YCbCr (4:4:4 / 4:2:2 / 4:2:0)."""
     return jpeg_pixels(b)

@@ -339,8 +339,8 @@ def pagerank(
     # a node's own out-degree = its count on the dst side (undirected)
     deg = und.groupBy("dst").agg(F.first("dst_deg").alias("deg"))
     n1 = deg.agg(F.count(F.lit(1)).alias("_n"))
-    # r0 = unit DIV N for every node; carry deg alongside the rank so
-    # each round's contribution needs no extra join
+    # the initial rank is unit DIV N for every node; carry deg alongside
+    # the rank so each iteration's contribution needs no extra join
     ranks = deg.crossJoin(F.broadcast(n1)).select(
         F.col("dst").alias("id"),
         F.expr(f"CAST({unit} AS BIGINT) DIV _n").alias("r"),
@@ -461,7 +461,7 @@ def materialize_lexical_weights(
     returns bit-identical results to the inline form (pinned by
     test).
 
-    ``n_partitions=None`` (default, r13): repartition by the token key
+    ``n_partitions=None`` (default): repartition by the token key
     WITHOUT a fixed count so AQE sizes the output files by bytes
     (guide: coalesce on write, aim for fewer well-sized files) — the
     fixed 32 wrote 32 tiny files at bench scale and is the wrong
@@ -499,9 +499,9 @@ def tfidf_topk(
     legitimate because the key never reaches the output: weights depend
     only on (tf, N, df) and the key is pure join identity, so ANY
     injective token→key map yields identical cosines while the oracle
-    keys on the raw token string (the r12 form paid an interpreted
-    per-char poly-hash fold per token — ~0.2 s of the hybrid_search
-    constant — for an identity the native hash provides for free).
+    keys on the raw token string (a per-char poly-hash key would pay an
+    interpreted fold per token — ~0.2 s of the hybrid_search constant —
+    for an identity the native hash provides for free).
 
     Scale shape: weights build once (lineage-cut — three consumers),
     the |queries|·avg_doc_len query side broadcasts into a token-keyed
@@ -517,10 +517,9 @@ def tfidf_topk(
     # identical integer counts, A/B bit-equal. With a pre-materialized
     # ``weights`` table (the production path) the whole corpus build —
     # and its lineage cut — disappears from the query.
-    # cache.cut, not keep (r14 honest-timing A/B — with materialization
-    # paid inside the timed region the checkpoint write beats the
-    # columnar persist on hybrid_search 0.92 vs 1.38 s; the r13 keep
-    # preference was an artifact of the warm-run cache exemption)
+    # cache.cut, not keep: with materialization paid inside the timed
+    # region the checkpoint write beats the columnar persist on
+    # hybrid_search (0.92 vs 1.38 s)
     w = (
         weights
         if weights is not None
@@ -580,11 +579,10 @@ def rrf_fuse(
     one fixed float expression over them (identical doubles in both
     engines) and ties break on the candidate id. The fuse is a union +
     per-(query, candidate) sum over two ≤k-row-per-query lists —
-    output-scale at any corpus size (r13 optimization: the full-outer
-    join form exchanged BOTH sides by (q, d) and then re-exchanged by
-    q for the rank window — 3 exchanges; union+groupBy is 2, and
-    two-term double addition is commutative so the fused scores are
-    bit-identical)."""
+    output-scale at any corpus size (a full-outer join form would
+    exchange BOTH sides by (q, d) and then re-exchange by q for the
+    rank window — 3 exchanges; union+groupBy is 2, and two-term double
+    addition is commutative so the fused scores are bit-identical)."""
     per_side = F.lit(1.0) / (
         F.lit(float(c)) + F.col(rank_col).cast("double")
     )

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import arrow
 from .text import poly_hash, token_count
 
 
@@ -82,34 +83,30 @@ def sequence_packing(
     overflow ``budget``, else start a new pack (an over-budget doc gets
     its own pack). The token-budget analog of the exact-reset volume
     bar sampler — same per-group sequential state machine, so the same
-    scale shape: groups pack independently (``applyInPandas``, one
+    scale shape: groups pack independently (``arrow.groups``, one
     shuffle on the group key), state is O(1) per group.
     """
-    import pandas as pd
-
     budget = int(budget)
 
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
+    def _pack(cols):
         pack_ids = []
         cum = 0
         pid = 0
-        for t in pdf["n_tokens"]:
+        for t in cols["n_tokens"]:
             t = int(t)
             if cum > 0 and cum + t > budget:
                 pid += 1
                 cum = 0
             cum += t
             pack_ids.append(pid)
-        pdf["pack_id"] = pack_ids
-        return pdf[["group", "doc_id", "n_tokens", "pack_id"]]
+        return {**cols, "pack_id": pack_ids}
 
     base = docs.select(
         F.col(group_col).cast("string").alias("group"),
         F.col(id_col).alias("doc_id"),
         token_count(text_col).cast("long").alias("n_tokens"),
     )
-    return base.groupBy("group").applyInPandas(_pack, schema=PACK_SCHEMA)
+    return arrow.groups(base, "group", _pack, PACK_SCHEMA, order=("doc_id",))
 
 
 def mixture_sample(

@@ -878,7 +878,6 @@ def semantic_dup_pairs(
     knob, exactly as in the paper.
     """
     import numpy as np
-    import pandas as pd
 
     # keep_vector: the driver-mode assignment already decoded every
     # vector once — carrying it through skips a second corpus scan and
@@ -897,7 +896,7 @@ def semantic_dup_pairs(
     )
     m = a.select(F.col(id_col).alias("id"), "cluster_id", "v")
 
-    # Within-cluster pairs as grouped applyInPandas, NOT a self-join:
+    # Within-cluster pairs as one grouped kernel, NOT a self-join:
     # each vector crosses Arrow ONCE (n_c rows per cluster), the
     # |cluster|² pair products exist only inside numpy (row-blocked to
     # bound memory), and only surviving pairs return — vs a cluster_id
@@ -914,20 +913,14 @@ def semantic_dup_pairs(
     guard = threshold - 1e-6
     id_type = dict(emb_df.dtypes)[id_col]
 
-    def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        n_rows = len(pdf)
+    def _pairs(c):
+        ids = c["id"]
+        n_rows = len(ids)
         if n_rows < 2:
-            return pd.DataFrame(
-                {
-                    "id_a": pdf["id"].iloc[:0],
-                    "id_b": pdf["id"].iloc[:0],
-                    "cos_raw": pd.Series([], dtype="float64"),
-                }
-            )
-        ids = pdf["id"].to_numpy()
+            return []
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
-        X = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
+        X = arrow.vectors(c["v"])[order]
         nrm = np.sqrt((X * X).cumsum(axis=1)[:, -1])
         # pair indices are generated INCREMENTALLY per anchor block (never
         # np.triu_indices over the whole cluster: those index arrays alone
@@ -949,17 +942,13 @@ def semantic_dup_pairs(
                 oa.append(ids[sa][keep])
                 ob.append(ids[sb][keep])
                 oc.append(cos[keep])
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(oa),
-                "id_b": np.concatenate(ob),
-                "cos_raw": np.concatenate(oc),
-            }
-        )
+        return {
+            "id_a": np.concatenate(oa),
+            "id_b": np.concatenate(ob),
+            "cos_raw": np.concatenate(oc),
+        }
 
-    pairs = m.groupBy("cluster_id").applyInPandas(
-        _pairs, f"id_a {id_type}, id_b {id_type}, cos_raw double"
-    )
+    pairs = arrow.groups(m, "cluster_id", _pairs, f"id_a {id_type}, id_b {id_type}, cos_raw double")
     # raw threshold compare, no rounding: cos_raw reproduces the
     # sequential fold exactly, so both engines filter identical values
     return pairs.select(
@@ -1772,7 +1761,6 @@ def knn_graph(
     a corpus with zero-norm embeddings surfaces them as rank-1 NaN
     edges here rather than silently losing the node's neighbor slots."""
     import numpy as np
-    import pandas as pd
 
     cents = kmeans_centroids(
         emb_df, k=k, iters=iters, id_col=id_col, emb_col=emb_col, dim=dim
@@ -1784,21 +1772,14 @@ def knn_graph(
     m = a.select(F.col(id_col).alias("id"), "cluster_id", "v")
     id_type = dict(emb_df.dtypes)[id_col]
 
-    def _topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        n_rows = len(pdf)
+    def _topk(c):
+        ids = c["id"]
+        n_rows = len(ids)
         if n_rows < 2:
-            return pd.DataFrame(
-                {
-                    "src_id": pdf["id"].iloc[:0],
-                    "dst_id": pdf["id"].iloc[:0],
-                    "cos_sim": pd.Series([], dtype="float64"),
-                    "rank": pd.Series([], dtype="int64"),
-                }
-            )
-        ids = pdf["id"].to_numpy()
+            return []
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
-        X = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
+        X = arrow.vectors(c["v"])[order]
         nrm = np.sqrt((X * X).cumsum(axis=1)[:, -1])
         kk = min(k_neighbors, n_rows - 1)
         cols = np.arange(n_rows)
@@ -1826,17 +1807,15 @@ def knn_graph(
             od_.append(ids[flat])
             oc_.append(C[np.repeat(np.arange(e - s), kk), flat])
             or_.append(np.tile(rk_row, e - s))
-        return pd.DataFrame(
-            {
-                "src_id": np.concatenate(os_),
-                "dst_id": np.concatenate(od_),
-                "cos_sim": np.concatenate(oc_),
-                "rank": np.concatenate(or_),
-            }
-        )
+        return {
+            "src_id": np.concatenate(os_),
+            "dst_id": np.concatenate(od_),
+            "cos_sim": np.concatenate(oc_),
+            "rank": np.concatenate(or_),
+        }
 
-    return m.groupBy("cluster_id").applyInPandas(
-        _topk, f"src_id {id_type}, dst_id {id_type}, cos_sim double, rank long"
+    return arrow.groups(
+        m, "cluster_id", _topk, f"src_id {id_type}, dst_id {id_type}, cos_sim double, rank long"
     )
 
 

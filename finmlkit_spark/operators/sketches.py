@@ -240,9 +240,9 @@ def kmv_overlap(
     # hashes, so the union-top-k / membership algebra is exact integer
     # set arithmetic over <= 2k-element arrays — one groupBy (reusing
     # the window's hash partitioning on g, no new exchange) + a
-    # broadcast self-join + ONE projection, instead of the r12 form's
-    # pair-fan joins + union + re-group + second window (4 exchanges
-    # on sketch rows collapsed into 0). Values are bit-identical: kept
+    # broadcast self-join + ONE projection, instead of pair-fan joins +
+    # union + re-group + second window (4 exchanges on sketch rows
+    # collapsed into 0). Values are bit-identical: kept
     # = first k of the sorted distinct union, h_k its max, n_shared
     # the kept hashes present in both sketches.
     arr = sk.groupBy("g").agg(F.array_sort(F.collect_list("h")).alias("hs"))
@@ -294,8 +294,8 @@ def cm_table(
     # hash each DISTINCT key once and weight by its occurrence count —
     # identical counters (the sketch adds n for a key appearing n
     # times), but the interpreted char-fold hash runs |vocab| times
-    # instead of |occurrences| (the r12 probe read 9.9 s at sf0.1 in
-    # the per-occurrence form; 60× fewer folds on this corpus)
+    # instead of |occurrences| (the per-occurrence form measured 9.9 s
+    # at sf0.1; 60× fewer folds on this corpus)
     counts = (
         df.select(F.col(key_col).alias("k"))
         .groupBy("k")
@@ -341,12 +341,10 @@ def cm_freq_audit(
     from .. import cache
 
     # ONE corpus key-count aggregate feeds BOTH the exact audit side
-    # and the CM table build (r13 optimization: the exact side and
-    # cm_table each ran their own data-scale tokenize+aggregate before
-    # — two corpus passes for one audit); the pinned table is
-    # vocab-scale. cache.cut, not keep (r14 honest-timing A/B: the
-    # timed region now pays materialization, and the checkpoint write
-    # beats the columnar persist 0.59 vs 0.83 s)
+    # and the CM table build (one corpus pass per audit, not one per
+    # consumer); the pinned table is vocab-scale. cache.cut, not keep:
+    # with materialization inside the timed region the checkpoint
+    # write beats the columnar persist (0.59 vs 0.83 s)
     counts = cache.cut(
         df.select(F.col(key_col).alias("k")).groupBy("k").agg(
             F.count(F.lit(1)).alias("n")

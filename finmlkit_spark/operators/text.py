@@ -42,7 +42,9 @@ def let_bind(expr: Column, body) -> Column:
     Token signals follow one rule: a projection or filter that computes
     several of them binds ``tokens(col)`` once and hands the bound array
     to the ``_*_of(t)`` bodies (``_quality_of``, ``_repetition_of``,
-    ``_lang_guess_of``, ...); each public signal binds its own split.
+    ``_lang_hits_of``, ...); each public signal binds its own split.
+    Quality and language read the same stopword hits, so a projection
+    that computes both binds :func:`_lang_hits_of` once as well.
     To select several signals as columns, bind one struct of them and
     read its fields in a second projection — Catalyst does not collapse
     those field reads back into per-field copies of a lambda producer."""
@@ -82,19 +84,30 @@ def avg_token_len(col: str = "text") -> Column:
     return let_bind(tokens(col), _avg_token_len_of)
 
 
-def _stopword_ratio_of(t: Column, words: list[str]) -> Column:
+def _hits_of(t: Column, words: list[str]) -> Column:
+    """How many tokens of ``t`` are in ``words`` (long)."""
     arr = F.array(*[F.lit(w) for w in words])
-    hits = F.size(F.filter(t, lambda x: F.array_contains(arr, x)))
-    return hits.cast("double") / F.size(t)
+    return F.size(F.filter(t, lambda x: F.array_contains(arr, x))).cast("long")
+
+
+def _lang_hits_of(t: Column) -> Column:
+    """Each language's stopword hits over ``t``, in ``LANG_WORDS`` order
+    (English first): bind it once, then read element 0 for
+    :func:`_quality_of` and the whole array for :func:`_lang_guess_of`."""
+    return F.array(*[_hits_of(t, words) for words in LANG_WORDS.values()])
 
 
 def stopword_ratio(col: str = "text", words: list[str] | None = None) -> Column:
-    return let_bind(tokens(col), lambda t: _stopword_ratio_of(t, words or STOPWORDS))
+    return let_bind(
+        tokens(col), lambda t: _hits_of(t, words or STOPWORDS).cast("double") / F.size(t)
+    )
 
 
-def _quality_of(t: Column) -> Column:
+def _quality_of(t: Column, en_hits: Column) -> Column:
+    """The quality bands over tokens ``t`` with ``en_hits`` English
+    stopword hits among them."""
     n = F.size(t).cast("long")
-    sw = _stopword_ratio_of(t, STOPWORDS)
+    sw = en_hits.cast("double") / F.size(t)
     return let_bind(
         _avg_token_len_of(t),
         lambda atl: F.when((n >= 10) & (n <= 100_000), 0.4).otherwise(0.0)
@@ -108,18 +121,15 @@ def quality_score(col: str = "text") -> Column:
     stopword presence (the classic Gopher-style rule shape). The token
     array and the mean token length are let-bound — each is consumed by
     multiple band predicates."""
-    return let_bind(tokens(col), _quality_of).alias("quality")
+    return let_bind(tokens(col), lambda t: _quality_of(t, _hits_of(t, STOPWORDS))).alias(
+        "quality"
+    )
 
 
-def _lang_score_of(t: Column, words: list[str]) -> Column:
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(t, lambda x: F.array_contains(arr, x))).cast("long")
-
-
-def _lang_guess_of(t: Column) -> Column:
+def _lang_guess_of(hits: Column) -> Column:
+    """The argmax language of the :func:`_lang_hits_of` array ``hits``."""
     entries = [
-        F.struct(_lang_score_of(t, words).alias("s"), F.lit(-i).alias("ni"))
-        for i, words in enumerate(LANG_WORDS.values())
+        F.struct(hits[i].alias("s"), F.lit(-i).alias("ni")) for i in range(len(LANG_WORDS))
     ]
     names = F.array(*[F.lit(lang) for lang in LANG_WORDS])
     # the argmax is bound: both the guard and the pick read it
@@ -144,7 +154,7 @@ def lang_guess(col: str = "text") -> Column:
     field-by-field: highest score wins, ties resolve to the SMALLEST
     index via the negated-index second field — identical semantics to
     the strictly-greater-replaces loop."""
-    return let_bind(tokens(col), _lang_guess_of)
+    return let_bind(tokens(col), lambda t: _lang_guess_of(_lang_hits_of(t)))
 
 
 def poly_hash(expr: Column | str, mod: int = MOD) -> Column:

@@ -5,17 +5,17 @@ join (anchor bars × trailing footprint rows) + re-bucketing + per-anchor
 aggregation. The POC/percentage features are order-free aggregations
 (native SQL); the HVA/LVA value-area bounds are the reference's greedy
 two-at-a-time expansion around POC (``volume.py:277-364``) — an
-inherently sequential walk, implemented as a vectorized pandas UDF per
-anchor group.
+inherently sequential walk, implemented as a NumPy kernel per anchor
+group (``functions.arrow.groups``).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import arrow
 from .joins import range_join
 
 
@@ -69,14 +69,13 @@ def hva_lva(profile: DataFrame, va_pct: float = 0.7) -> DataFrame:
     """Value-area bounds: start at POC, expand two-levels-at-a-time toward
     the larger neighbor volume until ≥ va_pct of total volume is covered
     (market-profile TPO algorithm, ``volume.py:277-364``). Greedy and
-    order-dependent -> per-anchor pandas UDF (anchors are independent, so
+    order-dependent -> per-anchor grouped kernel (anchors are independent, so
     this parallelizes across the shuffle like every other grouped kernel).
     """
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("bin").reset_index(drop=True)
-        vols = pdf["vol"].to_numpy(dtype=float)
-        bins = pdf["bin"].to_numpy()
+    def kernel(cols):
+        vols = cols["vol"].astype(float)
+        bins = cols["bin"]
         total = vols.sum()
         # POC: max vol, lowest bin on ties
         p = int(np.lexsort((bins, -vols))[0])
@@ -95,17 +94,13 @@ def hva_lva(profile: DataFrame, va_pct: float = 0.7) -> DataFrame:
                 new_lo = max(lo - 2, 0)
                 covered += vols[new_lo:lo].sum()
                 lo = new_lo
-        return pd.DataFrame(
-            {
-                "anchor_ts": [pdf["anchor_ts"].iloc[0]],
-                "poc_bin": [int(bins[p])],
-                "lva_bin": [int(bins[lo])],
-                "hva_bin": [int(bins[hi])],
-                "va_coverage": [covered / total if total > 0 else float("nan")],
-            }
-        )
+        coverage = covered / total if total > 0 else float("nan")
+        return [(cols["anchor_ts"][0], int(bins[p]), int(bins[lo]), int(bins[hi]), coverage)]
 
-    return profile.groupBy("anchor_ts").applyInPandas(
+    return arrow.groups(
+        profile,
+        "anchor_ts",
         kernel,
-        schema="anchor_ts long, poc_bin long, lva_bin long, hva_bin long, va_coverage double",
+        "anchor_ts long, poc_bin long, lva_bin long, hva_bin long, va_coverage double",
+        order=("bin",),
     )

@@ -177,25 +177,16 @@ class Ewma(Transform):
         self.col, self.span = col, span
 
     def apply_sequential_stage(self, df: DataFrame, ctx: BuildContext) -> DataFrame:
-        import pandas as pd
-
+        from ..functions import arrow
         from ..functions import sequential as S
 
         col, span, name = self.col, self.span, self.name
-        order, parts = ctx.order_col, ctx.part_cols
-        in_cols = df.columns
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(order)
-            pdf[name] = S.ewma(pdf[col].to_numpy(), span)
-            return pdf[in_cols + [name]]  # drop the synthetic group key
+        def kernel(cols):
+            return {**cols, name: S.ewma(cols[col], span)}
 
-        schema = ", ".join(
-            [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in in_cols] + [f"`{name}` double"]
-        )
-        if parts:
-            return df.groupBy(*parts).applyInPandas(kernel, schema=schema)
-        return S.apply_sequential(df, kernel, schema, order=(order,))
+        schema = {**{f.name: f.dataType for f in df.schema}, name: "double"}
+        return arrow.groups(df, ctx.part_cols or None, kernel, schema, order=(ctx.order_col,))
 
     def expr(self, ctx):  # pragma: no cover - sequential path only
         raise NotImplementedError("sequential transform: use apply_sequential_stage")

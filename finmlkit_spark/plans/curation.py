@@ -71,12 +71,17 @@ class QualityFilter(Stage):
         p = self.params
 
         def keep(t):
-            cond = (TX._quality_of(t) >= p["min_quality"]) & (
-                TX._repetition_of(t, 3) < p["max_rep3"]
+            def rules(en_hits):
+                return (TX._quality_of(t, en_hits) >= p["min_quality"]) & (
+                    TX._repetition_of(t, 3) < p["max_rep3"]
+                )
+
+            if not p["lang"]:
+                return rules(TX._hits_of(t, TX.STOPWORDS))
+            return TX.let_bind(
+                TX._lang_hits_of(t),
+                lambda h: rules(h[0]) & (TX._lang_guess_of(h) == p["lang"]),
             )
-            if p["lang"]:
-                cond = cond & (TX._lang_guess_of(t) == p["lang"])
-            return cond
 
         return docs.where(TX.let_bind(TX.tokens(), keep))
 

@@ -1,7 +1,7 @@
 """Schema-tolerant testdata table reader.
 
-Round 2 lost its entire finance half to ONE upstream physical-type
-change (events.ts: TIMESTAMP(NANOS) -> timestamp[us]). The reference
+ONE upstream physical-type change (events.ts: TIMESTAMP(NANOS) ->
+timestamp[us]) breaks every finance query that assumes a type. The reference
 survives such drift by inferring units from magnitude
 (``finmlkit/bar/data_model.py:399-418``); this module is the same
 posture for every driver table: normalize each known timestamp-ish

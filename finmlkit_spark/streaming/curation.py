@@ -31,10 +31,13 @@ def with_curation_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
     apart by a second projection, so each doc is split once."""
 
     def tok(t: Column) -> Column:
-        return F.struct(
-            F.size(t).cast("long").alias("n_tokens"),
-            TX._quality_of(t).alias("quality"),
-            TX._lang_guess_of(t).alias("lang"),
+        return TX.let_bind(
+            TX._lang_hits_of(t),
+            lambda h: F.struct(
+                F.size(t).cast("long").alias("n_tokens"),
+                TX._quality_of(t, h[0]).alias("quality"),
+                TX._lang_guess_of(h).alias("lang"),
+            ),
         )
 
     out = df.withColumns(

@@ -5,9 +5,9 @@ beyond-reference information-bar samplers."""
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import functions as F
 
+from ..functions import arrow
 from ..functions import sequential as S
 from ..operators import preprocess as P  # noqa: F401 (per-trade side path)
 from ..sources.trades import events_to_trades  # noqa: F401
@@ -292,7 +292,7 @@ _IB_ALPHA = 2.0 / (_IB_SPAN + 1.0)
 _IB_E0 = 200.0
 # SQL literals in scientific notation: DuckDB parses plain decimal
 # literals as DECIMAL (overflow-prone in the recursive products, the
-# round-1 "1.0 + x" trap); an exponent forces DOUBLE. 17 significant
+# "1.0 + x" trap); an exponent forces DOUBLE. 17 significant
 # digits round-trip the exact Python doubles the kernel uses.
 _IB_A = f"{_IB_ALPHA:.17e}"
 _IB_OMA = f"{(1.0 - _IB_ALPHA):.17e}"
@@ -354,16 +354,11 @@ def imbalance_bars(spark, sf_dir):
     recursive-CTE oracle replays the reset machine."""
     d = _hourly_sided(spark, sf_dir)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = S.imbalance_bar_ids(
-            pdf["sd"].to_numpy(), pdf["volume"].to_numpy(),
-            ewma_span=_IB_SPAN, init_expected=_IB_E0,
-        )
-        return pd.DataFrame({"bar_close_ns": pdf["bar_close_ns"], "bar_id": ids})
+    def kernel(c):
+        ids = S.imbalance_bar_ids(c["sd"], c["volume"], ewma_span=_IB_SPAN, init_expected=_IB_E0)
+        return {"bar_close_ns": c["bar_close_ns"], "bar_id": ids}
 
-    return S.apply_sequential(
-        d, kernel, "bar_close_ns long, bar_id long", order=("bar_close_ns",)
-    )
+    return arrow.groups(d, None, kernel, "bar_close_ns long, bar_id long", order=("bar_close_ns",))
 
 
 @query(
@@ -418,16 +413,11 @@ def run_bars(spark, sf_dir):
     exceeds the EWMA-adaptive expected run. Exact recursive-CTE oracle."""
     d = _hourly_sided(spark, sf_dir)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = S.run_bar_ids(
-            pdf["sd"].to_numpy(), pdf["volume"].to_numpy(),
-            ewma_span=_IB_SPAN, init_expected=_IB_E0,
-        )
-        return pd.DataFrame({"bar_close_ns": pdf["bar_close_ns"], "bar_id": ids})
+    def kernel(c):
+        ids = S.run_bar_ids(c["sd"], c["volume"], ewma_span=_IB_SPAN, init_expected=_IB_E0)
+        return {"bar_close_ns": c["bar_close_ns"], "bar_id": ids}
 
-    return S.apply_sequential(
-        d, kernel, "bar_close_ns long, bar_id long", order=("bar_close_ns",)
-    )
+    return arrow.groups(d, None, kernel, "bar_close_ns long, bar_id long", order=("bar_close_ns",))
 
 
 _SHARED_SQL = """
@@ -451,7 +441,7 @@ def sql_shared_dialect(spark, sf_dir):
     return spark.sql(_SHARED_SQL)
 
 
-# --- round-4 additions: the remaining classic query shapes ------------------
+# --- the remaining classic query shapes --------------------------------------
 
 
 @query(
@@ -667,7 +657,7 @@ def revenue_rollup(spark, sf_dir):
     in one pass — Spark expands the grouping sets into one hash
     aggregate with map-side partials, no per-level re-scan; dims
     broadcast. Subtotal rows are tagged with explicit ``GROUPING()``
-    flags (round-12 advisory: a real dimension value equal to the
+    flags (a real dimension value equal to the
     display sentinel 'ALL' must stay distinguishable from a subtotal
     row — the sentinel is for display only, the flag is the contract;
     both engines compute GROUPING identically)."""
@@ -804,7 +794,7 @@ def nation_customer_deciles(spark, sf_dir):
     )
 
 
-# --- cardinality sketches (round 12) -----------------------------------------
+# --- cardinality sketches -----------------------------------------------------
 
 from ..operators.sketches import sql_salted_hash as _SSH
 
@@ -904,7 +894,7 @@ FROM (
 WHERE cnt < 4096""",
 )
 def kmv_fast_user_count(spark, sf_dir):
-    """PRODUCTION sketch path (round 13 — the r12 verdict item): KMV
+    """PRODUCTION sketch path: KMV
     distinct-user estimate built by per-occurrence ``F.xxhash64`` with
     a strictly bounded per-partition partial top-k — no ``.distinct()``
     of raw keys, no data-scale exchange (plan-pinned by
@@ -1035,9 +1025,9 @@ def quantile_sketch_audit(spark, sf_dir):
     o = read_table(spark, sf_dir, "orders").select("o_totalprice")
     qs = [i / 10.0 for i in range(1, 10)]
     # ONE pass serves the sketch's range stats AND the exact audit
-    # percentiles (r13 optimization: was three sequential driver
-    # aggregates — min/max/count, bin counts, exact percentiles; the
-    # range and the percentiles fold in the same job, then the sketch
+    # percentiles (not three sequential driver aggregates — min/max/
+    # count, bin counts, exact percentiles; the range and the
+    # percentiles fold in the same job, then the sketch
     # runs in fixed-range mode, which skips its own min/max pass —
     # identical lo/hi/n/bins by construction)
     r = o.agg(

@@ -26,8 +26,8 @@ DAY_NS = 86_400_000_000_000
 
 #: warmup depth for the chunk-partitioned demo tier: covers the deepest
 #: lookback in any §2.5 query — the 1h RANGE frames (≤ 61 rows on a 1-min
-#: grid: return_t/bar_rate) and the longest lag chain (close→r→r4→30-row
-#: frame = 33 rows, feat_variance_ratio)
+#: grid: return_t/bar_rate) and the longest lag chain (``close→r→r4`` →
+#: 30-row frame = 33 rows, feat_variance_ratio)
 FEAT_WARMUP = 64
 
 

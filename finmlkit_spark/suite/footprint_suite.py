@@ -126,20 +126,20 @@ def footprint_features_q(spark, sf_dir):
     """Per-bar footprint features: diagonal imbalances, signed-run length,
     COT level, vp_skew around the bar's TRADE vwap (base.py:838-843),
     vp_var = Σv·(p−bar_vwap)²/Σv — the shifted one-pass 2nd moment
-    (round 10: the naive E[x²]−E[x]² form amplified a 1-ulp pow()
+    (the naive E[x²]−E[x]² form amplifies a 1-ulp pow()
     difference by mean²/var ~1e12; the shifted form is a sum of
     non-negative terms, cancellation-free) — and gini (base.py:755-850).
 
-    Late-r13 determinism rework: bar_vwap and every moment sum derive
+    Determinism: bar_vwap and every moment sum derive
     from HALF_UP-1e6-quantized exact integer folds on both engine
     sides, so the output doubles are IDENTICAL by construction at any
     scale — the float form's fold-order last-ulp could flip a value
     sitting exactly on the round(·,6) boundary (the one documented
-    sf0.1 miss, vp_var 611.168338 vs .168337). Two non-obvious pieces
-    of that hunt: DuckDB parses ``0.01`` as DECIMAL, so the oracle's
-    ``level * 0.01`` was an exact-decimal price cast to double —
-    1 ulp OFF Spark's double product (use ``0.01e0``); and the
-    query-side round(·,6) itself had to GO, because the 1e-6-grid
+    sf0.1 case, vp_var 611.168338 vs .168337). Two non-obvious pieces:
+    DuckDB parses ``0.01`` as DECIMAL, so an oracle ``level * 0.01``
+    is an exact-decimal price cast to double — 1 ulp OFF Spark's
+    double product (use ``0.01e0``); and the query applies no
+    round(·,6), because the 1e-6-grid
     integer ratio lands exactly on the 6-digit halfway point whenever
     2·Σq ≡ Σvq (mod 2Σvq), where the engines' round rules disagree
     (observed on 6 bars). Raw identical doubles need no round."""
@@ -152,8 +152,8 @@ def footprint_features_q(spark, sf_dir):
     )
     # bar_vwap needs no side — branch off BEFORE the side pass so the
     # chunked-carry subtree evaluates once, not once per branch
-    # bar_vwap from exact HALF_UP-1e6-quantized integer folds (the
-    # late-r13 determinism rework): both engines derive the SAME double
+    # bar_vwap from exact HALF_UP-1e6-quantized integer folds: both
+    # engines derive the SAME double
     # from the same integer sums, so the downstream (p - vwap) terms are
     # bit-identical inputs to the quantized moment sums
     bv = B.with_time_bar(tr, BAR5_NS).groupBy("bar_close_ns").agg(

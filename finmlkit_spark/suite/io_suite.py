@@ -4,9 +4,9 @@ sampler (§2.3 parity; exact recursive-CTE oracle on hourly bars)."""
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import functions as F
 
+from ..functions import arrow
 from ..functions import sequential as S
 from ..sources import bars_io as IO
 from ..sources.trades import EVENTS_TRADES_CTE, events_to_trades
@@ -53,8 +53,8 @@ def bars_resample_15m(spark, sf_dir):
     ``_resample`` ``io.py:890-950``): volume-weighted vwap recombination
     + the reference's exact trade-count-weighted median (sort+cumsum)."""
     # per-fine-bar median trade size (as the reference stores) rides the
-    # SAME aggregation — round 8: the separate with_time_bar + groupBy +
-    # join form paid a second trades pass and an extra exchange; and
+    # SAME aggregation — a separate with_time_bar + groupBy + join
+    # would pay a second trades pass and an extra exchange; and
     # seq=False skips the global-window brn/r this query only dropped
     fine = bars_1m(spark, sf_dir, seq=False, median_size=True).drop("first_ts_ns")
     return IO.resample_bars(fine, Q15_NS, median_col="med")
@@ -158,10 +158,10 @@ def store_upsert_q(spark, sf_dir):
     bars = _ohlcv_cols(B.bar_ohlcv(df, key="bar_close_ns"), "bar_close_ns")
     # materialize the bar table ONCE (one eager checkpoint job): the
     # max-probe, the base-store write, the batch's month-probe and the
-    # upsert merge all derive from it — before this cut each of those
-    # actions re-ran the full trades scan + 1m aggregation (4 passes,
-    # r13 optimization; the checkpoint lives only inside this query's
-    # timed run, every invocation still computes from parquet)
+    # upsert merge all derive from it — without this cut each of those
+    # actions re-runs the full trades scan + 1m aggregation (4 passes;
+    # the checkpoint lives only inside this query's timed run, every
+    # invocation still computes from parquet)
     bars = bars.localCheckpoint()
     mx = bars.agg(F.max("bar_close_ns")).collect()[0][0]  # one scalar
     day_ns = 86_400_000_000_000
@@ -269,20 +269,18 @@ def seq_cusum_bars(spark, sf_dir):
 
     bars = bars_1h(spark, sf_dir)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        r = pdf["r"].to_numpy()
-        sigma = S.ewmst(pdf["bar_close_ns"].to_numpy(), r, _CB_HL_NS)
+    def kernel(c):
+        t, r = c["bar_close_ns"], c["r"]
+        sigma = S.ewmst(t, r, _CB_HL_NS)
         ids = S.cusum_bar_ids(r, sigma, mult=_CB_MULT, floor_thr=_CB_FLOOR)
-        return pd.DataFrame({"bar_close_ns": pdf["bar_close_ns"], "bar_id": ids})
+        return {"bar_close_ns": t, "bar_id": ids}
 
-    return S.apply_sequential(
-        bars, kernel, "bar_close_ns long, bar_id long", order=("bar_close_ns",)
-    )
+    return arrow.groups(bars, None, kernel, "bar_close_ns long, bar_id long", order=("bar_close_ns",))
 
 
 @query("seq_cusum_bars_chunked", _CUSUM_BARS_SQL)
 def seq_cusum_bars_chunked(spark, sf_dir):
-    """The same adaptive CUSUM bar indexer via the round-6 fused chunk
+    """The same adaptive CUSUM bar indexer via the fused chunk
     stitch (sequential.cusum_adaptive_bars_chunked): the EWMST moments
     (V, V2, Sy, Syy, exact int64 prev_t, NaN-carry std) and the CUSUM
     machine (sp, sn, last_sig) ride ONE per-chunk entry state, chained

@@ -143,10 +143,10 @@ def _labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: session-scoped memo of the label-spans cut — the derived-table analog
-#: of the r7 source-relation memo (sources/tables.py): SEVEN labels-tier
+#: of the source-relation memo (sources/tables.py): SEVEN labels-tier
 #: queries build the identical triple-barrier spans frame, and each
 #: fresh build pays ~0.2 s of tbm SQL analysis plus ~0.4 s of
-#: localCheckpoint physical planning (measured sf0.1, round 8). The
+#: localCheckpoint physical planning (measured at sf0.1). The
 #: frame is deterministic in (applicationId, sf_dir) — same staleness
 #: convention as the source memo (the external driver regenerates
 #: testdata only between sessions); entry value is (spans, n_events),

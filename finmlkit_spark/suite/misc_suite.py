@@ -7,10 +7,10 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions import arrow
 from ..functions import sequential as S
 from ..operators import bars as B
 from ..operators import joins as J
@@ -179,17 +179,10 @@ def seq_bar_duration_ewma(spark, sf_dir):
         "dur", (F.col("bar_close_ns") - F.lag("bar_close_ns").over(w)).cast("double") / 1e9
     ).where(F.col("dur").isNotNull())
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "bar_close_ns": pdf["bar_close_ns"],
-                "dur_ewma": S.ewma(pdf["dur"].to_numpy(), SPAN),
-            }
-        )
+    def kernel(c):
+        return {"bar_close_ns": c["bar_close_ns"], "dur_ewma": S.ewma(c["dur"], SPAN)}
 
-    return S.apply_sequential(
-        hb, kernel, "bar_close_ns long, dur_ewma double", order=("bar_close_ns",)
-    )
+    return arrow.groups(hb, None, kernel, "bar_close_ns long, dur_ewma double", order=("bar_close_ns",))
 
 
 _HW = 64
@@ -245,16 +238,11 @@ def hurst_exponent(spark, sf_dir):
     far inside the rounding but not bit-exactly."""
     hb = bars_1h(spark, sf_dir)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        y = pdf["close"].to_numpy()
-        out = S.hurst_rolling(y, _HW)
-        return pd.DataFrame(
-            {"bar_close_ns": pdf["bar_close_ns"], "hurst": np.round(out, 6)}
-        )
+    def kernel(c):
+        hurst = S.hurst_rolling(c["close"], _HW)
+        return {"bar_close_ns": c["bar_close_ns"], "hurst": np.round(hurst, 6)}
 
-    return S.apply_sequential(
-        hb, kernel, "bar_close_ns long, hurst double", order=("bar_close_ns",)
-    )
+    return arrow.groups(hb, None, kernel, "bar_close_ns long, hurst double", order=("bar_close_ns",))
 
 
 _AE_W = 48
@@ -303,18 +291,14 @@ def approx_entropy(spark, sf_dir):
     association of std/log-means differs at ulp level."""
     hb = bars_1h(spark, sf_dir)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        y = pdf["close"].to_numpy()
+    def kernel(c):
+        y = c["close"]
         out = np.full(len(y), np.nan)
         for t in range(_AE_W - 1, len(y)):
             out[t] = S.approx_entropy(y[t - _AE_W + 1 : t + 1], m=2, r_mult=0.2)
-        return pd.DataFrame(
-            {"bar_close_ns": pdf["bar_close_ns"], "apen": np.round(out, 6)}
-        )
+        return {"bar_close_ns": c["bar_close_ns"], "apen": np.round(out, 6)}
 
-    return S.apply_sequential(
-        hb, kernel, "bar_close_ns long, apen double", order=("bar_close_ns",)
-    )
+    return arrow.groups(hb, None, kernel, "bar_close_ns long, apen double", order=("bar_close_ns",))
 
 
 @query(

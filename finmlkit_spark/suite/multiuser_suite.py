@@ -130,8 +130,7 @@ def user_sessions(spark, sf_dir):
     )
 
 
-import pandas as pd  # noqa: E402
-
+from ..functions import arrow  # noqa: E402
 from ..functions import sequential as S  # noqa: E402
 
 
@@ -158,18 +157,15 @@ def user_ewma(spark, sf_dir):
     convolution."""
     tr = events_to_trades(spark, sf_dir, by_user=True)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "symbol": pdf["symbol"],
-                "ts_ns": pdf["ts_ns"],
-                "trade_id": pdf["trade_id"],
-                "ewma_19": S.ewma(pdf["price"].to_numpy(), 19),
-            }
-        )
+    def kernel(c):
+        return {**c, "ewma_19": S.ewma(c["price"], 19)}
 
-    return S.apply_sequential(
-        tr, kernel, "symbol string, ts_ns long, trade_id long, ewma_19 double", by="symbol"
+    return arrow.groups(
+        tr,
+        "symbol",
+        kernel,
+        "symbol string, ts_ns long, trade_id long, ewma_19 double",
+        order=("ts_ns", "trade_id"),
     )
 
 
@@ -420,19 +416,16 @@ def _funnel_stage_times(spark, sf_dir):
     event_funnel and funnel_latency: s1 = first view, s2 = first click
     strictly after it, s3 = first purchase strictly after that.
 
-    The r13 ``cache.keep`` pinning of s1/s2 is DROPPED (r14): under
-    the honest bench harness (materialization paid inside the timed
-    region) the persist round-trip loses to the parallel recompute on
+    s1/s2 are not pinned: with materialization paid inside the timed
+    region the persist round-trip loses to the parallel recompute on
     BOTH consumers — event_funnel keep 0.45 s vs unpinned 0.39 s, cut
-    0.40 s; funnel_latency keep 0.45 s vs unpinned 0.37 s, cut 0.43 s
-    (the r13 "win" was the warm-run cache exemption the r14 bench fix
-    removed; the driver's own r13 bench already showed event_funnel
-    regressing 0.41 → 0.56 s under the boundary). Same conclusion as
-    the cohort_retention A/B r13 recorded: a user-scale materialization
-    round-trip costs more than re-running the event-scale stage
-    aggregates on idle cores. §5 memory note for 100 TB deployments:
-    if the event table no longer fits the cluster's parallel-recompute
-    budget, pin s2 (the twice-referenced frame) with ``cache.cut``."""
+    0.40 s; funnel_latency keep 0.45 s vs unpinned 0.37 s, cut 0.43 s.
+    Same conclusion as the cohort_retention A/B: a user-scale
+    materialization round-trip costs more than re-running the
+    event-scale stage aggregates on idle cores. §5 memory note for
+    100 TB deployments: if the event table no longer fits the cluster's
+    parallel-recompute budget, pin s2 (the twice-referenced frame) with
+    ``cache.cut``."""
     ev = _events_ns(spark, sf_dir)
     s1 = (
         ev.where(F.col("event_type") == "view")
@@ -723,8 +716,8 @@ def session_path_topk(spark, sf_dir):
     c = p.groupBy("path").agg(F.count(F.lit(1)).alias("n_sessions"))
     # TakeOrderedAndProject over the unbounded distinct-path aggregate,
     # then re-rank the 20 survivors — replaces a global row_number()
-    # window that single-partitioned every distinct session path
-    # (round-12 advisory); the re-rank window is bounded at 20 rows.
+    # window that single-partitioned every distinct session path; the
+    # re-rank window is bounded at 20 rows.
     top = c.orderBy(F.col("n_sessions").desc(), F.col("path")).limit(20)
     wr = Window.orderBy(F.col("n_sessions").desc(), F.col("path"))
     return top.withColumn("rank", F.row_number().over(wr).cast("long"))

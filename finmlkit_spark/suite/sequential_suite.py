@@ -16,10 +16,11 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import arrow
 from ..functions import rolling as R
 from ..functions import sequential as S
 from ._registry import query
@@ -80,12 +81,10 @@ def seq_ewma(spark, sf_dir):
     convolution is exact for brn ≤ K and within 1.3e-23 beyond."""
     bars = bars_1m(spark, sf_dir)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {"bar_close_ns": pdf["bar_close_ns"], "ewma_19": S.ewma(pdf["close"].to_numpy(), SPAN)}
-        )
+    def kernel(c):
+        return {"bar_close_ns": c["bar_close_ns"], "ewma_19": S.ewma(c["close"], SPAN)}
 
-    return S.apply_sequential(bars, kernel, "bar_close_ns long, ewma_19 double", order=("bar_close_ns",))
+    return arrow.groups(bars, None, kernel, "bar_close_ns long, ewma_19 double", order=("bar_close_ns",))
 
 
 @query(
@@ -143,12 +142,10 @@ def seq_ewms(spark, sf_dir):
     (core/volatility.py:9-69)."""
     bars = bars_1m(spark, sf_dir)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {"bar_close_ns": pdf["bar_close_ns"], "ewms_19": S.ewms(pdf["close"].to_numpy(), SPAN)}
-        )
+    def kernel(c):
+        return {"bar_close_ns": c["bar_close_ns"], "ewms_19": S.ewms(c["close"], SPAN)}
 
-    return S.apply_sequential(bars, kernel, "bar_close_ns long, ewms_19 double", order=("bar_close_ns",))
+    return arrow.groups(bars, None, kernel, "bar_close_ns long, ewms_19 double", order=("bar_close_ns",))
 
 
 @query(
@@ -221,17 +218,11 @@ def seq_ewmst(spark, sf_dir):
     the identical closed form over absolute time."""
     bars = bars_1m(spark, sf_dir)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "bar_close_ns": pdf["bar_close_ns"],
-                "ewmst_30m": S.ewmst(
-                    pdf["bar_close_ns"].to_numpy(), pdf["close"].to_numpy(), HL_NS
-                ),
-            }
-        )
+    def kernel(c):
+        t = c["bar_close_ns"]
+        return {"bar_close_ns": t, "ewmst_30m": S.ewmst(t, c["close"], HL_NS)}
 
-    return S.apply_sequential(bars, kernel, "bar_close_ns long, ewmst_30m double", order=("bar_close_ns",))
+    return arrow.groups(bars, None, kernel, "bar_close_ns long, ewmst_30m double", order=("bar_close_ns",))
 
 
 @query(
@@ -276,7 +267,7 @@ WD = 1.0 - 1.0 / N_W  # 13/14
 #: BELOW double epsilon relative to the smoothed averages, so the only
 #: Spark-vs-oracle residual left is reassociation ulps (~1e-15 rel) plus
 #: the decayed seed at the comparison threshold (q^(MIN_BRN−15) ≈ 9e-14):
-#: a round-6 boundary hit then needs a value within ~1e-13 of a digit
+#: a 6-decimal rounding flip then needs a value within ~1e-13 of a digit
 #: boundary — ~2e-7 per value, ~1e-3 per full run. At the previous
 #: KW=350 the truncation alone was ~5.6e-12, which put ~0.2 EXPECTED
 #: boundary flips in every 8.5k-row driver hash — a coin-flip red row.
@@ -320,17 +311,11 @@ def seq_rsi_wilder(spark, sf_dir):
     has mixed out (< 1e-8)."""
     bars = bars_1m(spark, sf_dir)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pd.DataFrame(
-            {
-                "bar_close_ns": pdf["bar_close_ns"],
-                "brn": pdf["brn"],
-                "rsi_14": S.rsi_wilder(pdf["close"].to_numpy(), N_W),
-            }
-        )
-        return out[out["brn"] > MIN_BRN][["bar_close_ns", "rsi_14"]]
+    def kernel(c):
+        keep = c["brn"] > MIN_BRN
+        return {"bar_close_ns": c["bar_close_ns"][keep], "rsi_14": S.rsi_wilder(c["close"], N_W)[keep]}
 
-    return S.apply_sequential(bars, kernel, "bar_close_ns long, rsi_14 double", order=("bar_close_ns",))
+    return arrow.groups(bars, None, kernel, "bar_close_ns long, rsi_14 double", order=("bar_close_ns",))
 
 
 @query(
@@ -407,18 +392,12 @@ def seq_atr_ema(spark, sf_dir):
     precision)."""
     bars = bars_1h(spark, sf_dir)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pd.DataFrame(
-            {
-                "bar_close_ns": pdf["bar_close_ns"],
-                "atr_ema_14": S.atr_ema(
-                    pdf["high"].to_numpy(), pdf["low"].to_numpy(), pdf["close"].to_numpy(), N_W
-                ),
-            }
-        )
-        return out[out["atr_ema_14"].notna()][["bar_close_ns", "atr_ema_14"]]
+    def kernel(c):
+        atr = S.atr_ema(c["high"], c["low"], c["close"], N_W)
+        keep = ~np.isnan(atr)
+        return {"bar_close_ns": c["bar_close_ns"][keep], "atr_ema_14": atr[keep]}
 
-    return S.apply_sequential(bars, kernel, "bar_close_ns long, atr_ema_14 double", order=("bar_close_ns",))
+    return arrow.groups(bars, None, kernel, "bar_close_ns long, atr_ema_14 double", order=("bar_close_ns",))
 
 
 @query(
@@ -508,19 +487,12 @@ def seq_adx(spark, sf_dir):
     smoothing stages have mixed."""
     bars = bars_1m(spark, sf_dir)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pd.DataFrame(
-            {
-                "bar_close_ns": pdf["bar_close_ns"],
-                "brn": pdf["brn"],
-                "adx_14": S.adx(
-                    pdf["high"].to_numpy(), pdf["low"].to_numpy(), pdf["close"].to_numpy(), N_W
-                ),
-            }
-        )
-        return out[out["brn"] > 2 * MIN_BRN][["bar_close_ns", "adx_14"]]
+    def kernel(c):
+        keep = c["brn"] > 2 * MIN_BRN
+        adx = S.adx(c["high"], c["low"], c["close"], N_W)
+        return {"bar_close_ns": c["bar_close_ns"][keep], "adx_14": adx[keep]}
 
-    return S.apply_sequential(bars, kernel, "bar_close_ns long, adx_14 double", order=("bar_close_ns",))
+    return arrow.groups(bars, None, kernel, "bar_close_ns long, adx_14 double", order=("bar_close_ns",))
 
 
 # --- reset state machines (recursive-CTE exact replay on hourly bars) ------
@@ -561,11 +533,10 @@ def seq_cusum_filter(spark, sf_dir):
     Recursive-CTE oracle replays the exact reset state machine."""
     bars = bars_1h(spark, sf_dir)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        flags = S.cusum_filter_np(pdf["r"].to_numpy(), CUSUM_H)
-        return pdf.loc[flags == 1, ["bar_close_ns"]]
+    def kernel(c):
+        return {"bar_close_ns": c["bar_close_ns"][S.cusum_filter_np(c["r"], CUSUM_H) == 1]}
 
-    return S.apply_sequential(bars, kernel, "bar_close_ns long", order=("bar_close_ns",))
+    return arrow.groups(bars, None, kernel, "bar_close_ns long", order=("bar_close_ns",))
 
 
 @query("seq_cusum_filter_chunked", _CUSUM_FILTER_SQL)
@@ -614,11 +585,11 @@ def seq_volume_bars_exact(spark, sf_dir):
     approximation exactly at the reset boundaries)."""
     bars = bars_1h(spark, sf_dir)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = S.volume_bar_ids_exact(pdf["volume"].to_numpy(), VOL_THR_H)
-        return pd.DataFrame({"bar_close_ns": pdf["bar_close_ns"], "bar_id": ids})
+    def kernel(c):
+        ids = S.volume_bar_ids_exact(c["volume"], VOL_THR_H)
+        return {"bar_close_ns": c["bar_close_ns"], "bar_id": ids}
 
-    return S.apply_sequential(bars, kernel, "bar_close_ns long, bar_id long", order=("bar_close_ns",))
+    return arrow.groups(bars, None, kernel, "bar_close_ns long, bar_id long", order=("bar_close_ns",))
 
 
 @query("feat_fast_stage", _BH + R.fast_stage_ticks_oracle_sql())
@@ -669,14 +640,12 @@ def seq_cusum_test(spark, sf_dir):
     hourly closes (core/structural_break/cusum.py:11-274)."""
     bars = bars_1h(spark, sf_dir)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        stat = S.cusum_test_rolling(pdf["close"].to_numpy(), CT_W, CT_WARM)
-        out = pd.DataFrame(
-            {"bar_close_ns": pdf["bar_close_ns"], "brn": pdf["brn"], "cusum_stat": stat}
-        )
-        return out[out["brn"] >= CT_WARM + 1][["bar_close_ns", "cusum_stat"]]
+    def kernel(c):
+        keep = c["brn"] >= CT_WARM + 1
+        stat = S.cusum_test_rolling(c["close"], CT_W, CT_WARM)
+        return {"bar_close_ns": c["bar_close_ns"][keep], "cusum_stat": stat[keep]}
 
-    return S.apply_sequential(bars, kernel, "bar_close_ns long, cusum_stat double", order=("bar_close_ns",))
+    return arrow.groups(bars, None, kernel, "bar_close_ns long, cusum_stat double", order=("bar_close_ns",))
 
 
 @query("seq_cusum_test_chunked", _CUSUM_TEST_SQL)

@@ -175,16 +175,18 @@ FROM f4""",
 )
 def lang_id(spark, sf_dir):
     """N-gram/stopword language-ID heuristic (scores + argmax guess):
-    one struct over one bound token array, fields selected apart."""
+    one struct over the bound per-language hits of one bound token
+    array, fields selected apart."""
 
-    def body(t):
+    def body(h):
         return F.struct(
-            *[TX._lang_score_of(t, w).alias(f"s_{k}") for k, w in TX.LANG_WORDS.items()],
-            TX._lang_guess_of(t).alias("lang_guess"),
+            *[h[i].alias(f"s_{k}") for i, k in enumerate(TX.LANG_WORDS)],
+            TX._lang_guess_of(h).alias("lang_guess"),
         )
 
     return _docs(spark, sf_dir).select(
-        "doc_id", TX.let_bind(TX.tokens(), body).alias("_l")
+        "doc_id",
+        TX.let_bind(TX.tokens(), lambda t: TX.let_bind(TX._lang_hits_of(t), body)).alias("_l"),
     ).select("doc_id", "_l.*")
 
 

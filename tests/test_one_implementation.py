@@ -12,6 +12,7 @@ from __future__ import annotations
 import importlib
 import inspect
 import pkgutil
+import re
 
 import finmlkit_spark
 
@@ -69,8 +70,8 @@ def test_no_row_count_hint_parameter():
 
 
 def test_scale_scans_take_no_unused_knob():
-    """The single-stream scale scans take no ``by`` (per-group EW is
-    ``apply_sequential``'s job) and no ``coarse_span`` (the bucket width
+    """The single-stream scale scans take no ``by`` (per-group EW is a
+    grouped kernel, ``arrow.groups``) and no ``coarse_span`` (the bucket width
     is ``chunked_window._COARSE_SPAN``), nor do the chunk helpers and
     the trade-scale median; only RSI exposes the global row number."""
     from finmlkit_spark.functions import chunked_window as CW
@@ -103,17 +104,15 @@ def test_exclusive_prefix_takes_no_group():
 PANDAS_SITES = {
     ("sources/trades.py", "read_binance_zip", "mapInPandas"):
         "streams one frame per zip member through pd.read_csv",
-    ("operators/similarity.py", "semantic_dup_pairs", "np.stack"):
-        "inside the grouped applyInPandas cluster-pair kernel",
-    ("operators/similarity.py", "knn_graph", "np.stack"):
-        "inside the grouped applyInPandas cluster top-k kernel",
+    ("functions/rolling.py", "rolling_median_chunked", "applyInPandas"):
+        "pandas' skip-list rolling median has no NumPy equivalent",
 }
 
 
 def _pandas_sites():
-    """Every ``mapInPandas`` call, ``pandas_udf`` reference and
-    ``np.stack`` over a pandas ``.values`` / ``.to_numpy()`` in the
-    library, keyed like :data:`PANDAS_SITES`."""
+    """Every ``mapInPandas`` / ``applyInPandas`` call, ``pandas_udf``
+    reference and ``np.stack`` over a pandas ``.values`` /
+    ``.to_numpy()`` in the library, keyed like :data:`PANDAS_SITES`."""
     import ast
     import pathlib
 
@@ -123,8 +122,8 @@ def _pandas_sites():
         for top in tree.body:
             for node in ast.walk(top):
                 kind = None
-                if isinstance(node, ast.Attribute) and node.attr == "mapInPandas":
-                    kind = "mapInPandas"
+                if isinstance(node, ast.Attribute) and node.attr in ("mapInPandas", "applyInPandas"):
+                    kind = node.attr
                 elif (isinstance(node, ast.Attribute) and node.attr == "pandas_udf") or (
                     isinstance(node, ast.Name) and node.id == "pandas_udf"
                 ):
@@ -144,8 +143,9 @@ def _pandas_sites():
 
 
 def test_one_arrow_kernel_boundary():
-    """Map and column kernels cross Spark through ``functions/arrow.py``;
-    the only pandas kernel sites are the allowlisted ones."""
+    """Map, grouped and column kernels cross Spark through
+    ``functions/arrow.py``; the only pandas kernel sites are the
+    allowlisted ones."""
     assert set(_pandas_sites()) == set(PANDAS_SITES)
 
 
@@ -202,3 +202,43 @@ def test_one_state_kernel_per_recurrence():
     assert sites == set(STATE_SITES)
     assert {op: _loops(bars[op]) for op in STATE_KERNEL_OPS} == {op: [] for op in STATE_KERNEL_OPS}
     assert _loops(_top_level("functions/sequential.py")["ewmst"]) == []
+
+
+#: a development-history reference ("round 12", "round-6", "r13") in a
+#: library comment or docstring; code literals in double backticks
+#: (``r4``, ``r2 = ...``) are names, not history
+HISTORY = re.compile(r"(?i:\bround)[- ]?\d+|\br1?\d\b")
+
+
+def _comment_lines():
+    """``(path:line, text)`` of every comment and docstring line of the
+    library."""
+    import ast
+    import io
+    import pathlib
+    import tokenize
+
+    root = pathlib.Path(finmlkit_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        rel = path.relative_to(root)
+        for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+            if tok.type == tokenize.COMMENT:
+                yield f"{rel}:{tok.start[0]}", tok.string
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+                doc = ast.get_docstring(node, clean=False)
+                start = node.body[0].lineno if doc else 0
+                for i, line in enumerate((doc or "").splitlines()):
+                    yield f"{rel}:{start + i}", line
+
+
+def test_no_round_history_in_comments():
+    """Comments and docstrings state invariants and measurements, not
+    the development round that produced them."""
+    offenders = [
+        f"{where}: {text.strip()}"
+        for where, text in _comment_lines()
+        if HISTORY.search(re.sub(r"``.*?``", "", text))
+    ]
+    assert offenders == []

@@ -86,18 +86,33 @@ def _splits(df) -> int:
     return plan.count('catalyst.expressions.StringSplit"')
 
 
+def _filters(df) -> int:
+    """Stopword-hit filters in the optimized plan (``filter(`` over the
+    bound tokens; every counted column is aliased, so no generated
+    column name repeats the expression)."""
+    return df._jdf.queryExecution().optimizedPlan().toString().count("filter(")
+
+
 def test_one_tokenizer_split_per_doc(spark, docs):
     """Every multi-signal projection binds ``tokens(col)`` once: the
     optimized plan holds one StringSplit (the unbound forms had 5 in
     the filter, 3 in ``quality_score``), and the struct the streaming
     projection and ``lang_id`` select fields from is not collapsed
-    back into one copy per field."""
+    back into one copy per field. Each language's stopword hits are
+    counted once and shared by the stopword rule and the language
+    argmax: one filter per language (4), not 5 (English twice) in the
+    quality filter and the streaming projection and 8 in ``lang_id``."""
     from finmlkit_spark.suite.text_suite import lang_id
 
-    assert _splits(C.QualityFilter().apply(docs)) == 1
+    qf = C.QualityFilter().apply(docs)
+    stream = SC.with_curation_columns(docs)
+    langs = lang_id(spark, SF_SMALL)
+    assert _splits(qf) == 1
     assert _splits(docs.select(TX.quality_score())) == 1
-    assert _splits(SC.with_curation_columns(docs)) == 1
-    assert _splits(lang_id(spark, SF_SMALL)) == 1
+    assert _splits(stream) == 1
+    assert _splits(langs) == 1
+    assert [_filters(qf), _filters(stream), _filters(langs)] == [4, 4, 4]
+    assert _filters(C.QualityFilter(lang=None).apply(docs)) == 1
 
 
 @pytest.mark.parametrize(

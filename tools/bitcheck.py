@@ -27,7 +27,10 @@ import sys
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the library too: from this same checkout
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 from tools.check import TABLES, duck_con  # noqa: E402, F401
 
 NORMALIZE_ZERO = os.environ.get("FMK_NORMALIZE_ZERO", "0") == "1"
