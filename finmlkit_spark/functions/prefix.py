@@ -3,9 +3,12 @@
 Several operators reduce cross-chunk state to a summary with one row
 per time chunk or bucket, then need, for every key, an aggregate over
 all STRICTLY EARLIER keys: the bucket offsets of
-``chunked_window.with_global_row_number``, the chunk carry of
-``preprocess.chunked_side_frame`` and the carried close of
-``bars.fill_empty_bars``.
+``chunked_window.with_global_row_number``, the chunk carries of
+``preprocess.chunked_side_frame`` and ``bars.fill_empty_bars``, the
+span-marker offsets of ``labels.concurrency`` and ``labels.span_sweep``
+(whose driver pivot calls :func:`local_prefix`), the cumulative
+uniqueness of ``labels.time_decay`` and the cumulative weight of
+``sampling.weighted_sample``.
 
 Up to :data:`DRIVER_MAX_KEYS` rows, the summary goes through the one
 driver gate (``cache.collect_if_small``), is prefixed in NumPy
@@ -15,8 +18,16 @@ exchange. Above it, or under ``cache._FORCE_DISTRIBUTED``,
 SinglePartition`` (a global ``Window.orderBy``) nor O(k²) pairs (a
 triangular self-join): a window partitioned by group ``floor(key / g)``
 gives the in-group prefix and the k/g group totals go through the
-triangular join, O(k·log g) + O((k/g)²). Sums are of integer columns
-and ``lasts`` are carried unchanged, so both sides return the same bits.
+triangular join, O(k·log g) + O((k/g)²).
+
+Sums keep their input type: int64 (exact on both sides) or float64.
+A float sum is the fold in key order, ``sum() OVER (ORDER BY key ROWS
+BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)``: exactly on the driver;
+on the scale side reassociated only at group boundaries (group offset +
+in-group prefix, each folded in key order), so no bit depends on the
+partition count, and the two sides agree bit for bit when all keys fall
+in one :data:`_GROUP`. ``lasts`` are carried unchanged. An empty
+summary gives zero rows in the declared types on both sides.
 """
 
 from __future__ import annotations
@@ -57,8 +68,11 @@ def local_prefix(
     tbl = tbl.sort_by(key)
     cols = {key: tbl.column(key)}
     for out, c in sums.items():
-        v = pc.fill_null(tbl.column(c), 0).to_numpy().astype(np.int64)
-        cols[out] = pa.array(np.cumsum(v) - v)
+        dt = np.float64 if pa.types.is_floating(tbl.column(c).type) else np.int64
+        v = pc.fill_null(tbl.column(c), 0).to_numpy().astype(dt)
+        run = np.zeros_like(v)  # the shifted fold, not cumsum - v: exact for floats
+        run[1:] = np.cumsum(v)[:-1]
+        cols[out] = pa.array(run)
     for out, c in lasts.items():
         cols[out] = _last_before(tbl.column(c).combine_chunks())
     return pa.table(cols)
@@ -73,8 +87,10 @@ def exclusive_prefix(
     """Attach strictly-exclusive prefix aggregates to a keyed table.
 
     ``df`` must have ONE row per ``key`` (an integer chunk/bucket id).
-    ``sums`` maps output column → integer input column: output = SUM of
-    the input over all rows with a strictly smaller key (0 when none).
+    ``sums`` maps output column → numeric input column: output = SUM of
+    the input over all rows with a strictly smaller key (0 when none),
+    int64 for integer inputs and float64 for float inputs, folded in
+    key order (see the module docstring for the float contract).
     ``lasts`` maps output column → input column: output = the input
     value on the largest strictly-smaller key where it is non-null
     (NULL when none) — the "carry state from the latest earlier chunk"
@@ -96,11 +112,23 @@ def _last_nonnull(val: Column, ordc: Column) -> Column:
     return F.max_by(val, F.when(val.isNotNull(), ordc))
 
 
+def _fold(val: Column, ordc: Column, zero: Column) -> Column:
+    """SUM of ``val`` folded in ``ordc`` order: the rows are sorted
+    before the fold, so float bits do not depend on how they arrived."""
+    items = F.array_sort(F.collect_list(F.struct(ordc.alias("o"), val.alias("v"))))
+    return F.aggregate(items, zero, lambda acc, x: acc + F.coalesce(x["v"], zero))
+
+
 def two_level(
     df: DataFrame, key: str, sums: dict[str, str], lasts: dict[str, str]
 ) -> DataFrame:
     """The scale side of :func:`exclusive_prefix`, planned over ``df``
     (referenced twice: the in-group window and the group totals)."""
+    types = dict(df.dtypes)
+    zero = {
+        out: F.lit(0).cast("double" if types[c] in ("float", "double") else "long")
+        for out, c in sums.items()
+    }
     pg = F.floor(F.col(key) / F.lit(int(_GROUP)))
     d = df.withColumn("_pg", pg)
     w = (
@@ -115,7 +143,7 @@ def two_level(
 
     # per-group totals from the RAW input (no dependency on the window
     # columns above — keeps the group-total subtree window-free)
-    aggs = [F.sum(c).alias(f"_gt_{out}") for out, c in sums.items()]
+    aggs = [_fold(F.col(c), F.col(key), zero[out]).alias(f"_gt_{out}") for out, c in sums.items()]
     aggs += [
         _last_nonnull(F.col(c), F.col(key)).alias(f"_gt_{out}")
         for out, c in lasts.items()
@@ -128,7 +156,7 @@ def two_level(
         F.col("_pg").alias("_pgb"),
         *[F.col(f"_gt_{o}").alias(f"_gtb_{o}") for o in outs],
     )
-    goff_aggs = [F.sum(f"_gtb_{o}").alias(f"_go_{o}") for o in sums]
+    goff_aggs = [_fold(F.col(f"_gtb_{o}"), F.col("_pgb"), zero[o]).alias(f"_go_{o}") for o in sums]
     goff_aggs += [
         _last_nonnull(F.col(f"_gtb_{o}"), F.col("_pgb")).alias(f"_go_{o}")
         for o in lasts
@@ -141,8 +169,8 @@ def two_level(
     d = d.join(F.broadcast(goff), "_pg", "left")
     d = d.withColumns(
         {
-            out: F.coalesce(F.col(f"_go_{out}"), F.lit(0))
-            + F.coalesce(F.col(f"_in_{out}"), F.lit(0))
+            out: F.coalesce(F.col(f"_go_{out}"), zero[out])
+            + F.coalesce(F.col(f"_in_{out}"), zero[out])
             for out in sums
         }
         | {

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import cache
+from ..functions.prefix import exclusive_prefix, local_prefix
 from ..functions.sqlstage import sql_stage
 from .joins import range_join
 
@@ -205,45 +206,56 @@ FROM t
     )
 
 
-def concurrency(
-    spans: DataFrame, trades: DataFrame, chunk_ns: int = 3_600_000_000_000
-) -> DataFrame:
+#: time-chunk width of :func:`concurrency`'s running sum (one hour)
+_CONC_CHUNK_NS = 3_600_000_000_000
+
+
+def _markers(spans: DataFrame) -> DataFrame:
+    """``(ts_ns, delta)``: +1 at each span's start, −1 just past its end."""
+    m = F.explode(F.array(
+        F.struct(F.col("event_ts_ns").alias("ts_ns"), F.lit(1).alias("delta")),
+        F.struct((F.col("touch_ts_ns") + 1).alias("ts_ns"), F.lit(-1).alias("delta")),
+    ))
+    return spans.select(m.alias("m")).select("m.*")
+
+
+def _span_offsets(spans: DataFrame, ck: int) -> DataFrame:
+    """``(_ck, _doff)`` from ``spans`` alone: for each chunk
+    ``floor(ts / ck)`` between the first and the last marker's, spans
+    opened minus closed in all strictly earlier chunks. The ±1 deltas
+    sum to 0, so a chunk off this axis has offset 0."""
+    per = _markers(spans).groupBy(
+        F.floor(F.col("ts_ns") / F.lit(ck)).alias("_ck")
+    ).agg(F.sum("delta").alias("_dt"))
+    axis = per.select(F.explode(F.sequence(F.min("_ck"), F.max("_ck"))).alias("_ck"))
+    # a chunk without markers joins a NULL delta, which the prefix sums as 0
+    return exclusive_prefix(axis.join(per, "_ck", "left"), "_ck", sums={"_doff": "_dt"})
+
+
+def concurrency(spans: DataFrame, trades: DataFrame) -> DataFrame:
     """c(t): number of open event spans at each trade ts (sweep line,
     reference ``weights.py:7-49``). ``spans``: (event_ts_ns, touch_ts_ns).
 
     Markers sort before trades at equal ts, so a span [s, e] is active for
     trades with s <= t <= e.
 
-    Scale: the running sum is an EXACT chunked two-pass prefix sum —
-    within-chunk cumsum under a ``Window.partitionBy(chunk)`` (parallel),
-    plus a broadcast of per-chunk totals cumulated over the tiny chunk
-    table. Integer deltas are associative, so this equals the global
-    ordered window without ever moving the trade stream to one partition.
+    c is exact: the in-chunk running Σdelta plus the chunk's offset from
+    :func:`_span_offsets`. Trades carry delta 0, so the offsets need no
+    trade and the trade stream is read once, never on one partition.
     """
-    markers = spans.select(
-        F.col("event_ts_ns").alias("ts_ns"), F.lit(1).alias("delta")
-    ).unionByName(
-        spans.select((F.col("touch_ts_ns") + 1).alias("ts_ns"), F.lit(-1).alias("delta"))
-    ).withColumn("prio", F.lit(0))
-    tr = trades.select("ts_ns").withColumn("delta", F.lit(0)).withColumn("prio", F.lit(1))
-    u = markers.unionByName(tr).withColumn(
-        "_chunk", F.floor(F.col("ts_ns") / F.lit(chunk_ns))
+    tr = trades.select("ts_ns", F.lit(0).alias("delta"), F.lit(1).alias("prio"))
+    u = _markers(spans).withColumn("prio", F.lit(0)).unionByName(tr).withColumn(
+        "_ck", F.floor(F.col("ts_ns") / F.lit(_CONC_CHUNK_NS))
     )
     w_in = (
-        Window.partitionBy("_chunk")
+        Window.partitionBy("_ck")
         .orderBy("ts_ns", "prio")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     u = u.withColumn("_cum_in", F.sum("delta").over(w_in))
-    # per-chunk totals -> cumulative offset of all PRIOR chunks; the chunk
-    # table is tiny (one row per chunk), so its ordered window is free
-    tot = u.groupBy("_chunk").agg(F.sum("delta").alias("_tot"))
-    w_ch = Window.orderBy("_chunk").rowsBetween(Window.unboundedPreceding, -1)
-    off = tot.withColumn("_off", F.coalesce(F.sum("_tot").over(w_ch), F.lit(0))).select(
-        "_chunk", "_off"
-    )
-    c = u.join(F.broadcast(off), "_chunk").withColumn(
-        "c", F.col("_off") + F.col("_cum_in")
+    off = _span_offsets(spans, _CONC_CHUNK_NS)
+    c = u.join(F.broadcast(off), "_ck", "left").withColumn(
+        "c", F.coalesce(F.col("_doff"), F.lit(0)) + F.col("_cum_in")
     )
     return c.where(F.col("prio") == 1).select("ts_ns", "c")
 
@@ -298,10 +310,8 @@ def span_sweep(
     or recomputed:
 
     1. per-chunk concurrency offsets come from the SPANS table alone
-       (start/end counts per time chunk, cumulated over a dense k-row
-       chunk axis, cumulated by one ordered window over the k-row
-       axis — sum of all deltas is 0, so chunks outside the span range
-       coalesce to 0);
+       (:func:`_span_offsets`: ±1 deltas per chunk over the dense chunk
+       axis, through the one exclusive prefix);
     2. one exchange+sort of (trades ∪ markers) by time chunk feeds a
        first window pass (in-chunk running Σdelta and the chunk-head
        row number), a broadcast join of the offsets (c = exact integer),
@@ -310,66 +320,29 @@ def span_sweep(
        per-chunk S/N totals;
     3. only marker rows and chunk-head rows survive the filter
        (2·|events| + k rows); chunk-head rows carry the per-chunk S/N
-       totals into an ordered-window prefix (cross-chunk offsets), markers
+       totals into a key-order prefix (cross-chunk offsets), markers
        read their offset + in-chunk running value, and a per-event
        pivot of the two markers emits the quotient.
 
     Driver gate (:func:`cache.collect_if_small`): a summary of at most
     ``SWEEP_DRIVER_MAX_ROWS`` rows is pivoted in numpy
-    (:func:`_sweep_pivot_driver`) and replanted as a LocalTableScan;
-    a larger one is pivoted in SQL over its lineage cut. The sweep
-    executes exactly once either way, and the two pivots return
+    (:func:`_sweep_pivot_driver`), a larger one in SQL over its lineage
+    cut; the sweep executes once either way, and the two pivots return
     bit-identical rows (pinned by test).
 
-    Scale: the trade stream crosses the wire ONCE (the chunk exchange);
-    the range-join form (`average_uniqueness`) shuffles it twice more
-    and materializes |span|·|events|-bounded join rows. Float posture:
-    S is a prefix-sum difference, so values match the per-span fold at
-    the reassociation floor (~1e-13 rel after cancellation) — inside
-    the driver-tolerated quantum, but use the range-join form when
-    bit-reproducing a per-span fold matters.
+    Scale: the trade stream crosses the wire ONCE (the chunk exchange).
+    S is a prefix-sum difference, so values match the per-span fold of
+    the range-join form (`average_uniqueness`) at the reassociation
+    floor (~1e-13 rel after cancellation).
     """
     ck = int(chunk_ns)
     val_expr = val_col if val_col is not None else "1.0"
-    # -- (1) + (2): one server-parsed SQL stage (a single JVM analysis
-    # pass; the op-chained form cost ~0.9 s of eager driver-side
-    # analysis per build at sf0.1, SCALE.md item 10). Concurrency
-    # offsets come from the SPANS table alone (start/end deltas per
-    # time chunk over a dense explode(sequence) axis, cumulated by ONE
-    # ordered window over the k-row axis — a SinglePartition exchange,
-    # deliberately: k is the TIME-CHUNK count (~9k/year hourly),
-    # bounded at any data scale — O(k log k) beats both the O(k²)
-    # triangular join and the two-level group machinery). The spans
-    # frame is referenced exactly TWICE (the ±1 marker pairs come from
-    # one lateral-view expansion per consumer, not per-delta UNION
-    # branches) and callers pass it through a storage boundary, so each
-    # reference is a cheap bounded re-scan, never a data-scale
-    # recompute. Then ONE exchange+sort of (trades ∪ markers) by time
-    # chunk feeds the in-chunk running Σdelta / row number, the
-    # broadcast offset join (c = exact integer), and a second window
-    # pass in the SAME partitioning/order (no new exchange): in-chunk
-    # running S and N plus full-frame per-chunk S/N totals. Null _val →
-    # null term → skipped by SUM (SQL semantics).
+    # -- (1) + (2): one server-parsed SQL stage (one JVM analysis pass,
+    # SCALE.md item 10). The spans frame is read by one lateral-view
+    # expansion and callers pass it through a storage boundary, so the
+    # read is a bounded re-scan. Null _val → null term → skipped by SUM.
     small_sql = f"""
-WITH per_ck AS (
-  SELECT floor(ts_ns / {ck}) AS _ck, sum(_delta) AS _dt FROM (
-    SELECT CASE WHEN _is_start = 1 THEN event_ts_ns ELSE touch_ts_ns + 1 END AS ts_ns,
-           CASE WHEN _is_start = 1 THEN 1 ELSE -1 END AS _delta
-    FROM {{spans}} LATERAL VIEW explode(array(1, 0)) AS _is_start
-  ) GROUP BY 1
-),
-axis AS (
-  SELECT explode(sequence(_lo, _hi)) AS _ck FROM (
-    SELECT min(_ck) AS _lo, max(_ck) AS _hi FROM per_ck
-  )
-),
-doff AS (
-  SELECT axis._ck,
-         coalesce(sum(_dt) OVER (ORDER BY axis._ck
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS _doff
-  FROM axis LEFT JOIN per_ck ON axis._ck = per_ck._ck
-),
-mk AS (
+WITH mk AS (
   SELECT event_id, event_ts_ns,
          CASE WHEN _is_start = 1 THEN event_ts_ns ELSE touch_ts_ns + 1 END AS ts_ns,
          CASE WHEN _is_start = 1 THEN 1 ELSE -1 END AS _delta,
@@ -399,7 +372,7 @@ terms AS (
          CASE WHEN _prio = 1 AND coalesce(doff._doff, 0) + w1._cd > 0
               THEN _val / (coalesce(doff._doff, 0) + w1._cd) END AS _s_term,
          CASE WHEN _prio = 1 THEN 1 ELSE 0 END AS _n_term
-  FROM w1 LEFT JOIN doff ON w1._ck = doff._ck
+  FROM w1 LEFT JOIN {{doff}} doff ON w1._ck = doff._ck
 ),
 w2 AS (
   SELECT *,
@@ -422,14 +395,18 @@ FROM w2 WHERE _prio = 0 OR _rn = 1
     # whole sweep (plans are trees — no automatic reuse). The cut also
     # truncates the analyzed plan, so the pivot re-analyzes a leaf.
     small, tbl = cache.collect_if_small(
-        sql_stage(small_sql, spans=spans, trades=trades), SWEEP_DRIVER_MAX_ROWS
+        sql_stage(small_sql, spans=spans, trades=trades, doff=_span_offsets(spans, ck)),
+        SWEEP_DRIVER_MAX_ROWS,
     )
     if tbl is not None:
         return _sweep_pivot_driver(spans.sparkSession, tbl)
     # -- (3) small-table machinery (2|events| + k rows): cross-chunk S/N
-    # offsets via the same ordered-window prefix over the k-row
-    # chunk-head table, markers read offset + in-chunk running value,
-    # and a per-event pivot of the two markers emits the span sums.
+    # offsets over the k-row chunk-head table, markers read offset +
+    # in-chunk running value, and a per-event pivot of the two markers
+    # emits the span sums. The offsets stay a k-row ordered window, not
+    # prefix.exclusive_prefix: this pivot must equal the driver pivot
+    # bit for bit at any k, and the two-level prefix reassociates the
+    # float S fold at its group boundaries.
     piv_sql = f"""
 WITH heads AS (
   SELECT _ck, _s_tot, _n_tot FROM {{small}} WHERE _rn = 1
@@ -465,19 +442,17 @@ def _sweep_pivot_driver(spark, tbl) -> DataFrame:
     (pinned by test):
 
     - cross-chunk offsets: the SQL ``sum() OVER (ORDER BY _ck ROWS
-      UNBOUNDED PRECEDING TO 1 PRECEDING)`` is a sequential running
-      fold over the _ck-sorted heads == ``np.cumsum`` (sequential
-      accumulation, NOT pairwise) shifted by one;
+      UNBOUNDED PRECEDING TO 1 PRECEDING)`` is the sequential fold over
+      the _ck-sorted heads, which is what ``prefix.local_prefix``
+      computes;
     - per-marker value: ``_soff + _s_in`` — same two operands, one add;
     - per-event span: the SQL ``max(CASE WHEN _is_start...)`` picks the
       single non-null end/start value per event — here the literal
       end − start over the event's two marker rows.
 
-    Why not plant the small table and keep the SQL pivot: even over a
-    LocalTableScan the pivot costs 2-3 AQE jobs of pure scheduling; the
-    numpy pivot is <1 ms at bounded sizes and the final local re-plant
-    is one job at action time. Arrow preserves int64/float64 bits and
-    NULLs exactly in both directions."""
+    The numpy pivot is <1 ms at bounded sizes where the SQL pivot over
+    a LocalTableScan costs 2-3 AQE jobs; Arrow keeps int64/float64 bits
+    and NULLs exact in both directions."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -485,18 +460,17 @@ def _sweep_pivot_driver(spark, tbl) -> DataFrame:
     # filter BEFORE to_numpy: the full table has NULL event ids on
     # chunk-head trade rows, and pyarrow converts nullable int64 to
     # float64 (lossy above 2^53 — event_ts_ns is ~1.6e18)
-    heads = tbl.filter(pc.equal(tbl.column("_rn"), 1)).sort_by("_ck")
+    heads = local_prefix(
+        tbl.filter(pc.equal(tbl.column("_rn"), 1)),
+        "_ck",
+        {"_soff": "_s_tot", "_noff": "_n_tot"},
+        {},
+    )
     marks = tbl.filter(pc.equal(tbl.column("_prio"), 0))
 
     hk = heads.column("_ck").to_numpy()
-    s_tot = heads.column("_s_tot").to_numpy()
-    n_tot = heads.column("_n_tot").to_numpy()
-    soff = np.concatenate(([0.0], np.cumsum(s_tot)[:-1])) if len(hk) else np.empty(0)
-    noff = (
-        np.concatenate(([0], np.cumsum(n_tot)[:-1]))
-        if len(hk)
-        else np.empty(0, dtype=np.int64)
-    )
+    soff = heads.column("_soff").to_numpy()
+    noff = heads.column("_noff").to_numpy()
 
     eid = marks.column("event_id").to_numpy()
     ets = marks.column("event_ts_ns").to_numpy()
@@ -607,36 +581,41 @@ def return_attribution(
     return out
 
 
-def time_decay(
-    events_u: DataFrame, last_weight: float = 0.5, chunk_ns: int = 86_400_000_000_000
-) -> DataFrame:
+#: time-chunk width of :func:`time_decay`'s running sum (one day)
+_DECAY_CHUNK_NS = 86_400_000_000_000
+
+#: a chunk key after every real day chunk (event_ts_ns is int64)
+_AFTER_LAST_CHUNK = 2**62
+
+
+def time_decay(events_u: DataFrame, last_weight: float = 0.5) -> DataFrame:
     """Linear decay on cumulative uniqueness, newest weight 1.0, oldest
     ``last_weight`` (∈ [−1,1]), clipped at 0 (reference ``weights.py:106-142``).
 
-    The running sum uses the same chunked two-pass prefix sum as
-    ``concurrency`` (within-chunk cumsum + broadcast per-chunk offsets),
-    so the event table never collapses to a single ordered partition.
-    Reassociating the float sum moves each prefix by ~k·ε relative —
-    orders of magnitude inside any comparison tolerance.
+    The cumulative uniqueness is one fold in ``(event_ts_ns, event_id)``
+    order: an in-chunk running sum per day plus the chunk's offset, the
+    exclusive prefix of the chunk totals (each the running sum at the
+    chunk's last event). The grand total is that prefix past the last
+    chunk, so no bit depends on how the input is partitioned.
     """
-    df = events_u.withColumn("_chunk", F.floor(F.col("event_ts_ns") / F.lit(chunk_ns)))
+    df = events_u.withColumn("_ck", F.floor(F.col("event_ts_ns") / F.lit(_DECAY_CHUNK_NS)))
     w_in = (
-        Window.partitionBy("_chunk")
+        Window.partitionBy("_ck")
         .orderBy("event_ts_ns", "event_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     df = df.withColumn("_cum_in", F.sum("uniqueness").over(w_in))
-    tot_ch = df.groupBy("_chunk").agg(F.sum("uniqueness").alias("_tot"))
-    w_ch = Window.orderBy("_chunk").rowsBetween(Window.unboundedPreceding, -1)
-    off = tot_ch.withColumn(
-        "_off", F.coalesce(F.sum("_tot").over(w_ch), F.lit(0.0))
-    ).select("_chunk", "_off")
-    df = df.join(F.broadcast(off), "_chunk").withColumn(
+    tot = df.groupBy("_ck").agg(
+        F.max_by("_cum_in", F.struct("event_ts_ns", "event_id")).alias("_tot")
+    )
+    after = tot.sparkSession.range(1).select(F.lit(_AFTER_LAST_CHUNK).alias("_ck"), F.lit(0.0).alias("_tot"))
+    off = exclusive_prefix(tot.unionByName(after), "_ck", sums={"_off": "_tot"})
+    # the prefix past the last chunk is the grand total
+    off = off.withColumn("_tot_u", F.max_by("_off", "_ck").over(Window.partitionBy()))
+    df = df.join(F.broadcast(off), "_ck").withColumn(
         "cum_u", F.col("_off") + F.col("_cum_in")
     )
-    tot = events_u.agg(F.sum("uniqueness").alias("tot_u"))
-    df = df.crossJoin(F.broadcast(tot))
-    decay = F.lit(last_weight) + (1.0 - last_weight) * F.col("cum_u") / F.col("tot_u")
+    decay = F.lit(last_weight) + (1.0 - last_weight) * F.col("cum_u") / F.col("_tot_u")
     return df.select(
         "event_id", "event_ts_ns", F.greatest(decay, F.lit(0.0)).alias("decay_weight")
     )

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import arrow
+from ..functions.prefix import exclusive_prefix
 from .text import poly_hash, token_count
 
 
@@ -201,13 +202,16 @@ def doc_chunks(
     )
 
 
+#: doc ids per chunk of :func:`weighted_sample`'s cumulative weight
+_WEIGHT_CHUNK = 8192
+
+
 def weighted_sample(
     docs: DataFrame,
     k: int = 64,
     weight=None,
     id_col: str = "doc_id",
     seed: int = 7,
-    chunk: int | None = None,
 ) -> DataFrame:
     """Exact weighted sampling WITH replacement: ``k`` deterministic
     draws where doc ``d`` is selected with probability ``w_d / W`` —
@@ -226,32 +230,21 @@ def weighted_sample(
     selected doc is the one whose interval [cum_lo, cum_hi) in
     doc_id-order contains ``p_j``.
 
-    Scale shape: the global prefix sum NEVER globally sorts the corpus
-    — docs chunk by ``id // C`` (C footer-derived so the chunk axis
-    stays ≤ ~4k rows; assumes dense-ish ids like the reference's doc
-    ids — pre-densify sparse id spaces first), per-chunk sums take the
-    sanctioned ordered-window prefix on the CHUNK-AXIS table (class-b
-    SinglePartition: bounded at any corpus size), offsets broadcast
-    back, and the interval lookup is a bucketed containment join
-    (bucket = value // max_weight, each interval spans ≤ 2 buckets, the
-    k draws broadcast) — the ``range_join`` idiom, no cartesian, no
-    corpus-scale sort."""
+    Scale shape: docs chunk by ``id // 8192`` (assumes dense-ish ids —
+    pre-densify sparse id spaces first; empty chunks give no row), the
+    chunk sums take their offsets from the one exclusive prefix
+    (``prefix.exclusive_prefix``, int64, so exact on both sides), and
+    the interval lookup is a bucketed containment join (bucket = value
+    // max_weight, each interval spans ≤ 2 buckets, the k draws
+    broadcast): no cartesian, no corpus sort, no ``Exchange
+    SinglePartition``."""
     w_expr = token_count() if weight is None else weight
     d = docs.select(
         F.col(id_col).alias("doc"), w_expr.cast("long").alias("w")
     ).where(F.col("w") > 0)
-    if chunk is None:
-        # bound the chunk axis at ~4k rows for dense ids; one tiny agg
-        # would also do, but max(id) needs a scan — use a generous
-        # fixed width and let empty chunks vanish (they produce no row)
-        chunk = 8192
-    d = d.withColumn("_ck", F.expr(f"doc DIV {int(chunk)}"))
+    d = d.withColumn("_ck", F.expr(f"doc DIV {_WEIGHT_CHUNK}"))
     per_chunk = d.groupBy("_ck").agg(F.sum("w").alias("_cw"))
-    # sanctioned class-b ordered prefix over the bounded chunk axis
-    woff = Window.orderBy("_ck").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = per_chunk.select(
-        "_ck", F.coalesce(F.sum("_cw").over(woff), F.lit(0)).alias("_off")
-    )
+    offsets = exclusive_prefix(per_chunk, "_ck", sums={"_off": "_cw"})
     wloc = Window.partitionBy("_ck").orderBy("doc").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -260,15 +253,11 @@ def weighted_sample(
         .withColumn("_hi", F.sum("w").over(wloc) + F.col("_off"))
         .withColumn("_lo", F.col("_hi") - F.col("w"))
     )
-    scalars = d.agg(
-        F.sum("w").alias("W"), F.max("w").alias("B")
-    ).collect()[0]
+    scalars = d.agg(F.sum("w").alias("W"), F.max("w").alias("B")).collect()[0]
     total, bucket = int(scalars["W"] or 0), int(scalars["B"] or 1)
     spark = docs.sparkSession
     if total <= 0:
-        return spark.createDataFrame(
-            [], f"draw_id long, {id_col} long, weight long"
-        )
+        return spark.createDataFrame([], f"draw_id long, {id_col} long, weight long")
     # k draws: multiplicative avalanche of (seed, j), exact in int64
     draws = spark.range(k).select(
         F.col("id").alias("draw_id"),

@@ -89,6 +89,15 @@ def test_scale_scans_take_no_unused_knob():
     ]
     assert offenders == []
     assert "rn_col" not in inspect.signature(S.atr_ema_parallel).parameters
+    # the chunk widths of the label and sampling prefixes are module
+    # constants: no caller ever set them
+    from finmlkit_spark.operators import labels as L
+    from finmlkit_spark.operators import sampling as SP
+
+    knobs = {L.concurrency: "chunk_ns", L.time_decay: "chunk_ns", SP.weighted_sample: "chunk"}
+    assert [
+        f"{fn.__name__}({p})" for fn, p in knobs.items() if p in inspect.signature(fn).parameters
+    ] == []
 
 
 def test_exclusive_prefix_takes_no_group():
@@ -97,6 +106,41 @@ def test_exclusive_prefix_takes_no_group():
     from finmlkit_spark.functions.prefix import exclusive_prefix
 
     assert "group" not in inspect.signature(exclusive_prefix).parameters
+
+
+#: a hand-rolled exclusive prefix: a running aggregate over all strictly
+#: earlier rows, in the DataFrame API or in SQL
+EXCLUSIVE_PREFIX = re.compile(
+    r"rowsBetween\(\s*Window\.unboundedPreceding,\s*-1\s*\)|PRECEDING AND 1 PRECEDING"
+)
+
+#: (module path, top-level function) -> why it builds its own prefix
+PREFIX_SITES = {
+    ("operators/labels.py", "span_sweep"):
+        "its SQL pivot must equal the numpy driver pivot bit for bit at any "
+        "chunk count, which the two-level prefix cannot promise across groups",
+}
+
+
+def test_one_exclusive_prefix():
+    """Cross-chunk offsets in the operators and functions come from
+    ``functions/prefix.py``; the only other exclusive prefix is the
+    allowlisted one."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(finmlkit_spark.__file__).parent
+    sites = set()
+    for sub in ("operators", "functions"):
+        for path in sorted((root / sub).rglob("*.py")):
+            rel = str(path.relative_to(root))
+            if rel == "functions/prefix.py":
+                continue
+            src = path.read_text()
+            for top in ast.parse(src).body:
+                if EXCLUSIVE_PREFIX.search(ast.get_source_segment(src, top) or ""):
+                    sites.add((rel, getattr(top, "name", "<module>")))
+    assert sites == set(PREFIX_SITES)
 
 
 #: the pandas kernel sites left outside ``functions/arrow.py``:

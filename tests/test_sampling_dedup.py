@@ -728,9 +728,9 @@ def test_weighted_sample_empty_and_plan(spark):
     df = SP.weighted_sample(docs, k=16)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Cartesian" not in plan
-    # the ONLY SinglePartition is the sanctioned chunk-axis prefix
-    # (bounded rows at any corpus size); the doc-scale side hashes
-    assert plan.count("Exchange SinglePartition") <= 1
+    # the chunk offsets come from the one exclusive prefix and the
+    # doc-scale side hashes: nothing moves to a single partition
+    assert plan.count("Exchange SinglePartition") == 0
 
 
 def test_tfidf_cosine_pairs_matches_python_reference(spark):

@@ -44,6 +44,7 @@ GATED = [
     "dedup_keep_best",
     "diverse_sample",
     "dup_graph_pagerank",
+    "event_concurrency",
     "feat_vpin",
     "gopher_repetition",
     "keep_central",
@@ -53,7 +54,9 @@ GATED = [
     "seq_cusum_filter_chunked",
     "seq_ewma_parallel",
     "seq_ewms_parallel",
+    "time_decay",
     "trades_side",
+    "weighted_sample",
 ]
 
 

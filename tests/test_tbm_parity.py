@@ -381,3 +381,54 @@ def test_span_sweep_degenerate_inputs_both_states(spark, gate_sides):
         assert drv == dist, (name, drv, dist)
         if name == "empty":
             assert drv == []
+
+
+def test_time_decay_ignores_partitioning(spark, gate_sides):
+    """time_decay over a seeded six-day event table returns the same
+    float64 bits however its input is partitioned, on both sides of the
+    prefix gate; the newest event weighs exactly 1.0 and every weight
+    is within 1e-12 of the one-pass sequential fold."""
+    rng = np.random.default_rng(5)
+    D = 86_400_000_000_000
+    n = 4000
+    ts = np.sort(rng.integers(0, 6 * D, n))
+    uniq = rng.uniform(0.01, 1.0, n) * 10.0 ** rng.integers(-3, 3, n)
+    rows = [(i, int(t), float(u)) for i, (t, u) in enumerate(zip(ts, uniq))]
+    u = spark.createDataFrame(rows, "event_id long, event_ts_ns long, uniqueness double")
+
+    def bits(df):
+        return {r["event_id"]: float.hex(r["decay_weight"]) for r in df.collect()}
+
+    def run():
+        return [bits(L.time_decay(u.repartition(p, "event_id"))) for p in (1, 7, 13)]
+
+    small, scale = gate_sides(run)
+    for side in (small, scale):
+        assert side[0] == side[1] == side[2]
+
+    order = sorted(rows, key=lambda r: (r[1], r[0]))
+    cum = np.cumsum([r[2] for r in order])
+    want = {r[0]: 0.5 + 0.5 * c / cum[-1] for r, c in zip(order, cum)}
+    for side in (small, scale):
+        assert float.fromhex(side[0][order[-1][0]]) == 1.0
+        for k, v in want.items():
+            assert abs(float.fromhex(side[0][k]) - v) <= 1e-12 * v, k
+
+
+def test_concurrency_reads_trades_once(spark):
+    """concurrency's chunk offsets come from the spans alone: its
+    executed plan scans the trade input once."""
+    trades = spark.range(0, 10_000, 7).select((F.col("id") * 1_000_000_000).alias("ts_ns"))
+    spans = spark.createDataFrame(
+        [(1, 5_000_000_000, 9_000_000_000_000), (2, 2 * 3_600_000_000_000, 3 * 3_600_000_000_000)],
+        "event_id long, event_ts_ns long, touch_ts_ns long",
+    )
+    c = L.concurrency(spans, trades)
+    assert c._jdf.queryExecution().executedPlan().toString().count("Range (") == 1
+    got = {r["ts_ns"]: r["c"] for r in c.collect()}
+    sp = spans.collect()
+    want = {
+        t: sum(s <= t <= e for _, s, e in sp)
+        for t in range(0, 10_000 * 1_000_000_000, 7_000_000_000)
+    }
+    assert got == want
