@@ -21,11 +21,8 @@ HEADLINE = [
     "dollar_bars",
     "footprint_features",
     "tbm_labels",
-    # both uniqueness forms: the sweep is the 100 TB path (one exchange
-    # of the trade stream), the range-join form is the general-interval
-    # fallback — benching both makes the crossover visible per round
+    # the one-sweep average uniqueness (one exchange of the trade stream)
     "avg_uniqueness",
-    "avg_uniqueness_sweep",
     "seq_ewma",
     "seq_cusum_test",
     "minhash_lsh",
@@ -34,33 +31,33 @@ HEADLINE = [
     "ann_topk",
     "ann_ivf",
     "ann_pq_topk",
-    # round-11 addition: the composed IVFPQ search — the ANN scale path
+    # the composed IVFPQ search — the ANN scale path
     "ann_ivf_pq",
     "kmeans_clusters",
     "curation_pipeline",
     "bars_resample_15m",
     "user_hourly_bars",
-    # LLM-curation scale operators (round-3 additions: the dedup/semantic
-    # tier's scale claims get measured, not asserted)
+    # LLM-curation scale operators: the dedup/semantic tier's scale
+    # claims get measured, not asserted
     "semantic_dedup",
     "dedup_clusters",
     "dedup_clusters_star",
     "segment_dedup",
     "simhash_near_pairs",
     "ngram_jaccard",
-    # general star-schema analytics (round-4 additions: the classic
-    # join/agg shapes — pushdown scan, semi-join, HAVING rollup,
-    # scalar-subquery max — measured alongside the domain operators)
-    # round-5 additions: trade-scale median, span-level dedup, JL ANN
+    # trade-scale median, span-level dedup, JL ANN
     "burst_ratio_trades",
     "dup_span_ranges",
     "ann_projected_topk",
+    # general star-schema analytics: the classic join/agg shapes —
+    # pushdown scan, semi-join, HAVING rollup, scalar-subquery max —
+    # measured alongside the domain operators
     "pricing_summary",
     "forecast_revenue",
     "late_shipment_priority",
     "large_volume_orders",
     "top_supplier_revenue",
-    # late-round-11 additions: retrieval, product analytics, SQ8 ANN
+    # retrieval, product analytics, SQ8 ANN
     "inverted_index",
     "bm25_topk",
     "dup_graph_pagerank",
@@ -89,7 +86,7 @@ HEADLINE = [
     "pmi_top_pairs",
     "tfidf_cosine_pairs",
     "lsh_recall_audit",
-    # round-12 additions: the cardinality-sketch tier + LM-quality split
+    # the cardinality-sketch tier + LM-quality split
     "hll_user_count",
     "kmv_user_count",
     "kmv_overlap",
@@ -98,14 +95,14 @@ HEADLINE = [
     "cm_token_freq",
     "hybrid_search",
     "quantile_sketch_audit",
-    # round-13 addition: the production sketch path (per-occurrence
+    # the production sketch path (per-occurrence
     # xxhash64 + map-side partial reduction), oracle-gated through
     # KMV's below-k exactness
     "kmv_fast_user_count",
-    # r13 late: incremental-ingest round-trip — IO-bound by design (two
+    # incremental-ingest round-trip — IO-bound by design (two
     # store writes + read-back; see BENCH_NOTES), not a scan constant
     "store_upsert",
-    # r13 late: the materialized retrieval index served + gated (same
+    # the materialized retrieval index served + gated (same
     # IO-bound class: index write + read-back inside the query)
     "tfidf_index_topk",
     # NOT here: the seq_*_parallel closed-combine scans — their fixed
@@ -230,12 +227,9 @@ def main():
     flag_sec = timed_safe(flag)
     spark.catalog.clearCache()
 
-    # avg-uniqueness crossover: 4M trades x 40k overlapping spans. The
-    # range-join form materializes every (event, in-span trade) pair
-    # (~100 rows per event here; unbounded in span length); the fused
-    # sweep exchanges the trade stream once and reads prefix sums at the
-    # 80k marker rows. Records where the sweep's fixed small-table
-    # machinery pays for itself (at sf0.1's 1k events it does not).
+    # average uniqueness at scale: 4M trades x 40k overlapping spans
+    # (~100 in-span trades per event). The sweep exchanges the trade
+    # stream once and reads prefix sums at the 80k marker rows.
     from finmlkit_spark.operators import labels as LB
 
     n_uniq = 4_000_000
@@ -246,9 +240,6 @@ def main():
         F.col("id").alias("event_id"),
         (F.col("id") * 100_000_000_000).alias("event_ts_ns"),
         (F.col("id") * 100_000_000_000 + 250_000_000_000).alias("touch_ts_ns"),
-    )
-    uniq_rj_sec = timed_safe(
-        LB.average_uniqueness(uspans, LB.concurrency(uspans, utr), bucket_ns=3_600_000_000_000)
     )
     uniq_sw_sec = timed_safe(LB.average_uniqueness_sweep(uspans, utr))
     spark.catalog.clearCache()
@@ -284,9 +275,9 @@ def main():
     spark.catalog.clearCache()
 
     # --- headline queries: THREE staggered passes, each in a FRESH
-    # SparkSession (round-8 verdict item 2: three same-day measurements
-    # of identical code disagreed by ±30% under co-tenant load, so no
-    # single pass is trustworthy). Per query the recorded number is the
+    # SparkSession: three same-day measurements of identical code
+    # disagreed by ±30% under co-tenant load, so no single pass is
+    # trustworthy. Per query the recorded number is the
     # MIN across passes (each pass itself a warm best-of-2 — each run
     # rebuilds the plan AND executes it: driver-side plan construction
     # is real per-query latency, and iterative operators do distributed
@@ -309,12 +300,12 @@ def main():
                     "overwrite"
                 ).save()
                 for _ in range(2):
-                    # r14 measurement fix (r13 verdict item 1): drop the
-                    # tracked keep-persists BEFORE each timed run so the
-                    # timed region pays cache materialization — run 0 used
-                    # to leave InMemoryRelations populated and the timed
-                    # runs CacheManager-matched them for free, exempting
-                    # every cache.keep subtree from the timed work.
+                    # drop the tracked keep-persists BEFORE each timed run
+                    # so the timed region pays cache materialization —
+                    # otherwise run 0 leaves InMemoryRelations populated
+                    # and the timed runs CacheManager-match them for free,
+                    # exempting every cache.keep subtree from the timed
+                    # work.
                     cache.release_all()
                     t0 = time.time()
                     df = suite.QUERIES[name](spark, sf_dir)
@@ -328,7 +319,7 @@ def main():
                 times[name] = round(best, 4)
             except Exception as e:  # noqa: BLE001
                 # one broken query must not zero out the whole bench
-                # signal (round 2 lost its entire bench to one error)
+                # signal
                 errors[name] = f"{type(e).__name__}: {e}"[:300]
             finally:
                 # operators pin bounded side tables; the batch runner
@@ -373,8 +364,7 @@ def main():
 
     total = round(sum(times.values()), 4)
     # Key order is least- to most-important: the durable record keeps only
-    # the LAST ~2 kB of this line (round-6 lost its per-query totals to the
-    # tail window), so the synthetics and the build split go first and the
+    # the LAST ~2 kB of this line, so the synthetics and the build split go first and the
     # per-query totals + headline metric go last — truncation eats the
     # synthetics, never the totals.
     print(
@@ -384,12 +374,11 @@ def main():
                 "synthetic_feature_windows": tput(n_feat, feat_sec, features=6),
                 "synthetic_feature_windows_exact_frames": tput(n_feat, feat_exact_sec, features=6),
                 "synthetic_chunked_flagship_single_symbol": tput(n_flag, flag_sec, features=12),
-                "synthetic_avg_uniqueness_range_join": tput(n_uniq, uniq_rj_sec),
                 "synthetic_avg_uniqueness_sweep": tput(n_uniq, uniq_sw_sec),
                 "synthetic_minhash_lsh_50k_docs": tput(n_docs, dedup_syn_sec),
                 "query_floor_sec": round(floor_best, 4),
-                # co-tenant noise indicator: round-8 measured 1.4-2.3x
-                # inflation on shuffle-heavy queries while loadavg sat
+                # co-tenant noise indicator: 1.4-2.3x inflation was
+                # measured on shuffle-heavy queries while loadavg sat
                 # at 2-6 — pass_loadavg above gives the per-pass view
                 "loadavg": [round(x, 2) for x in os.getloadavg()],
                 "pass_loadavg": pass_loadavg,

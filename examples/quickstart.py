@@ -64,15 +64,15 @@ def main(sf_dir: str = "/root/testdata/sf0.001"):
     labels = L.triple_barrier(events, trades, horizon_ns=2 * HOUR_NS, bucket_ns=HOUR_NS)
     labels.groupBy("label").count().show()
 
-    # 5. sample weights: sweep-line concurrency -> average uniqueness
+    # 5. sample weights: average uniqueness, read at each span's sweep
+    #    markers in one pass over the trades
     spans = labels.select("event_id", "event_ts_ns", "touch_ts_ns")
-    conc = L.concurrency(spans, trades)
-    uniq = L.average_uniqueness(spans, conc, bucket_ns=HOUR_NS)
+    uniq = L.average_uniqueness_sweep(spans, trades, chunk_ns=HOUR_NS)
     uniq.orderBy("event_ts_ns").show(5)
 
     # 6. the bar store lifecycle (reference AddTimeBarH5 / TimeBarReader /
     #    H5Inspector): materialize once, upsert the next day's bars
-    #    idempotently (late round 13), read back re-aggregated to 15m,
+    #    idempotently, read back re-aggregated to 15m,
     #    inspect from the k-row _meta sidecar — never a rescan
     import tempfile
 

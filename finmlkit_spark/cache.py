@@ -90,7 +90,8 @@ def cut(df: DataFrame) -> DataFrame:
     operator chain: every Dataset op re-analyzes its whole subtree
     JVM-side, so ops stacked on a deep tree (triple barrier → sweep)
     pay seconds of repeated analysis that a LogicalRDD plan truncates
-    to nothing (measured −37% end-to-end on return_attribution_sweep).
+    to nothing (measured −37% end-to-end on the sweep's return
+    attribution).
     Costs one physical-planning pass up front and, unlike ``keep``,
     does not CacheManager-match plan rebuilds — each fresh build
     rematerializes. Scale note: checkpointed partitions are not

@@ -28,6 +28,9 @@ in-group prefix, each folded in key order), so no bit depends on the
 partition count, and the two sides agree bit for bit when all keys fall
 in one :data:`_GROUP`. ``lasts`` are carried unchanged. An empty
 summary gives zero rows in the declared types on both sides.
+
+:func:`ordered_sum` is that key-order fold as an aggregate; the sample
+weights' normalizers use it too.
 """
 
 from __future__ import annotations
@@ -112,9 +115,12 @@ def _last_nonnull(val: Column, ordc: Column) -> Column:
     return F.max_by(val, F.when(val.isNotNull(), ordc))
 
 
-def _fold(val: Column, ordc: Column, zero: Column) -> Column:
-    """SUM of ``val`` folded in ``ordc`` order: the rows are sorted
-    before the fold, so float bits do not depend on how they arrived."""
+def ordered_sum(val: Column, ordc: Column, zero: Column) -> Column:
+    """SUM of ``val`` folded in ``ordc`` order, NULL terms as ``zero``:
+    an aggregate whose rows are sorted before the fold, so float bits do
+    not depend on how they arrived. It holds a whole group in one task:
+    for summaries (one row per chunk, event or class), not data-scale
+    groups."""
     items = F.array_sort(F.collect_list(F.struct(ordc.alias("o"), val.alias("v"))))
     return F.aggregate(items, zero, lambda acc, x: acc + F.coalesce(x["v"], zero))
 
@@ -143,7 +149,7 @@ def two_level(
 
     # per-group totals from the RAW input (no dependency on the window
     # columns above — keeps the group-total subtree window-free)
-    aggs = [_fold(F.col(c), F.col(key), zero[out]).alias(f"_gt_{out}") for out, c in sums.items()]
+    aggs = [ordered_sum(F.col(c), F.col(key), zero[out]).alias(f"_gt_{out}") for out, c in sums.items()]
     aggs += [
         _last_nonnull(F.col(c), F.col(key)).alias(f"_gt_{out}")
         for out, c in lasts.items()
@@ -156,7 +162,7 @@ def two_level(
         F.col("_pg").alias("_pgb"),
         *[F.col(f"_gt_{o}").alias(f"_gtb_{o}") for o in outs],
     )
-    goff_aggs = [_fold(F.col(f"_gtb_{o}"), F.col("_pgb"), zero[o]).alias(f"_go_{o}") for o in sums]
+    goff_aggs = [ordered_sum(F.col(f"_gtb_{o}"), F.col("_pgb"), zero[o]).alias(f"_go_{o}") for o in sums]
     goff_aggs += [
         _last_nonnull(F.col(f"_gtb_{o}"), F.col("_pgb")).alias(f"_go_{o}")
         for o in lasts

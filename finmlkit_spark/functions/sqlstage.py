@@ -3,7 +3,7 @@
 Measured (SCALE.md item 10): every PySpark Dataset op is
 analyzed eagerly JVM-side against its WHOLE subtree, so an operator
 built as ~30 chained ops on a deep tree pays seconds of pure driver
-latency per build — `avg_uniqueness_sweep` spent 1.86 s building vs
+latency per build — the uniqueness sweep spent 1.86 s building vs
 0.53 s executing at sf0.1. A single ``spark.sql`` call expressing the
 same stage parses and analyzes once (~30 ms), and PySpark >= 3.5
 accepts DataFrames as named template parameters, so no temp-view

@@ -7,9 +7,9 @@ Spark-first:
 - triple barrier = bucketed range join (events × trades within the
   vertical-barrier horizon) + one conditional aggregation per event —
   no per-event Python loop, scales with the shuffle;
-- concurrency/uniqueness = sweep-line: +1/−1 markers unioned into the
-  trade stream, running-sum window, then an interval join back to the
-  event spans;
+- concurrency/uniqueness/attribution = sweep-line: +1/−1 markers
+  unioned into the trade stream, running-sum windows, and each span's
+  sums read at its own two markers (:func:`span_sweep`);
 - time decay / class balance = window cumsum + broadcast joins.
 
 All operators take a ``by`` symbol column implicitly via the caller's
@@ -23,9 +23,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import cache
-from ..functions.prefix import exclusive_prefix, local_prefix
+from ..functions.prefix import exclusive_prefix, local_prefix, ordered_sum
 from ..functions.sqlstage import sql_stage
-from .joins import range_join
 
 
 def triple_barrier(
@@ -260,21 +259,6 @@ def concurrency(spans: DataFrame, trades: DataFrame) -> DataFrame:
     return c.where(F.col("prio") == 1).select("ts_ns", "c")
 
 
-def average_uniqueness(spans: DataFrame, trades_c: DataFrame, bucket_ns: int | None = None) -> DataFrame:
-    """Per-event mean(1/c) over its span (reference ``weights.py:7-49``)."""
-    j = range_join(
-        spans.withColumn("start_excl", F.col("event_ts_ns") - 1),
-        trades_c,
-        "start_excl",
-        "touch_ts_ns",
-        "ts_ns",
-        bucket_ns=bucket_ns,
-    )
-    return j.groupBy("event_id", "event_ts_ns").agg(
-        F.avg(F.lit(1.0) / F.col("c")).alias("uniqueness")
-    )
-
-
 #: span_sweep's driver gate: at or below this many rows (2 per event +
 #: 1 per time-chunk head, ≈ 40 MB of narrow rows at the bound) the sweep
 #: summary is collected and the pivot runs in numpy; above it the summary
@@ -331,9 +315,13 @@ def span_sweep(
     bit-identical rows (pinned by test).
 
     Scale: the trade stream crosses the wire ONCE (the chunk exchange).
-    S is a prefix-sum difference, so values match the per-span fold of
-    the range-join form (`average_uniqueness`) at the reassociation
-    floor (~1e-13 rel after cancellation).
+    S is a prefix-sum difference, so values match a per-span fold at
+    the reassociation floor (~1e-13 rel after cancellation).
+
+    The sweep order is ``(ts_ns, _prio, _val)``: equal-ts trades share
+    one c but may carry different values, and ordering them by value
+    makes each running sum one fixed fold, whatever order the chunk
+    exchange delivers them in.
     """
     ck = int(chunk_ns)
     val_expr = val_col if val_col is not None else "1.0"
@@ -362,9 +350,9 @@ u AS (
 ),
 w1 AS (
   SELECT *,
-         sum(_delta) OVER (PARTITION BY _ck ORDER BY ts_ns, _prio
+         sum(_delta) OVER (PARTITION BY _ck ORDER BY ts_ns, _prio, _val
                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS _cd,
-         row_number() OVER (PARTITION BY _ck ORDER BY ts_ns, _prio) AS _rn
+         row_number() OVER (PARTITION BY _ck ORDER BY ts_ns, _prio, _val) AS _rn
   FROM u
 ),
 terms AS (
@@ -376,13 +364,13 @@ terms AS (
 ),
 w2 AS (
   SELECT *,
-         coalesce(sum(_s_term) OVER (PARTITION BY _ck ORDER BY ts_ns, _prio
+         coalesce(sum(_s_term) OVER (PARTITION BY _ck ORDER BY ts_ns, _prio, _val
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0.0d) AS _s_in,
-         sum(_n_term) OVER (PARTITION BY _ck ORDER BY ts_ns, _prio
+         sum(_n_term) OVER (PARTITION BY _ck ORDER BY ts_ns, _prio, _val
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS _n_in,
-         coalesce(sum(_s_term) OVER (PARTITION BY _ck ORDER BY ts_ns, _prio
+         coalesce(sum(_s_term) OVER (PARTITION BY _ck ORDER BY ts_ns, _prio, _val
                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING), 0.0d) AS _s_tot,
-         sum(_n_term) OVER (PARTITION BY _ck ORDER BY ts_ns, _prio
+         sum(_n_term) OVER (PARTITION BY _ck ORDER BY ts_ns, _prio, _val
                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS _n_tot
   FROM terms
 )
@@ -517,9 +505,10 @@ def average_uniqueness_sweep(
     trades: DataFrame,
     chunk_ns: int = 3_600_000_000_000,
 ) -> DataFrame:
-    """Per-event mean(1/c) via :func:`span_sweep` (reference
-    ``weights.py:7-49``) — identical output to ``average_uniqueness``
-    (differential-tested), one exchange of the trade stream."""
+    """Per-event mean(1/c) over each span via :func:`span_sweep`
+    (reference ``weights.py:7-49``): one exchange of the trade stream,
+    no per-(event, trade) rows; an event whose span holds no trade is
+    dropped."""
     s = span_sweep(spans, trades, val_col=None, chunk_ns=chunk_ns)
     return s.where(F.col("n_span") > 0).select(
         "event_id",
@@ -534,51 +523,26 @@ def return_attribution_sweep(
     normalize: bool = False,
     chunk_ns: int = 3_600_000_000_000,
 ) -> DataFrame:
-    """Per-event |Σ r/c| via :func:`span_sweep` (reference
-    ``weights.py:52-103``) — identical output to ``return_attribution``
-    without materializing the interval join; ``trades_r``:
-    ``(ts_ns, r)`` with r the per-trade log return (null on the first
-    trade, skipped like SQL SUM)."""
+    """Per-event |Σ r/c| over each span via :func:`span_sweep`
+    (reference ``weights.py:52-103``); ``trades_r``: ``(ts_ns, r)`` with
+    r the per-trade log return (null on the first trade, skipped like
+    SQL SUM). ``normalize`` scales the weights to mean 1
+    (:func:`scale_to_mean_one`)."""
     s = span_sweep(spans, trades_r, val_col="r", chunk_ns=chunk_ns)
     out = s.where(F.col("n_span") > 0).select(
         "event_id", "event_ts_ns", F.abs(F.col("s_span")).alias("attribution")
     )
-    if normalize:
-        tot = out.agg(F.sum("attribution").alias("_tot"))
-        n = out.crossJoin(F.broadcast(tot))
-        out = n.select(
-            "event_id",
-            "event_ts_ns",
-            (F.col("attribution") / F.col("_tot")).alias("attribution"),
-        )
-    return out
+    return scale_to_mean_one(out, "attribution") if normalize else out
 
 
-def return_attribution(
-    spans: DataFrame, trades_rc: DataFrame, normalize: bool = False, bucket_ns: int | None = None
-) -> DataFrame:
-    """|Σ r_t / c_t| over the span (reference ``weights.py:52-103``).
-    ``trades_rc``: (ts_ns, r, c) — per-trade log return and concurrency.
-    """
-    j = range_join(
-        spans.withColumn("start_excl", F.col("event_ts_ns") - 1),
-        trades_rc,
-        "start_excl",
-        "touch_ts_ns",
-        "ts_ns",
-        bucket_ns=bucket_ns,
-    )
-    out = j.groupBy("event_id", "event_ts_ns").agg(
-        F.abs(F.sum(F.col("r") / F.col("c"))).alias("attribution")
-    )
-    if normalize:
-        tot = out.agg(
-            (F.count(F.lit(1)).cast("double") / F.sum("attribution")).alias("_scale")
-        )
-        out = out.crossJoin(F.broadcast(tot)).withColumn(
-            "attribution", F.col("attribution") * F.col("_scale")
-        ).drop("_scale")
-    return out
+def scale_to_mean_one(df: DataFrame, col: str) -> DataFrame:
+    """``df`` with ``col`` scaled to mean 1, as ``col · n / Σcol``. The
+    sum is folded in value order, so no bit depends on partitioning."""
+    c = F.col(col)
+    tot = df.agg(ordered_sum(c, c, F.lit(0.0)).alias("_tot"), F.count(F.lit(1)).alias("_n"))
+    return df.crossJoin(F.broadcast(tot)).withColumn(
+        col, c * F.col("_n") / F.col("_tot")
+    ).drop("_tot", "_n")
 
 
 #: time-chunk width of :func:`time_decay`'s running sum (one day)
@@ -624,10 +588,13 @@ def time_decay(events_u: DataFrame, last_weight: float = 0.5) -> DataFrame:
 def class_balance_weights(labeled: DataFrame, weight_col: str = "w") -> DataFrame:
     """Per-class weight = total/(n_classes·Σw_class), applied to each event
     (reference ``weights.py:146-188``). Class table is tiny -> broadcast.
+    Both sums are folded in value order, so no bit depends on
+    partitioning.
     """
-    per_class = labeled.groupBy("label").agg(F.sum(weight_col).alias("w_class"))
+    w = F.col(weight_col)
+    per_class = labeled.groupBy("label").agg(ordered_sum(w, w, F.lit(0.0)).alias("w_class"))
     tot = labeled.agg(
-        F.sum(weight_col).alias("w_total"), F.countDistinct("label").alias("n_classes")
+        ordered_sum(w, w, F.lit(0.0)).alias("w_total"), F.countDistinct("label").alias("n_classes")
     )
     scaled = per_class.crossJoin(F.broadcast(tot)).select(
         "label",

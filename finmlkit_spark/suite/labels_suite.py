@@ -8,7 +8,7 @@ SQL-expressible, so every stage gets a full DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cache
@@ -143,7 +143,7 @@ def _labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: session-scoped memo of the label-spans cut — the derived-table analog
-#: of the source-relation memo (sources/tables.py): SEVEN labels-tier
+#: of the source-relation memo (sources/tables.py): six labels-tier
 #: queries build the identical triple-barrier spans frame, and each
 #: fresh build pays ~0.2 s of tbm SQL analysis plus ~0.4 s of
 #: localCheckpoint physical planning (measured at sf0.1). The
@@ -162,19 +162,16 @@ _SPANS_MEMO: dict[tuple, tuple[DataFrame, int]] = register_memo({})
 
 
 def _trades_spans(spark: SparkSession, sf_dir: str):
-    """(trades, spans-behind-a-cut, n_events) — the sweep queries'
-    inputs, WITHOUT building the concurrency frame (the sweeps fuse
-    concurrency into their own pass; constructing the range-join
-    concurrency chain here would cost ~0.2 s of pure plan analysis they
-    immediately discard)."""
+    """(trades, spans-behind-a-cut, n_events) — the weight queries'
+    inputs; the sweeps fuse concurrency into their own pass."""
     key = _memo_key(spark, f"{sf_dir}/events.parquet", "labels_spans")
     tr = events_to_trades(spark, sf_dir)
     hit = _SPANS_MEMO.get(key)
     if hit is not None:
         return tr, hit[0], hit[1]
     # storage boundary: spans (3 narrow columns, ~1 row per 97 trades)
-    # feed BOTH the concurrency sweep and the span interval join — without
-    # it the whole triple-barrier range join + agg runs twice per action
+    # feed both the sweep's markers and its chunk offsets — without it
+    # the whole triple-barrier range join + agg runs twice per action
     # cache.cut, not keep: every sweep/concurrency op stacked on spans
     # re-analyzes the whole triple-barrier subtree JVM-side; the
     # LogicalRDD truncation saves ~2 s of build per consumer query (and
@@ -190,9 +187,27 @@ def _trades_spans(spark: SparkSession, sf_dir: str):
     return tr, spans, n
 
 
-def _trades_c(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_id, event_ts_ns, uniqueness) over the label spans."""
     tr, spans, _n = _trades_spans(spark, sf_dir)
-    return L.concurrency(spans, tr), tr, spans
+    return L.average_uniqueness_sweep(spans, tr, chunk_ns=HOUR_NS)
+
+
+def _attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_id, event_ts_ns, attribution) over the label spans. The
+    per-trade r is the side-frame lag (``chunked_side_frame``): at scale
+    its chunk-parallel mode keeps the plan SinglePartition-free, with
+    the cross-chunk previous price on the carry table; below the
+    crossover auto mode picks the global window, bit-identical either
+    way."""
+    from ..operators import preprocess as P
+
+    tr, spans, _n = _trades_spans(spark, sf_dir)
+    d, w = P.chunked_side_frame(tr)
+    r = F.log(
+        F.col("price") / F.coalesce(F.lag("price").over(w), F.col("_prev_last_p"))
+    )
+    return L.return_attribution_sweep(spans, d.select("ts_ns", r.alias("r")), chunk_ns=HOUR_NS)
 
 
 @query("tbm_labels", _LAB + "SELECT event_id, event_ts_ns, label, label_sign, touch_ts_ns, touch_ret, barrier_ratio FROM lab")
@@ -288,32 +303,16 @@ def tbm_meta(spark, sf_dir):
 @query("event_concurrency", _CONC + "SELECT ts_ns, c FROM conc")
 def event_concurrency(spark, sf_dir):
     """Sweep-line concurrency c(t) of open label spans (weights.py:7-49)."""
-    c, _, _ = _trades_c(spark, sf_dir)
+    tr, spans, _n = _trades_spans(spark, sf_dir)
+    c = L.concurrency(spans, tr)
     return c.select("ts_ns", F.col("c").cast("long").alias("c"))
 
 
 @query("avg_uniqueness", _UNIQ + "SELECT event_id, event_ts_ns, uniqueness FROM uq")
 def avg_uniqueness(spark, sf_dir):
-    """Average uniqueness = mean(1/c) over each event span (weights.py:7-49)."""
-    c, tr, spans = _trades_c(spark, sf_dir)
-    return L.average_uniqueness(spans, c, bucket_ns=HOUR_NS)
-
-
-@query(
-    "avg_uniqueness_sweep",
-    _UNIQ + "SELECT event_id, event_ts_ns, uniqueness FROM uq",
-)
-def avg_uniqueness_sweep(spark, sf_dir):
-    """The same average uniqueness via the fused single-sweep operator
-    (``labels.average_uniqueness_sweep``): concurrency and the per-span
-    mean collapse into one pass — the trade stream crosses the wire
-    once and each event reads running prefix sums at its own sweep
-    markers, so no per-(event, trade) interval join rows ever
-    materialize. The 100 TB path; the range-join form above has lower
-    fixed constants at bench scale (crossover measured in SCALE.md).
-    Differential-tested bit-identical to ``avg_uniqueness``."""
-    tr, spans, _n = _trades_spans(spark, sf_dir)
-    return L.average_uniqueness_sweep(spans, tr, chunk_ns=HOUR_NS)
+    """Average uniqueness = mean(1/c) over each event span (weights.py:7-49),
+    read at each span's markers in one sweep of the trade stream."""
+    return _uniqueness(spark, sf_dir)
 
 
 @query(
@@ -335,47 +334,8 @@ def return_attribution_q(spark, sf_dir):
     """Return attribution |Σ r/c| over each span (weights.py:52-103).
 
     Note: equal-µs trades each contribute their own r with the shared
-    concurrency at that ts (join on ts)."""
-    c, tr, spans = _trades_c(spark, sf_dir)
-    w = Window.orderBy("ts_ns", "trade_id")
-    tr_r = tr.select("ts_ns", F.log(F.col("price") / F.lag("price").over(w)).alias("r"))
-    trc = tr_r.join(c.dropDuplicates(["ts_ns"]), "ts_ns")
-    return L.return_attribution(spans, trc, bucket_ns=HOUR_NS)
-
-
-@query(
-    "return_attribution_sweep",
-    _CONC
-    + """,
-tr_r AS (
-  SELECT ts_ns, ln(price / lag(price) OVER (ORDER BY ts_ns, trade_id)) AS r
-  FROM trades
-),
-trc AS (
-  SELECT t.ts_ns, t.r, c.c FROM tr_r t JOIN conc c ON c.ts_ns = t.ts_ns
-)
-SELECT l.event_id, l.event_ts_ns, abs(sum(t.r / t.c)) AS attribution
-FROM lab l JOIN trc t ON t.ts_ns >= l.event_ts_ns AND t.ts_ns <= l.touch_ts_ns
-GROUP BY l.event_id, l.event_ts_ns""",
-)
-def return_attribution_sweep_q(spark, sf_dir):
-    """The same attribution via the fused span sweep
-    (``labels.return_attribution_sweep``): one exchange of the trade
-    stream, no interval-join rows, AND no mandatory global-window log
-    return — per-trade r comes from the side-frame lag pass
-    (``chunked_side_frame``; at scale the chunk-parallel mode keeps the
-    plan SinglePartition-free, cross-chunk previous price riding the
-    carry table; below the crossover auto mode picks the cheaper global
-    window — bit-identical either way)."""
-    from ..operators import preprocess as P
-
-    tr, spans, _n = _trades_spans(spark, sf_dir)
-    d, w = P.chunked_side_frame(tr)
-    r = F.log(
-        F.col("price") / F.coalesce(F.lag("price").over(w), F.col("_prev_last_p"))
-    )
-    tr_r = d.select("ts_ns", r.alias("r"))
-    return L.return_attribution_sweep(spans, tr_r, chunk_ns=HOUR_NS)
+    concurrency at that ts."""
+    return _attribution(spark, sf_dir)
 
 
 @query(
@@ -396,9 +356,7 @@ FROM td""",
 def time_decay_q(spark, sf_dir):
     """Linear time-decay on cumulative uniqueness, last_weight=0.5
     (weights.py:106-142)."""
-    c, tr, spans = _trades_c(spark, sf_dir)
-    u = L.average_uniqueness(spans, c, bucket_ns=HOUR_NS)
-    return L.time_decay(u, last_weight=0.5)
+    return L.time_decay(_uniqueness(spark, sf_dir), last_weight=0.5)
 
 
 @query(
@@ -421,8 +379,7 @@ FROM lw, tot JOIN cls ON lw.label = cls.label""",
 )
 def class_balance_q(spark, sf_dir):
     """Class-balance weights over uniqueness (weights.py:146-188)."""
-    c, tr, spans = _trades_c(spark, sf_dir)
-    u = L.average_uniqueness(spans, c, bucket_ns=HOUR_NS)
+    u = _uniqueness(spark, sf_dir)
     lab = _labels(spark, sf_dir).select("event_id", "label")
     lw = lab.join(u, "event_id").withColumnRenamed("uniqueness", "w")
     out = L.class_balance_weights(lw, "w")

@@ -17,7 +17,7 @@ from ..operators import joins as J
 from ..operators import labels as L
 from ._registry import query
 from .features_suite import bars_1m  # noqa: F401
-from .labels_suite import _UNIQ, HOUR_NS, _labels, _trades_c
+from .labels_suite import _UNIQ, HOUR_NS, _attribution, _labels, _uniqueness
 from .sequential_suite import DECAY, K, SPAN, _BH, bars_1h
 
 
@@ -125,29 +125,20 @@ FROM comb""",
 def final_weights(spark, sf_dir):
     """SampleWeights.compute_final_weights (reference kit.py:379-477):
     decay × return-attribution × vertical-touch closeness, normalized to
-    mean 1."""
-    c, tr, spans = _trades_c(spark, sf_dir)
+    mean 1 (``labels.scale_to_mean_one``)."""
     lab = _labels(spark, sf_dir)
-    u = L.average_uniqueness(spans, c, bucket_ns=HOUR_NS)
-    td = L.time_decay(u, last_weight=0.5).select("event_id", "decay_weight")
-    w = Window.orderBy("ts_ns", "trade_id")
-    tr_r = tr.select("ts_ns", F.log(F.col("price") / F.lag("price").over(w)).alias("r"))
-    trc = tr_r.join(c.dropDuplicates(["ts_ns"]), "ts_ns")
-    att = L.return_attribution(spans, trc, bucket_ns=HOUR_NS).select(
-        "event_id", "attribution"
+    td = L.time_decay(_uniqueness(spark, sf_dir), last_weight=0.5).select(
+        "event_id", "decay_weight"
     )
+    att = _attribution(spark, sf_dir).select("event_id", "attribution")
     comb = (
         lab.select("event_id", "event_ts_ns", "label", "barrier_ratio")
         .join(td, "event_id")
         .join(att, "event_id")
         .withColumn("raw_w", F.col("decay_weight") * F.col("attribution") * F.col("barrier_ratio"))
     )
-    tot = comb.agg(F.sum("raw_w").alias("s"), F.count("*").alias("n"))
-    return comb.crossJoin(F.broadcast(tot)).select(
-        "event_id",
-        "event_ts_ns",
-        "label",
-        (F.col("raw_w") * F.col("n") / F.col("s")).alias("final_w"),
+    return L.scale_to_mean_one(comb, "raw_w").select(
+        "event_id", "event_ts_ns", "label", F.col("raw_w").alias("final_w")
     )
 
 

@@ -169,7 +169,7 @@ def user_ewma(spark, sf_dir):
     )
 
 
-from ..operators import labels as L  # noqa: E402
+from ..operators.joins import range_join  # noqa: E402
 
 
 @query(
@@ -217,7 +217,7 @@ def user_tbm_labels(spark, sf_dir):
         F.lit(0.5).alias("target"),
     )
     ev = events.withColumn("vert_ts_ns", F.col("event_ts_ns") + F.lit(86_400_000_000_000))
-    j = L.range_join(
+    j = range_join(
         ev, tr.select("symbol", "ts_ns", "price"), "event_ts_ns", "vert_ts_ns", "ts_ns",
         by=["symbol"], bucket_ns=6 * HOUR_NS,
     )

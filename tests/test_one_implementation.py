@@ -249,23 +249,26 @@ def test_one_state_kernel_per_recurrence():
 
 
 #: a development-history reference ("round 12", "round-6", "r13") in a
-#: library comment or docstring; code literals in double backticks
-#: (``r4``, ``r2 = ...``) are names, not history
+#: comment or docstring of the library, ``bench.py`` or ``tools/``; code
+#: literals in double backticks (``r4``, ``r2 = ...``) are names, not
+#: history
 HISTORY = re.compile(r"(?i:\bround)[- ]?\d+|\br1?\d\b")
 
 
 def _comment_lines():
     """``(path:line, text)`` of every comment and docstring line of the
-    library."""
+    library, ``bench.py`` and ``tools/*.py``."""
     import ast
     import io
     import pathlib
     import tokenize
 
-    root = pathlib.Path(finmlkit_spark.__file__).parent
-    for path in sorted(root.rglob("*.py")):
+    lib = pathlib.Path(finmlkit_spark.__file__).parent
+    repo = lib.parent
+    paths = [*lib.rglob("*.py"), repo / "bench.py", *(repo / "tools").glob("*.py")]
+    for path in sorted(paths):
         src = path.read_text()
-        rel = path.relative_to(root)
+        rel = path.relative_to(repo)
         for tok in tokenize.generate_tokens(io.StringIO(src).readline):
             if tok.type == tokenize.COMMENT:
                 yield f"{rel}:{tok.start[0]}", tok.string
@@ -286,3 +289,22 @@ def test_no_round_history_in_comments():
         if HISTORY.search(re.sub(r"``.*?``", "", text))
     ]
     assert offenders == []
+
+
+def test_one_span_weight_implementation():
+    """Uniqueness and attribution read ``span_sweep`` only: the
+    range-join forms are gone and ``operators/labels.py`` calls no
+    ``range_join``."""
+    import ast
+
+    from finmlkit_spark.operators import labels as L
+
+    assert not hasattr(L, "average_uniqueness")
+    assert not hasattr(L, "return_attribution")
+    calls = [
+        node
+        for top in _top_level("operators/labels.py").values()
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call) and "range_join" in ast.unparse(node.func)
+    ]
+    assert calls == []

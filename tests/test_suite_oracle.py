@@ -36,20 +36,22 @@ def test_query_matches_oracle(name, spark, duck):
 #: check); sf0.001 inputs are small, so the test above covers their
 #: small side
 GATED = [
-    "avg_uniqueness_sweep",
+    "avg_uniqueness",
     "bar_directional_1m",
     "bpe_segment",
     "bpe_train",
+    "class_balance",
     "dedup_clusters",
     "dedup_keep_best",
     "diverse_sample",
     "dup_graph_pagerank",
     "event_concurrency",
     "feat_vpin",
+    "final_weights",
     "gopher_repetition",
     "keep_central",
     "pipeline_1m_features",
-    "return_attribution_sweep",
+    "return_attribution",
     "segment_dedup",
     "seq_cusum_filter_chunked",
     "seq_ewma_parallel",

@@ -169,100 +169,34 @@ def test_tbm_vertical_ratio_damping(spark):
     assert math.isclose(row["barrier_ratio"], 0.8 / 1.4, rel_tol=1e-9)
 
 
-def test_average_uniqueness_sweep_matches_range_join(spark):
-    """The fused single-sweep operator must reproduce the range-join
-    form exactly — including events whose spans overlap arbitrarily,
-    abut at equal timestamps, sit inside empty chunks, or cover no
-    trades at all (dropped by both forms)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    rng = np.random.default_rng(7)
-    H = 3_600_000_000_000
-    n = 5000
-    # trades scattered over ~6 hours with dense and empty stretches
-    ts = np.sort(rng.choice(np.arange(0, 6 * H, 1_000_000, dtype=np.int64), n, replace=False))
-    trades = spark.createDataFrame(
-        [(int(t), int(i)) for i, t in enumerate(ts)], "ts_ns long, trade_id long"
-    )
-    # overlapping spans incl. equal-start pairs and a span in a gap
-    spans_rows = []
-    for i in range(60):
-        s = int(ts[rng.integers(0, n - 100)])
-        e = s + int(rng.integers(1, 2 * H))
-        spans_rows.append((i, s, e))
-    spans_rows.append((60, int(ts[10]), int(ts[10])))          # point span
-    spans_rows.append((61, spans_rows[0][1], spans_rows[0][2]))  # duplicate span
-    spans_rows.append((62, int(6 * H + 1), int(6 * H + 2)))    # no trades inside
-    spans = spark.createDataFrame(spans_rows, "event_id long, event_ts_ns long, touch_ts_ns long")
-
-    c = L.concurrency(spans, trades)
-    old = {
-        r["event_id"]: r["uniqueness"]
-        for r in L.average_uniqueness(spans, c).collect()
-    }
-    new = {
-        r["event_id"]: r["uniqueness"]
-        for r in L.average_uniqueness_sweep(spans, trades).collect()
-    }
-    assert set(new) == set(old) and 62 not in new
-    for k, v in old.items():
-        assert abs(new[k] - v) <= 1e-12 * max(1.0, abs(v)), (k, v, new[k])
+def _span_brute(ts, spans, val=None):
+    """``{event_id: (Σ val/c, trade count)}`` over each span (s, e)
+    holding a trade, straight from the sweep-line definition
+    c(t) = #spans with s <= t <= e; a NaN ``val`` (a NULL return) adds
+    nothing to the sum but counts as a trade."""
+    c = np.zeros(len(ts), dtype=np.int64)
+    for _, s, e in spans:
+        c += (ts >= s) & (ts <= e)
+    v = np.ones(len(ts)) if val is None else val
+    out = {}
+    for i, s, e in spans:
+        m = (ts >= s) & (ts <= e)
+        if m.any():
+            out[i] = (float(np.nansum(v[m] / c[m])), int(m.sum()))
+    return out
 
 
-def test_return_attribution_sweep_matches_range_join(spark):
-    """|Σ r/c| via the fused sweep == the range-join form on an
-    adversarial stream (overlaps, equal-ts trades sharing one c, nulls
-    on the first return), and its full plan — including the
-    chunk-parallel log return — has no single-partition exchange."""
-    import numpy as np
-    from pyspark.sql import functions as F, Window
+def _assert_no_data_scale_single_partition(df):
+    """The only single-partition exchanges allowed are (a) scalar
+    aggregates (the min/max chunk-bounds over the SPANS table — map-side
+    partials reduce them to one row per task first) and (b) sorts on
+    the _ck chunk axis (the k-row exclusive-prefix windows over
+    chunk/head tables — k = TIME-CHUNK count, bounded at any data
+    scale). Any other one means a global-window log return or a global
+    sort over DATA-scale rows crept into the trade-stream path."""
+    import re
 
-    rng = np.random.default_rng(11)
-    H = 3_600_000_000_000
-    n = 4000
-    ts = np.sort(rng.choice(np.arange(0, 5 * H, 2_000_000, dtype=np.int64), n, replace=False))
-    ts[100] = ts[99]  # equal-ts pair sharing one concurrency value
-    price = 100.0 * np.exp(np.cumsum(rng.normal(0, 1e-4, n)))
-    trades = spark.createDataFrame(
-        [(int(t), int(i), float(p)) for i, (t, p) in enumerate(zip(ts, price))],
-        "ts_ns long, trade_id long, price double",
-    )
-    spans = spark.createDataFrame(
-        [(i, int(ts[rng.integers(0, n - 200)]), int(rng.integers(1, H))) for i in range(40)],
-        "event_id long, event_ts_ns long, dur long",
-    ).select("event_id", "event_ts_ns", (F.col("event_ts_ns") + F.col("dur")).alias("touch_ts_ns"))
-
-    c = L.concurrency(spans, trades)
-    wg = Window.orderBy("ts_ns", "trade_id")
-    tr_r = trades.select(
-        "ts_ns", F.log(F.col("price") / F.lag("price").over(wg)).alias("r")
-    )
-    old = {
-        r["event_id"]: r["attribution"]
-        for r in L.return_attribution(spans, tr_r.join(c.dropDuplicates(["ts_ns"]), "ts_ns")).collect()
-    }
-
-    from finmlkit_spark.operators import preprocess as P
-
-    d, w = P.chunked_side_frame(trades, chunk_ns=H, mode="chunked")
-    rr = F.log(F.col("price") / F.coalesce(F.lag("price").over(w), F.col("_prev_last_p")))
-    sweep_df = L.return_attribution_sweep(spans, d.select("ts_ns", rr.alias("r")), chunk_ns=H)
-    new = {r["event_id"]: r["attribution"] for r in sweep_df.collect()}
-    assert set(new) == set(old)
-    for k, v in old.items():
-        assert abs(new[k] - v) <= 1e-9 * max(1.0, abs(v)), (k, v, new[k])
-    plan = sweep_df._jdf.queryExecution().executedPlan().toString()
-    # the only single-partition exchanges allowed are (a) scalar
-    # aggregates (the min/max chunk-bounds over the SPANS table —
-    # map-side partials reduce them to one row per task first) and
-    # (b) sorts on the _ck chunk axis (the k-row exclusive-prefix
-    # windows over chunk/head tables — k = TIME-CHUNK count, bounded
-    # at any data scale; round-7 replaced the two-level group
-    # machinery with one ordered window over these k-row tables).
-    # Any other one means the global-window log return or a global
-    # sort over DATA-scale rows crept back into the trade-stream path.
-    lines = plan.splitlines()
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
     for i, line in enumerate(lines):
         if "Exchange SinglePartition" in line:
             above = " ".join(lines[max(0, i - 2): i])
@@ -271,10 +205,8 @@ def test_return_attribution_sweep_matches_range_join(spark):
             # table (_rn = 1 filter — one row per chunk) or the dense
             # chunk axis (explode(sequence(...)). A data-scale sort
             # (markers/trades also carry _ck) matches neither.
-            import re as _re
-
             k_row_child = (
-                _re.search(r"_rn#\d+L? = 1\)", below) is not None
+                re.search(r"_rn#\d+L? = 1\)", below) is not None
                 or "explode(sequence(" in below
             )
             assert "HashAggregate(keys=[]" in above or k_row_child, (
@@ -283,11 +215,21 @@ def test_return_attribution_sweep_matches_range_join(spark):
 
 
 def test_span_sweep_matches_bruteforce_numpy(spark):
-    """Independent ground truth: span_sweep's per-event (Σ 1/c, count)
-    vs a brute-force numpy evaluation of the sweep-line definition —
-    not impl-vs-impl, so a shared bug in the two Spark forms cannot
-    hide. Several seeds, spans crossing chunk boundaries both ways."""
-    import numpy as np
+    """Independent ground truth: span_sweep and its two readers vs a
+    brute-force numpy evaluation of the sweep-line definition — not
+    impl-vs-impl, so a bug shared by the Spark forms cannot hide.
+
+    - span_sweep (Σ 1/c, count), several seeds, spans crossing chunk
+      boundaries both ways;
+    - average_uniqueness_sweep over arbitrarily overlapping spans plus
+      a point span, a duplicate span and a span with no trades
+      (dropped);
+    - return_attribution_sweep on a stream with an equal-ts trade pair
+      sharing one c and a NULL first return, its log return from the
+      chunk-parallel side frame; that whole plan has no data-scale
+      single-partition exchange.
+    """
+    from finmlkit_spark.operators import preprocess as P
 
     H = 3_600_000_000_000
     for seed in (0, 1, 2):
@@ -300,15 +242,7 @@ def test_span_sweep_matches_bruteforce_numpy(spark):
         for i in range(25):
             s = int(ts[rng.integers(0, n - 50)])
             spans_np.append((i, s, s + int(rng.integers(1, int(1.5 * H)))))
-        # brute force: c(t) = #spans with s <= t <= e; per-span stats
-        expected = {}
-        c = np.zeros(n, dtype=np.int64)
-        for _, s, e in spans_np:
-            c += (ts >= s) & (ts <= e)
-        for i, s, e in spans_np:
-            m = (ts >= s) & (ts <= e)
-            if m.any():
-                expected[i] = (float(np.sum(1.0 / c[m])), int(m.sum()))
+        expected = _span_brute(ts, spans_np)
         trades = spark.createDataFrame(
             [(int(t), int(k)) for k, t in enumerate(ts)], "ts_ns long, trade_id long"
         )
@@ -325,6 +259,56 @@ def test_span_sweep_matches_bruteforce_numpy(spark):
             s_got, n_got = got[k]
             assert n_got == n_exp, (seed, k)
             assert abs(s_got - s_exp) <= 1e-9 * max(1.0, abs(s_exp)), (seed, k)
+
+    # uniqueness: trades over ~6 hours with dense and empty stretches
+    rng = np.random.default_rng(7)
+    n = 5000
+    ts = np.sort(rng.choice(np.arange(0, 6 * H, 1_000_000, dtype=np.int64), n, replace=False))
+    trades = spark.createDataFrame(
+        [(int(t), int(i)) for i, t in enumerate(ts)], "ts_ns long, trade_id long"
+    )
+    spans_rows = []
+    for i in range(60):
+        s = int(ts[rng.integers(0, n - 100)])
+        spans_rows.append((i, s, s + int(rng.integers(1, 2 * H))))
+    spans_rows.append((60, int(ts[10]), int(ts[10])))          # point span
+    spans_rows.append((61, spans_rows[0][1], spans_rows[0][2]))  # duplicate span
+    spans_rows.append((62, int(6 * H + 1), int(6 * H + 2)))    # no trades inside
+    spans = spark.createDataFrame(spans_rows, "event_id long, event_ts_ns long, touch_ts_ns long")
+    want = {k: s / c for k, (s, c) in _span_brute(ts, spans_rows).items()}
+    got = {
+        r["event_id"]: r["uniqueness"]
+        for r in L.average_uniqueness_sweep(spans, trades).collect()
+    }
+    assert set(got) == set(want) and 62 not in got
+    for k, v in want.items():
+        assert abs(got[k] - v) <= 1e-12 * max(1.0, abs(v)), (k, v, got[k])
+
+    # attribution: equal-ts pair, NULL first return
+    rng = np.random.default_rng(11)
+    n = 4000
+    ts = np.sort(rng.choice(np.arange(0, 5 * H, 2_000_000, dtype=np.int64), n, replace=False))
+    ts[100] = ts[99]  # equal-ts pair sharing one concurrency value
+    price = 100.0 * np.exp(np.cumsum(rng.normal(0, 1e-4, n)))
+    trades = spark.createDataFrame(
+        [(int(t), int(i), float(p)) for i, (t, p) in enumerate(zip(ts, price))],
+        "ts_ns long, trade_id long, price double",
+    )
+    spans_rows = []
+    for i in range(40):
+        s = int(ts[rng.integers(0, n - 200)])
+        spans_rows.append((i, s, s + int(rng.integers(1, H))))
+    spans = spark.createDataFrame(spans_rows, "event_id long, event_ts_ns long, touch_ts_ns long")
+    r_np = np.concatenate([[np.nan], np.log(price[1:] / price[:-1])])
+    want = {k: abs(s) for k, (s, _c) in _span_brute(ts, spans_rows, r_np).items()}
+    d, w = P.chunked_side_frame(trades, chunk_ns=H, mode="chunked")
+    rr = F.log(F.col("price") / F.coalesce(F.lag("price").over(w), F.col("_prev_last_p")))
+    sweep_df = L.return_attribution_sweep(spans, d.select("ts_ns", rr.alias("r")), chunk_ns=H)
+    got = {r["event_id"]: r["attribution"] for r in sweep_df.collect()}
+    assert set(got) == set(want)
+    for k, v in want.items():
+        assert abs(got[k] - v) <= 1e-9 * max(1.0, abs(v)), (k, v, got[k])
+    _assert_no_data_scale_single_partition(sweep_df)
 
 
 def test_span_sweep_driver_and_cut_states_bit_identical(spark, gate_sides):
@@ -413,6 +397,63 @@ def test_time_decay_ignores_partitioning(spark, gate_sides):
         assert float.fromhex(side[0][order[-1][0]]) == 1.0
         for k, v in want.items():
             assert abs(float.fromhex(side[0][k]) - v) <= 1e-12 * v, k
+
+
+def test_weight_sums_ignore_partitioning(spark, gate_sides):
+    """The sample weights' float sums are folded in a fixed order: over
+    seeded inputs, ``class_balance_weights``, ``scale_to_mean_one``
+    (``final_weights``' normalizer) and
+    ``return_attribution_sweep(normalize=True)`` return the same float64
+    bits however their input is partitioned, and the normalized weights
+    have mean 1. The trade stream has equal-ts trades with different
+    returns, whose order the sweep must fix itself."""
+    rng = np.random.default_rng(9)
+    n = 4000
+    w = rng.uniform(0.01, 1.0, n) * 10.0 ** rng.integers(-3, 3, n)
+    lab = rng.integers(-1, 2, n)
+    ev = spark.createDataFrame(
+        [(i, 1000 * i, int(c), float(x)) for i, (c, x) in enumerate(zip(lab, w))],
+        "event_id long, event_ts_ns long, label int, w double",
+    )
+    parts = (1, 7, 13)
+
+    def bits(df, col):
+        return {r["event_id"]: float.hex(r[col]) for r in df.collect()}
+
+    cb = [bits(L.class_balance_weights(ev.repartition(p, "event_id"), "w"), "balanced_w") for p in parts]
+    mo = [bits(L.scale_to_mean_one(ev.repartition(p, "event_id"), "w"), "w") for p in parts]
+    assert cb[0] == cb[1] == cb[2]
+    assert mo[0] == mo[1] == mo[2]
+    assert abs(np.mean([float.fromhex(v) for v in mo[0].values()]) - 1.0) <= 1e-12
+    # each class sums to w_total / n_classes
+    for c in (-1, 0, 1):
+        got = sum(float.fromhex(cb[0][i]) for i in range(n) if lab[i] == c)
+        assert abs(got - w.sum() / 3) <= 1e-12 * w.sum(), c
+
+    H = 3_600_000_000_000
+    m = 6000
+    ts = np.sort(rng.integers(0, 3 * 3600, m)) * 1_000_000_000  # 1 s grid: many equal ts
+    r = rng.normal(0, 1e-3, m)
+    trades = spark.createDataFrame(
+        [(int(t), float(x)) for t, x in zip(ts, r)], "ts_ns long, r double"
+    )
+    spans = spark.createDataFrame(
+        [(i, int(ts[k]), int(ts[k]) + int(rng.integers(1, H)))
+         for i, k in enumerate(rng.integers(0, m - 100, 80))],
+        "event_id long, event_ts_ns long, touch_ts_ns long",
+    )
+
+    def run():
+        return [
+            bits(L.return_attribution_sweep(
+                spans.repartition(p, "event_id"), trades.repartition(p), normalize=True, chunk_ns=H
+            ), "attribution")
+            for p in parts
+        ]
+
+    for side in gate_sides(run):
+        assert side[0] == side[1] == side[2]
+        assert abs(np.mean([float.fromhex(v) for v in side[0].values()]) - 1.0) <= 1e-12
 
 
 def test_concurrency_reads_trades_once(spark):

@@ -45,8 +45,7 @@ AUDIT = [
     "semantic_dedup",
     "dedup_clusters",
     "avg_uniqueness",
-    "avg_uniqueness_sweep",
-    "return_attribution_sweep",
+    "return_attribution",
     "decontamination_bloom",
     "bar_directional_1m",
     "footprint_features",
@@ -96,7 +95,7 @@ AUDIT = [
     "inactive_high_balance",
     "top_supplier_revenue",
     "ngram_jaccard",
-    # round 12: the cardinality-sketch tier + LM-quality split + QC
+    # the cardinality-sketch tier + LM-quality split + QC
     "hll_user_count",
     "kmv_user_count",
     "kmv_overlap",
@@ -105,7 +104,7 @@ AUDIT = [
     "cm_token_freq",
     "hybrid_search",
     "quantile_sketch_audit",
-    # round 13: the production sketch path (per-occurrence xxhash64 +
+    # the production sketch path (per-occurrence xxhash64 +
     # map-side partial reduction — no raw-key exchange anywhere)
     "kmv_fast_user_count",
 ]
@@ -182,7 +181,7 @@ def main():
             print(line)
         print("```\n")
 
-    # round 13: the production sketch builds (library functions — the
+    # the production sketch builds (library functions — the
     # registry keeps the portable oracle forms; kmv_fast_user_count
     # above covers the KMV production query). The claim to check: NO
     # exchange or aggregate keys on the raw key column — the only
@@ -213,7 +212,7 @@ def main():
             print(line)
         print("```\n")
 
-    # round 13 (late): pagerank over a materialized dup-graph edge
+    # pagerank over a materialized dup-graph edge
     # table — the claim to check: the ONLY FileScan is the edge
     # parquet (no documents scan, no shingle/SimHash/band-join stage
     # at query time); each iteration is an edge-scale join against

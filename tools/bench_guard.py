@@ -1,7 +1,7 @@
-"""Bench regression guard (round-4 verdict item 8).
+"""Bench regression guard.
 
-Round 4 shipped two >30% per-query regressions silently (a persist that
-helped one query taxed two others). This guard makes that loud: it
+A change once shipped two >30% per-query regressions silently (a persist
+that helped one query taxed two others). This guard makes that loud: it
 compares a fresh bench JSON against the newest recorded ``BENCH_r*.json``
 and exits non-zero on any query that regressed more than the threshold
 without an explanation.
@@ -85,10 +85,9 @@ def main() -> int:
         thr = float(sys.argv[sys.argv.index("--threshold") + 1])
     if sys.argv[1] == "--audit":
         # post-hoc audit of the DRIVER-recorded files: compare the two
-        # newest BENCH_r*.json (round-5 lesson: the round's final
-        # numbers became the record without a guard run, so a >30%
-        # regression passed silently — this mode makes the check
-        # possible after the fact, run it at round start)
+        # newest BENCH_r*.json: recorded numbers can become the record
+        # without a guard run, so a >30% regression would pass
+        # silently — this mode makes the check possible after the fact
         paths = recorded_paths()
         if len(paths) < 2:
             print("audit needs two recorded BENCH_r*.json files")

@@ -6,10 +6,10 @@ fold-order float divergence). This harness compares float64 columns by
 BIT PATTERN so a determinism bug shows up locally before a driver round
 does.
 
-DRIVER PARITY (round 12): the comparator is now exactly as strict as
-the driver — NO -0.0 -> 0.0 normalization. The round-11 driver red
-(`embedding_covariance`: DuckDB ROUND gave -0.0, Spark +0.0, values
-equal, bytes not) passed the old normalizing gate; the gate must be at
+DRIVER PARITY: the comparator is exactly as strict as the driver — NO
+-0.0 -> 0.0 normalization. A driver red on `embedding_covariance`
+(DuckDB ROUND gave -0.0, Spark +0.0, values equal, bytes not) passed
+an earlier normalizing gate; the gate must be at
 least as strict as the thing it predicts. Queries that can emit a
 rounds-to-zero float must canonicalize the sign at the QUERY edge
 (`expr + 0.0` on both engine sides), not rely on the gate forgiving it.

@@ -10,7 +10,7 @@ Usage: python tools/check.py [sf_dir] [query_name ...]
 FMK_STRICT=1 switches to driver-parity comparison: floats are rounded
 to 6 digits and then compared by BIT PATTERN — no -0.0 -> 0.0
 normalization, no tolerance. This emulates the driver's value hash as
-evidenced by round 11: ulp-floor libm deltas (e.g. pmi_top_pairs' 1-ulp
+observed in its runs: ulp-floor libm deltas (e.g. pmi_top_pairs' 1-ulp
 ln) hashed GREEN there, while embedding_covariance's -0.0-after-ROUND
 hashed RED — so the driver rounds before hashing but the rounding
 preserves the sign of zero. The old lenient comparator normalized

@@ -286,7 +286,7 @@ if __name__ == "__main__":
     main()
 
 
-# --- progressive fixtures (round 12) -----------------------------------------
+# --- progressive fixtures ----------------------------------------------------
 # Progressive JPEG (T.81 Annex G) encoders, again DELIBERATELY separate
 # from the decoder: EOB-run assembly vs EOB-run consumption, correction
 # -bit buffering vs correction-bit application. The progressive streams
@@ -780,7 +780,7 @@ def encode_gray_dri(ri: int = 2) -> bytes:
 
 
 def main_progressive() -> None:
-    """Write the round-12 fixtures (progressive gray + color, baseline
+    """Write the progressive fixtures (progressive gray + color, baseline
     DRI) and print golden md5s; asserts each decodes EXACTLY like its
     sequential sibling (same quantized coefficients)."""
     import sys
@@ -810,7 +810,7 @@ def main_progressive() -> None:
 
 
 def main_seams() -> None:
-    """Write the round-13 codec-SEAM fixtures: spec-shaped streams that
+    """Write the codec-SEAM fixtures: spec-shaped streams that
     hit each documented NotImplementedError gate in the native decoder
     (arithmetic-coded / 12-bit / CMYK JPEG, H.264-in-MP4). Each is the
     committed baseline with the single spec field that triggers the

@@ -24,8 +24,8 @@ def main():
     while i < len(argv):
         a = argv[i]
         if a.startswith("--runs"):
-            # accept both --runs=N and --runs N (ADVICE r13: the space
-            # form used to IndexError and leak N into the query names)
+            # accept both --runs=N and --runs N (the space form must
+            # not leak N into the query names)
             if "=" in a:
                 runs = int(a.split("=", 1)[1])
             else:
@@ -45,9 +45,9 @@ def main():
     for name in names:
         fn = suite.QUERIES[name]
         for r in range(runs):
-            # mirror the bench's r14 honest-timing methodology: every
-            # run re-materializes the tracked keep-persists (bench.py
-            # releases between timed runs since the r13-verdict fix)
+            # mirror the bench's timing: every run re-materializes the
+            # tracked keep-persists (bench.py releases between timed
+            # runs)
             cache.release_all()
             j0 = len(tracker.getJobIdsForGroup(None) or [])
             t0 = time.time()

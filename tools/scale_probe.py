@@ -1,7 +1,6 @@
 """sf1 scale probe: generate a 10x replica of sf0.1 and measure how the
-headline paths scale (round-6 verdict item: convert the 100 TB
-design-arguments from sf0.1 plans + synthetic probes into one real
-order-of-magnitude measurement).
+headline paths scale: the 100 TB design arguments from sf0.1 plans +
+synthetic probes, checked by one real order-of-magnitude measurement.
 
 Usage: python tools/scale_probe.py [out_dir] [q1 q2 ...]
 
@@ -50,7 +49,7 @@ PROBE = [
     "pipeline_1m_features",
     "trades_side",
     "dollar_bars",
-    "avg_uniqueness_sweep",
+    "avg_uniqueness",
     "tbm_labels",
     "seq_ewma_parallel",
     "seq_cusum_filter_chunked",
