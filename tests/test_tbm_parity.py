@@ -215,22 +215,10 @@ def _assert_no_data_scale_single_partition(df):
 
 
 def test_span_sweep_matches_bruteforce_numpy(spark):
-    """Independent ground truth: span_sweep and its two readers vs a
-    brute-force numpy evaluation of the sweep-line definition — not
-    impl-vs-impl, so a bug shared by the Spark forms cannot hide.
-
-    - span_sweep (Σ 1/c, count), several seeds, spans crossing chunk
-      boundaries both ways;
-    - average_uniqueness_sweep over arbitrarily overlapping spans plus
-      a point span, a duplicate span and a span with no trades
-      (dropped);
-    - return_attribution_sweep on a stream with an equal-ts trade pair
-      sharing one c and a NULL first return, its log return from the
-      chunk-parallel side frame; that whole plan has no data-scale
-      single-partition exchange.
-    """
-    from finmlkit_spark.operators import preprocess as P
-
+    """Independent ground truth: span_sweep's per-event (Σ 1/c, count)
+    vs a brute-force numpy evaluation of the sweep-line definition —
+    not impl-vs-impl, so a bug in the Spark form cannot hide. Several
+    seeds, spans crossing chunk boundaries both ways."""
     H = 3_600_000_000_000
     for seed in (0, 1, 2):
         rng = np.random.default_rng(seed)
@@ -260,7 +248,14 @@ def test_span_sweep_matches_bruteforce_numpy(spark):
             assert n_got == n_exp, (seed, k)
             assert abs(s_got - s_exp) <= 1e-9 * max(1.0, abs(s_exp)), (seed, k)
 
-    # uniqueness: trades over ~6 hours with dense and empty stretches
+
+def test_average_uniqueness_sweep_matches_range_join(spark):
+    """average_uniqueness_sweep reproduces the range-join definition
+    (each span joined to the trades in [s, e], evaluated in numpy)
+    over arbitrarily overlapping spans, a point span, a duplicate span
+    and a span covering no trades (dropped)."""
+    H = 3_600_000_000_000
+    # trades over ~6 hours with dense and empty stretches
     rng = np.random.default_rng(7)
     n = 5000
     ts = np.sort(rng.choice(np.arange(0, 6 * H, 1_000_000, dtype=np.int64), n, replace=False))
@@ -284,7 +279,16 @@ def test_span_sweep_matches_bruteforce_numpy(spark):
     for k, v in want.items():
         assert abs(got[k] - v) <= 1e-12 * max(1.0, abs(v)), (k, v, got[k])
 
-    # attribution: equal-ts pair, NULL first return
+
+def test_return_attribution_sweep_matches_range_join(spark):
+    """|Σ r/c| via return_attribution_sweep == the range-join definition
+    (evaluated in numpy) on an adversarial stream: overlaps, an equal-ts
+    trade pair sharing one c, a NULL first return. The log return comes
+    from the chunk-parallel side frame, and that whole plan has no
+    data-scale single-partition exchange."""
+    from finmlkit_spark.operators import preprocess as P
+
+    H = 3_600_000_000_000
     rng = np.random.default_rng(11)
     n = 4000
     ts = np.sort(rng.choice(np.arange(0, 5 * H, 2_000_000, dtype=np.int64), n, replace=False))
